@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query wall times.
   *
@@ -49,13 +48,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = LocalSpark.defaultCpus
+    val spark = LocalSpark(cpus)
     // ERROR, not WARN: the driver tail-captures stdout and fishes out the
     // final metric line; at WARN the streaming queries (q60-q65) and AQE
     // emit dozens of benign WARNs per run that flood the capture window —
@@ -109,7 +103,7 @@ object Bench {
     // the floor re-derivation protocol sets SPARK_GRAFT_CPUS=32 and is
     // unaffected). Skipped probes report -1.
     var calib =
-      if (cpus == "32") (1 to 3).map(_ => calibOnce()).min else -1.0
+      if (cpus == 32) (1 to 3).map(_ => calibOnce()).min else -1.0
     // Second probe, SHUFFLE-bound (round 11): the pure-codegen loop above
     // is blind to memory-bandwidth / page-cache / spill-disk contention —
     // exactly the subsystem the heavier catalog queries lean on. Shuffle
@@ -127,7 +121,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     var calibIo =
-      if (cpus == "32") (1 to 3).map(_ => calibIoOnce()).min else -1.0
+      if (cpus == 32) (1 to 3).map(_ => calibIoOnce()).min else -1.0
     // the flag is calibrated for the driver's 32-thread config; at other
     // cpu counts the measured work still runs 32 slices and the floors
     // don't apply — report null rather than a wrong verdict. IO gets a
@@ -153,9 +147,8 @@ object Bench {
     // recording_eligible=false at launch, so there is nothing the gate
     // could protect — `only` is read here, above its other uses, for
     // exactly that check)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    if (cpus == "32" && only.isEmpty) {
+    val only = Catalog.only
+    if (cpus == 32 && only.isEmpty) {
       var tries = 0
       while ((calib > CalibFloorSec * 1.3 ||
           calibIo > CalibIoFloorSec * 1.5) && tries < 3) {
@@ -256,11 +249,11 @@ object Bench {
       else (-1.0, -1.0)
     }
     val firstPass = names.zipWithIndex.map { case (name, i) =>
-      if (cpus == "32" && i % SegmentLen == 0 && i > 0)
+      if (cpus == 32 && i % SegmentLen == 0 && i > 0)
         segments ::= calibOnce()
       name -> measure(name, if (checkpointBacked(name)) 3 else 2)
     }
-    if (cpus == "32") segments ::= calibOnce()
+    if (cpus == 32) segments ::= calibOnce()
     // Contention RECHECK pass (VERDICT r13 #3, bounded-retry loop added
     // per VERDICT r14 #2): two consecutive driver rounds flagged
     // `contended: true`, making per-query trend reading impossible — so
@@ -288,7 +281,7 @@ object Bench {
     var requeueErrors = List.empty[(String, String)]
     val MaxRequeue = 3
     val results =
-      if (cpus != "32") firstPass
+      if (cpus != 32) firstPass
       else {
         val chron = segments.reverse.toIndexedSeq
         def probeFor(i: Int): Double =
@@ -369,7 +362,7 @@ object Bench {
     // probe cannot fully exonerate for IO-bound plans) keep the flag.
     // The raw segment readings still ship in calib_segments for audit.
     val contended =
-      if (cpus == "32")
+      if (cpus == 32)
         (calib > CalibFloorSec * 1.3 || calibIo > CalibIoFloorSec * 1.5 ||
           stillContended.nonEmpty).toString
       else "null"
@@ -380,7 +373,7 @@ object Bench {
     // recorded-total clause stays procedural: this process cannot know
     // the committed baseline.)
     val recordingEligible =
-      (cpus == "32" && only.isEmpty && errors.isEmpty &&
+      (cpus == 32 && only.isEmpty && errors.isEmpty &&
         contended == "false").toString
     // per-measurement contention labels (VERDICT r13 #3): queries whose
     // re-measurement was ALSO taken under an elevated probe — the only
@@ -407,7 +400,7 @@ object Bench {
         // (the first sf0.001 smoke after the feature landed flagged q45
         // against sf0.1 maxima — exactly the false positive this guard
         // kills)
-        if (root.get("sf").asText() != sfDir || cpus != "32") Map.empty
+        if (root.get("sf").asText() != sfDir || cpus != 32) Map.empty
         else {
           val b = Map.newBuilder[String, Double]
           root.get("queries").properties().forEach { e =>

@@ -24,4 +24,13 @@ object Catalog {
 
   def toOracle(qs: Seq[Q]): Map[String, String] =
     qs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** A comma-separated list of query-name prefixes ("q01,q45b"), as the
+    * `SPARK_GRAFT_ONLY` subset filter and the dev tools' arguments give it. */
+  def prefixes(spec: String): Seq[String] =
+    spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** `SPARK_GRAFT_ONLY`: the dev-only subset filter of Bench, Verify and
+    * ScaleCurve. Unset, every query is selected. */
+  def only: Option[Seq[String]] = sys.env.get("SPARK_GRAFT_ONLY").map(prefixes)
 }

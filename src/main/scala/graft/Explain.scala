@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-hygiene tool: dump the formatted physical plan of one or more
   * catalog queries. Usage: runMain graft.Explain <sfDir> <name> [<name>…]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark(LocalSpark.defaultCpus)
     spark.sparkContext.setLogLevel("WARN")
     // `-exec` (round 18): additionally EXECUTE each query through the
     // bench's noop sink and print the AQE-final executed plan — explain()

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.tools.Meter
 
 /** Scaling-evidence diagnostic: runs representative operators across the
   * three testdata scale factors (a 100× data range) and reports
@@ -9,28 +8,16 @@ import org.apache.spark.sql.SparkSession
   * that decides whether an operator survives a 1000-executor cluster.
   * Results are recorded in SCALING.md and cited by SURVEY §9.
   *
-  * Usage: `sbt "runMain graft.ScaleCurve"` (≈5 min).
+  * Usage: `sbt "runMain graft.ScaleCurve"` (≈5 min); `SPARK_GRAFT_ONLY`
+  * (comma-separated name prefixes) restricts it to a subset, for
+  * collecting rows of newly added operators without re-running the
+  * whole table.
   */
 object ScaleCurve {
 
-  private final class ShuffleMeter extends SparkListener {
-    @volatile var bytes = 0L
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      bytes += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    def reset(): Unit = bytes = 0L
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark(LocalSpark.defaultCpus)
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     val queries = Seq(
@@ -79,15 +66,8 @@ object ScaleCurve {
       "q209_pagerank_maintain", "q210_transitivity_maintain",
       "q211_stream_pagerank_gate")
 
-    // SPARK_GRAFT_CURVE_ONLY=q91,q92 restricts to a comma-separated prefix
-    // set, for collecting rows of newly added operators without re-running
-    // the whole table (same idea as Bench's SPARK_GRAFT_ONLY).
-    val only = sys.env.get("SPARK_GRAFT_CURVE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(pre) => queries.filter(q => pre.exists(q.startsWith))
-      case None      => queries
-    }
+    val only = Catalog.only
+    val selected = queries.filter(q => only.forall(_.exists(q.startsWith)))
 
     println(f"${"query"}%-18s ${"sf"}%-8s ${"sec"}%8s ${"shuffleMB"}%10s")
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); name <- selected) {
@@ -96,19 +76,17 @@ object ScaleCurve {
       // action is a noop write so every output column materializes (a
       // count() lets Catalyst prune unconsumed window/derived columns and
       // their exchanges — see Bench.scala header).
-      var best = Double.MaxValue
-      var shuffleMb = 0.0
-      for (_ <- 1 to 2) {
+      val runs = (1 to 2).map { _ =>
         spark.catalog.clearCache()
-        Thread.sleep(200) // let listener events drain before resetting
-        meter.reset()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        Thread.sleep(200)
-        shuffleMb = meter.bytes / 1e6
+        Meter.measure(spark) {
+          val t0 = System.nanoTime()
+          SparkEntry.queries(name)(spark, dir)
+            .write.mode("overwrite").format("noop").save()
+          (System.nanoTime() - t0) / 1e9
+        }
       }
+      val best = runs.map(_._1).min
+      val shuffleMb = runs.last._2.shuffleBytes / 1e6
       println(f"$name%-18s $sf%-8s $best%8.2f $shuffleMb%10.2f")
     }
     spark.stop()

@@ -1,25 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark(LocalSpark.defaultCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated name prefixes), mirroring
-    // Bench's SPARK_GRAFT_ONLY; the driver sets no env, so its runs always
-    // dump the full catalog.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    // Dev-only subset filter (Catalog.only); unset, the full catalog is
+    // dumped.
+    val only = Catalog.only
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
     SparkEntry.queries.keys.toSeq.sorted.filter(selected).foreach { name =>
@@ -35,15 +27,8 @@ object Verify {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String =
+      "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
     // A null/empty oracle (e.g. a val-init-order bug making an entry
     // Some(null), round 9) must degrade ONE query to a rows-only check,
     // never NPE the escaper and zero the whole round's compare.

@@ -4,6 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** The reference's user-facing service shell
@@ -49,21 +50,9 @@ final class ApiServer(runJob: () => IngestMetrics, port: Int = 0) {
 
   /** JSON string escaping — a store path containing `"`, `\`, or control
     * characters (newline/tab in a quoted dir name) must not produce
-    * malformed JSON on the sync endpoint (ADVICE r4/r5: backslash+quote
-    * alone still let U+0000–U+001F through unescaped). */
-  private def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '"' => sb.append("\\\"")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
+    * malformed JSON on the sync endpoint. */
+  private def jsonEscape(s: String): String =
+    new String(JsonStringEncoder.getInstance.quoteAsString(s))
 
   private def metricsJson(m: IngestMetrics): String = {
     def opt(v: Option[Int]): String = v.map(_.toString).getOrElse("null")

@@ -100,12 +100,7 @@ object OpsMain {
     val Array(baseDir, fixturePath, storePath) = args
     val keys = Secrets.fromEnv(
       dotenv = Some(Paths.get(baseDir).resolve(".env")))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark(4)
     val rc = OpsRunner.withRun(Paths.get(baseDir), "ingestion.job") { () =>
       val m = IngestionJob.run(spark, new FixtureFetcher(fixturePath),
         storePath, keys)

@@ -1,11 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Per-query cost-structure profiler (round 18, guide §1): the bench
   * records WALL per query, but optimizing a 17 MB-scale run needs the
   * split behind it — how much of a query is scheduling (jobs × stages ×
@@ -20,70 +14,20 @@ import org.apache.spark.sql.SparkSession
   * bound (fix: fewer jobs/stages/partitions); one whose task_sec is the
   * wall × cores product is compute bound (fix: the plan or expressions).
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.Profile <sfDir> <q>…"
-  * (query names may be comma- or space-separated; prefix match).
-  *
-  * Accounting caveat (ADVICE r18 #4): stages are counted via
-  * onStageCompleted only, so SKIPPED (reused) stages are invisible, and a
-  * retried stage attempt is counted (and its task metrics summed) once
-  * per attempt — on queries with stage reuse or task retries the
-  * jobs/stages/task_sec split over- or under-attributes accordingly.
-  * Fine for the tool's purpose (relative cost structure on clean local
-  * runs, where retries are rare and reuse is part of the cost saved);
-  * do not read the stage count as "distinct stages in the plan".
+  * Usage: sbt "runMain graft.tools.Profile <sfDir> <q>… [-stages]"
+  * (query names may be comma- or space-separated; prefix match). The
+  * counters and their accounting caveat are [[Meter]]'s. `-stages` adds
+  * each run's 25 costliest stages by task time, named by call site.
   */
 object Profile {
-
-  private final class Meter extends SparkListener {
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val taskMs = new AtomicLong(0L)
-    val gcMs = new AtomicLong(0L)
-    val shufW = new AtomicLong(0L)
-    // per-stage rows for the `-stages` drill-down: (name+callSite, tasks,
-    // task ms, shuffle bytes) — callSite maps a hot stage back to the
-    // operator source line, which is the whole point of the mode
-    val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, Int, Long, Long)]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet()
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        taskMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        stageRows.add((e.stageInfo.name.takeWhile(_ != '\n').take(90),
-          e.stageInfo.numTasks, m.executorRunTime,
-          m.shuffleWriteMetrics.bytesWritten))
-      }
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      tasks.incrementAndGet()
-    def reset(): Unit = {
-      jobs.set(0); stages.set(0); tasks.set(0)
-      taskMs.set(0L); gcMs.set(0L); shufW.set(0L)
-      stageRows.clear()
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val (flags, rest) = args.tail.partition(_.startsWith("-"))
     val stageMode = flags.contains("-stages")
-    val wanted = rest.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val wanted = rest.flatMap(graft.Catalog.prefixes)
+    val spark = graft.LocalSpark(graft.LocalSpark.defaultCpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val meter = new Meter
-    spark.sparkContext.addSparkListener(meter)
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
@@ -96,24 +40,18 @@ object Profile {
     names.foreach { name =>
       (1 to 2).foreach { rep =>
         spark.catalog.clearCache()
-        meter.reset()
-        val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        val t1 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        // listener events drain asynchronously; settle before reading
-        org.apache.spark.sql.graftshim.ListenerShim
-          .waitUntilListenersDrained(spark.sparkContext)
-        val build = (t1 - t0) / 1e9
-        println(f"$name%-36s r$rep $wall%6.2f $build%6.2f ${meter.jobs.get}%5d ${meter.stages.get}%5d ${meter.tasks.get}%6d ${meter.taskMs.get / 1e3}%7.1f ${meter.shufW.get / 1e6}%7.1f ${meter.gcMs.get / 1e3}%5.1f")
-        if (stageMode) {
-          import scala.jdk.CollectionConverters._
-          meter.stageRows.asScala.toSeq.sortBy(-_._3).take(25).foreach {
-            case (nm, nt, ms, sb) =>
-              println(f"    ${ms / 1e3}%7.2fs ${nt}%5d tasks ${sb / 1e6}%8.2fMB  $nm")
-          }
+        val ((wall, build), m) = Meter.measure(spark) {
+          val t0 = System.nanoTime()
+          val df = graft.SparkEntry.queries(name)(spark, sfDir)
+          val t1 = System.nanoTime()
+          df.write.mode("overwrite").format("noop").save()
+          ((System.nanoTime() - t0) / 1e9, (t1 - t0) / 1e9)
         }
+        println(f"$name%-36s r$rep $wall%6.2f $build%6.2f ${m.jobs}%5d ${m.stages}%5d ${m.tasks}%6d ${m.taskMs / 1e3}%7.1f ${m.shuffleBytes / 1e6}%7.1f ${m.gcMs / 1e3}%5.1f")
+        if (stageMode)
+          m.stageRows.sortBy(-_.taskMs).take(25).foreach { st =>
+            println(f"    ${st.taskMs / 1e3}%7.2fs ${st.tasks}%5d tasks ${st.shuffleBytes / 1e6}%8.2fMB  ${st.name}")
+          }
       }
     }
     spark.stop()

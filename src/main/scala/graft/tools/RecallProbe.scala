@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints each gated-ANN query's measured verification row (notably
   * `avg_recall`) at the given SF dir, so the pinned constants in the
   * oracle SQL (VERDICT r10 #3) can be re-derived after a testdata
@@ -18,12 +16,7 @@ object RecallProbe {
     // SF (above VerifyGate.MaxRows), where the benched plan itself
     // honestly skips the quadratic exact pass (VERDICT r11 #5)
     sys.props("graft.forceVerify") = "1"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark(4)
     spark.sparkContext.setLogLevel("WARN")
     AnnQueries.foreach { name =>
       spark.catalog.clearCache()

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
-  SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import graft.ops.SkewData
 
 /** Skew-mitigation measurement (VERDICT r10 #4): runs the q29/q18 salted
@@ -24,34 +21,16 @@ import graft.ops.SkewData
   */
 object SkewBench {
 
-  private final class Meter extends SparkListener {
-    @volatile var shuffleBytes = 0L
-    @volatile var maxTaskMs = 0L
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      shuffleBytes += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (e.taskInfo != null && e.taskInfo.duration > maxTaskMs)
-        maxTaskMs = e.taskInfo.duration
-    def reset(): Unit = { shuffleBytes = 0L; maxTaskMs = 0L }
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.LocalSpark.defaultCpus
     val nRows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "4000000").toLong
     val nKeys = 100000
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val meter = new Meter
-    spark.sparkContext.addSparkListener(meter)
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
-    SkewData.fact(spark, nRows, nKeys, parts = cpus.toInt)
+    SkewData.fact(spark, nRows, nKeys, parts = cpus)
       .write.mode("overwrite").parquet(s"$dir/fact")
     val fact = spark.read.parquet(s"$dir/fact")
     val dim = SkewData.dim(spark, nKeys)
@@ -68,31 +47,20 @@ object SkewBench {
 
     def measure(name: String)(mk: => org.apache.spark.sql.DataFrame)
         : Seq[Any] = {
-      var best = Double.MaxValue
-      var row: Seq[Any] = Nil
-      var shuffleMb = 0.0
-      var maxTaskS = 0.0
-      (1 to 2).foreach { _ =>
+      // shuffle and max-task come from the SAME run as the best wall —
+      // otherwise the printed straggler can come from a contended rep
+      // while the wall comes from the clean one
+      val ((best, r), m) = (1 to 2).map { _ =>
         spark.catalog.clearCache()
-        Thread.sleep(300)
-        meter.reset()
-        val t0 = System.nanoTime()
-        val r = mk.collect()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // drain the async listener bus BEFORE reading the meter, and
-        // record shuffle/max-task from the SAME run as the best wall —
-        // otherwise the printed straggler can come from a contended rep
-        // while the wall comes from the clean one
-        Thread.sleep(300)
-        if (sec < best) {
-          best = sec
-          row = r.head.toSeq
-          shuffleMb = meter.shuffleBytes / 1e6
-          maxTaskS = meter.maxTaskMs / 1e3
+        Meter.measure(spark) {
+          val t0 = System.nanoTime()
+          val r = mk.collect()
+          ((System.nanoTime() - t0) / 1e9, r)
         }
-      }
-      println(f"$name%-28s ${best}%7.2f s ${shuffleMb}%9.2f MB " +
-        f"maxTask ${maxTaskS}%6.2f s   result=${row.mkString(",")}")
+      }.minBy(_._1._1)
+      val row = r.head.toSeq
+      println(f"$name%-28s ${best}%7.2f s ${m.shuffleBytes / 1e6}%9.2f MB " +
+        f"maxTask ${m.maxTaskMs / 1e3}%6.2f s   result=${row.mkString(",")}")
       row
     }
 

@@ -2,12 +2,11 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.SparkContext
 
-/** Deterministic listener-bus drain for metric-metering specs.
+/** Deterministic listener-bus drain for [[graft.tools.Meter]].
   *
-  * The shuffle/spill meters in GraphOpsSpec/ScaleCurve read counters a
-  * `SparkListener` accumulates from ASYNC bus events; a fixed
-  * `Thread.sleep` between the action and the read is a race dressed as
-  * a timeout (ADVICE r16 #4). `LiveListenerBus.waitUntilEmpty` is the
+  * The meter reads counters a `SparkListener` accumulates from ASYNC bus
+  * events; a fixed `Thread.sleep` between the action and the read is a
+  * race dressed as a timeout (ADVICE r16 #4). `LiveListenerBus.waitUntilEmpty` is the
   * synchronization Spark's own test suites use — `private[spark]`,
   * hence surfaced here next to the engine's other two Spark-private
   * touch points ([[ColumnShim]], [[CheckpointShim]]).

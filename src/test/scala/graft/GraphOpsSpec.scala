@@ -1,10 +1,20 @@
 package graft
 
 import graft.ops.GraphOps
+import graft.tools.Meter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphOpsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Shuffle bytes of one noop write of `df`, which is built inside the
+    * metered window: the rank loops run eager actions while building. */
+  private def shuffleBytes(df: => DataFrame): Long = {
+    spark.catalog.clearCache()
+    Meter.measure(spark)(df.write.mode("overwrite").format("noop").save())
+      ._2.shuffleBytes
+  }
 
   test("coPurchaseEdges: symmetric, deduped, no self-loops") {
     // orders: (o1: p1 p2 p3), (o2: p1 p2) — p1-p2 co-occur twice but must
@@ -57,27 +67,10 @@ class GraphOpsSpec extends SparkSpec {
 
   test("iterations are exchange-free on the dst-clustered layout: " +
       "5 iterations shuffle no more bytes than 1") {
-    val meter = new org.apache.spark.scheduler.SparkListener {
-      @volatile var bytes = 0L
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        bytes += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
     val li = spark.range(0, 20000L)
       .selectExpr("id div 4 AS l_orderkey", "id % 211 AS l_partkey")
-    def run(iters: Int): Long = {
-      spark.catalog.clearCache()
-      spark.sparkContext.addSparkListener(meter)
-      meter.bytes = 0L
-      GraphOps.pageRankScaled(GraphOps.coPurchaseEdges(li), iters)
-        .write.mode("overwrite").format("noop").save()
-      // deterministic drain, not a sleep race (ADVICE r16 #4)
-      org.apache.spark.sql.graftshim.ListenerShim
-        .waitUntilListenersDrained(spark.sparkContext)
-      val b = meter.bytes
-      spark.sparkContext.removeSparkListener(meter)
-      b
-    }
+    def run(iters: Int): Long =
+      shuffleBytes(GraphOps.pageRankScaled(GraphOps.coPurchaseEdges(li), iters))
     val one = run(1)
     val five = run(5)
     assert(one > 0L) // the edge build does shuffle (once)
@@ -118,27 +111,10 @@ class GraphOpsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     GraphOps.writeEdgeSnapshot(spark, dir)
     val cut = graft.schema.Cuts.lineitem(spark, dir)
-    val meter = new org.apache.spark.scheduler.SparkListener {
-      @volatile var bytes = 0L
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        bytes += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-    def serve(iters: Int): Long = {
-      spark.catalog.clearCache()
-      spark.sparkContext.addSparkListener(meter)
-      meter.bytes = 0L
-      GraphOps.pageRankMaintainServe(spark,
-          GraphOps.coPurchaseEdges(graft.schema.Tables.lineitem(spark, dir)
-            .filter(col("l_orderkey") >= cut)), iters)
-        .write.mode("overwrite").format("noop").save()
-      // deterministic drain, not a sleep race (ADVICE r16 #4)
-      org.apache.spark.sql.graftshim.ListenerShim
-        .waitUntilListenersDrained(spark.sparkContext)
-      val b = meter.bytes
-      spark.sparkContext.removeSparkListener(meter)
-      b
-    }
+    def serve(iters: Int): Long =
+      shuffleBytes(GraphOps.pageRankMaintainServe(spark,
+        GraphOps.coPurchaseEdges(graft.schema.Tables.lineitem(spark, dir)
+          .filter(col("l_orderkey") >= cut)), iters))
     val one = serve(1)
     val five = serve(5)
     // both serves pay the same increment derivation + anti-join; the 4
@@ -197,27 +173,11 @@ class GraphOpsSpec extends SparkSpec {
   test("the shuffled-rank fallback is still edge-stationary: extra " +
       "iterations above the gate add node-bounded shuffle, never an " +
       "edge-relation re-exchange (round 17, VERDICT r16 #2)") {
-    val meter = new org.apache.spark.scheduler.SparkListener {
-      @volatile var bytes = 0L
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        bytes += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
     val li = spark.range(0, 20000L)
       .selectExpr("id div 4 AS l_orderkey", "id % 211 AS l_partkey")
-    def run(iters: Int): Long = {
-      spark.catalog.clearCache()
-      spark.sparkContext.addSparkListener(meter)
-      meter.bytes = 0L
-      GraphOps.pageRankScaled(GraphOps.coPurchaseEdges(li), iters,
-          broadcastGateNodes = 0L)
-        .write.mode("overwrite").format("noop").save()
-      org.apache.spark.sql.graftshim.ListenerShim
-        .waitUntilListenersDrained(spark.sparkContext)
-      val b = meter.bytes
-      spark.sparkContext.removeSparkListener(meter)
-      b
-    }
+    def run(iters: Int): Long =
+      shuffleBytes(GraphOps.pageRankScaled(GraphOps.coPurchaseEdges(li), iters,
+        broadcastGateNodes = 0L))
     val one = run(1)
     val five = run(5)
     // the 1-iter run carries the edge build + the one-time src-layout
@@ -244,27 +204,11 @@ class GraphOpsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     GraphOps.writeEdgeSnapshot(spark, dir)
     val cut = graft.schema.Cuts.lineitem(spark, dir)
-    val meter = new org.apache.spark.scheduler.SparkListener {
-      @volatile var bytes = 0L
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        bytes += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-    def serve(iters: Int): Long = {
-      spark.catalog.clearCache()
-      spark.sparkContext.addSparkListener(meter)
-      meter.bytes = 0L
-      GraphOps.pageRankMaintainServe(spark,
-          GraphOps.coPurchaseEdges(graft.schema.Tables.lineitem(spark, dir)
-            .filter(col("l_orderkey") >= cut)),
-          iters, broadcastGateNodes = 0L)
-        .write.mode("overwrite").format("noop").save()
-      org.apache.spark.sql.graftshim.ListenerShim
-        .waitUntilListenersDrained(spark.sparkContext)
-      val b = meter.bytes
-      spark.sparkContext.removeSparkListener(meter)
-      b
-    }
+    def serve(iters: Int): Long =
+      shuffleBytes(GraphOps.pageRankMaintainServe(spark,
+        GraphOps.coPurchaseEdges(graft.schema.Tables.lineitem(spark, dir)
+          .filter(col("l_orderkey") >= cut)),
+        iters, broadcastGateNodes = 0L))
     // warm the src-layout twin OUTSIDE the metered window: its one-time
     // bucketed write is an ingest-time artifact cost, not serve shuffle
     serve(1)

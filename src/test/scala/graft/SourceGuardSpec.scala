@@ -1,0 +1,34 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps one session factory and one listener meter: a session builder
+  * or listener subclass anywhere else under src/ fails the build, so the
+  * per-tool copies cannot grow back. Session-free source scan, like
+  * CatalogIndexSpec's.
+  */
+class SourceGuardSpec extends AnyFunSuite {
+
+  /** The .scala files under src/ with a line matching `pattern`. */
+  private def filesMatching(pattern: String): Seq[String] = {
+    val re = pattern.r
+    Files.walk(Paths.get("src")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .filter { p: Path =>
+        Files.readAllLines(p).asScala.exists(re.findFirstIn(_).isDefined)
+      }
+      .map(_.toString).sorted
+  }
+
+  test("one session builder (LocalSpark) and one SparkListener (Meter)") {
+    assert(filesMatching("""SparkSession\s*\.\s*builder""") ===
+      Seq("src/main/scala/graft/LocalSpark.scala"))
+    assert(filesMatching(
+      """(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b""") ===
+      Seq("src/main/scala/graft/tools/Meter.scala"))
+  }
+}

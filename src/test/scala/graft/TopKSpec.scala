@@ -55,46 +55,35 @@ class TopKSpec extends SparkSpec {
     // rule, would pay. The aggregate's remaining edge is composability:
     // top-k alongside other aggregates in ONE pass, grouped output with
     // no re-explode.
-    val meter = new org.apache.spark.scheduler.SparkListener {
-      @volatile var bytes = 0L
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        bytes += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-    spark.sparkContext.addSparkListener(meter)
-    try {
-      // 200k rows over 3 keys (~67k rows/key, k=3): the regime bounded
-      // top-k exists for
-      val df = spark.range(200000).select(($"id" % 3).as("key"),
-        ($"id" % 9973).cast("double").as("score"), $"id".as("ident"))
-      def measure(d: org.apache.spark.sql.DataFrame): Long = {
-        Thread.sleep(300); meter.bytes = 0L
-        d.write.mode("overwrite").format("noop").save()
-        Thread.sleep(300); meter.bytes
+    // 200k rows over 3 keys (~67k rows/key, k=3): the regime bounded
+    // top-k exists for
+    val df = spark.range(200000).select(($"id" % 3).as("key"),
+      ($"id" % 9973).cast("double").as("score"), $"id".as("ident"))
+    def measure(d: org.apache.spark.sql.DataFrame): Long =
+      graft.tools.Meter.measure(spark)(
+        d.write.mode("overwrite").format("noop").save())._2.shuffleBytes
+    val w = Window.partitionBy($"key")
+      .orderBy($"score".desc, $"ident".asc)
+    val windowed = df.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 3)
+    val aggBytes = measure(df.groupBy($"key")
+      .agg(TopKAgg.topK(3)($"score", $"ident").as("top")))
+    val winOptBytes = measure(windowed)
+    val ruleKey = "spark.sql.optimizer.excludedRules"
+    val saved = spark.conf.getOption(ruleKey)
+    spark.conf.set(ruleKey,
+      "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit")
+    val winNaiveBytes =
+      try measure(windowed)
+      finally saved match {
+        case Some(v) => spark.conf.set(ruleKey, v)
+        case None => spark.conf.unset(ruleKey)
       }
-      val w = Window.partitionBy($"key")
-        .orderBy($"score".desc, $"ident".asc)
-      val windowed = df.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-      val aggBytes = measure(df.groupBy($"key")
-        .agg(TopKAgg.topK(3)($"score", $"ident").as("top")))
-      val winOptBytes = measure(windowed)
-      val ruleKey = "spark.sql.optimizer.excludedRules"
-      val saved = spark.conf.getOption(ruleKey)
-      spark.conf.set(ruleKey,
-        "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit")
-      val winNaiveBytes =
-        try measure(windowed)
-        finally saved match {
-          case Some(v) => spark.conf.set(ruleKey, v)
-          case None => spark.conf.unset(ruleKey)
-        }
-      assert(aggBytes > 0 && winOptBytes > 0 && winNaiveBytes > 0)
-      assert(aggBytes < winOptBytes * 10 && winOptBytes < aggBytes * 10,
-        s"expected same order: agg=$aggBytes optimized-window=$winOptBytes")
-      assert(aggBytes * 50 < winNaiveBytes,
-        s"agg=$aggBytes should be ≪ un-optimized window=$winNaiveBytes")
-    } finally spark.sparkContext.removeSparkListener(meter)
+    assert(aggBytes > 0 && winOptBytes > 0 && winNaiveBytes > 0)
+    assert(aggBytes < winOptBytes * 10 && winOptBytes < aggBytes * 10,
+      s"expected same order: agg=$aggBytes optimized-window=$winOptBytes")
+    assert(aggBytes * 50 < winNaiveBytes,
+      s"agg=$aggBytes should be ≪ un-optimized window=$winNaiveBytes")
   }
 
   test("property: matches local sort-take on random data with ties") {

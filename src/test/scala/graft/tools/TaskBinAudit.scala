@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only task-binary audit (test scope, never shipped): runs the whole
   * catalog once, printing a `###Q <name>` marker to stderr before each
   * query so Spark's "Broadcasting large task binary" WARNings (same
@@ -15,17 +13,10 @@ import org.apache.spark.sql.SparkSession
 object TaskBinAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark(graft.LocalSpark.defaultCpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
-    val only = args.headOption
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val only = args.headOption.map(graft.Catalog.prefixes)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
     names.foreach { name =>
