@@ -1,12 +1,14 @@
 package graft.jobs
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 import graft.expr.Crypto
-import graft.ops.{Flatten, Upsert}
+import graft.ops.Flatten
 import graft.schema.Schemas
 
 /** Per-run metrics — same-named fields as the reference's metrics dict
@@ -45,10 +47,14 @@ final case class IngestMetrics(
   * identical path.
   *
   * Store: parquet (typed, columnar, splittable) instead of the reference's
-  * single CSV; written to a temp dir then swapped so a failed write never
-  * truncates the store (the reference's full-file rewrite has the same
-  * failure window, `io_utils.py:37`). At 100 TB the store is key-partitioned
-  * and this becomes dynamic partition overwrite of touched partitions.
+  * single CSV. Keep-first means stored rows always win, so a run can only
+  * add rows whose key is absent: it probes the store for the batch's keys,
+  * writes the new rows to a per-run staging directory and renames its
+  * `part-*` file into the store. Stored files are never rewritten or
+  * deleted, so a crash at any point leaves the previous store readable
+  * (the reference's full-file rewrite has a failure window,
+  * `io_utils.py:37`). Two overlapping runs can still both add the same new
+  * key: there is no run lock yet.
   */
 object IngestionJob {
 
@@ -113,8 +119,9 @@ object IngestionJob {
         col("dob_age"),
         to_timestamp(col("registered_date")).as("registered_date"),
         col("location_country"),
-        // derived secure columns (transformations.py:59-63); nondeterministic
-        // ones are materialized before any dedup boundary (SURVEY.md §4.3)
+        // derived secure columns (transformations.py:59-63); the ingestion
+        // run dedups on the raw key before this projection, so no
+        // nondeterministic column ever meets a dedup (SURVEY.md §4.3)
         // real Argon2id (RFC 9106) at the reference's time_cost=3; memory
         // knob defaults to 4 MiB here so the 6-row-fixture e2e demo (two
         // full job runs in q23) stays in bench budget — the reference's
@@ -160,34 +167,73 @@ object IngestionJob {
 
     val fetchResult = fetcher.fetch()
     val fetched = readUsersJson(spark, fetchResult.body)
-    val secured = secure(fetched)
-    val rowsFetched = fetched.count()
 
-    val fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Keep-first semantics (io_utils.py:25,34): stored rows win; within the
+    // batch the first fetch position wins. The batch is driver-sized, so it
+    // comes back in one job and the first row per key is picked here. A null
+    // key is one key, as in Upsert.keepFirst's window.
+    val batch = fetched.collect()
+    val rowsFetched = batch.length.toLong
+    def keyOf(r: Row): Option[String] =
+      Option(r.getAs[Row]("login")).flatMap(l => Option(l.getAs[String]("uuid")))
+    val firstByKey = batch.groupBy(keyOf).map { case (k, rs) =>
+      k -> rs.minBy(_.getAs[Int]("_fetch_pos")) }
+
     val store = new Path(storePath)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val storeExists = fs.exists(store)
 
-    val persistedSchema = secured.drop("_fetch_pos").schema
-    val existing =
-      if (fs.exists(store)) spark.read.parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], persistedSchema)
+    // Every plan below keeps one shape whatever the batch holds: the rows
+    // travel as a local relation and the keys as one array literal, never
+    // as per-row literals in the plan, so each run reuses the code the first
+    // one generated instead of compiling its own. On a local relation Spark
+    // evaluates the secure projection, Argon2id included, while planning.
+    def local(rows: Seq[Row]): DataFrame =
+      secure(spark.createDataFrame(rows.asJava, fetched.schema))
+        .drop("_fetch_pos")
+    val persisted = local(Nil).schema
+    val storeSchema =
+      if (!storeExists) persisted else spark.read.parquet(storePath).schema
 
-    // Keep-first semantics (io_utils.py:25,34): existing rows win (priority
-    // tag inside keepFirst); within the new batch, first fetch position wins.
-    val finalDf = Upsert.keepFirst(
-      existing.withColumn("_fetch_pos", lit(-1)), secured,
-      keys = Seq("login_uuid"), order = Seq(col("_fetch_pos")))
-      .drop("_fetch_pos")
+    val stored: Set[Option[String]] =
+      if (!storeExists || firstByKey.isEmpty) Set.empty
+      else {
+        require(storeSchema.map(f => f.name -> f.dataType).toSet ==
+          persisted.map(f => f.name -> f.dataType).toSet,
+          s"store schema ${storeSchema.simpleString} does not match the " +
+            s"batch schema ${persisted.simpleString}")
+        // column-pruned probe for the batch's keys; array_contains never
+        // matches null, so a keyless batch row probes with isNull too
+        val key = col("login_uuid")
+        val probe = array_contains(typedLit(firstByKey.keys.flatten.toSeq), key)
+        spark.read.schema(storeSchema).parquet(storePath).select(key)
+          .filter(if (firstByKey.contains(None)) probe || key.isNull else probe)
+          .collect().map(r => Option(r.getString(0))).toSet
+      }
+    val fresh = firstByKey.collect { case (k, r) if !stored(k) => r }.toSeq
+      .sortBy(_.getAs[Int]("_fetch_pos"))
 
-    val tmp = new Path(storePath + ".tmp")
-    // batch-of-10-per-run regime (reference's workload): one output file
-    // beats shuffle.partitions near-empty files. The partitioned store at
-    // scale is Upsert.partitionedUpsert, not this path.
-    finalDf.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val rowsAfterDedup = spark.read.parquet(tmp.toString).count()
-    if (fs.exists(store)) fs.delete(store, true)
-    fs.rename(tmp, store)
+    // Append-only commit: the first run renames its staging directory into
+    // place; later runs move only their part file in, and only when they
+    // add rows. Staging is per run, so overlapping runs never share it.
+    if (!storeExists || fresh.nonEmpty) {
+      val staging = new Path(store.getParent,
+        s"${store.getName}.tmp-${java.util.UUID.randomUUID()}")
+      // secure only the new rows: Argon2id hashes only the rows it commits
+      local(fresh).coalesce(1).write.parquet(staging.toString)
+      def move(from: Path, to: Path): Unit =
+        if (!fs.rename(from, to))
+          throw new java.io.IOException(s"could not rename $from to $to")
+      if (!storeExists) move(staging, store)
+      else {
+        fs.listStatus(staging).map(_.getPath)
+          .filter(_.getName.startsWith("part-"))
+          .foreach(p => move(p, new Path(store, p.getName)))
+        fs.delete(staging, true)
+      }
+    }
+    val rowsAfterDedup =
+      spark.read.schema(storeSchema).parquet(storePath).count()
 
     val metrics = IngestMetrics(
       httpStatus = fetchResult.httpStatus,

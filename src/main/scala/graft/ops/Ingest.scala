@@ -379,19 +379,13 @@ object Ingest {
         val fixture = s"$repo/data/fixtures/users_fixture.json"
         val body = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(fixture)), java.nio.charset.StandardCharsets.UTF_8)
-        // batch-of-6 regime: the run is ~a dozen tiny sequential jobs, so
-        // right-size the shuffle like the streaming queries do — 32
-        // partitions of a 6-row window is pure task overhead
-        val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        val (m1, m2) =
-          try graft.jobs.LoopbackApi.withServer(body) { url =>
-            val first = IngestionJob.run(s, new graft.jobs.HttpUserFetcher(url),
-              store, "test-pepper", AesKey, BidxKey)
-            val second = IngestionJob.run(s, new graft.jobs.HttpUserFetcher(url),
-              store, "test-pepper", AesKey, BidxKey) // idempotent re-ingest
-            (first, second)
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        val (m1, m2) = graft.jobs.LoopbackApi.withServer(body) { url =>
+          val first = IngestionJob.run(s, new graft.jobs.HttpUserFetcher(url),
+            store, "test-pepper", AesKey, BidxKey)
+          val second = IngestionJob.run(s, new graft.jobs.HttpUserFetcher(url),
+            store, "test-pepper", AesKey, BidxKey) // idempotent re-ingest
+          (first, second)
+        }
         import s.implicits._
         Seq(m1, m2).zipWithIndex.map { case (m, i) =>
           (s"run${i + 1}", m.httpStatus.getOrElse(-1),

@@ -1,0 +1,165 @@
+package graft
+
+import java.io.{ByteArrayOutputStream, File, PrintStream}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+
+import graft.jobs.{FetchResult, IngestMetrics, IngestionJob, UserFetcher}
+import graft.ops.Upsert
+
+/** The ingestion run's append-only commit against the reference's
+  * keep-first upsert (`ingestion/io_utils.py:16-39`):
+  * after every run the store must hold exactly what
+  * `Upsert.keepFirst(store, batch)` would have rewritten it to, and a
+  * killed run's staging residue must never reach the store.
+  */
+class IngestionCommitSpec extends SparkSpec {
+
+  private val pepper = "pepper"
+  private val aesKey = "0123456789abcdef"
+  private val bidxKey = "bidx-key"
+
+  /** The columns a rerun reproduces bit for bit (no salt, no IV). */
+  private val deterministic = Seq("login_uuid", "login_username", "name_first",
+    "name_last", "dob_date", "dob_age", "registered_date", "location_country",
+    "email_bidx")
+
+  private final class BodyFetcher(body: String) extends UserFetcher {
+    override def describe: String = "spec://batch"
+    override def fetch(): FetchResult = FetchResult(body, None, None)
+  }
+
+  /** One API user; `uuid = null` gives a user without a key. */
+  private def user(uuid: String, first: String): String = {
+    val key = if (uuid == null) "null" else s""""$uuid""""
+    s"""{"name": {"title": "Mx", "first": "$first", "last": "L$first"},
+       | "email": "$first@example.com",
+       | "login": {"uuid": $key, "username": "u$first", "password": "pw$first"},
+       | "dob": {"date": "1990-01-02T03:04:05.000Z", "age": 35},
+       | "registered": {"date": "2015-06-07T08:09:10.000Z", "age": 10},
+       | "phone": "011-555-$first",
+       | "location": {"street": {"number": 1, "name": "$first Road"},
+       |   "city": "C", "state": "S", "country": "Country$first",
+       |   "postcode": "P"}}""".stripMargin
+  }
+
+  private def batch(users: String*): String =
+    users.mkString("""{"results": [""", ",", "]}")
+
+  private def run(store: String, body: String): IngestMetrics =
+    Console.withOut(new PrintStream(new ByteArrayOutputStream())) {
+      IngestionJob.run(spark, new BodyFetcher(body), store, pepper, aesKey,
+        bidxKey)
+    }
+
+  private def sorted(df: DataFrame): Seq[Row] =
+    df.select(deterministic.map(col): _*).collect().toSeq.sortBy(_.toString)
+
+  /** The store's deterministic rows, or none if there is no store yet. */
+  private def storeRows(store: String): Seq[Row] =
+    if (Files.exists(Paths.get(store))) sorted(spark.read.parquet(store))
+    else Nil
+
+  /** The old semantics: the whole store and the secured batch through
+    * `Upsert.keepFirst`, stored rows first, then fetch position. */
+  private def keepFirst(before: Seq[Row], body: String): Seq[Row] = {
+    val secured = IngestionJob.secureTransform(
+      IngestionJob.readUsersJson(spark, body), pepper, aesKey, bidxKey)
+      .select((col("_fetch_pos") +: deterministic.map(col)): _*)
+    val schema = secured.drop("_fetch_pos").schema
+    val existing = spark.createDataFrame(
+      spark.sparkContext.parallelize(before, 1), schema)
+      .withColumn("_fetch_pos", lit(-1))
+      .select(secured.columns.map(col): _*)
+    sorted(Upsert.keepFirst(existing, secured, keys = Seq("login_uuid"),
+      order = Seq(col("_fetch_pos"))))
+  }
+
+  /** Run `body` into `store` and check it against `keepFirst`. */
+  private def checkRun(store: String, body: String): IngestMetrics = {
+    val want = keepFirst(storeRows(store), body)
+    val m = run(store, body)
+    val got = storeRows(store)
+    assert(got === want)
+    assert(m.rowsAfterDedup === want.size)
+    assert(m.rowsFetched ===
+      IngestionJob.readUsersJson(spark, body).count())
+    // the run's staging directory is gone
+    assert(new File(store).getParentFile.list().toSeq === Seq("st"))
+    m
+  }
+
+  private def newStore(): String =
+    Files.createTempDirectory("graft_commit_store").toString + "/st"
+
+  test("append-only commit equals keepFirst over the whole store, run " +
+      "after run") {
+    val store = newStore()
+    // first run into a missing store: a key repeated within the batch and
+    // two keyless users (one keyless row survives, the first)
+    val m1 = checkRun(store, batch(user("k1", "Ada"), user("k2", "Alan"),
+      user("k1", "Ada2"), user(null, "Nobody"), user(null, "Nobody2")))
+    assert(m1.rowsAfterDedup === 3)
+    // stored keys win, the stored keyless row wins, one key is new
+    val m2 = checkRun(store, batch(user("k2", "Alan2"), user("k3", "Grace"),
+      user(null, "Nobody3"), user("k3", "Grace2")))
+    assert(m2.rowsAfterDedup === 4)
+    // an empty batch adds nothing
+    assert(checkRun(store, batch()).rowsAfterDedup === 4)
+    // only repeats: nothing is written
+    val files = new File(store).list().length
+    assert(checkRun(store, batch(user("k3", "Grace3"), user("k1", "Ada3")))
+      .rowsAfterDedup === 4)
+    assert(new File(store).list().length === files)
+    val st = spark.read.parquet(store)
+    assert(st.count() === st.select("login_uuid").distinct().count())
+  }
+
+  test("an empty first batch creates an empty store; a keyless user then " +
+      "enters it once") {
+    val store = newStore()
+    assert(checkRun(store, batch()).rowsAfterDedup === 0)
+    assert(Files.isDirectory(Paths.get(store)))
+    assert(checkRun(store, batch(user(null, "Nobody"), user("k1", "Ada")))
+      .rowsAfterDedup === 2)
+    assert(checkRun(store, batch(user(null, "Nobody2"))).rowsAfterDedup === 2)
+  }
+
+  test("a killed run's staging residue never reaches the store, and the " +
+      "next runs commit beside it") {
+    val store = newStore()
+    run(store, batch(user("k1", "Ada"), user("k2", "Alan")))
+    val before = storeRows(store)
+    assert(before.size === 2)
+
+    // what a run killed mid-write leaves: its staging directory beside the
+    // store, holding a truncated part file
+    val part = new File(store).listFiles()
+      .find(_.getName.startsWith("part-")).get
+    val bytes = Files.readAllBytes(part.toPath)
+    val residue = Paths.get(s"$store.tmp-0123456789ab")
+    Files.createDirectories(residue)
+    Files.write(residue.resolve(part.getName),
+      java.util.Arrays.copyOf(bytes, bytes.length / 2))
+
+    // the store still reads with its previous contents
+    assert(storeRows(store) === before)
+
+    // a run commits correctly next to the residue
+    val body = batch(user("k2", "Alan2"), user("k3", "Grace"))
+    val want = keepFirst(before, body)
+    val m1 = run(store, body)
+    assert(storeRows(store) === want)
+    assert(m1.rowsAfterDedup === 3)
+
+    // rerunning the same batch adds 0 rows and reports the same count
+    val files = new File(store).list().length
+    val m2 = run(store, body)
+    assert(m2.rowsAfterDedup === m1.rowsAfterDedup)
+    assert(storeRows(store) === want)
+    assert(new File(store).list().length === files)
+    assert(Files.exists(residue))
+  }
+}
