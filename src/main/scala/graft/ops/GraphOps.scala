@@ -648,10 +648,9 @@ object GraphOps {
         writeDupGraphSnapshot(s, d)
         val sh = TextOps.docsWithShinglesLazy(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
-        // persisted: banding references the lazy shingle column once per
-        // hash lambda (the q35 hazard); unpersisted right after the
-        // delta-edge checkpoint materializes
-        val inc = sh.filter(col("doc_id") >= cut).persist()
+        // not persisted: banding is its only reader (candidate texts are
+        // looked up through `sh`)
+        val inc = sh.filter(col("doc_id") >= cut)
         // delta edges EAGERLY checkpointed, not merely persisted: the
         // maintain arithmetic fans FOUR consumers off this relation (two
         // triangle-join sides, degree deltas, edge count), three of them
@@ -670,7 +669,6 @@ object GraphOps {
           .select(col("id_a"), col("id_b"))
           .localCheckpoint(true,
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        inc.unpersist() // the sweep is materialized; the shingles are done
         liveGraphCaches.set(incEdges)
         transitivityMaintainFrom(s.table(DupGraphEdgeTable),
           s.table(s"${DupGraphEdgeTable}_deg"),

@@ -47,58 +47,30 @@ object PipelineOps {
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       driverGateEdges: Int = DriverGateEdgesDefault): DataFrame = {
-    // Materialize the edge pipeline FIRST, at the session's full
-    // parallelism: `edges` is typically the expensive part (e.g. q45 feeds
-    // the exact-Jaccard inverted-index join through here), and it executes
-    // lazily inside the loop's first action — running it under the
-    // loop-sized partition count silently serialized the corpus-sized
-    // join onto 4 partitions (the round-3 q45 regression, 5.0 → 8.0 s).
-    // one-generation residency (round 16): the symmetric-edge checkpoint
-    // and the final label checkpoint outlive the call (the labels back
-    // the returned frame), and Dataset.unpersist on checkpointed frames
-    // is a CacheManager no-op (ADVICE r15 #1) — so before this tracker,
-    // every CC invocation leaked its blocks until GC. The next CC call
-    // frees the previous generation; in-loop superseded label rounds are
-    // released immediately below.
+    // Checkpoint the input FIRST, at full parallelism (under the loop's
+    // 4-partition width q45's upstream join once ran on 4 tasks, the
+    // round-3 regression): it then runs ONCE however often it is read.
+    // Dataset.unpersist on a checkpoint is a no-op (ADVICE r15 #1), so
+    // the next call frees this call's checkpoints (round 16).
     liveCcCkpts.evict()
-    val sym = edges.select(col("a"), col("b"))
-      .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val in = edges.select(col("a").cast("long"), col("b").cast("long"))
       .localCheckpoint(true)
-    liveCcCkpts.add(sym)
+    liveCcCkpts.add(in)
     val spark = edges.sparkSession
-    // Size-gated hybrid (Spark's own broadcast-threshold pattern, round
-    // 12): the distributed min-label loop pays ~0.5 s/round of FIXED
-    // localCheckpoint+count overhead regardless of graph size — which
-    // dwarfs the real work on delta-sized graphs (the incremental
-    // maintainers' contracted graphs are a few hundred edges; oracle-SF
-    // dup-cluster graphs a few thousand). Below the gate — one bounded
-    // count over the already-checkpointed symmetric edges — a driver
-    // union-find with min-root union produces the IDENTICAL
-    // (node, min-member-id) labeling from one ≤ gate-row collect; above
-    // it the distributed loop runs unchanged (a 100 TB corpus delta can
-    // exceed any driver bound). Equality of the two paths is asserted by
-    // PipelineOpsSpec on randomized graphs (the spec forces the loop with
-    // driverGateEdges = 0).
-    //
-    // The 200k default is MEMORY-DERIVED (VERDICT r13 #8), not arbitrary:
-    // the collect ships gate × 2 longs = 200k × 16 B = 3.2 MB of row data
-    // (≈3× that transiently as driver Row objects, ~10 MB), and the
-    // union-find keeps ≤ 2·gate map entries ≈ 25 MB — all far inside the
-    // smallest plausible driver heap (1 GB), and an order of magnitude
-    // under Spark's own 128 MB collect-size guard. A retune must keep
-    // gate × 16 B ≪ driver heap; PipelineOpsSpec asserts the byte bound.
-    // Int-safe probe bound (round 18 review): `driverGateEdges + 1`
-    // overflows to Int.MinValue at a gate of Int.MaxValue — the natural
-    // "always take the driver path" override now reachable through
-    // SPARK_GRAFT_CC_GATE — and a negative limit throws on every
-    // cluster-family query. Same clamp as the PageRank twin's intGate:
-    // at the ceiling, any count passes the gate anyway.
+    // Size-gated hybrid (round 12): the loop pays ~0.5 s per round of
+    // fixed overhead, which dwarfs delta-sized graphs. The gate counts
+    // INPUT edges: one collect of at most gate + 1 decides the path and,
+    // below the gate, feeds a driver union-find — orientation- and
+    // duplicate-blind, and with min-root union the IDENTICAL labeling
+    // (PipelineOpsSpec compares it with the loop). The 200k default is
+    // MEMORY-DERIVED (VERDICT r13 #8): ≤ gate × 16 B = 3.2 MB of rows
+    // (~10 MB as driver Rows), ≤ 2·gate union-find entries (~25 MB);
+    // PipelineOpsSpec asserts the bound. The clamp keeps a gate of
+    // Int.MaxValue (SPARK_GRAFT_CC_GATE) from overflowing the limit.
     val probeLimit = math.max(0L,
       math.min(driverGateEdges.toLong + 1, Int.MaxValue.toLong)).toInt
-    if (sym.limit(probeLimit).count() <= driverGateEdges) {
-      val es = sym.select(col("a").cast("long"), col("b").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val es = in.limit(probeLimit).collect()
+    if (es.length <= driverGateEdges) {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -107,7 +79,8 @@ object PipelineOps {
         while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      es.foreach { case (a, b) =>
+      es.foreach { r =>
+        val a = r.getLong(0); val b = r.getLong(1)
         parent.getOrElseUpdate(a, a)
         parent.getOrElseUpdate(b, b)
         val ra = find(a); val rb = find(b)
@@ -129,8 +102,13 @@ object PipelineOps {
       // instead be left to AQE coalescing.
       val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try connectedComponentsImpl(sym, maxIter)
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      try {
+        // every round joins the symmetric edges: built once, from `in`
+        val sym = in.union(in.select(col("b").as("a"), col("a").as("b")))
+          .distinct().localCheckpoint(true)
+        liveCcCkpts.add(sym)
+        connectedComponentsImpl(sym, maxIter)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
   }
 
@@ -181,7 +159,8 @@ object PipelineOps {
   }
 
   /** One-generation tracker for [[connectedComponents]]' checkpoints
-    * (symmetric edges + final labels — both outlive the call). */
+    * (input edges, symmetric edges above the gate, final labels — all
+    * outlive the call). */
   private val liveCcCkpts = new GenTracker
 
   /** The SHARED full-corpus dup-cluster labels — the closure over
@@ -261,18 +240,15 @@ object PipelineOps {
     * of (doc_id, sh) — the testable core (PipelineOpsSpec asserts ≡
     * from-scratch clustering of the union on planted merge shapes). */
   private[graft] def incrementalDupClustersFrom(s: SparkSession,
-      snapRaw: DataFrame, incRaw: DataFrame, jaccardThreshold: Double,
+      snapRaw: DataFrame, inc: DataFrame, jaccardThreshold: Double,
       dfCap: Int, table: String, indexTag: Option[String] = None,
       labelsTag: Option[String] = None,
       lookupSh: Option[DataFrame] = None): DataFrame = {
-    // The INCREMENT is consumed ~3× (banding / self pairs / verify) —
-    // persist it. The SNAPSHOT shingles persist only inside the cold
-    // build blocks (index build persists internally; the labels block
-    // persists here), and candidate verification goes through `lookupSh`
-    // with the pre-tokenizer semi-join prune, so a warm run
-    // (ArtifactCache hit on both artifacts) never materializes
-    // corpus-wide shingles at all.
-    val inc = incRaw.persist()
+    // The INCREMENT is read once, by its banding, so it is not cached.
+    // The SNAPSHOT shingles persist only inside the cold build blocks
+    // (index build persists internally; the labels block persists here),
+    // so a warm run (ArtifactCache hit on both artifacts) never
+    // materializes corpus-wide shingles.
     // ---- build-once phase (the q34c demo concession: the snapshot's
     // artifacts are written in the same run; production wrote them when
     // the snapshot itself was ingested). Both artifacts are ArtifactCache-
@@ -463,25 +439,11 @@ object PipelineOps {
         Seq("id_b"), "left_outer")
       .select(coalesce(col("ca"), col("id_a")).as("a"),
         coalesce(col("cb"), col("id_b")).as("b"))
-      // EAGER checkpoint (round 19, the q210 lesson applied to the shared
-      // merge): connectedComponents' symmetric-edge construction
-      // references its input TWICE (a→b ∪ b→a), and both union legs sit
-      // in ONE stage — so the whole delta-pair derivation upstream
-      // (banding, index probe, candidate verify) executed twice, with
-      // the two legs additionally racing the verify path's cold persists
-      // (q144 profile: twin 2.8 task-s stages materializing the same
-      // pipeline). One eager checkpoint runs it once; the blocks are
-      // released as soon as CC's own symmetric-edge checkpoint holds the
-      // data.
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // connectedComponents checkpoints its input before reading it, so the
+    // delta-pair derivation upstream (banding, index probe, candidate
+    // verify) runs once
     val relabel = connectedComponents(contracted)
       .select(col("node"), col("cluster_id").as("nlbl"))
-    // CC's sym checkpoint (or its driver collect) has consumed the
-    // contracted edges — free their blocks now instead of leaking them
-    // until the next generation (Dataset.unpersist on a checkpointed
-    // frame is a CacheManager no-op, hence the RDD-layer release)
-    GenTracker.release(contracted)
     val fromOld = lbl
       .join(relabel.withColumnRenamed("node", "olbl"),
         col("cluster_id") === col("olbl"), "left_outer")
@@ -517,8 +479,20 @@ object PipelineOps {
           .write.mode("overwrite").saveAsTable(s"${table}_labels")
       } finally { sp.unpersist(); () }
     }
-    s.table(s"${table}_labels").coalesce(1)
+    val labels = s.table(s"${table}_labels")
+    labels.coalesce(labelVersionWidth(labels))
       .write.mode("overwrite").parquet(s"$labelStore/v0")
+  }
+
+  /** Write width of a label version: one file per
+    * `spark.sql.files.maxPartitionBytes` of the label data it derives
+    * from, at least one — not the shuffle width (4-32 KB files every
+    * later batch re-opens, guide §6) and not a fixed single file. `src`
+    * is a file scan: its size comes from the file listing, no job. */
+  private def labelVersionWidth(src: DataFrame): Int = {
+    val bytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
+    val target = src.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    (bytes / target).max(1).min(Int.MaxValue).toInt
   }
 
   /** One micro-batch of cluster-label maintenance — q144's maintain phase
@@ -573,12 +547,9 @@ object PipelineOps {
       .select(col("id_a"), col("id_b"))
     val base = Upsert.versionsOf(s, labelStore).filter(_ <= batchId).max
     val lbl = s.read.parquet(s"$labelStore/v$base")
-    // one file per version (round 19, guide §6 small files): a label
-    // version is a clustered-nodes-only control table — writing it at
-    // the shuffle width left 4-32 KB-sized files that every later
-    // batch's read re-lists and re-opens; at scale the width would
-    // follow the data via the same coalesce target
-    mergeDeltaIntoLabels(lbl, edges).coalesce(1)
+    // the merged version is the base version plus a delta-sized change,
+    // so it is written at the base's width
+    mergeDeltaIntoLabels(lbl, edges).coalesce(labelVersionWidth(lbl))
       .write.mode("overwrite").parquet(s"$labelStore/v${batchId + 1}")
     // keyed slot write + threshold fold (round 17, VERDICT r16 #3): the
     // band store was the worst slot-accretion site — every batch LISTS

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Q
+import graft.expr.{HotShingles, MinHashExprs}
 import graft.schema.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -110,9 +111,9 @@ object TextOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Restrict a (doc_id, sh) relation to the ids occurring in `cand`'s
-    * id_a/id_b — the shared pre-verification prune: with a lazy shingle
-    * relation the semi-join reaches the scan and verification cost is
-    * candidate-sized, not corpus-sized. The pruned result is PERSISTED:
+    * id_a/id_b — the shared pre-verification prune. The ids come out of
+    * one explode, undeduplicated (a semi-join ignores repeats). The
+    * pruned result is PERSISTED:
     * it feeds both verify joins, and without the materialization barrier
     * alias substitution inlines the tokenize+shingle chain into the
     * verify's array expressions — the q35 hazard (BASELINE.md round-2:
@@ -122,8 +123,7 @@ object TextOps {
   private[graft] def lookupForCandidates(docs: DataFrame,
       cand: DataFrame): DataFrame =
     docs.join(
-      cand.select(col("id_a").as("doc_id"))
-        .union(cand.select(col("id_b"))).distinct(),
+      cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")),
       Seq("doc_id"), "left_semi")
       .persist()
 
@@ -379,15 +379,7 @@ object TextOps {
         val incSh = toSh(inc).persist()
         writeSnapshotLshIndex(s, snapSh, dfCap = 16, SnapshotLshTable,
           snapshotLshTag(d))
-        val crossCand = s.table(SnapshotLshTable)
-          .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
-          .join(bandedSignaturesFrozenHot(incSh,
-              s.table(s"${SnapshotLshTable}_hot"))
-            .select(col("band"), col("bucket"), col("doc_id").as("id_b")),
-            Seq("band", "bucket"))
-          .select(col("id_a"), col("id_b"))
-          .dropDuplicates("id_a", "id_b")
-          .persist() // feeds the id-set prune + both verify joins
+        val crossCand = crossCandidates(s, SnapshotLshTable, incSh)
         val nearIds = verifyJaccardCandidates(crossCand,
             lookupForCandidates(snapSh.unionByName(incSh), crossCand), 0.5)
           .select(col("id_b").as("doc_id")).distinct()
@@ -1935,136 +1927,28 @@ object TextOps {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
-  /** Drop "stop shingles" with df > dfCap from an exploded (doc_id, s)
-    * posting stream. Bounds every posting list — and therefore the
-    * inverted-index join's per-key fanout (df², the quadratic term) — by a
-    * constant. Candidate-generation-only: callers verify surviving pairs
-    * against FULL shingle sets, so emitted pairs and jaccard values are
-    * unchanged provided every qualifying pair shares at least one
-    * below-cap shingle (the prefix-filtering safety condition: a jaccard
-    * ≥ 0.5 pair shares ~half its shingles, so it would need EVERY shared
-    * shingle to be corpus-hot to be lost — TextOpsSpec asserts capped ≡
-    * uncapped on its corpus, and the driver's sf0.01 oracle run re-proves
-    * it on the real tables every round). For the one family that DOES
-    * violate that condition — (dfCap+1)-plus-way duplicate classes, whose
-    * every shared shingle is hot by definition — the [[DfFloor]] rescue
-    * below guarantees each doc keeps its DfFloor rarest postings
-    * regardless of df, so identical-content classes still collide.
-    *
-    * Mechanism: df is a groupBy aggregate (map-side partials — the shuffle
-    * carries distinct shingles, not postings; a df WINDOW here shuffled
-    * the whole posting stream by shingle and 8×'d q34's exchange), and the
-    * hot list — at most postings/dfCap entries BY CONSTRUCTION, i.e. tiny
-    * — broadcasts into an anti-join, so the posting stream itself never
-    * moves for the cap. */
-  /** Per-doc posting floor for [[capDf]] (ADVICE r4): without it, a doc
-    * whose shingles are ALL corpus-hot — exactly the members of a
-    * (dfCap+1)-way-or-larger duplicate class, since each shared shingle
-    * then has df > dfCap — lost its entire posting list, so the LSH
-    * signature and the inverted index both went blind to precisely the
-    * mass-duplicated boilerplate dedup most needs to catch. */
-  private val DfFloor = 8
+  /** The stop-shingle cap drops shingles with df > dfCap ("hot") from
+    * candidate generation, bounding every posting list — and so the
+    * inverted index's per-key fanout (df², the quadratic term) — by a
+    * constant. Callers verify surviving pairs against FULL shingle sets,
+    * so output is unchanged provided every qualifying pair shares a
+    * below-cap shingle (TextOpsSpec asserts capped ≡ uncapped; the sf0.01
+    * oracle re-proves it). The one family that violates this —
+    * (dfCap+1)-plus-way duplicate classes, every shared shingle hot —
+    * is covered by the DfFloor rescue (ADVICE r4): a doc with fewer than
+    * DfFloor cold shingles tops up with its hot ones ranked by
+    * (df asc, s asc), so all members of an identical class keep the SAME
+    * rescued shingles and still collide. The cap, the rescue and the
+    * banding run as ONE per-row kernel ([[graft.expr.MinHashExprs]]). */
+  private[graft] val DfFloor = 8
 
-  /** NOT lazy construction: building the returned DataFrame runs an eager
-    * Spark action (the needy-set probe below — `need.count()`) and
-    * persists two small aggregates, so merely composing a q34/q35 plan
-    * (Explain, PlanAuditSpec, lazy pipelines) executes corpus aggregates
-    * as a side effect, and the returned PLAN SHAPE is data-dependent
-    * (clean corpora get the bare anti-join). Callers expecting pure plan
-    * construction must not route through the capped path.
-    *
-    * @param posts exploded (doc_id, s) posting stream derived from `docs`
-    * @param docs   the caller's (doc_id, sh) relation — one row per doc
-    *               with the DISTINCT shingle array; supplies the doc
-    *               universe and per-doc posting counts WITHOUT another
-    *               corpus-wide pass over the posting stream */
-  private def capDf(posts: DataFrame, docs: DataFrame, dfCap: Int): DataFrame =
-    if (dfCap == Int.MaxValue) posts
-    else
-      // PERSISTED (not broadcast-reuse): hot is ≤ postings/dfCap rows BY
-      // CONSTRUCTION, and it is referenced both by the eager needy-set
-      // probe below and by the main plan's consumers — ReuseExchange only
-      // dedups within one execution, the cache spans both.
-      capWithHot(posts, docs,
-        posts.groupBy(col("s")).agg(count(lit(1)).as("_df"))
-          .filter(col("_df") > dfCap)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** [[capDf]]'s body against a CALLER-SUPPLIED hot list — the piece that
-    * makes the cap a pure per-doc function of (hot list, doc): an
-    * increment or a streaming micro-batch banded under a FROZEN snapshot
-    * hot list (ADVICE r10 #3) computes exactly the signatures the
-    * snapshot-time pass would have, without any corpus-wide df aggregate
-    * over data it hasn't seen. `hot` must carry (s, _df) rows (df > cap
-    * keys); it is tiny by construction and broadcasts into every use.
-    */
-  private def capWithHot(posts: DataFrame, docs: DataFrame,
-      hot: DataFrame): DataFrame = {
-      val kept = posts.join(broadcast(hot), Seq("s"), "left_anti")
-      // Floor guarantee (prefix-filtering style): every doc keeps at least
-      // its DfFloor RAREST postings regardless of df. Docs with ≥ DfFloor
-      // below-cap postings already satisfy this (their rarest postings ARE
-      // the kept ones); for the rest — the needy set, corpus-small by
-      // construction (docs dominated by hot shingles) — rank their HOT
-      // postings by (df asc, s asc) and top up to the floor. Determinism
-      // makes the rescue effective: all members of an identical-content
-      // class rank the same shingles in the same order, so they keep the
-      // SAME rescued shingles and still collide in signature/index space.
-      //
-      // Cost posture (r5/r6 lessons — the first cut of this rescue cost
-      // 1.4-3× across the dedup family): n_low is derived as size(sh) -
-      // n_hot from the caller's one-row-per-doc relation, NOT from a
-      // corpus-wide posts.distinct(); docs with zero hot postings can't be
-      // rescued (nothing to rescue FROM) and are dropped by the inner
-      // join, so `need` stays needy-sized.
-      val nHot = posts.join(broadcast(hot), Seq("s"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("_n_hot"))
-      val need = docs.select(col("doc_id"), size(col("sh")).as("_sz"))
-        .join(nHot, Seq("doc_id"))
-        .select(col("doc_id"),
-          (lit(DfFloor.toLong) - (col("_sz") - col("_n_hot"))).as("_need"))
-        .filter(col("_need") > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // EAGER needy-set probe (r6): on clean corpora the needy set is
-      // EMPTY — a doc must hold fewer than DfFloor below-cap shingles,
-      // i.e. be almost entirely mass-duplicated boilerplate. Probing its
-      // emptiness here lets that case return the bare anti-join: no
-      // rescue window, no union, no materialization barrier — measured
-      // 2.96 → 2.06 s on the exact-pairs path at sf0.1, restoring the
-      // pre-rescue (r4) plan shape. Probe cost: the hot/n_hot aggregates
-      // it forces (cached, tiny outputs). When the rescue fires they are
-      // reused from cache — zero extra passes; when it doesn't, the one
-      // n_hot postings pass is the price of dropping the whole rescue
-      // subtree from the plan — the right trade at every scale, since
-      // the aggregate is map-side-partial (shuffles per-doc counts, not
-      // postings).
-      // count(), NOT isEmpty: isEmpty is a take(1) that materializes only
-      // the first partition, leaving the persisted need/nHot caches
-      // PARTIAL — the main action then recomputed the whole subtree
-      // (ScaleCurve caught it: q35 sf0.1 shuffle 9.9 → 17.3 MB). count()
-      // populates every partition, so the main plan reads pure cache.
-      // The rescued branch keeps its persist: its output feeds multiple
-      // consumers and the union tree would otherwise be cloned into each
-      // (measured 104-exchange plan without it). Cache lifecycle: all
-      // three persists register in CacheManager, which dedups by
-      // canonicalized plan — repeated construction of the same query
-      // reuses one entry rather than accumulating; sessions processing
-      // many DISTINCT corpora should clearCache() between them, as
-      // Verify and Bench both do.
-      if (need.count() == 0L) kept.select(col("doc_id"), col("s"))
-      else {
-        val byRarity = Window.partitionBy(col("doc_id"))
-          .orderBy(col("_df").asc, col("s").asc)
-        val rescued = posts
-          .join(broadcast(need), Seq("doc_id")) // needy docs' postings ONLY
-          .join(broadcast(hot), Seq("s"))       // their hot ones, df attached
-          .withColumn("_rk", row_number().over(byRarity))
-          .filter(col("_rk") <= col("_need"))
-          .select(col("doc_id"), col("s"))
-        kept.select(col("doc_id"), col("s")).unionByName(rescued)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    }
+  /** The over-cap (s, _df) list of `docs`' shingles, collected on the
+    * driver: composing a capped plan runs this ONE job. */
+  private def hotOf(docs: DataFrame, dfCap: Int): HotShingles =
+    if (dfCap == Int.MaxValue) HotShingles.empty
+    else HotShingles.collect(docs.select(explode(col("sh")).as("s"))
+      .groupBy(col("s")).agg(count(lit(1)).as("_df"))
+      .filter(col("_df") > dfCap))
 
   /** Exact pairwise Jaccard with stop-shingle candidate pruning.
     *
@@ -2294,8 +2178,9 @@ object TextOps {
   def exactJaccardPairsCapped(docs: DataFrame, threshold: Double,
       dfCap: Int): DataFrame = {
     // `docs` carries HASHED shingle arrays (see prefixFilterJaccardPairs)
-    val posts = docs.select(col("doc_id"), explode(col("sh")).as("s"))
-    val kept = capDf(posts, docs, dfCap)
+    val capped = docs.select(col("doc_id"), size(col("sh")).as("sz"),
+      MinHashExprs.capped(col("sh"), hotOf(docs, dfCap), DfFloor).as("kept"))
+    val kept = capped.select(col("doc_id"), explode(col("kept")).as("s"))
     // Posting-list pair expansion as ONE aggregation instead of a self-join:
     // collect each shingle's doc list, then explode the a<b pairs in
     // place. The self-join formulation shuffled the posting stream TWICE
@@ -2326,13 +2211,10 @@ object TextOps {
       .select(col("id_a"),
         explode(filter(col("ids"), x => x > col("id_a"))).as("id_b"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni_low"))
-    // per-doc shingle count + how many of them are capped-out ("hot"):
-    // sz from the array, low count from the kept stream
-    val stats = docs.select(col("doc_id"), size(col("sh")).as("sz"))
-      .join(kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_low")),
-        Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), col("sz"),
-        (col("sz") - coalesce(col("n_low"), lit(0L))).as("n_hot"))
+    // per-doc shingle count + how many of them are capped-out ("hot"),
+    // both read off the capped array — no aggregate over the kept stream
+    val stats = capped.select(col("doc_id"), col("sz"),
+      (col("sz") - size(col("kept"))).as("n_hot"))
     val bounded = interLow
       .join(stats.select(col("doc_id").as("id_a"), col("sz").as("sz_a"),
         col("n_hot").as("hot_a")), "id_a")
@@ -2416,42 +2298,29 @@ object TextOps {
   }
 
   /** The banded LSH index: (doc_id, band, bucket), one row per doc per
-    * band — the relation SURVEY §9 promises "becomes a written table
-    * reused across runs" at scale (see [[minHashLshPairsBucketedIndex]]
-    * for exactly that posture).
-    *
-    * signature[h] = min over shingles of xxhash64(h, shingle). Only
-    * (doc_id, shingle) rows shuffle — the shingle ARRAY stays out of the
-    * exploded stream (carrying it per-row ballooned the shuffle ~60×).
-    * Band key = hash of the band's signature slice. */
+    * band (written once and reused at scale: see
+    * [[minHashLshPairsBucketedIndex]]). signature[h] = min over capped
+    * shingles of xxhash64(h, shingle); band key = xxhash64(band, the
+    * band's signature slice joined by "_") — one per-row kernel
+    * ([[graft.expr.MinHashExprs]]), no shuffle, no aggregate. */
   private[graft] def bandedSignatures(docs: DataFrame, dfCap: Int): DataFrame =
-    bandsFromKept(capDf(
-      docs.select(col("doc_id"), explode(col("sh")).as("s")), docs, dfCap))
+    bandsUnder(docs, hotOf(docs, dfCap))
 
   /** [[bandedSignatures]] for an increment/micro-batch under a FROZEN hot
     * list (ADVICE r10 #3): the df-cap decision comes from the snapshot's
-    * written stats instead of a corpus-wide aggregate, so the signature is
-    * a pure per-doc function of (hot list, doc) — a streaming batch
+    * written stats (`hot` holds (s, _df) rows, collected here on the
+    * driver) instead of a corpus-wide aggregate, so the signature is a
+    * pure per-doc function of (hot list, doc) — a streaming batch
     * computes byte-identical bands to the snapshot-time scheme, and
     * batch/stream candidate sets coincide by CONSTRUCTION rather than by
     * two schemes both happening to reach full recall. */
   private[graft] def bandedSignaturesFrozenHot(docs: DataFrame,
       hot: DataFrame): DataFrame =
-    bandsFromKept(capWithHot(
-      docs.select(col("doc_id"), explode(col("sh")).as("s")), docs, hot))
+    bandsUnder(docs, HotShingles.collect(hot))
 
-  private def bandsFromKept(kept: DataFrame): DataFrame = {
-    val sig = kept
-      .groupBy(col("doc_id"))
-      .agg(array((0 until NumHashes).map(h =>
-        min(xxhash64(lit(h), col("s")))): _*).as("sig"))
-    sig.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(NumBands - 1)), b =>
-        xxhash64(b, array_join(
-          transform(slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand)),
-            x => x.cast("string")), "_"))))
-        .as(Seq("band", "bucket")))
-  }
+  private def bandsUnder(docs: DataFrame, hot: HotShingles): DataFrame =
+    docs.select(col("doc_id"), posexplode(MinHashExprs.bands(col("sh"), hot,
+      DfFloor, NumHashes, RowsPerBand)).as(Seq("band", "bucket")))
 
   /** One-generation residency cap for the pair-sweep candidate caches —
     * the same leak class as [[liveDecontamCaches]] (ADVICE r14 #5),
@@ -2508,12 +2377,13 @@ object TextOps {
     * index — the q144 maintain-phase candidate machinery factored once
     * (round 15) so every maintainer that needs the increment's edges
     * alone (q144's cluster delta, q210's triangle/wedge delta) shares ONE
-    * candidate set and ONE exact verify. Cross candidates (index-probe
-    * join — only increment-hit buckets of the bucketed index ever
-    * aggregate) union the increment-internal candidates; the two legs are
-    * disjoint by construction (cross pairs have an old endpoint), so no
-    * dedup is needed across them. Emitted pairs are ordered id_a < id_b
-    * because snapshot ids precede increment ids. The increment bands
+    * candidate set and ONE exact verify. Cross (snapshot × increment) and
+    * internal (increment × increment) candidates come out of ONE join:
+    * the index rows and the increment's bands probe the increment's
+    * bands, keeping id_a < id_b — every cross pair qualifies because
+    * snapshot ids precede increment ids, and each internal pair appears
+    * once. Emitted pairs are therefore ordered id_a < id_b. The increment
+    * bands
     * under the snapshot's FROZEN hot list (ADVICE r10 #3), so its cost
     * depends only on the increment. Persisted relations (bands +
     * candidates + pruned lookup) ride the one-generation pair-sweep
@@ -2525,20 +2395,34 @@ object TextOps {
     // [[pairsFromBandedIndex]]
     livePairSweepCaches.evict()
     val incBands = bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot"))
-      .persist() // two consumers: index probe + internal self-candidates
-    val crossCand = s.table(table)
       .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
-      .join(incBands.select(col("band"), col("bucket"),
-        col("doc_id").as("id_b")), Seq("band", "bucket"))
+      .persist() // both sides of the candidate join
+    val cand = s.table(table)
+      .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
+      .unionByName(incBands)
+      .join(incBands.withColumnRenamed("id_a", "id_b"), Seq("band", "bucket"))
+      .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val cand = crossCand
-      .unionByName(candidatesFromBandedIndex(incBands))
       .persist() // feeds the id-set prune + both verify joins
     val looked = lookupForCandidates(lookupSh, cand)
     livePairSweepCaches.set(incBands, cand, looked)
     verifyJaccardCandidates(cand, looked, jaccardThreshold)
   }
+
+  /** Cross (snapshot × increment) candidates of q34c/q109/q148: `inc`'s
+    * frozen-hot bands probing the written index `table`. PERSISTED: they
+    * feed the id-set prune and both verify joins. */
+  private[graft] def crossCandidates(s: SparkSession, table: String,
+      inc: DataFrame): DataFrame =
+    s.table(table)
+      .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
+      .join(bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot"))
+        .select(col("band"), col("bucket"), col("doc_id").as("id_b")),
+        Seq("band", "bucket"))
+      .select(col("id_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      .persist()
 
   /** Candidate (id_a < id_b) pairs from a banded relation — the
     * generation half of [[pairsFromBandedIndex]], factored out (round 12)
@@ -2672,28 +2556,12 @@ object TextOps {
     // candidate sets coincide by construction.
     val snap = docs.crossJoin(broadcast(cut))
       .filter(col("doc_id") < col("cut")).drop("cut")
-    // persisted: the minhash transform references `sh` once per hash
-    // function — over a LAZY shingle relation alias substitution would
-    // inline tokenize+shingle into every one of the 32 lambdas (the q35
-    // hazard); the barrier makes banding read a materialized column
+    // not persisted: banding is its only reader (the verify lookup goes
+    // through `docs`), and the kernel reads `sh` once per row
     val inc = docs.crossJoin(broadcast(cut))
       .filter(col("doc_id") >= col("cut")).drop("cut")
-      .persist()
     writeSnapshotLshIndex(s, snap, dfCap, table, tag)
-    val incBands = bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot"))
-    // persisted: the candidate relation feeds its own id-set prune plus
-    // both verify joins — without the persist the banded probe re-runs
-    // per consumer
-    val cand = s.table(table)
-      .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
-      .join(incBands.select(col("band"), col("bucket"),
-        col("doc_id").as("id_b")), Seq("band", "bucket"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .persist()
-    // candidate-sized verification (lookupForCandidates): with a lazy
-    // docs relation the semi-join reaches the scan, so a warm run
-    // tokenizes only the candidates, never the corpus
+    val cand = crossCandidates(s, table, inc)
     verifyJaccardCandidates(cand, lookupForCandidates(docs, cand),
         jaccardThreshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))

@@ -668,16 +668,8 @@ object StreamingOps {
               .select(col("doc_id"), TextOps.toks(col("text")).as("tk"))
               .select(col("doc_id"), TextOps.shingles(col("tk")).as("sh"))
               .persist()
-            val cand = batch.sparkSession.table(table)
-              .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
-              .join(TextOps.bandedSignaturesFrozenHot(bdocs,
-                  batch.sparkSession.table(s"${table}_hot"))
-                .select(col("band"), col("bucket"),
-                  col("doc_id").as("id_b")),
-                Seq("band", "bucket"))
-              .select(col("id_a"), col("id_b"))
-              .dropDuplicates("id_a", "id_b")
-              .persist() // feeds the id-set prune + both verify joins
+            val cand = TextOps.crossCandidates(batch.sparkSession, table,
+              bdocs)
             TextOps.verifyJaccardCandidates(cand,
                 TextOps.lookupForCandidates(snap.unionByName(bdocs), cand),
                 threshold = 0.5)

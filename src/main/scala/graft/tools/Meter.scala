@@ -2,9 +2,11 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftshim.ListenerShim
 
@@ -14,6 +16,11 @@ import org.apache.spark.sql.graftshim.ListenerShim
   * and per-stage rows whose call site ties a hot stage back to its
   * operator source line (an AQE query stage takes the first `graft.`
   * frame of the SQL execution that ran it).
+  *
+  * It also counts the generated classes the action compiled and their
+  * compile time (deltas of Spark's JVM-wide codegen counters): a warm
+  * query that keeps compiling has outgrown Spark's 100-entry codegen
+  * cache and evicts its own code every run.
   *
   * Accounting caveat: stages are counted via onStageCompleted only, so
   * SKIPPED (reused) stages are invisible, and a retried stage attempt is
@@ -29,7 +36,8 @@ object Meter {
       shuffleBytes: Long)
 
   final case class Counts(jobs: Int, stages: Int, tasks: Int, taskMs: Long,
-      gcMs: Long, shuffleBytes: Long, maxTaskMs: Long, stageRows: Seq[Stage])
+      gcMs: Long, shuffleBytes: Long, maxTaskMs: Long, stageRows: Seq[Stage],
+      compiles: Long, compileMs: Long)
 
   /** Runs `action` under a fresh meter and returns its result with what
     * the meter saw. The listener bus is drained before the meter is
@@ -41,16 +49,20 @@ object Meter {
     ListenerShim.waitUntilListenersDrained(sc)
     val l = new Listener
     sc.addSparkListener(l)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     try {
       val r = action
       ListenerShim.waitUntilListenersDrained(sc)
       (r, Counts(l.jobs, l.stages, l.tasks, l.taskMs, l.gcMs, l.shuffleBytes,
-        l.maxTaskMs, l.stageRows.reverse))
+        l.maxTaskMs, l.stageRows.reverse,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+        (CodeGenerator.compileTime - compileNs0) / 1000000L))
     } finally sc.removeSparkListener(l)
   }
 
   /** The first `graft.` frame of a long-form call site, e.g.
-    * `graft.ops.TextOps$.bandsFromKept(TextOps.scala:812)`. */
+    * `graft.ops.TextOps$.$anonfun$writeSnapshotLshIndex$1(TextOps.scala:2536)`. */
   private def graftFrame(longForm: String): Option[String] =
     longForm.linesIterator.map(_.trim).find(_.startsWith("graft."))
 

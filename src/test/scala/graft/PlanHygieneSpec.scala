@@ -81,14 +81,16 @@ class PlanHygieneSpec extends SparkSpec {
     assert(pPq.contains("*(1) Project"), pPq)
   }
 
-  test("q34/q35: the df-cap's hot-shingle side broadcasts (no posting re-shuffle)") {
-    // the stop-shingle anti-join must enter as a BroadcastExchange of the
-    // tiny hot set — a df WINDOW here would instead shuffle the whole
-    // posting stream by shingle (the round-4 redesign this guards).
-    // q34's CATALOG plan became an artifact read when the shared pair
-    // table is warm (round 12's build-once memo), so the guard targets
-    // the DETECTION plan its build job runs; q35 still plans detection
-    // directly.
+  test("q34/q35: the df cap runs in the shingle kernel (no join, no window)") {
+    // the stop-shingle cap and its floor rescue are one per-row
+    // expression over each doc's shingle array, fed by a driver-held hot
+    // list: the plan carries the kernel and neither an anti-join on the
+    // hot set nor a rescue window — a df WINDOW here would instead
+    // shuffle the whole posting stream by shingle (the round-4 redesign
+    // this guards). q34's CATALOG plan became an artifact read when the
+    // shared pair table is warm (round 12's build-once memo), so the
+    // guard targets the DETECTION plan its build job runs; q35 still
+    // plans detection directly.
     val docs = graft.ops.TextOps.docsWithShingles(spark, sf)
     val plans = Seq(
       "q34 detection" -> graft.ops.TextOps
@@ -96,8 +98,8 @@ class PlanHygieneSpec extends SparkSpec {
         .queryExecution.executedPlan.toString,
       "q35" -> plan("q35_ngram_jaccard"))
     for ((q, p) <- plans)
-      assert(p.contains("BroadcastHashJoin") &&
-        p.contains("LeftAnti, BuildRight"), s"$q:\n$p")
+      assert(p.contains("graft_shingle_kernel") && !p.contains("LeftAnti") &&
+        !p.contains("Window"), s"$q:\n$p")
   }
 
   test("q42: above the row-count gate the benched plan carries NO " +
