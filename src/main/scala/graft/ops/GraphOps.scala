@@ -221,22 +221,13 @@ object GraphOps {
     * (pre-exchanged once into a src-clustered layout before the loop,
     * or read from the written src-bucketed store in the maintain
     * serve). GraphOpsSpec asserts both paths produce bit-identical
-    * ranks (integer determinism makes the equality exact).
-    *
-    * `SPARK_GRAFT_PR_GATE` overrides the default for MEASUREMENT runs
-    * only (the SCALING.md broadcast-vs-shuffled mode comparison drives
-    * the full catalog legs through the above-gate plan at bench scale
-    * by setting it to 0 — VERDICT r17 #2); production posture is the
-    * unmodified default. A `def` parsed via [[Knobs.envLong]]: a
-    * malformed override fails the touching query with a message naming
-    * the variable instead of poisoning the object initializer. */
-  private[graft] def BroadcastGateNodesDefault: Long =
-    Knobs.envLong("SPARK_GRAFT_PR_GATE", 1000000L)
+    * ranks (integer determinism makes the equality exact). */
+  private[graft] val BroadcastGateNodesDefault: Long = 1000000L
 
   /** `limit(gate + 1)` probe count, Int-clamped (limit takes Int; a
     * gate at/above Int.MaxValue means "always broadcast" and any count
     * below it passes). Checked BEFORE the +1 — `Long.MaxValue + 1`
-    * wraps negative — and floored at 0 so a negative gate override
+    * wraps negative — and floored at 0 so a negative gate argument
     * degrades to "never broadcast" instead of a negative-limit throw
     * (round 18 review, the connectedComponents probe's twin fix). */
   private def intGate(gate: Long): Int =
@@ -646,11 +637,11 @@ object GraphOps {
     Q("q210_transitivity_maintain",
       (s, d) => {
         writeDupGraphSnapshot(s, d)
-        val sh = TextOps.docsWithShinglesLazy(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
-        // not persisted: banding is its only reader (candidate texts are
-        // looked up through `sh`)
-        val inc = sh.filter(col("doc_id") >= cut)
+        val (docs, scan) = Tables.documentsAndScan(s, d)
+        // not persisted: banding is its only reader (the verify lookup
+        // fingerprints only the candidates, from the documents scan)
+        val inc = TextOps.fingerprints(docs).filter(col("doc_id") >= cut)
         // delta edges EAGERLY checkpointed, not merely persisted: the
         // maintain arithmetic fans FOUR consumers off this relation (two
         // triangle-join sides, degree deltas, edge count), three of them
@@ -665,7 +656,7 @@ object GraphOps {
         // a CacheManager no-op, so old generations only freed under GC)
         liveGraphCaches.evict()
         val incEdges = TextOps.deltaPairsAgainstIndex(s,
-            TextOps.SnapshotLshTable, inc, sh, jaccardThreshold = 0.5)
+            TextOps.SnapshotLshTable, inc, scan, jaccardThreshold = 0.5)
           .select(col("id_a"), col("id_b"))
           .localCheckpoint(true,
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -780,12 +771,13 @@ object GraphOps {
 
   private[graft] def writeDupGraphSnapshot(s: SparkSession, d: String): Unit =
     ArtifactCache.once(DupGraphEdgeTable, dupGraphTag(d)) {
-      val sh = TextOps.docsWithShinglesLazy(s, d)
-      val snap = sh.filter(col("doc_id") < graft.schema.Cuts.documents(s, d))
+      val (docs, scan) = Tables.documentsAndScan(s, d)
+      val snap = TextOps.fingerprints(docs)
+        .filter(col("doc_id") < graft.schema.Cuts.documents(s, d))
       TextOps.writeSnapshotLshIndex(s, snap, dfCap = 16,
         TextOps.SnapshotLshTable, TextOps.snapshotLshTag(d))
       Tables.resetManagedTable(s, DupGraphEdgeTable)
-      TextOps.pairsFromBandedIndex(s.table(TextOps.SnapshotLshTable), snap,
+      TextOps.pairsFromBandedIndex(s.table(TextOps.SnapshotLshTable), scan,
           jaccardThreshold = 0.5)
         .select(col("id_a"), col("id_b"))
         .write.mode("overwrite").saveAsTable(DupGraphEdgeTable)

@@ -191,7 +191,7 @@ object Ingest {
     // pinned read schema restores types, which is the point of the test.
     Q("q24_csv_roundtrip",
       (s, d) => {
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_csv_store"
+        val dir = TempDirs.scratch("graft_csv_store_")
         val src = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         src.write.mode("overwrite").option("header", true).csv(dir)
@@ -372,10 +372,9 @@ object Ingest {
     Q("q23_ingest_e2e",
       (s, _) => {
         val repo = sys.env.getOrElse("GRAFT_REPO", "/root/repo")
-        val store = s"${System.getProperty("java.io.tmpdir")}/graft_ingest_store"
-        val fs = new org.apache.hadoop.fs.Path(store)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(store), true)
+        // a child of the per-run scratch dir: IngestionJob treats an
+        // existing (even empty) directory as a store
+        val store = s"${TempDirs.scratch("graft_ingest_store_")}/store"
         val fixture = s"$repo/data/fixtures/users_fixture.json"
         val body = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(fixture)), java.nio.charset.StandardCharsets.UTF_8)

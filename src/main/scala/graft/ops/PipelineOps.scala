@@ -27,18 +27,8 @@ object PipelineOps {
   /** Default driver union-find gate for [[connectedComponents]] — named
     * so the memory contract is spec-checkable (VERDICT r13 #8): the
     * derivation lives on the gate branch below; PipelineOpsSpec asserts
-    * the collect byte bound against this constant.
-    *
-    * `SPARK_GRAFT_CC_GATE` overrides the default for MEASUREMENT runs
-    * only (round 18: the SCALING.md above-gate exercise drives every
-    * cluster-family catalog leg through the distributed min-label loop
-    * at bench scale by setting it to 0 — the connected-components twin
-    * of `SPARK_GRAFT_PR_GATE`); production posture is the unmodified
-    * default. A `def` parsed via [[Knobs.envLong]] — same malformed-
-    * override failure contract as the PageRank gate. */
-  private[graft] def DriverGateEdgesDefault: Int =
-    math.min(Knobs.envLong("SPARK_GRAFT_CC_GATE", 200000L),
-      Int.MaxValue.toLong).toInt
+    * the collect byte bound against this constant. */
+  private[graft] val DriverGateEdgesDefault: Int = 200000
 
   /** Connected components by iterative min-label propagation.
     *
@@ -66,7 +56,7 @@ object PipelineOps {
     // MEMORY-DERIVED (VERDICT r13 #8): ≤ gate × 16 B = 3.2 MB of rows
     // (~10 MB as driver Rows), ≤ 2·gate union-find entries (~25 MB);
     // PipelineOpsSpec asserts the bound. The clamp keeps a gate of
-    // Int.MaxValue (SPARK_GRAFT_CC_GATE) from overflowing the limit.
+    // Int.MaxValue from overflowing the limit.
     val probeLimit = math.max(0L,
       math.min(driverGateEdges.toLong + 1, Int.MaxValue.toLong)).toInt
     val es = in.limit(probeLimit).collect()
@@ -211,42 +201,42 @@ object PipelineOps {
     * verify ∝ increment, closure ∝ delta edges, relabel ∝ touched
     * clusters; the written artifacts are upserted, never rebuilt.
     */
-  /** q144's entry — LAZY shingle inputs: snapshot/increment/lookup all
-    * derive from the un-persisted shingle relation, so a warm run
-    * (ArtifactCache hit on the shared index + labels) tokenizes only the
-    * increment and the candidates' verify lookups — the corpus-wide
-    * shingle cache is never materialized (measured: the persisted-input
-    * formulation re-cached corpus shingles up to three times per run once
-    * the artifact builds went memo-warm, 11.2 s vs 5.5 s at sf0.1). */
+  /** q144's entry. Snapshot and increment fingerprint lazily from the
+    * fanned-out documents; candidate lookups fingerprint only the
+    * candidates, from the unfanned documents scan. A warm run
+    * (ArtifactCache hit on the shared index + labels) therefore tokenizes
+    * only the increment and the candidates, and never caches corpus
+    * shingles (measured: the persisted-input formulation re-cached them
+    * up to three times per run, 11.2 s vs 5.5 s at sf0.1). */
   def incrementalDupClusters(s: SparkSession, d: String,
       jaccardThreshold: Double, dfCap: Int): DataFrame = {
-    val sh = TextOps.docsWithShinglesLazy(s, d)
+    val (docs, scan) = Tables.documentsAndScan(s, d)
     // memoized cut (round 16): same floor() boundary rule, derived once
     // per (sfDir, table) instead of one in-plan corpus agg per run
     val cut = graft.schema.Cuts.documents(s, d)
-    val snap = sh.filter(col("doc_id") < cut)
-    val inc = sh.filter(col("doc_id") >= cut)
     // shared-artifact tags (ArtifactCache): the index is the one
     // q34c/q109/q146/q148 probe; the labels additionally depend on the
     // verify threshold, so it joins the tag
     val tag = TextOps.snapshotLshTag(d)
-    incrementalDupClustersFrom(s, snap, inc, jaccardThreshold, dfCap,
+    incrementalDupClustersFrom(s, docs.filter(col("doc_id") < cut),
+      docs.filter(col("doc_id") >= cut), jaccardThreshold, dfCap,
       TextOps.SnapshotLshTable, indexTag = tag,
       labelsTag = tag.map(t => s"$t|j$jaccardThreshold"),
-      lookupSh = Some(sh))
+      lookupText = Some(scan))
   }
 
-  /** [[incrementalDupClusters]] over explicit snapshot/increment relations
-    * of (doc_id, sh) — the testable core (PipelineOpsSpec asserts ≡
-    * from-scratch clustering of the union on planted merge shapes). */
+  /** [[incrementalDupClusters]] over explicit snapshot/increment
+    * (doc_id, text) relations — the testable core (PipelineOpsSpec asserts
+    * ≡ from-scratch clustering of the union on planted merge shapes).
+    * Candidates are looked up in `lookupText`, by default the union. */
   private[graft] def incrementalDupClustersFrom(s: SparkSession,
-      snapRaw: DataFrame, inc: DataFrame, jaccardThreshold: Double,
+      snap: DataFrame, inc: DataFrame, jaccardThreshold: Double,
       dfCap: Int, table: String, indexTag: Option[String] = None,
       labelsTag: Option[String] = None,
-      lookupSh: Option[DataFrame] = None): DataFrame = {
+      lookupText: Option[DataFrame] = None): DataFrame = {
+    val text = lookupText.getOrElse(snap.unionByName(inc))
     // The INCREMENT is read once, by its banding, so it is not cached.
-    // The SNAPSHOT shingles persist only inside the cold build blocks
-    // (index build persists internally; the labels block persists here),
+    // The SNAPSHOT fingerprints persist only inside the cold index build,
     // so a warm run (ArtifactCache hit on both artifacts) never
     // materializes corpus-wide shingles.
     // ---- build-once phase (the q34c demo concession: the snapshot's
@@ -254,17 +244,15 @@ object PipelineOps {
     // the snapshot itself was ingested). Both artifacts are ArtifactCache-
     // memoized under content tags, so family members sharing them
     // (q34c/q109/q146/q148 the index; q146 the labels) build once per JVM.
-    TextOps.writeSnapshotLshIndex(s, snapRaw, dfCap, table, indexTag)
+    TextOps.writeSnapshotLshIndex(s, TextOps.fingerprints(snap), dfCap,
+      table, indexTag)
     ArtifactCache.once(s"${table}_labels", labelsTag) {
-      val snap = snapRaw.persist()
-      try {
-        val snapPairs = TextOps
-          .pairsFromBandedIndex(s.table(table), snap, jaccardThreshold)
-          .select(col("id_a").as("a"), col("id_b").as("b"))
-        Tables.resetManagedTable(s, s"${table}_labels")
-        connectedComponents(snapPairs)
-          .write.mode("overwrite").saveAsTable(s"${table}_labels")
-      } finally { snap.unpersist(); () }
+      val snapPairs = TextOps
+        .pairsFromBandedIndex(s.table(table), text, jaccardThreshold)
+        .select(col("id_a").as("a"), col("id_b").as("b"))
+      Tables.resetManagedTable(s, s"${table}_labels")
+      connectedComponents(snapPairs)
+        .write.mode("overwrite").saveAsTable(s"${table}_labels")
     }
 
     // ---- maintain phase: everything below is increment-sized. ONE
@@ -273,8 +261,8 @@ object PipelineOps {
     // for q210's triangle maintainer): cross candidates (index-probe
     // join) union increment-internal candidates, verified once.
     val edges = TextOps
-      .deltaPairsAgainstIndex(s, table, inc,
-        lookupSh.getOrElse(snapRaw.unionByName(inc)), jaccardThreshold)
+      .deltaPairsAgainstIndex(s, table, TextOps.fingerprints(inc), text,
+        jaccardThreshold)
       .select(col("id_a"), col("id_b"))
 
     // ---- contraction + serve: the shared delta-merge algebra — see
@@ -456,9 +444,9 @@ object PipelineOps {
   }
 
   /** Snapshot build phase shared by q146's entry and its spec: write the
-    * banded LSH index + frozen hot list for `snap`, cluster the snapshot
-    * from its own index, and record the labels as version 0 of the
-    * versioned label store (q112's store layout). */
+    * banded LSH index + frozen hot list for `snap` (doc_id, text), cluster
+    * the snapshot from its own index, and record the labels as version 0
+    * of the versioned label store (q112's store layout). */
   private[graft] def buildClusterSnapshotStore(s: SparkSession,
       snap: DataFrame, dfCap: Int, table: String, labelStore: String,
       jaccardThreshold: Double, indexTag: Option[String] = None,
@@ -468,16 +456,14 @@ object PipelineOps {
     // runs first this JVM pays the build. The versioned store's v0 is a
     // copy of the (small, clustered-nodes-only) label table, because the
     // stream folds new versions next to it per micro-batch.
-    TextOps.writeSnapshotLshIndex(s, snap, dfCap, table, indexTag)
+    TextOps.writeSnapshotLshIndex(s, TextOps.fingerprints(snap), dfCap,
+      table, indexTag)
     ArtifactCache.once(s"${table}_labels", labelsTag) {
-      val sp = snap.persist()
-      try {
-        Tables.resetManagedTable(s, s"${table}_labels")
-        connectedComponents(TextOps
-            .pairsFromBandedIndex(s.table(table), sp, jaccardThreshold)
-            .select(col("id_a").as("a"), col("id_b").as("b")))
-          .write.mode("overwrite").saveAsTable(s"${table}_labels")
-      } finally { sp.unpersist(); () }
+      Tables.resetManagedTable(s, s"${table}_labels")
+      connectedComponents(TextOps
+          .pairsFromBandedIndex(s.table(table), snap, jaccardThreshold)
+          .select(col("id_a").as("a"), col("id_b").as("b")))
+        .write.mode("overwrite").saveAsTable(s"${table}_labels")
     }
     val labels = s.table(s"${table}_labels")
     labels.coalesce(labelVersionWidth(labels))
@@ -516,14 +502,15 @@ object PipelineOps {
     * clustering of snapshot ∪ all batches EXACTLY — q45's whole-corpus
     * oracle, verbatim, is the correctness statement. Per-batch cost:
     * banding + probe ∝ batch, closure ∝ delta edges, relabel ∝ touched
-    * clusters; candidate texts are point-looked-up from the corpus
-    * relation (`allSh`) by semi-join, never scanned wholesale.
+    * clusters; only the candidates are fingerprinted for verification,
+    * from the corpus text relation `allText` (batch docs are corpus rows
+    * too). `batch` and `allText` are (doc_id, text).
     */
   private[graft] def foldBatchIntoClusterStore(s: SparkSession,
-      bdocs: DataFrame, allSh: DataFrame, table: String, bandStore: String,
+      batch: DataFrame, allText: DataFrame, table: String, bandStore: String,
       labelStore: String, batchId: Long, jaccardThreshold: Double): Unit = {
-    val bands = TextOps
-      .bandedSignaturesFrozenHot(bdocs, s.table(s"${table}_hot"))
+    val bands = TextOps.bandedSignaturesFrozenHot(TextOps.fingerprints(batch),
+        s.table(s"${table}_hot"))
       .persist() // three consumers: cross probe, self candidates, append
     val prior = s.table(table)
       .select(col("band").cast("int").as("band"), col("bucket"),
@@ -531,8 +518,7 @@ object PipelineOps {
       .unionByName(streamBandsBefore(s, bandStore, batchId))
     // ONE candidate set, ONE verify — the q144 maintain-phase shape
     // (cross and batch-internal legs are disjoint: cross pairs have a
-    // prior endpoint), with candidate texts point-looked-up from the
-    // corpus relation for BOTH legs (batch docs are corpus rows too)
+    // prior endpoint)
     val crossCand = prior
       .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
       .join(bands.select(col("band").cast("int").as("band"), col("bucket"),
@@ -543,7 +529,7 @@ object PipelineOps {
       .unionByName(TextOps.candidatesFromBandedIndex(bands))
       .persist() // feeds the id-set prune + both verify joins
     val edges = TextOps.verifyJaccardCandidates(cand,
-        TextOps.lookupForCandidates(allSh, cand), jaccardThreshold)
+        TextOps.lookupForCandidates(allText, cand), jaccardThreshold)
       .select(col("id_a"), col("id_b"))
     val base = Upsert.versionsOf(s, labelStore).filter(_ <= batchId).max
     val lbl = s.read.parquet(s"$labelStore/v$base")
@@ -2105,7 +2091,7 @@ object PipelineOps {
     // threshold is scale-relative, not a magic absolute.
     Q("q82_boilerplate_score",
       (s, d) => {
-        val sh = TextOps.docsWithShingles(s, d)
+        val sh = TextOps.docsWithShinglesHashed(s, d)
         val posts = sh.select(col("doc_id"), explode(col("sh")).as("g"))
         val nDocs = sh.agg(count(lit(1)).as("n")).scalar()
         val hot = posts.groupBy(col("g")).agg(count(lit(1)).as("df"))
@@ -2781,10 +2767,10 @@ object PipelineOps {
     // (q90's), fuzzy near-dup jaccard ≥ 0.5 (q95's) — joined into the
     // one drop-list a pipeline team actually reviews, on one benchmark
     // convention (doc_id % 50 = 0). Composition, not re-implementation:
-    // the trigram side reads the SHARED persisted shingle relation
-    // (CacheManager dedups across the three consumers), the fuzzy side
-    // IS TextOps.fuzzyDecontamFromBands over the shared written band
-    // index (q95's exact-verified LSH path, round-14 shape), and the
+    // the trigram side reads the SHARED persisted fingerprint relation
+    // (q35/q90's, CacheManager-deduped), the fuzzy side IS
+    // TextOps.fuzzyDecontamFromBands over the shared written band index
+    // (q95's exact-verified LSH path, round-14 shape), and the
     // 5-gram semi-join broadcasts the bench gram set (q78's bloom
     // pre-pass composes in front of it at 100 TB). Only flagged docs
     // emit — the report is contamination-sized, not corpus-sized.
@@ -2792,22 +2778,16 @@ object PipelineOps {
       (s, d) => {
         val k = 5
         val benchSide = col("doc_id") % 50 === 0
-        // ONE tokenize pass, explicitly persisted (VERDICT r7 #5): the
-        // trigram-shingle side (ov + fuzzy) and the 5-gram side both
-        // derive from this relation — previously the 5-gram branch
-        // re-tokenized the whole corpus and only CacheManager plan-dedup
-        // kept the shingle side from doing it a third time. The shingle
-        // relation is itself persisted because three consumers fan off it
-        // (bench3, ov, fuzzyDecontam). Lifecycle: Bench clears the cache
-        // before each query, so neither persist leaks into another
-        // query's timing; sessions composing many catalog queries follow
-        // the caller-clears-cache contract (RetrievalOps scaladoc).
+        // The 5-gram side reads this persisted token relation; the
+        // trigram side (bench3, ov) reads the shared persisted
+        // fingerprints. Lifecycle: Bench clears the cache before each
+        // query, so neither persist leaks into another query's timing;
+        // sessions composing many catalog queries follow the
+        // caller-clears-cache contract (RetrievalOps scaladoc).
         val tks = Tables.documents(s, d)
           .select(col("doc_id"), TextOps.toks(col("text")).as("tk"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sh = tks
-          .select(col("doc_id"), TextOps.shingles(col("tk")).as("sh"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sh = TextOps.docsWithShinglesHashed(s, d)
         val bench3 = sh.filter(benchSide)
           .select(explode(col("sh")).as("s3")).distinct()
         val ov = sh.filter(!benchSide)
@@ -2833,11 +2813,10 @@ object PipelineOps {
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n5_shared"))
         // round 14: the fuzzy side probes the SHARED written full-corpus
         // band index instead of re-running the 96-hash signature sweep
-        // (the q95 reroute); verification fetches the candidates' shingle
-        // sets from the already-persisted `sh` relation
+        // (the q95 reroute); verification fingerprints only the candidates
         val fz = TextOps.fuzzyDecontamFromBands(
-            TextOps.fullCorpusBandedIndex(s, d), sh, benchSide,
-            threshold = 0.5)
+            TextOps.fullCorpusBandedIndex(s, d),
+            Tables.load(s, d, "documents"), benchSide, threshold = 0.5)
           .select(col("doc_id"), col("max_jaccard"))
         tks.filter(!benchSide).select(col("doc_id"))
           .join(x5, Seq("doc_id"), "left_outer")

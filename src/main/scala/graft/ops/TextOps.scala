@@ -37,59 +37,25 @@ object TextOps {
             element_at(tokens, i + 2))))
         .otherwise(array()))
 
-  /** Shingled documents, PERSISTED. Two reasons, both load-bearing:
-    * (1) tokens are materialized before the shingle transform — referencing
-    * the raw `split()` inside the shingle lambda re-tokenizes per element
-    * (observed 10× at sf0.1); (2) the dedup queries self-join this relation,
-    * and the join's inferred `isnotnull(sh)` filter is pushed below the
-    * projection WITH ALIAS SUBSTITUTION — without a materialization barrier
-    * every side of every join recomputes the full tokenize+shingle
-    * expression several times per row. Persisting the shingle set is also
-    * the honest 100 TB design: an inverted index is built once and reused,
-    * not recomputed per consumer. CacheManager dedups by logical plan, so
-    * q34/q35 share one copy.
+  /** Shingled documents as TEXT trigrams, PERSISTED — only for the sketch
+    * families (HLL q191/q192, CMS q196/q197, KMV q198): their oracle-pinned
+    * estimates are functions of the hashed shingle string, and q196 prints
+    * shingle text. Every other shingle consumer uses [[fingerprints]].
+    * Persisted for the reasons stated there: the sketch queries read this
+    * relation from several subtrees, and without the barrier alias
+    * substitution re-inlines tokenize+shingle into each. CacheManager
+    * dedups by logical plan, so the family shares one copy per query.
     */
-  private[graft] def docsWithShingles(s: SparkSession, d: String): DataFrame = {
-    // Tokenize/shingle parallelism rides on the under-split fan-out guard
-    // in Tables.load (hash-repartition on doc_id when the single-file scan
-    // yields fewer splits than Tables.minSplits) — the hazard and the
-    // fraction-of-cores sizing are documented there.
-    docsWithShinglesLazy(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** [[docsWithShingles]] WITHOUT the persist — for consumers that only
-    * POINT-LOOK-UP a small id set against it (candidate verification on
-    * the warm incremental paths): a LeftSemi join on doc_id pushes below
-    * the tokenize/shingle Project (PushDownLeftSemiAntiJoin) to the
-    * documents scan, so only the looked-up docs ever tokenize. The
-    * persisted variant is a pushdown barrier (InMemoryRelation) and
-    * materializes the WHOLE corpus cache on first touch — right when many
-    * consumers re-read it (q34/q35), wrong when an ArtifactCache-warm
-    * maintainer needs ten candidates' shingle sets. */
-  private[graft] def docsWithShinglesLazy(s: SparkSession,
-      d: String): DataFrame =
+  private[graft] def docsWithShingles(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), toks(col("text")).as("tk"))
       .select(col("doc_id"), shingles(col("tk")).as("sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** Distinct word-trigram FINGERPRINTS — xxhash64 of the token triple —
-    * as the exact-similarity family's working representation (round 19,
-    * VERDICT r18 #6). Set cardinalities, intersections and document
-    * frequencies over these longs equal the string-shingle ones up to
-    * 2^-64 hash collisions (the q31 xxhash64-dedup precedent, stated
-    * there as "exact up to 2^-64 collisions, and deterministic"), and
-    * q35/q186/q190's jaccard/containment arithmetic consumes ONLY those
-    * set measures — the shingle strings never appear in their outputs.
-    * What the fingerprint buys at every stage: no per-position string
-    * allocation at build (the 3-token hash replaces concat_ws),
-    * long-typed array_distinct and array_intersect, 8 bytes/shingle
-    * through the persisted corpus cache, the candidate lookups and the
-    * verify joins — and the posting streams stop re-hashing per posting
-    * row (they previously applied xxhash64 AFTER exploding the string
-    * arrays). Tokens are split on non-alphanumerics, so triple identity
-    * equals concatenated-string identity and the fingerprint map is
-    * injective up to hash collisions. */
+  /** Distinct word-trigram fingerprints: xxhash64 of each token triple.
+    * Tokens are split on non-alphanumerics, so triple identity equals
+    * trigram-string identity. The fingerprint contract is stated on
+    * [[fingerprints]]. */
   private[graft] def shinglesHashed(tokens: Column): Column =
     array_distinct(
       when(size(tokens) >= 3,
@@ -98,34 +64,57 @@ object TextOps {
             element_at(tokens, i + 2))))
         .otherwise(array().cast("array<long>")))
 
-  /** The hashed twin of [[docsWithShingles]] — (doc_id, sh: array<long>),
-    * persisted for the same two load-bearing reasons. Used by the
-    * exact-similarity family (q35/q186/q190 and q45's small-corpus gated
-    * path), whose candidate generation and verification are pure set
-    * arithmetic over shingle identities. */
+  /** THE shingle builder of the near-duplicate family: any (doc_id, text)
+    * relation to (doc_id, sh: array<long>), the doc's distinct trigram
+    * fingerprints ([[shinglesHashed]]).
+    *
+    * Fingerprint contract: set sizes, intersections and df are exact up to
+    * 2^-64 xxhash64 collisions; deterministic. Jaccard, containment,
+    * overlap counts and MinHash signatures are functions of set identity
+    * only, so every consumer that prints ids, counts or those ratios gets
+    * the string-trigram answer up to that bound (the q31 xxhash64-dedup
+    * precedent). Only the sketch families keep text ([[docsWithShingles]]).
+    *
+    * Tokens materialize before the shingle transform (two selects):
+    * referencing the raw `split()` inside the shingle lambda re-tokenizes
+    * per element (observed 10× at sf0.1). Callers that read the result
+    * from several subtrees persist it: a join's inferred `isnotnull(sh)`
+    * filter is pushed below the projection with alias substitution, and
+    * without a barrier each side recomputes tokenize+shingle per row. */
+  private[graft] def fingerprints(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), toks(col("text")).as("tk"))
+      .select(col("doc_id"), shinglesHashed(col("tk")).as("sh"))
+
+  /** [[fingerprints]] of the whole (fanned-out) documents table, persisted:
+    * the corpus-wide relation the exact-similarity family (q35/q186/q190,
+    * q45's gated path) and the n-gram overlap counts (q82/q90/q66/q103)
+    * share. Tokenize parallelism rides on Tables.documents' fan-out. */
   private[graft] def docsWithShinglesHashed(s: SparkSession,
       d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .select(col("doc_id"), shinglesHashed(col("tk")).as("sh"))
+    fingerprints(Tables.documents(s, d))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** Restrict a (doc_id, sh) relation to the ids occurring in `cand`'s
-    * id_a/id_b — the shared pre-verification prune. The ids come out of
-    * one explode, undeduplicated (a semi-join ignores repeats). The
-    * pruned result is PERSISTED:
-    * it feeds both verify joins, and without the materialization barrier
-    * alias substitution inlines the tokenize+shingle chain into the
-    * verify's array expressions — the q35 hazard (BASELINE.md round-2:
-    * 46 s per query) re-measured here as q34c at 44.8 s when the barrier
-    * was briefly absent. The cache is candidate-sized, not corpus-sized.
-    */
-  private[graft] def lookupForCandidates(docs: DataFrame,
-      cand: DataFrame): DataFrame =
-    docs.join(
+  /** `rel` restricted to the doc ids occurring in `cand`'s id_a/id_b (one
+    * explode, undeduplicated: a semi-join ignores repeats). */
+  private def candidateRows(rel: DataFrame, cand: DataFrame): DataFrame =
+    rel.join(
       cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")),
       Seq("doc_id"), "left_semi")
-      .persist()
+
+  /** The candidates' fingerprints for exact verification: `text` is a
+    * (doc_id, text) relation, normally the unfanned documents scan
+    * (`Tables.load(s, d, "documents")`) — a candidate-sized set gains
+    * nothing from the fan-out. The candidate-id semi-join applies to the
+    * text FIRST and only its survivors tokenize: Spark 4.1 does not push
+    * a LeftSemi below the tokenize/shingle projections, so a semi-join on
+    * an already-shingled relation tokenizes the whole corpus
+    * (PlanHygieneSpec guards the order). PERSISTED: it feeds both verify
+    * joins, and without the barrier alias substitution inlines the
+    * tokenize+shingle chain into the verify's array expressions (the q35
+    * hazard, re-measured as q34c at 44.8 s). Candidate-sized. */
+  private[graft] def lookupForCandidates(text: DataFrame,
+      cand: DataFrame): DataFrame =
+    fingerprints(candidateRows(text, cand)).persist()
 
   // MinHash parameters: 96 hash functions, 32 bands × 3 rows.
   //
@@ -145,6 +134,15 @@ object TextOps {
   private val NumHashes = 96
   private val NumBands = 32
   private val RowsPerBand = NumHashes / NumBands
+
+  /** The banding scheme every shared LSH artifact tag records
+    * (ArtifactCache's contract, ADVICE r13 #1): the df cap, the MinHash
+    * shape and the shingle representation, 64-bit trigram fingerprints
+    * (their contract is stated on [[fingerprints]]). Band values depend on
+    * all three, so a retune or a representation change forces a rebuild
+    * instead of serving an index banded under the old scheme. */
+  private val LshScheme =
+    s"dfCap16|mh${NumHashes}x${NumBands}x$RowsPerBand|fp64"
 
   /** Exact all-pairs shingle-Jaccard ≥ 0.5 in DuckDB SQL — the oracle for
     * BOTH q35 (which computes exactly this) and q34 (whose LSH+verify
@@ -350,12 +348,13 @@ object TextOps {
         // one of the plan's documents scans). The explicit select is
         // the column-pruning barrier-breaker for the persist (guide
         // §2.3: project before opaque/cached consumers).
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+        val (fanned, scan) = Tables.documentsAndScan(s, d)
+        val docs = fanned.select(col("doc_id"), col("text"))
         val cut = graft.schema.Cuts.documents(s, d)
         val snap = docs.filter(col("doc_id") < cut)
-        // PERSISTED (round 18): the increment union is consumed twice as
-        // raw rows (exact-index probe, final share aggregate) besides the
-        // persisted shingle derivation — unpersisted, each consumer
+        // PERSISTED (round 18): the increment union is consumed by the
+        // exact-index probe, its banding, the verify lookup and the final
+        // share aggregate — unpersisted, each consumer
         // cloned both union legs into its plan and re-scanned documents
         // (6 scans of the table in the serve plan, 2 of them removable).
         // The cache is increment-sized.
@@ -369,19 +368,18 @@ object TextOps {
         writeExactHashIndex(s, snap, ExactHashTable, exactHashTag(d))
         val exactIds = probeExactHashIndex(s, inc, docs, ExactHashTable)
           .select(col("inc_id").as("doc_id")).distinct()
-        val toSh = (df: DataFrame) => df
-          .select(col("doc_id"), toks(col("text")).as("tk"))
-          .select(col("doc_id"), shingles(col("tk")).as("sh"))
-        // snapshot shingles stay LAZY (the cold index build persists them
-        // itself; a warm run only point-looks-up candidates); the
-        // increment persists — it bands and verifies
-        val snapSh = toSh(snap)
-        val incSh = toSh(inc).persist()
-        writeSnapshotLshIndex(s, snapSh, dfCap = 16, SnapshotLshTable,
-          snapshotLshTag(d))
-        val crossCand = crossCandidates(s, SnapshotLshTable, incSh)
+        // snapshot fingerprints stay LAZY (the cold index build persists
+        // them itself); the increment is read once, by its banding. The
+        // verify lookup fingerprints only the candidates, from the
+        // unfanned snapshot scan plus the (persisted) increment text,
+        // which carries the re-crawl ids
+        writeSnapshotLshIndex(s, fingerprints(snap), dfCap = 16,
+          SnapshotLshTable, snapshotLshTag(d))
+        val crossCand = crossCandidates(s, SnapshotLshTable, fingerprints(inc))
+        val snapText = scan.filter(col("doc_id") < cut)
+          .select(col("doc_id"), col("text"))
         val nearIds = verifyJaccardCandidates(crossCand,
-            lookupForCandidates(snapSh.unionByName(incSh), crossCand), 0.5)
+            lookupForCandidates(snapText.unionByName(inc), crossCand), 0.5)
           .select(col("id_b").as("doc_id")).distinct()
         inc.select(col("doc_id"))
           .join(exactIds.withColumn("is_exact", lit(true)),
@@ -616,15 +614,12 @@ object TextOps {
     // shuffle-free — the recurring-run shape at 100 TB, where the index is
     // built once per corpus snapshot and reused. Same output, same
     // exact-pairs oracle as q34.
-    // LAZY shingles (round 12): the memoized build tokenizes the corpus
-    // once inside the write job; warm probes fetch only the surviving
-    // candidates' shingle sets (the lookup's semi-join prune reaches the
-    // documents scan), so the corpus-wide shingle cache never
-    // materializes on a warm run.
+    // The memoized build fingerprints the corpus once inside the write
+    // job (the family-shared index, round 14); warm probes fingerprint
+    // only the surviving candidates, from the unfanned documents scan.
     Q("q34b_minhash_lsh_indexed",
-      (s, d) => minHashLshPairsBucketedIndex(s, docsWithShinglesLazy(s, d),
-          jaccardThreshold = 0.5, dfCap = 16,
-          tag = fullLshIndexTag(d)) // the family-shared index (round 14)
+      (s, d) => pairsFromBandedIndex(fullCorpusBandedIndex(s, d),
+          Tables.load(s, d, "documents"), jaccardThreshold = 0.5)
         .orderBy(col("id_a"), col("id_b")),
       Some(ExactJaccardSql)),
 
@@ -633,10 +628,9 @@ object TextOps {
     // increment, the snapshot never re-bands at probe time. Oracle: the
     // exact cross pairs (snapshot × increment) at the same threshold.
     Q("q34c_minhash_incremental",
-      // LAZY shingles: on a warm run (ArtifactCache hit) the only doc
-      // tokenization is the increment's banding + the candidates' verify
-      // lookups — the corpus cache is never touched
-      (s, d) => minHashLshIncremental(s, docsWithShinglesLazy(s, d),
+      // on a warm run (ArtifactCache hit) the only doc tokenization is
+      // the increment's banding + the candidates' verify lookups
+      (s, d) => minHashLshIncremental(s, Tables.documents(s, d),
           jaccardThreshold = 0.5, dfCap = 16, tag = snapshotLshTag(d))
         .orderBy(col("id_a"), col("id_b")),
       Some("""WITH t AS (
@@ -681,7 +675,7 @@ object TextOps {
     // threshold. The corpus side stays one explode + one count groupBy.
     Q("q90_ngram_decontam",
       (s, d) => {
-        val docs = docsWithShingles(s, d)
+        val docs = docsWithShinglesHashed(s, d)
         val bench = docs.filter(col("doc_id") % 50 === 0)
           .select(explode(col("sh")).as("s")).distinct()
         docs.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
@@ -1084,9 +1078,9 @@ object TextOps {
     Q("q95_fuzzy_decontam",
       // round 14: candidates probe the SHARED written full-corpus band
       // index (one signature sweep per JVM for the whole LSH family);
-      // lazy docs keep verification candidate-sized
+      // verification fingerprints only the candidates
       (s, d) => fuzzyDecontamFromBands(fullCorpusBandedIndex(s, d),
-          docsWithShinglesLazy(s, d),
+          Tables.load(s, d, "documents"),
           benchPred = col("doc_id") % 50 === 0, threshold = 0.5)
         .orderBy(col("doc_id")),
       Some("""WITH t AS (
@@ -1486,7 +1480,7 @@ object TextOps {
       Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|cms${CmsD}x$CmsW")) {
       val cut = graft.schema.Cuts.documents(s, d)
       Tables.resetManagedTable(s, CmsSketchTable)
-      cmsOf(shingleDfCounts(docsWithShinglesLazy(s, d)
+      cmsOf(shingleDfCounts(docsWithShingles(s, d)
           .filter(col("doc_id") < cut)))
         .write.mode("overwrite").saveAsTable(CmsSketchTable)
     }
@@ -1884,20 +1878,16 @@ object TextOps {
   }
 
   /** Exact pairwise Jaccard ≥ threshold between two shingled doc sets via
-    * inverted index. Columns: (doc_id, sh) on both sides; emits
-    * (id_a, id_b, jaccard) with id_a < id_b when both sides are the same
-    * dataset. At scale, cap shingle document-frequency first (stop-shingle
-    * removal) to bound the inverted-index fanout.
+    * inverted index. Columns: (doc_id, sh: [[fingerprints]]) on both
+    * sides, so the inverted-index shuffle ships (id, 8 bytes) per posting;
+    * emits (id_a, id_b, jaccard) with id_a < id_b when both sides are the
+    * same dataset. At scale, cap shingle document-frequency first
+    * (stop-shingle removal) to bound the inverted-index fanout.
     */
   def exactJaccardPairs(left: DataFrame, right: DataFrame,
       threshold: Double): DataFrame = {
-    // join on the 64-bit shingle hash, not the shingle string: the
-    // inverted-index shuffle ships (id, 8 bytes) per posting instead of
-    // ~25-byte trigram text — identical pair counts up to 2^-64 collisions
-    val e1 = left.select(col("doc_id").as("id_a"), explode(col("sh")).as("s0"))
-      .select(col("id_a"), xxhash64(col("s0")).as("s"))
-    val e2 = right.select(col("doc_id").as("id_b"), explode(col("sh")).as("s0"))
-      .select(col("id_b"), xxhash64(col("s0")).as("s"))
+    val e1 = left.select(col("doc_id").as("id_a"), explode(col("sh")).as("s"))
+    val e2 = right.select(col("doc_id").as("id_b"), explode(col("sh")).as("s"))
     val inter = e1.join(e2, e1("s") === e2("s") && col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni"))
     val sizes = left.select(col("doc_id"), size(col("sh")).as("sz"))
@@ -1976,14 +1966,10 @@ object TextOps {
     * (1 − τ)-tail of every posting list BEFORE the bucket expansion, so
     * the quadratic part runs over rare-token buckets only. The rank
     * window partitions by doc_id (never partition-less — PlanAuditSpec).
-    * Verification is candidate-sized: [[lookupForCandidates]]'s
-    * semi-join prune reaches the documents scan. */
+    * Verification reads the candidates' rows of `docs` (the persisted
+    * [[fingerprints]] relation), restricted once and persisted. */
   def prefixFilterJaccardPairs(docs: DataFrame,
       threshold: Double): DataFrame = {
-    // `docs` carries HASHED shingle arrays ([[shinglesHashed]], round
-    // 19): the posting stream explodes longs directly instead of
-    // re-hashing each posting row, and the verify stage intersects
-    // long arrays
     val posts = docs
       .select(col("doc_id"), size(col("sh")).as("sz"),
         explode(col("sh")).as("s"))
@@ -2039,7 +2025,7 @@ object TextOps {
         (col("m.sz_a") + col("m.sz_b")) * threshold)
       .select(col("id_a"), col("id_b"))
       .persist()
-    verifyJaccardCandidates(cand, lookupForCandidates(docs, cand),
+    verifyJaccardCandidates(cand, candidateRows(docs, cand).persist(),
       threshold)
   }
 
@@ -2144,7 +2130,6 @@ object TextOps {
     * q186 there is no per-bucket quadratic bound; the verify stage is
     * what bounds the OUTPUT. */
   def containmentPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    // `docs` carries HASHED shingle arrays (see prefixFilterJaccardPairs)
     val posts = docs
       .select(col("doc_id"), size(col("sh")).as("sz"),
         explode(col("sh")).as("s"))
@@ -2162,7 +2147,7 @@ object TextOps {
         greatest(col("p_id"), col("f_id")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
       .persist()
-    val docsFor = lookupForCandidates(docs, cand)
+    val docsFor = candidateRows(docs, cand).persist()
     cand
       .join(docsFor.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
         "id_a")
@@ -2177,7 +2162,6 @@ object TextOps {
 
   def exactJaccardPairsCapped(docs: DataFrame, threshold: Double,
       dfCap: Int): DataFrame = {
-    // `docs` carries HASHED shingle arrays (see prefixFilterJaccardPairs)
     val capped = docs.select(col("doc_id"), size(col("sh")).as("sz"),
       MinHashExprs.capped(col("sh"), hotOf(docs, dfCap), DfFloor).as("kept"))
     val kept = capped.select(col("doc_id"), explode(col("kept")).as("s"))
@@ -2229,7 +2213,8 @@ object TextOps {
   }
 
   /** MinHash signatures + banded LSH + exact-Jaccard verification of the
-    * candidates. Input: (doc_id, sh). Output: (id_a, id_b, jaccard).
+    * candidates. Input: (doc_id, text), banded and verified over its
+    * [[fingerprints]]. Output: (id_a, id_b, jaccard).
     *
     * `dfCap`: stop-shingle removal before the signature aggregate — the
     * signature is computed over the df-capped shingle set (capped-set
@@ -2239,7 +2224,8 @@ object TextOps {
     * from gluing unrelated docs into one band bucket. */
   def minHashLshPairs(docs: DataFrame, jaccardThreshold: Double,
       dfCap: Int = Int.MaxValue): DataFrame =
-    pairsFromBandedIndex(bandedSignatures(docs, dfCap), docs, jaccardThreshold)
+    pairsFromBandedIndex(bandedSignatures(fingerprints(docs), dfCap), docs,
+      jaccardThreshold)
 
   /** The SHARED full-corpus LSH near-dup pair artifact (j ≥ 0.5, dfCap
     * 16) — the round-12 extension of the [[ArtifactCache]] posture from
@@ -2255,12 +2241,8 @@ object TextOps {
     * consumer's oracle independently recomputes exact pairs from raw text
     * in DuckDB, so a stale or wrong artifact fails four hash gates. */
   private[graft] val CorpusLshPairsTable = "graft_corpus_lsh_pairs"
-  // tags encode EVERY build parameter (ArtifactCache's contract, ADVICE
-  // r13 #1) — including the MinHash banding scheme, so a future re-tune
-  // like round 13's 8×4 → 32×3 forces a rebuild instead of silently
-  // serving pairs detected under the old scheme
   private[graft] def corpusLshPairsTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|j0.5|dfCap16|mh${NumHashes}x${NumBands}x$RowsPerBand")
+    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|j0.5|$LshScheme")
 
   def corpusLshPairs(s: SparkSession, d: String): DataFrame = {
     ArtifactCache.once(CorpusLshPairsTable, corpusLshPairsTag(d)) {
@@ -2269,10 +2251,9 @@ object TextOps {
       // VERDICT r13 #4): the 96-hash signature sweep — 3× pricier since
       // the round-13 re-banding — runs once per corpus snapshot for the
       // WHOLE family (q34/q34b/q95/q103 + this pair artifact), not once
-      // per artifact; verification stays candidate-sized over full
-      // shingle sets via the lazy-docs lookup
+      // per artifact; verification fingerprints only the candidates
       pairsFromBandedIndex(fullCorpusBandedIndex(s, d),
-          docsWithShinglesLazy(s, d), jaccardThreshold = 0.5)
+          Tables.load(s, d, "documents"), jaccardThreshold = 0.5)
         .write.mode("overwrite").saveAsTable(CorpusLshPairsTable)
     }
     s.table(CorpusLshPairsTable)
@@ -2288,11 +2269,11 @@ object TextOps {
     * aggregation/join shuffle-free on the index side. */
   private[graft] val FullLshIndexTable = "graft_lsh_band_index"
   private[graft] def fullLshIndexTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|full|dfCap16|mh${NumHashes}x${NumBands}x$RowsPerBand")
+    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|full|$LshScheme")
 
   private[graft] def fullCorpusBandedIndex(s: SparkSession,
       d: String): DataFrame = {
-    ensureBandedIndex(s, docsWithShinglesLazy(s, d), dfCap = 16,
+    ensureBandedIndex(s, fingerprints(Tables.documents(s, d)), dfCap = 16,
       FullLshIndexTable, fullLshIndexTag(d))
     s.table(FullLshIndexTable)
   }
@@ -2348,8 +2329,9 @@ object TextOps {
   private[graft] val liveSketchCkpts = new GenTracker
 
   /** Candidate generation + exact verify over a banded index relation
-    * (freshly derived or read back from a written index table). */
-  private[graft] def pairsFromBandedIndex(banded: DataFrame, docs: DataFrame,
+    * (freshly derived or read back from a written index table); `text`
+    * is the (doc_id, text) relation the candidates are looked up in. */
+  private[graft] def pairsFromBandedIndex(banded: DataFrame, text: DataFrame,
       jaccardThreshold: Double): DataFrame = {
     // Evict the PREVIOUS sweep generation BEFORE registering this one's
     // persists: Dataset.unpersist removes cache entries by LOGICAL PLAN,
@@ -2362,12 +2344,10 @@ object TextOps {
     val cand = candidatesFromBandedIndex(banded)
       .persist() // feeds the id-set prune + both verify joins
 
-    // fetch the two shingle sets only for surviving candidates (rare by
-    // construction), then verify exactly — the ONE shared verify contract
-    // (same helper as the in-plan LSH and incremental paths). The
-    // candidate-id semi-join makes the fetch candidate-sized when `docs`
-    // is a lazy relation (the prune reaches the scan).
-    val looked = lookupForCandidates(docs, cand)
+    // fingerprint only the surviving candidates (rare by construction),
+    // then verify exactly — the ONE shared verify contract (same helper
+    // as the in-plan LSH and incremental paths)
+    val looked = lookupForCandidates(text, cand)
     livePairSweepCaches.set(cand, looked)
     verifyJaccardCandidates(cand, looked, jaccardThreshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
@@ -2383,13 +2363,13 @@ object TextOps {
     * bands, keeping id_a < id_b — every cross pair qualifies because
     * snapshot ids precede increment ids, and each internal pair appears
     * once. Emitted pairs are therefore ordered id_a < id_b. The increment
-    * bands
-    * under the snapshot's FROZEN hot list (ADVICE r10 #3), so its cost
-    * depends only on the increment. Persisted relations (bands +
-    * candidates + pruned lookup) ride the one-generation pair-sweep
-    * tracker, same as [[pairsFromBandedIndex]]. */
+    * (its [[fingerprints]]) bands under the snapshot's FROZEN hot list
+    * (ADVICE r10 #3), so its cost depends only on the increment;
+    * candidates are looked up in the (doc_id, text) relation `text`.
+    * Persisted relations (bands + candidates + lookup) ride the
+    * one-generation pair-sweep tracker, same as [[pairsFromBandedIndex]]. */
   private[graft] def deltaPairsAgainstIndex(s: SparkSession, table: String,
-      inc: DataFrame, lookupSh: DataFrame,
+      inc: DataFrame, text: DataFrame,
       jaccardThreshold: Double): DataFrame = {
     // evict-BEFORE-register, for the same plan-equality reason as
     // [[pairsFromBandedIndex]]
@@ -2405,7 +2385,7 @@ object TextOps {
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
       .persist() // feeds the id-set prune + both verify joins
-    val looked = lookupForCandidates(lookupSh, cand)
+    val looked = lookupForCandidates(text, cand)
     livePairSweepCaches.set(incBands, cand, looked)
     verifyJaccardCandidates(cand, looked, jaccardThreshold)
   }
@@ -2454,13 +2434,13 @@ object TextOps {
     * bucket layout already satisfies the groupBy's distribution (same
     * mechanism BucketingSpec proves for joins), so the one corpus-sized
     * shuffle of the in-plan formulation disappears from the recurring
-    * run's cost. Output is identical to [[minHashLshPairs]] — same
-    * exact-pairs oracle, asserted by TextOpsSpec and the driver gate. */
+    * run's cost. Input: (doc_id, text), as [[minHashLshPairs]], whose
+    * output this equals (TextOpsSpec asserts it). */
   def minHashLshPairsBucketedIndex(s: SparkSession, docs: DataFrame,
       jaccardThreshold: Double, dfCap: Int,
       table: String = FullLshIndexTable,
       tag: Option[String] = None): DataFrame = {
-    ensureBandedIndex(s, docs, dfCap, table, tag)
+    ensureBandedIndex(s, fingerprints(docs), dfCap, table, tag)
     pairsFromBandedIndex(s.table(table), docs, jaccardThreshold)
   }
 
@@ -2469,15 +2449,15 @@ object TextOps {
     * [[fullCorpusBandedIndex]]. The index build is [[ArtifactCache]]-
     * memoized when the caller can state a content tag (round 12) — the
     * written-index posture implies the build runs once per corpus
-    * snapshot, not once per consumer run. */
-  private[graft] def ensureBandedIndex(s: SparkSession, docs: DataFrame,
+    * snapshot, not once per consumer run. `docs` is (doc_id, sh). */
+  private[graft] def ensureBandedIndex(s: SparkSession, docs: => DataFrame,
       dfCap: Int, table: String, tag: Option[String]): Unit =
     ArtifactCache.once(table, tag) {
       // persist INSIDE the cold block only (the writeSnapshotLshIndex
       // rule): the build consumes the shingle relation twice (df stats +
       // bands) and without the barrier alias substitution re-inlines
       // tokenize+shingle per consumer (measured 49 s vs 2 s at sf0.1);
-      // warm probes never touch this and stay candidate-sized lazy
+      // warm probes never touch this
       val dp = docs.persist()
       try {
         Tables.resetManagedTable(s, table)
@@ -2485,6 +2465,41 @@ object TextOps {
           .write.bucketBy(8, "band", "bucket")
           .mode("overwrite").saveAsTable(table)
       } finally { dp.unpersist(); () }
+    }
+
+  /** The SHARED table name for the documents-80%-cut snapshot LSH index
+    * (dfCap 16) that q34c/q109/q144/q146/q148 all probe, and its
+    * [[ArtifactCache]] content tag for a given testdata dir. */
+  private[graft] val SnapshotLshTable = "graft_lsh_snapshot_index"
+  private[graft] def snapshotLshTag(d: String): Option[String] =
+    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|$LshScheme")
+
+  /** Write the snapshot's banded LSH index AND its frozen df stats — the
+    * complete written artifact an incremental/streaming consumer needs:
+    * `table` holds (doc_id, band, bucket) bucketed for shuffle-free
+    * probing; `table`_hot holds the snapshot's over-cap (s, _df) stats.
+    * An increment banded via [[bandedSignaturesFrozenHot]] against
+    * `table`_hot computes byte-identical signatures to the snapshot
+    * scheme — the q44c frozen-centroid posture, for text. `snap` is
+    * (doc_id, sh: [[fingerprints]]). */
+  def writeSnapshotLshIndex(s: SparkSession, snap: DataFrame, dfCap: Int,
+      table: String, tag: Option[String] = None): Unit =
+    ArtifactCache.once(table, tag) {
+      // the build consumes the snapshot fingerprints twice (df stats +
+      // bands) — persist INSIDE the cold block only, so warm (memoized)
+      // runs never materialize corpus fingerprints at all
+      val sp = snap.persist()
+      try {
+        Tables.resetManagedTable(s, s"${table}_hot")
+        sp.select(col("doc_id"), explode(col("sh")).as("s"))
+          .groupBy(col("s")).agg(count(lit(1)).as("_df"))
+          .filter(col("_df") > dfCap)
+          .write.mode("overwrite").saveAsTable(s"${table}_hot")
+        Tables.resetManagedTable(s, table)
+        bandedSignaturesFrozenHot(sp, s.table(s"${table}_hot"))
+          .write.bucketBy(8, "band", "bucket").mode("overwrite")
+          .saveAsTable(table)
+      } finally { sp.unpersist(); () }
     }
 
   /** Incremental dedup against a WRITTEN snapshot index — the operation a
@@ -2501,42 +2516,9 @@ object TextOps {
     * production shape. Banding completeness is q34's own, driver-proven
     * property: signatures are the SAME pipeline over the same corpus
     * stats, so every exact-oracle pair collides in at least one band.
+    * Input: (doc_id, text), banded and looked up as in [[minHashLshPairs]].
     * Output: cross pairs only — (id_a < cut ≤ id_b, jaccard ≥ threshold).
     */
-  /** Write the snapshot's banded LSH index AND its frozen df stats — the
-    * complete written artifact an incremental/streaming consumer needs:
-    * `table` holds (doc_id, band, bucket) bucketed for shuffle-free
-    * probing; `table`_hot holds the snapshot's over-cap (s, _df) stats.
-    * An increment banded via [[bandedSignaturesFrozenHot]] against
-    * `table`_hot computes byte-identical signatures to the snapshot
-    * scheme — the q44c frozen-centroid posture, for text. */
-  /** The SHARED table name for the documents-80%-cut snapshot LSH index
-    * (dfCap 16) that q34c/q109/q144/q146/q148 all probe, and its
-    * [[ArtifactCache]] content tag for a given testdata dir. */
-  private[graft] val SnapshotLshTable = "graft_lsh_snapshot_index"
-  private[graft] def snapshotLshTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|dfCap16|mh${NumHashes}x${NumBands}x$RowsPerBand")
-
-  def writeSnapshotLshIndex(s: SparkSession, snap: DataFrame, dfCap: Int,
-      table: String, tag: Option[String] = None): Unit =
-    ArtifactCache.once(table, tag) {
-      // the build consumes the snapshot shingles twice (df stats + bands)
-      // — persist INSIDE the cold block only, so warm (memoized) runs
-      // never materialize corpus shingles at all
-      val sp = snap.persist()
-      try {
-        Tables.resetManagedTable(s, s"${table}_hot")
-        sp.select(col("doc_id"), explode(col("sh")).as("s"))
-          .groupBy(col("s")).agg(count(lit(1)).as("_df"))
-          .filter(col("_df") > dfCap)
-          .write.mode("overwrite").saveAsTable(s"${table}_hot")
-        Tables.resetManagedTable(s, table)
-        bandedSignaturesFrozenHot(sp, s.table(s"${table}_hot"))
-          .write.bucketBy(8, "band", "bucket").mode("overwrite")
-          .saveAsTable(table)
-      } finally { sp.unpersist(); () }
-    }
-
   def minHashLshIncremental(s: SparkSession, docs: DataFrame,
       jaccardThreshold: Double, dfCap: Int,
       table: String = SnapshotLshTable,
@@ -2554,11 +2536,12 @@ object TextOps {
     // snapshot never re-bands, and the streaming twin (q109) reproduces
     // this scheme byte-identically per micro-batch, so batch and stream
     // candidate sets coincide by construction.
-    val snap = docs.crossJoin(broadcast(cut))
+    val sh = fingerprints(docs)
+    val snap = sh.crossJoin(broadcast(cut))
       .filter(col("doc_id") < col("cut")).drop("cut")
     // not persisted: banding is its only reader (the verify lookup goes
     // through `docs`), and the kernel reads `sh` once per row
-    val inc = docs.crossJoin(broadcast(cut))
+    val inc = sh.crossJoin(broadcast(cut))
       .filter(col("doc_id") >= col("cut")).drop("cut")
     writeSnapshotLshIndex(s, snap, dfCap, table, tag)
     val cand = crossCandidates(s, table, inc)
@@ -2581,12 +2564,14 @@ object TextOps {
     * CONTAMINATED DOC (id, #bench hits, worst jaccard) — the drop list a
     * pipeline feeds back into its training-set filter.
     *
+    * @param docs (doc_id, text), banded and looked up as in
+    *   [[minHashLshPairs]]
     * @param benchPred predicate over `doc_id` marking the benchmark side
     */
   def fuzzyDecontam(docs: DataFrame, benchPred: Column, threshold: Double,
       dfCap: Int): DataFrame =
-    fuzzyDecontamFromBands(bandedSignatures(docs, dfCap).persist(), docs,
-      benchPred, threshold)
+    fuzzyDecontamFromBands(bandedSignatures(fingerprints(docs), dfCap)
+      .persist(), docs, benchPred, threshold)
 
   /** One-generation residency cap for the decontam candidate caches
     * (ADVICE r14 #5): each [[fuzzyDecontamFromBands]] invocation
@@ -2607,9 +2592,10 @@ object TextOps {
     * ([[fullCorpusBandedIndex]]) instead of re-running the signature
     * sweep per query. When `banded` is the bucketed index table, the
     * bench-side × corpus-side collision join is shuffle-free on both
-    * sides (both read the same (band, bucket) bucket layout). */
+    * sides (both read the same (band, bucket) bucket layout). `text` is
+    * the (doc_id, text) relation the candidates are looked up in. */
   private[graft] def fuzzyDecontamFromBands(banded: DataFrame,
-      docs: DataFrame, benchPred: Column, threshold: Double): DataFrame = {
+      text: DataFrame, benchPred: Column, threshold: Double): DataFrame = {
     // evict-BEFORE-register (the [[pairsFromBandedIndex]] plan-equality
     // rule): a re-composed decontam sweep builds plan-identical
     // relations, and unpersisting the old generation after the new
@@ -2623,7 +2609,7 @@ object TextOps {
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
       .persist() // feeds the id-set prune + both verify joins
-    val looked = lookupForCandidates(docs, cand)
+    val looked = lookupForCandidates(text, cand)
     liveDecontamCaches.set(cand, looked)
     verifyJaccardCandidates(cand, looked, threshold)
       .groupBy(col("id_a"))

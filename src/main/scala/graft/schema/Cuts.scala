@@ -129,7 +129,7 @@ object Cuts {
     cache.keys.filter(_._1 == d).foreach(cache.remove)
 
   /** max(doc_id) over the documents table — also valid for any frame
-    * that id-preservingly derives from it (the lazy shingle relation is
+    * that id-preservingly derives from it (the fingerprint relation is
     * a pure per-row projection). */
   def documents(s: SparkSession, d: String): Long =
     cut80(s, d, "documents", "documents") {

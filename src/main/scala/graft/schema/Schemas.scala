@@ -171,7 +171,16 @@ object Tables {
     }
   }
   def documents(s: SparkSession, d: String): DataFrame =
-    fanOut(s, load(s, d, "documents"), "doc_id", s"$d/documents.parquet")
+    documentsAndScan(s, d)._1
+
+  /** [[documents]] together with the raw scan it fans out, from ONE read
+    * (each `spark.read.parquet` runs a schema-inference job): the
+    * near-duplicate maintainers band the fan-out and look candidates up
+    * in the scan — a candidate-sized read gains nothing from the fan-out. */
+  def documentsAndScan(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val scan = load(s, d, "documents")
+    (fanOut(s, scan, "doc_id", s"$d/documents.parquet"), scan)
+  }
   def embeddings(s: SparkSession, d: String): DataFrame =
     fanOut(s, load(s, d, "embeddings"), "vec_id", s"$d/embeddings.parquet")
 }

@@ -504,28 +504,27 @@ object StreamingOps {
     Q("q66_stream_decontam",
       (s, d) => {
         import graft.ops.TextOps
-        // static side: the SHARED persisted shingle relation (CacheManager
-        // dedups with the batch q90, so recurring runs pay it once)
-        val bench = TextOps.docsWithShingles(s, d)
+        // static side: the SHARED persisted fingerprint relation
+        // (CacheManager dedups with the batch q90, so recurring runs pay
+        // it once)
+        val bench = TextOps.docsWithShinglesHashed(s, d)
           .filter(col("doc_id") % 50 === 0)
           .select(explode(col("sh")).as("s"))
           .distinct()
         val matches = runDocsToMemory(s, d, "append") { df =>
-          // two-step select: tokens MATERIALIZE before the shingle
-          // transform (the docsWithShingles hazard note — inlining the
-          // tokenizer into the shingle lambda re-tokenizes per element;
-          // persist is not available on a stream, but single-consumer
-          // projections don't collapse because the alias is non-cheap and
-          // multiply referenced). explode_OUTER, deliberately: a plain
-          // explode makes InferFiltersFromGenerate add `size(sh) > 0`,
+          // the shared builder's two-step select keeps tokens materialized
+          // before the shingle transform (persist is not available on a
+          // stream, but single-consumer projections don't collapse because
+          // the alias is non-cheap and multiply referenced).
+          // explode_OUTER, deliberately: a plain explode makes
+          // InferFiltersFromGenerate add `size(sh) > 0`,
           // and predicate pushdown then shoves that filter BELOW the
           // fan-out repartition with the whole shingle+tokenize chain
           // inlined — the entire corpus gets shingled serially in the
           // one-split scan task (measured: 24-31 s vs 1.8 s at sf0.1).
           // outer explode infers nothing; the equi-join drops the null
           // gram of empty-shingle docs, so the semantics are identical.
-          df.select(col("doc_id"), TextOps.toks(col("text")).as("tk"))
-            .select(col("doc_id"), TextOps.shingles(col("tk")).as("sh"))
+          TextOps.fingerprints(df)
             .select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
               explode_outer(col("sh")).as("s"))
             .join(broadcast(bench), Seq("s"))
@@ -630,53 +629,49 @@ object StreamingOps {
               (SELECT count(*) FROM embeddings WHERE vec_id >= 10)
                 <= 1000 AS verified""")),
 
-    // ---- streaming near-dup GATE (q109): arriving docs are checked
-    // against the WRITTEN banded-LSH snapshot index as they land — the
-    // crawl-ingest dedup pattern (admit a shard only after knowing what
-    // it duplicates). Static side: the snapshot (docs below the 80% cut)
-    // bands ONCE into the bucketed index table (the q34b posture) with
-    // its df stats written alongside as the `_hot` table, and its shingle
-    // sets stay persisted for verification. Stream side: each micro-batch
-    // tokenizes/shingles/bands ONLY its own docs under the FROZEN
-    // snapshot hot list (ADVICE r10 #3; the q44c frozen-centroid posture)
-    // — the batch's signatures are a pure per-doc function of (hot list,
-    // doc), byte-identical to the scheme q34c bands its increment with,
-    // so batch and stream candidate sets coincide by construction instead
-    // of by two signature schemes both reaching full recall — probes the
-    // index by (band, bucket), and exact-verifies candidates against full
-    // shingle sets. Recurring cost ∝ batch size; the snapshot never
-    // re-bands. Output = q34c's cross pairs, same oracle.
+    // ---- streaming near-dup GATE (q109): arriving docs are checked against
+    // the WRITTEN banded-LSH snapshot index as they land — the crawl-ingest
+    // dedup pattern (admit a shard only after knowing what it duplicates).
+    // Static side: the snapshot (docs below the 80% cut) bands ONCE into the
+    // bucketed index table (the q34b posture) with its df stats written
+    // alongside as the `_hot` table. Stream side: each micro-batch
+    // tokenizes/shingles/bands ONLY its own docs under the FROZEN snapshot
+    // hot list (ADVICE r10 #3; the q44c frozen-centroid posture) — the
+    // batch's signatures are a pure per-doc function of (hot list, doc),
+    // byte-identical to the scheme q34c bands its increment with, so batch
+    // and stream candidate sets coincide by construction instead of by two
+    // signature schemes both reaching full recall — probes the index by
+    // (band, bucket), and exact-verifies candidates against full shingle
+    // sets fingerprinted for the candidates alone. Recurring cost ∝ batch
+    // size; the snapshot never re-bands. Output = q34c's cross pairs, same
+    // oracle.
     Q("q109_stream_neardup_gate",
       (s, d) => {
         import graft.ops.TextOps
-        // LAZY shingles: a warm run (shared index built) tokenizes only
-        // each arriving batch + the candidates' verify lookups
-        val docs = TextOps.docsWithShinglesLazy(s, d)
+        // a warm run (shared index built) tokenizes only each arriving
+        // batch + the candidates' verify lookups
         val cut = graft.schema.Cuts.documents(s, d)
-        val snap = docs.filter(col("doc_id") < cut)
         // the SHARED snapshot LSH index (ArtifactCache): q34c/q144/q146/
         // q148 probe the same artifact; first builder this JVM pays it
         val table = TextOps.SnapshotLshTable
-        TextOps.writeSnapshotLshIndex(s, snap, dfCap = 16, table,
-          TextOps.snapshotLshTag(d))
+        // batch docs are documents rows too: one unfanned scan serves
+        // every candidate lookup
+        val (docs, text) = graft.schema.Tables.documentsAndScan(s, d)
+        TextOps.writeSnapshotLshIndex(s,
+          TextOps.fingerprints(docs).filter(col("doc_id") < cut),
+          dfCap = 16, table, TextOps.snapshotLshTag(d))
         val store = tempStore("graft_neardup_gate_out")
         runForeachBatch(s, d, "documents")(_.filter(col("doc_id") >= cut)) {
           (batch, _) =>
-            val bdocs = batch
-              .repartition(graft.schema.Tables.minSplits(batch.sparkSession),
-                col("doc_id"))
-              .select(col("doc_id"), TextOps.toks(col("text")).as("tk"))
-              .select(col("doc_id"), TextOps.shingles(col("tk")).as("sh"))
-              .persist()
             val cand = TextOps.crossCandidates(batch.sparkSession, table,
-              bdocs)
+              TextOps.fingerprints(batch.repartition(
+                graft.schema.Tables.minSplits(batch.sparkSession),
+                col("doc_id"))))
             TextOps.verifyJaccardCandidates(cand,
-                TextOps.lookupForCandidates(snap.unionByName(bdocs), cand),
-                threshold = 0.5)
+                TextOps.lookupForCandidates(text, cand), threshold = 0.5)
               .select(col("id_a"), col("id_b"),
                 round(col("jaccard"), 4).as("jaccard"))
               .write.mode("append").parquet(store)
-            bdocs.unpersist()
             cand.unpersist()
             ()
         }
@@ -2000,11 +1995,10 @@ object StreamingOps {
     Q("q146_stream_cluster_maintain",
       (s, d) => {
         import graft.ops.{PipelineOps, TextOps}
-        // LAZY shingles: warm runs (shared artifacts already built) only
-        // tokenize each batch + candidate verify lookups — the corpus
-        // shingle cache is never materialized (the fold's semi-join
-        // pushes below the tokenizer to the documents scan)
-        val allSh = TextOps.docsWithShinglesLazy(s, d)
+        // warm runs (shared artifacts already built) only tokenize each
+        // batch + the candidates of its verify lookup, which reads the
+        // unfanned documents scan (batch docs are documents rows too)
+        val (docs, allText) = graft.schema.Tables.documentsAndScan(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         // the SHARED snapshot index + labels (ArtifactCache): q144 builds
         // the same two artifacts; whichever runs first this JVM pays them
@@ -2012,22 +2006,18 @@ object StreamingOps {
         val labelStore = tempStore("graft_cluster_labels")
         val bandStore = tempStore("graft_cluster_bands")
         PipelineOps.buildClusterSnapshotStore(s,
-          allSh.filter(col("doc_id") < cut), dfCap = 16, table, labelStore,
+          docs.filter(col("doc_id") < cut),
+          dfCap = 16, table, labelStore,
           jaccardThreshold = 0.5, indexTag = TextOps.snapshotLshTag(d),
           labelsTag = TextOps.snapshotLshTag(d).map(t => s"$t|j0.5"))
         runForeachBatch(s, d, "documents")(_.filter(col("doc_id") >= cut)) {
           (batch, batchId) =>
-            val bdocs = batch
-              .repartition(graft.schema.Tables.minSplits(batch.sparkSession),
-                col("doc_id"))
-              .select(col("doc_id"), TextOps.toks(col("text")).as("tk"))
-              .select(col("doc_id"), TextOps.shingles(col("tk")).as("sh"))
-              .persist()
-            PipelineOps.foldBatchIntoClusterStore(batch.sparkSession, bdocs,
-              allSh, table, bandStore, labelStore, batchId,
+            PipelineOps.foldBatchIntoClusterStore(batch.sparkSession,
+              batch.repartition(
+                graft.schema.Tables.minSplits(batch.sparkSession),
+                col("doc_id")),
+              allText, table, bandStore, labelStore, batchId,
               jaccardThreshold = 0.5)
-            bdocs.unpersist()
-            ()
         }
         s.read.parquet(latestPruned(s, labelStore))
           .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))

@@ -65,12 +65,8 @@ class MinHashKernelSpec extends SparkSpec {
     df.select(col("doc_id"), col("band"), col("bucket"))
       .as[(Long, Int, Long)].collect().toSeq.sorted
 
-  private def shingled(rows: Seq[(Long, String)], hashed: Boolean) =
-    rows.toDF("doc_id", "text")
-      .select(col("doc_id"), TextOps.toks(col("text")).as("tk"))
-      .select(col("doc_id"),
-        (if (hashed) TextOps.shinglesHashed(col("tk"))
-         else TextOps.shingles(col("tk"))).as("sh"))
+  private def shingled(rows: Seq[(Long, String)]) =
+    TextOps.fingerprints(rows.toDF("doc_id", "text"))
 
   private val boiler = "zorple quandric flumina vexatron brillig slithy " +
     "toves gyre gimble wabe mimsy borogoves outgrabe raths"
@@ -100,52 +96,57 @@ class MinHashKernelSpec extends SparkSpec {
 
   test("frozen-hot banding equals the aggregate formulation row for row, " +
       "across floor rescue, partial top-up and short docs") {
-    Seq(false, true).foreach { hashed =>
-      val sh = shingled(corpus, hashed).persist()
-      val hot = refHot(sh).persist()
-      val got = rows(TextOps.bandedSignaturesFrozenHot(sh, hot))
-      assert(got === rows(refBands(refKept(sh, hot))), s"hashed=$hashed")
-      val ids = got.map(_._1).toSet
-      // the all-hot class bands only through the rescue; short docs not
-      assert((1L to 20L).forall(ids.contains), s"hashed=$hashed")
-      assert(!ids.contains(21L) && !ids.contains(22L), s"hashed=$hashed")
-      assert(got.count(_._1 == 1L) === 32)
-      sh.unpersist(); hot.unpersist()
-    }
+    val sh = shingled(corpus).persist()
+    val hot = refHot(sh).persist()
+    val got = rows(TextOps.bandedSignaturesFrozenHot(sh, hot))
+    assert(got === rows(refBands(refKept(sh, hot))))
+    val ids = got.map(_._1).toSet
+    // the all-hot class bands only through the rescue; short docs not
+    assert((1L to 20L).forall(ids.contains))
+    assert(!ids.contains(21L) && !ids.contains(22L))
+    assert(got.count(_._1 == 1L) === 32)
+    sh.unpersist(); hot.unpersist()
   }
 
   test("in-plan capped banding equals the aggregate formulation row for " +
       "row, and the cap's posting stream equals the anti-join + rescue") {
-    Seq(false, true).foreach { hashed =>
-      val sh = shingled(corpus, hashed).persist()
-      val hot = refHot(sh).persist()
-      assert(hot.count() > 0, "the cap must be exercised")
-      assert(rows(TextOps.bandedSignatures(sh, cap)) ===
-        rows(refBands(refKept(sh, hot))), s"hashed=$hashed")
-      // the posting cap exactJaccardPairsCapped runs on
-      val capped = sh.select(col("doc_id"), explode(MinHashExprs.capped(
-        col("sh"), HotShingles.collect(hot), TextOps.DfFloor)).as("s"))
-      def posts(df: DataFrame) = df.select(col("doc_id"),
-        col("s").cast("string")).as[(Long, String)].collect().toSeq.sorted
-      val want = posts(refKept(sh, hot))
-      assert(posts(capped) === want, s"hashed=$hashed")
-      // doc 19 keeps its 4 cold shingles and both hot ones; doc 20 its 5
-      // cold ones topped up to the floor from 11 hot ones
-      assert(posts(capped).count(_._1 == 19L) === 6, s"hashed=$hashed")
-      assert(posts(capped).count(_._1 == 20L) === TextOps.DfFloor)
-      sh.unpersist(); hot.unpersist()
-    }
+    val sh = shingled(corpus).persist()
+    val hot = refHot(sh).persist()
+    assert(hot.count() > 0, "the cap must be exercised")
+    assert(rows(TextOps.bandedSignatures(sh, cap)) ===
+      rows(refBands(refKept(sh, hot))))
+    // the posting cap exactJaccardPairsCapped runs on
+    val capped = sh.select(col("doc_id"), explode(MinHashExprs.capped(
+      col("sh"), HotShingles.collect(hot), TextOps.DfFloor)).as("s"))
+    def posts(df: DataFrame) = df.select(col("doc_id"), col("s"))
+      .as[(Long, Long)].collect().toSeq.sorted
+    val want = posts(refKept(sh, hot))
+    assert(posts(capped) === want)
+    // doc 19 keeps its 4 cold shingles and both hot ones; doc 20 its 5
+    // cold ones topped up to the floor from 11 hot ones
+    assert(posts(capped).count(_._1 == 19L) === 6)
+    assert(posts(capped).count(_._1 == 20L) === TextOps.DfFloor)
+    sh.unpersist(); hot.unpersist()
+  }
+
+  test("the kernel accepts only array<bigint> fingerprints: a string " +
+      "shingle array fails analysis") {
+    val strings = Seq((1L, Seq("a b c", "b c d"))).toDF("doc_id", "sh")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      strings.select(MinHashExprs.bands(col("sh"), HotShingles.empty,
+        TextOps.DfFloor, 96, 3)))
+    assert(e.getMessage.contains("graft_shingle_kernel"), e.getMessage)
   }
 
   test("the written snapshot index and its hot list equal the aggregate " +
       "formulation over the sf0.001 documents snapshot, row for row") {
     val cut = graft.schema.Cuts.documents(spark, sf)
-    val snap = TextOps.docsWithShinglesLazy(spark, sf)
+    val snap = TextOps.fingerprints(graft.schema.Tables.documents(spark, sf))
       .filter(col("doc_id") < cut)
     TextOps.writeSnapshotLshIndex(spark, snap, cap, "mhk_snapshot_index")
     val hot = spark.table("mhk_snapshot_index_hot")
-    val refHotRows = refHot(snap).as[(String, Long)].collect().toSeq.sorted
-    assert(hot.as[(String, Long)].collect().toSeq.sorted === refHotRows)
+    val refHotRows = refHot(snap).as[(Long, Long)].collect().toSeq.sorted
+    assert(hot.as[(Long, Long)].collect().toSeq.sorted === refHotRows)
     val got = rows(spark.table("mhk_snapshot_index"))
     assert(got.nonEmpty)
     assert(got === rows(refBands(refKept(snap, refHot(snap)))))

@@ -201,23 +201,23 @@ class PipelineOpsSpec extends SparkSpec {
   test("incremental cluster maintenance handles every merge shape: " +
       "extend, bridge-singleton, inc-only, untouched") {
     import graft.ops.{PipelineOps, TextOps}
-    def doc(id: Long, sh: Seq[String]) = (id, sh)
-    val s1 = Seq("a b c", "b c d", "c d e")
-    val s2 = Seq("f g h", "g h i", "h i j")
-    val s3 = Seq("k l m", "l m n", "m n o")
-    val s4 = Seq("p q r", "q r s", "r s t")
-    val junk = Seq("z z one", "z z two", "z z three")
+    def doc(id: Long, text: String) = (id, text)
+    val s1 = "a b c d e"
+    val s2 = "f g h i j"
+    val s3 = "k l m n o"
+    val s4 = "p q r s t"
+    val junk = "z z one z z two z z three"
     val snap = Seq(
       doc(0L, s1), doc(1L, s1),     // untouched cluster {0,1}
       doc(2L, s2), doc(3L, s2),     // cluster {2,3}, extended by inc 10
       doc(4L, junk),                // stays a singleton
       doc(5L, s3)                   // snapshot singleton, joined by inc 13
-    ).toDF("doc_id", "sh")
+    ).toDF("doc_id", "text")
     val inc = Seq(
       doc(10L, s2),                 // extends {2,3} -> {2,3,10}
       doc(11L, s4), doc(12L, s4),   // inc-only new cluster {11,12}
       doc(13L, s3)                  // bridges singleton 5 -> {5,13}
-    ).toDF("doc_id", "sh")
+    ).toDF("doc_id", "text")
     val got = PipelineOps.incrementalDupClustersFrom(spark, snap, inc,
         jaccardThreshold = 0.5, dfCap = 16, table = "graft_test_inc_clusters")
       .as[(Long, Long)].collect().toMap
@@ -234,22 +234,22 @@ class PipelineOpsSpec extends SparkSpec {
   test("streaming cluster fold: cross-batch pairs merge, replay is " +
       "idempotent, final labels equal from-scratch (q146 core)") {
     import graft.ops.{PipelineOps, TextOps}
-    def doc(id: Long, sh: Seq[String]) = (id, sh)
-    val s1 = Seq("a b c", "b c d", "c d e")
-    val s2 = Seq("f g h", "g h i", "h i j")
-    val s3 = Seq("k l m", "l m n", "m n o")
-    val s4 = Seq("p q r", "q r s", "r s t")
+    def doc(id: Long, text: String) = (id, text)
+    val s1 = "a b c d e"
+    val s2 = "f g h i j"
+    val s3 = "k l m n o"
+    val s4 = "p q r s t"
     val snap = Seq(
       doc(0L, s1), doc(1L, s1),    // untouched cluster {0,1}
       doc(2L, s2), doc(3L, s2),    // extended by batch-0 doc 10
-      doc(4L, Seq("z z one", "z z two", "z z three")), // stays singleton
+      doc(4L, "z z one z z two z z three"), // stays singleton
       doc(5L, s3)                  // bridged by batch-1 doc 13
-    ).toDF("doc_id", "sh")
-    val b0 = Seq(doc(10L, s2), doc(11L, s4)).toDF("doc_id", "sh")
+    ).toDF("doc_id", "text")
+    val b0 = Seq(doc(10L, s2), doc(11L, s4)).toDF("doc_id", "text")
     // doc 12 pairs with BATCH-0's doc 11 — only discoverable through the
     // band store appended by the earlier batch, not the snapshot index
-    val b1 = Seq(doc(12L, s4), doc(13L, s3)).toDF("doc_id", "sh")
-    val allSh = snap.unionByName(b0).unionByName(b1)
+    val b1 = Seq(doc(12L, s4), doc(13L, s3)).toDF("doc_id", "text")
+    val allText = snap.unionByName(b0).unionByName(b1)
     val table = "graft_test_stream_clusters"
     val labelStore = java.nio.file.Files
       .createTempDirectory("graft_test_lbls").toString
@@ -258,9 +258,9 @@ class PipelineOpsSpec extends SparkSpec {
     try {
       PipelineOps.buildClusterSnapshotStore(spark, snap, dfCap = 16, table,
         labelStore, jaccardThreshold = 0.5)
-      PipelineOps.foldBatchIntoClusterStore(spark, b0, allSh, table,
+      PipelineOps.foldBatchIntoClusterStore(spark, b0, allText, table,
         bandStore, labelStore, batchId = 0, jaccardThreshold = 0.5)
-      PipelineOps.foldBatchIntoClusterStore(spark, b1, allSh, table,
+      PipelineOps.foldBatchIntoClusterStore(spark, b1, allText, table,
         bandStore, labelStore, batchId = 1, jaccardThreshold = 0.5)
       def served = spark.read
         .parquet(graft.ops.Upsert.latestVersionPath(spark, labelStore))
@@ -269,14 +269,14 @@ class PipelineOpsSpec extends SparkSpec {
       val got = served
       assert(got === Map(0L -> 2L, 2L -> 3L, 5L -> 2L, 11L -> 2L))
       // from-scratch over the union must agree
-      val fullPairs = TextOps.minHashLshPairs(allSh, 0.5, 16)
+      val fullPairs = TextOps.minHashLshPairs(allText, 0.5, 16)
         .select(col("id_a").as("a"), col("id_b").as("b"))
       val full = PipelineOps.connectedComponents(fullPairs)
         .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
         .as[(Long, Long)].collect().toMap
       assert(got === full)
       // replay batch 1: same base version re-derived, store unchanged
-      PipelineOps.foldBatchIntoClusterStore(spark, b1, allSh, table,
+      PipelineOps.foldBatchIntoClusterStore(spark, b1, allText, table,
         bandStore, labelStore, batchId = 1, jaccardThreshold = 0.5)
       assert(served === got)
     } finally {

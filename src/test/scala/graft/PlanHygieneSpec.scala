@@ -91,7 +91,7 @@ class PlanHygieneSpec extends SparkSpec {
     // shared pair table is warm (round 12's build-once memo), so the
     // guard targets the DETECTION plan its build job runs; q35 still
     // plans detection directly.
-    val docs = graft.ops.TextOps.docsWithShingles(spark, sf)
+    val docs = graft.schema.Tables.documents(spark, sf)
     val plans = Seq(
       "q34 detection" -> graft.ops.TextOps
         .minHashLshPairs(docs, 0.5, dfCap = 16)
@@ -100,6 +100,36 @@ class PlanHygieneSpec extends SparkSpec {
     for ((q, p) <- plans)
       assert(p.contains("graft_shingle_kernel") && !p.contains("LeftAnti") &&
         !p.contains("Window"), s"$q:\n$p")
+  }
+
+  test("candidate lookups tokenize only the candidates: the id semi-join " +
+      "sits below the tokenizer, never above an unpruned documents scan") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan,
+      Project, UnaryNode, Union}
+    import org.apache.spark.sql.functions._
+    val cand = spark.range(5)
+      .select((col("id") * 7).as("id_a"), (col("id") * 7 + 1).as("id_b"))
+    val looked = graft.ops.TextOps.lookupForCandidates(
+      graft.schema.Tables.load(spark, sf, "documents"), cand)
+    looked.unpersist() // plan the lookup itself, not its cache entry
+    val p = looked.select(col("doc_id"), col("sh"))
+      .queryExecution.optimizedPlan
+    val tokenizers = p.collect {
+      case t: Project if t.projectList.exists(_.exists(
+        _.isInstanceOf[StringSplit])) => t
+    }
+    assert(tokenizers.nonEmpty, p.toString)
+    // walking down from a tokenizer, the semi-join comes before any scan
+    def pruned(n: LogicalPlan): Boolean = n match {
+      case j: Join => j.joinType == LeftSemi
+      case u: Union => u.children.forall(pruned)
+      case u: UnaryNode => pruned(u.child)
+      case _ => false
+    }
+    tokenizers.foreach(t =>
+      assert(pruned(t.child), s"a tokenizer reads an unpruned scan:\n$p"))
   }
 
   test("q42: above the row-count gate the benched plan carries NO " +

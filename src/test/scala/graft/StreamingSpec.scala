@@ -435,9 +435,7 @@ class StreamingSpec extends SparkSpec {
     // per-item idempotent, so replay safety must come from the per-batch
     // overwrite slot — a retried batch rewrites its slot and the summed
     // result is unchanged (an append-mode slot would double-count)
-    val sh = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"),
-        TextOps.shingles(TextOps.toks(col("text"))).as("sh"))
+    val sh = TextOps.fingerprints(spark.read.parquet(s"$sf/documents.parquet"))
       .persist()
     val store = Files.createTempDirectory("q197replay").toString
     def write(b: Int, parity: Int): Unit =

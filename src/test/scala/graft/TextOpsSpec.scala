@@ -32,17 +32,10 @@ class TextOpsSpec extends SparkSpec {
     assert(nNear === nearOnly)
   }
 
-  private def shingled(rows: Seq[(Long, String)]) = {
-    val df = rows.toDF("doc_id", "text")
-    df.select(col("doc_id"), expr(
-      """array_distinct(transform(
-           sequence(1, greatest(size(filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')) - 2, 0)),
-           i -> concat_ws(' ',
-             element_at(filter(split(lower(text), '[^a-z0-9]+'), t -> t != ''), i),
-             element_at(filter(split(lower(text), '[^a-z0-9]+'), t -> t != ''), i + 1),
-             element_at(filter(split(lower(text), '[^a-z0-9]+'), t -> t != ''), i + 2))))""")
-      .as("sh"))
-  }
+  private def texts(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+
+  private def shingled(rows: Seq[(Long, String)]) =
+    TextOps.fingerprints(texts(rows))
 
   test("exact jaccard: identical docs = 1.0, disjoint docs absent") {
     val docs = shingled(Seq(
@@ -57,11 +50,12 @@ class TextOpsSpec extends SparkSpec {
   test("minhash LSH finds exactly the high-jaccard pairs on testdata") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .limit(200)
-    val sh = shingled(docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect().toSeq)
+    val rows = docs.select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().toSeq
+    val sh = shingled(rows)
     val exact = TextOps.exactJaccardPairs(sh, sh, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val lsh = TextOps.minHashLshPairs(sh, 0.5)
+    val lsh = TextOps.minHashLshPairs(texts(rows), 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // at j >= 0.5 the 8x4 banding catches a pair w.p. >= 0.40 per band
     // structure; the planted pairs here are j > 0.9 (p ~ 0.996) — require
@@ -80,14 +74,15 @@ class TextOpsSpec extends SparkSpec {
     val boiler = " this document is provided as is without any warranty"
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(300)
       .select(col("doc_id"), concat(col("text"), lit(boiler)).as("text"))
-    val sh = shingled(docs.as[(Long, String)].collect().toSeq)
+    val rows = docs.as[(Long, String)].collect().toSeq
+    val sh = shingled(rows)
     val uncapped = TextOps.exactJaccardPairs(sh, sh, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(uncapped.nonEmpty)
     val capped = TextOps.exactJaccardPairsCapped(sh, 0.5, dfCap = 16)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(capped == uncapped, s"capped=$capped uncapped=$uncapped")
-    val cappedLsh = TextOps.minHashLshPairs(sh, 0.5, dfCap = 16)
+    val cappedLsh = TextOps.minHashLshPairs(texts(rows), 0.5, dfCap = 16)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(cappedLsh == uncapped, s"cappedLsh=$cappedLsh uncapped=$uncapped")
     // the cap is non-vacuous here: boilerplate shingles exceed it
@@ -231,7 +226,7 @@ class TextOpsSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(capped == uncapped,
       s"missing=${(uncapped -- capped).take(5)} extra=${(capped -- uncapped).take(5)}")
-    val cappedLsh = TextOps.minHashLshPairs(sh, 0.5, dfCap = 16)
+    val cappedLsh = TextOps.minHashLshPairs(texts(rows), 0.5, dfCap = 16)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(cappedLsh == uncapped,
       s"missing=${(uncapped -- cappedLsh).take(5)} extra=${(cappedLsh -- uncapped).take(5)}")
@@ -268,7 +263,7 @@ class TextOpsSpec extends SparkSpec {
     // after rescue determinism) must collide; j = 0.6 cross pairs are
     // banding-probabilistic (~0.67) so only soundness is asserted there.
     val classPairs = (1L to 9L).map(p => (2 * p - 1, 2 * p)).toSet
-    val lsh = TextOps.minHashLshPairs(sh, 0.5, dfCap = 16)
+    val lsh = TextOps.minHashLshPairs(texts(rows), 0.5, dfCap = 16)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(classPairs.subsetOf(lsh), s"missing=${(classPairs -- lsh).take(5)}")
     assert(lsh.subsetOf(uncapped), s"extra=${(lsh -- uncapped).take(5)}")
@@ -277,12 +272,12 @@ class TextOpsSpec extends SparkSpec {
   test("bucketed written LSH index: identical pair output, shuffle-free " +
       "candidate aggregation on the read side") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(200)
-    val sh = shingled(docs.select(col("doc_id"), col("text"))
+    val text = texts(docs.select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq)
-    val inPlan = TextOps.minHashLshPairs(sh, 0.5, dfCap = 16)
+    val inPlan = TextOps.minHashLshPairs(text, 0.5, dfCap = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val indexed = TextOps.minHashLshPairsBucketedIndex(
-        spark, sh, jaccardThreshold = 0.5, dfCap = 16, table = "b_lsh_test")
+        spark, text, jaccardThreshold = 0.5, dfCap = 16, table = "b_lsh_test")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(indexed == inPlan,
       s"missing=${(inPlan -- indexed).take(5)} extra=${(indexed -- inPlan).take(5)}")
@@ -316,7 +311,7 @@ class TextOpsSpec extends SparkSpec {
     assert(all.contains((20L, 30L)), "construction: within-snapshot dup")
     val expected = all.filter { case (a, b) => a < 80 && b >= 80 }
     assert(expected.contains((10L, 90L)) && expected.contains((70L, 85L)))
-    val got = TextOps.minHashLshIncremental(spark, sh,
+    val got = TextOps.minHashLshIncremental(spark, texts(rows),
         jaccardThreshold = 0.5, dfCap = 16, table = "b_lsh_inc_test")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(got == expected,
@@ -401,7 +396,7 @@ class TextOpsSpec extends SparkSpec {
     // disjoint by construction, not by luck).
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val docs = shingled(Seq(
+    val docs = texts(Seq(
       (0L, base),
       (1L, base.replace("theta", "thorn")),
       (2L, "one two three four five six seven eight nine ten eleven"),
