@@ -212,7 +212,7 @@ object Crypto {
     if (stored.startsWith("$argon2")) {
       Argon2.verify(stored, (password + pepper).getBytes(StandardCharsets.UTF_8))
     } else stored.split('$') match {
-      case Array("pbkdf2-sha512", iters, saltB64, dkB64) =>
+      case Array("pbkdf2-sha512", iters, saltB64, _) =>
         val salt = Base64.getDecoder.decode(saltB64)
         val again = pbkdf2Hash(password, pepper, iters.toInt, salt)
         java.security.MessageDigest.isEqual(

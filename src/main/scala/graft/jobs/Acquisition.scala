@@ -58,7 +58,7 @@ final class HttpUserFetcher(url: String, timeoutSec: Int = 15,
         case Right(r) => // 4xx, or 5xx with retries exhausted: fail fast
           throw new java.io.IOException(
             s"HTTP ${r.statusCode()} from $url after $attempt retries")
-        case Left(e) if attempt < maxRetries => attempt += 1
+        case Left(_) if attempt < maxRetries => attempt += 1
         case Left(e) => throw e
       }
     }

@@ -640,8 +640,9 @@ object GraphOps {
         val cut = graft.schema.Cuts.documents(s, d)
         val (docs, scan) = Tables.documentsAndScan(s, d)
         // not persisted: banding is its only reader (the verify lookup
-        // fingerprints only the candidates, from the documents scan)
-        val inc = TextOps.fingerprints(docs).filter(col("doc_id") >= cut)
+        // fingerprints only the candidates). Both read the documents
+        // scan: below the delta gate the increment is one task's banding
+        val inc = TextOps.fingerprints(scan.filter(col("doc_id") >= cut))
         // delta edges EAGERLY checkpointed, not merely persisted: the
         // maintain arithmetic fans FOUR consumers off this relation (two
         // triangle-join sides, degree deltas, edge count), three of them

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Q
 import graft.schema.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental materialized-view maintenance: a written aggregate table

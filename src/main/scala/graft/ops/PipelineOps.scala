@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Q
+import graft.expr.IdSetExprs
 import graft.schema.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -50,39 +51,18 @@ object PipelineOps {
     // Size-gated hybrid (round 12): the loop pays ~0.5 s per round of
     // fixed overhead, which dwarfs delta-sized graphs. The gate counts
     // INPUT edges: one collect of at most gate + 1 decides the path and,
-    // below the gate, feeds a driver union-find — orientation- and
-    // duplicate-blind, and with min-root union the IDENTICAL labeling
-    // (PipelineOpsSpec compares it with the loop). The 200k default is
+    // below the gate, feeds the driver [[unionFind]]. The 200k default is
     // MEMORY-DERIVED (VERDICT r13 #8): ≤ gate × 16 B = 3.2 MB of rows
     // (~10 MB as driver Rows), ≤ 2·gate union-find entries (~25 MB);
-    // PipelineOpsSpec asserts the bound. The clamp keeps a gate of
-    // Int.MaxValue from overflowing the limit.
-    val probeLimit = math.max(0L,
-      math.min(driverGateEdges.toLong + 1, Int.MaxValue.toLong)).toInt
-    val es = in.limit(probeLimit).collect()
+    // PipelineOpsSpec asserts the bound. The collect is ONE job: one task
+    // reads the checkpoint's blocks and stops after gate + 1 rows (a
+    // plain `limit().collect()` scans one partition, then the rest in a
+    // second job).
+    val es = in.coalesce(1).limit(probeLimit(driverGateEdges)).collect()
     if (es.length <= driverGateEdges) {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val ra = find(a); val rb = find(b)
-        // union under the SMALLER root: both roots are their sets' minima,
-        // so the merged root is the component minimum — exactly the
-        // min-label propagation fixpoint
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
       import spark.implicits._
-      spark.createDataset(parent.keys.toSeq.map(n => (n, find(n))))
+      spark.createDataset(
+          unionFind(es.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq)
         .toDF("node", "cluster_id")
     } else {
       // The label table is O(nodes-with-duplicates), tiny relative to the
@@ -101,6 +81,40 @@ object PipelineOps {
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
   }
+
+  /** The driver union-find of both driver paths ([[connectedComponents]]
+    * below its gate, [[mergeDeltaIntoLabels]] below its gate): every node
+    * of `edges` to its component's minimum id. Orientation- and
+    * duplicate-blind; with min-root union the labeling is the min-label
+    * propagation fixpoint EXACTLY (PipelineOpsSpec compares it with the
+    * distributed loop). */
+  private[graft] def unionFind(
+      edges: Iterator[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      // union under the SMALLER root: both roots are their sets' minima,
+      // so the merged root is the component minimum
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    parent.keys.toSeq.map(n => n -> find(n)).toMap
+  }
+
+  /** The row limit of a gated collect: gate + 1 rows tell "over the
+    * gate" apart, clamped so a gate of Int.MaxValue does not overflow. */
+  private[graft] def probeLimit(gate: Int): Int =
+    math.max(0L, math.min(gate.toLong + 1, Int.MaxValue.toLong)).toInt
 
   private def connectedComponentsImpl(sym: DataFrame,
       maxIter: Int): DataFrame = {
@@ -176,38 +190,36 @@ object PipelineOps {
     s.table(CorpusLabelsTable)
   }
 
-  /** Incremental duplicate-cluster MAINTENANCE — the maintain-incrementally
-    * member the clustering pillar was missing (q34c maintains the PAIR
-    * feed, q44c the IVF index, q128/q139 the mergeable aggregates; this
-    * maintains the CLUSTER LABELS). Yesterday's corpus has its banded LSH
-    * index, frozen hot-shingle stats, AND per-doc cluster labels written
-    * (`table`, `table`_hot, `table`_labels); today's increment must be
-    * folded in WITHOUT re-clustering the corpus.
+  /** q144: incremental duplicate-cluster MAINTENANCE — the
+    * maintain-incrementally member the clustering pillar was missing
+    * (q34c maintains the PAIR feed, q44c the IVF index, q128/q139 the
+    * mergeable aggregates; this maintains the CLUSTER LABELS).
+    * Yesterday's corpus has its banded LSH index, frozen hot-shingle
+    * stats, AND per-doc cluster labels written (`table`, `table`_hot,
+    * `table`_labels); today's increment must be folded in WITHOUT
+    * re-clustering the corpus.
     *
-    * Mechanics: (1) increment bands alone under the frozen hot list and
-    * probes the written index for snapshot×increment candidates (q34c's
-    * probe — only increment bands shuffle, the bucketed index side is
-    * layout-satisfied), plus its own internal band self-pairs; survivors
-    * verify exactly. (2) the delta graph is CONTRACTED through the stored
-    * labels: each snapshot endpoint maps to its cluster label (or itself
-    * if it was an unclustered singleton), so nodes are {touched cluster
-    * labels ∪ touched singletons ∪ increment docs} — increment-sized,
-    * never corpus-sized. (3) min-label closure runs on the contracted
-    * graph only. Labels are min member ids, and contraction preserves the
-    * min (an old label IS its cluster's min; singleton/increment nodes
-    * stand for themselves), so merged labels equal the from-scratch run's
-    * labels EXACTLY — the oracle is q45's recursive transitive closure
-    * over exact pairs of the ENTIRE corpus, shared verbatim. Cost: probe +
-    * verify ∝ increment, closure ∝ delta edges, relabel ∝ touched
-    * clusters; the written artifacts are upserted, never rebuilt.
-    */
-  /** q144's entry. Snapshot and increment fingerprint lazily from the
-    * fanned-out documents; candidate lookups fingerprint only the
-    * candidates, from the unfanned documents scan. A warm run
-    * (ArtifactCache hit on the shared index + labels) therefore tokenizes
-    * only the increment and the candidates, and never caches corpus
-    * shingles (measured: the persisted-input formulation re-cached them
-    * up to three times per run, 11.2 s vs 5.5 s at sf0.1). */
+    * Mechanics: (1) the increment bands alone under the frozen hot list
+    * and probes the written index for snapshot×increment candidates, plus
+    * its own internal band self-pairs; survivors verify exactly
+    * ([[TextOps.deltaPairsAgainstIndex]]). (2) the delta edges contract
+    * through the stored labels and close ([[mergeDeltaIntoLabels]]), so
+    * merged labels equal the from-scratch run's labels EXACTLY — the
+    * oracle is q45's recursive transitive closure over exact pairs of the
+    * ENTIRE corpus, shared verbatim. Below their size gates both steps
+    * run on the driver: a warm op is a few small collects plus the serve
+    * action, and persists and checkpoints nothing. Cost: probe + verify ∝
+    * increment, closure ∝ delta edges, relabel ∝ touched clusters; the
+    * written artifacts are never rebuilt.
+    *
+    * Snapshot and increment fingerprint lazily; the increment and the
+    * candidate lookups read the unfanned documents scan (below the gate
+    * the increment is at most a few thousand docs, one task's banding).
+    * A warm run (ArtifactCache hit on the shared index + labels)
+    * therefore tokenizes only the increment and the candidates, and
+    * never caches corpus shingles (measured: the persisted-input
+    * formulation re-cached them up to three times per run, 11.2 s vs
+    * 5.5 s at sf0.1). */
   def incrementalDupClusters(s: SparkSession, d: String,
       jaccardThreshold: Double, dfCap: Int): DataFrame = {
     val (docs, scan) = Tables.documentsAndScan(s, d)
@@ -219,7 +231,7 @@ object PipelineOps {
     // verify threshold, so it joins the tag
     val tag = TextOps.snapshotLshTag(d)
     incrementalDupClustersFrom(s, docs.filter(col("doc_id") < cut),
-      docs.filter(col("doc_id") >= cut), jaccardThreshold, dfCap,
+      scan.filter(col("doc_id") >= cut), jaccardThreshold, dfCap,
       TextOps.SnapshotLshTable, indexTag = tag,
       labelsTag = tag.map(t => s"$t|j$jaccardThreshold"),
       lookupText = Some(scan))
@@ -227,13 +239,15 @@ object PipelineOps {
 
   /** [[incrementalDupClusters]] over explicit snapshot/increment
     * (doc_id, text) relations — the testable core (PipelineOpsSpec asserts
-    * ≡ from-scratch clustering of the union on planted merge shapes).
+    * ≡ from-scratch clustering of the union on planted merge shapes, and
+    * the driver path ≡ the relational one, `driverGate` = 0).
     * Candidates are looked up in `lookupText`, by default the union. */
   private[graft] def incrementalDupClustersFrom(s: SparkSession,
       snap: DataFrame, inc: DataFrame, jaccardThreshold: Double,
       dfCap: Int, table: String, indexTag: Option[String] = None,
       labelsTag: Option[String] = None,
-      lookupText: Option[DataFrame] = None): DataFrame = {
+      lookupText: Option[DataFrame] = None,
+      driverGate: Int = TextOps.DriverGateDeltaRowsDefault): DataFrame = {
     val text = lookupText.getOrElse(snap.unionByName(inc))
     // The INCREMENT is read once, by its banding, so it is not cached.
     // The SNAPSHOT fingerprints persist only inside the cold index build,
@@ -258,40 +272,27 @@ object PipelineOps {
     // ---- maintain phase: everything below is increment-sized. ONE
     // candidate set, ONE verify (round 12), via the shared delta-pair
     // machinery ([[TextOps.deltaPairsAgainstIndex]], factored round 15
-    // for q210's triangle maintainer): cross candidates (index-probe
-    // join) union increment-internal candidates, verified once.
+    // for q210's triangle maintainer): cross candidates (index probe)
+    // and increment-internal candidates, verified once. Below the gate
+    // the edges come back as a local relation, which the merge reads
+    // without a job.
     val edges = TextOps
       .deltaPairsAgainstIndex(s, table, TextOps.fingerprints(inc), text,
-        jaccardThreshold)
+        jaccardThreshold, driverGate)
       .select(col("id_a"), col("id_b"))
 
     // ---- contraction + serve: the shared delta-merge algebra — see
     // [[mergeDeltaIntoLabels]]. Untouched clusters pass through
     // label-stable; at scale the merged label table is the upsert applied
-    // back to `table`_labels.
-    mergeDeltaIntoLabels(s.table(s"${table}_labels"), edges)
+    // back to `table`_labels. One range shuffle on cluster_id serves both
+    // the count and the order (a hash shuffle for the count and a range
+    // shuffle for the order are two exchanges, and one more job).
+    mergeDeltaIntoLabels(s.table(s"${table}_labels"), edges, driverGate)
+      .repartitionByRange(col("cluster_id"))
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
       .orderBy(col("cluster_id"))
   }
 
-  /** The delta-merge algebra shared by every maintain-incrementally
-    * clustering member (q144 one-shot text, q146 streaming text, q149
-    * embedding groups): CONTRACT the delta edges through the stored
-    * labels — each old endpoint collapses to its cluster label (or
-    * itself when previously unclustered), so the closure's node set is
-    * {touched labels ∪ touched singletons ∪ new docs}, delta-sized,
-    * never corpus-sized — run min-label closure on the contracted graph
-    * only, then emit the fully merged (node, cluster_id) table: old
-    * members ride their (possibly re-mapped) label, nodes new to the
-    * table take their closure label. Labels are min member ids and
-    * contraction preserves component minima (an old label IS its
-    * cluster's min; singleton/new nodes stand for themselves), so the
-    * merged table equals a from-scratch clustering EXACTLY.
-    *
-    * @param lbl   stored labels (node, cluster_id)
-    * @param edges delta edges (id_a, id_b), any orientation — old-new
-    *              and new-new mixed freely (both endpoints contract)
-    */
   /** q168/q169's shared dimension-version derivation: base segments
     * effective 1990, every 4th customer re-segments 1997, every 8th
     * again 1999 — deterministic in both engines. Consecutive no-op
@@ -412,8 +413,74 @@ object PipelineOps {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
 
-  private[graft] def mergeDeltaIntoLabels(lbl: DataFrame,
-      edges: DataFrame): DataFrame = {
+  /** The delta-merge algebra shared by every maintain-incrementally
+    * clustering member (q144 one-shot text, q146 streaming text, q149
+    * embedding groups, q160 entity resolution): CONTRACT the delta edges
+    * through the stored labels — each old endpoint collapses to its
+    * cluster label (or itself when previously unclustered), so the
+    * closure's node set is {touched labels ∪ touched singletons ∪ new
+    * docs}, delta-sized, never corpus-sized — run the min-label closure
+    * on the contracted graph only, then emit the fully merged
+    * (node, cluster_id) table: old members ride their (possibly
+    * re-mapped) label, nodes new to the table take their closure label.
+    * Labels are min member ids and contraction preserves component
+    * minima (an old label IS its cluster's min; singleton/new nodes stand
+    * for themselves), so the merged table equals a from-scratch
+    * clustering EXACTLY.
+    *
+    * Size-gated like [[connectedComponents]]: one collect of at most
+    * gate + 1 edges picks the path. Below the gate (every warm op of the
+    * family) the contraction and the closure run on the driver — the
+    * touched endpoints' stored labels are one collect, the closure is
+    * [[unionFind]] — and the result is the stored labels broadcast-joined
+    * to the driver's relabel map plus a local relation of the nodes new
+    * to the table. That path persists and checkpoints nothing. Above the
+    * gate the relational contraction and [[connectedComponents]] run,
+    * deriving the edges once more (the gated collect read them first).
+    *
+    * The driver path reads "new to the table" as "an endpoint without a
+    * stored label": every stored cluster_id is itself a node of the
+    * table (closures emit their min member, and a merge keeps it), which
+    * every label table here is built to hold.
+    *
+    * @param lbl   stored labels (node, cluster_id)
+    * @param edges delta edges (id_a, id_b), any orientation — old-new
+    *              and new-new mixed freely (both endpoints contract)
+    */
+  private[graft] def mergeDeltaIntoLabels(lbl: DataFrame, edges: DataFrame,
+      driverGateEdges: Int = DriverGateEdgesDefault): DataFrame = {
+    val es = edges.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .limit(probeLimit(driverGateEdges)).collect()
+    if (es.length <= driverGateEdges)
+      mergeOnDriver(lbl, es.toSeq.map(r => (r.getLong(0), r.getLong(1))))
+    else mergeRelational(lbl, edges)
+  }
+
+  private def mergeOnDriver(lbl: DataFrame,
+      edges: Seq[(Long, Long)]): DataFrame = {
+    val spark = lbl.sparkSession
+    import spark.implicits._
+    val ends = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+    val stored: Map[Long, Long] =
+      if (ends.isEmpty) Map.empty
+      else lbl.filter(IdSetExprs.isIn(col("node"), ends))
+        .select(col("node"), col("cluster_id")).as[(Long, Long)]
+        .collect().toMap
+    def contract(x: Long): Long = stored.getOrElse(x, x)
+    val relabel = unionFind(
+      edges.iterator.map { case (a, b) => (contract(a), contract(b)) })
+    val moved = relabel.filter { case (n, l) => n != l }.toSeq
+      .toDF("olbl", "nlbl")
+    val fresh = (ends -- stored.keySet).toSeq.map(n => (n, relabel(n)))
+      .toDF("node", "cluster_id")
+    lbl.join(broadcast(moved), col("cluster_id") === col("olbl"),
+        "left_outer")
+      .select(col("node"),
+        coalesce(col("nlbl"), col("cluster_id")).as("cluster_id"))
+      .unionByName(fresh)
+  }
+
+  private def mergeRelational(lbl: DataFrame, edges: DataFrame): DataFrame = {
     // contract BOTH endpoints (round 12): an endpoint with a stored label
     // collapses to it (the label IS its cluster's min, so contraction
     // preserves component minima), an unlabeled endpoint stands for
@@ -429,7 +496,7 @@ object PipelineOps {
         coalesce(col("cb"), col("id_b")).as("b"))
     // connectedComponents checkpoints its input before reading it, so the
     // delta-pair derivation upstream (banding, index probe, candidate
-    // verify) runs once
+    // verify) runs once here, after the gated collect's run
     val relabel = connectedComponents(contracted)
       .select(col("node"), col("cluster_id").as("nlbl"))
     val fromOld = lbl

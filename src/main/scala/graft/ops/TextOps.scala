@@ -1,9 +1,9 @@
 package graft.ops
 
 import graft.Q
-import graft.expr.{HotShingles, MinHashExprs}
+import graft.expr.{HotShingles, IdSetExprs, MinHashExprs}
 import graft.schema.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -629,10 +629,15 @@ object TextOps {
     // exact cross pairs (snapshot × increment) at the same threshold.
     Q("q34c_minhash_incremental",
       // on a warm run (ArtifactCache hit) the only doc tokenization is
-      // the increment's banding + the candidates' verify lookups
-      (s, d) => minHashLshIncremental(s, Tables.documents(s, d),
-          jaccardThreshold = 0.5, dfCap = 16, tag = snapshotLshTag(d))
-        .orderBy(col("id_a"), col("id_b")),
+      // the increment's banding + the candidates' verify lookups, which
+      // read the unfanned scan (the semi-join then lands on the scan, not
+      // below the fan-out's exchange)
+      (s, d) => {
+        val (docs, scan) = Tables.documentsAndScan(s, d)
+        minHashLshIncremental(s, docs, jaccardThreshold = 0.5, dfCap = 16,
+            tag = snapshotLshTag(d), lookupText = Some(scan))
+          .orderBy(col("id_a"), col("id_b"))
+      },
       Some("""WITH t AS (
              SELECT doc_id, list_distinct(list_transform(
                range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
@@ -2353,6 +2358,17 @@ object TextOps {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
+  /** Default row gate of [[deltaPairsAgainstIndex]]'s driver path, named
+    * so its memory contract is spec-checkable (PipelineOpsSpec asserts the
+    * bounds). Every driver collect of that path is bounded by it: the
+    * increment's band rows and the probed index rows (int band, long
+    * bucket, long doc id: ≤ gate × 20 B = 1 MB each, ~4 MB as driver
+    * Rows), the candidate pairs (≤ gate tuples, ~3 MB) and the candidate
+    * docs whose fingerprints are collected (≤ gate arrays of 8 B per
+    * trigram: ≤ 39 MB for this corpus's ≤ 100-token docs). 50k band rows
+    * is an increment of ~1,500 docs, more than the sf0.1 increment. */
+  private[graft] val DriverGateDeltaRowsDefault: Int = 50000
+
   /** Delta near-dup pairs of an INCREMENT against a written snapshot band
     * index — the q144 maintain-phase candidate machinery factored once
     * (round 15) so every maintainer that needs the increment's edges
@@ -2366,11 +2382,25 @@ object TextOps {
     * (its [[fingerprints]]) bands under the snapshot's FROZEN hot list
     * (ADVICE r10 #3), so its cost depends only on the increment;
     * candidates are looked up in the (doc_id, text) relation `text`.
-    * Persisted relations (bands + candidates + lookup) ride the
-    * one-generation pair-sweep tracker, same as [[pairsFromBandedIndex]]. */
+    *
+    * Size-gated: below `driverGate` ([[deltaPairsOnDriver]]) the same
+    * candidate set and verify run on the driver and the pairs come back
+    * as a local relation; nothing is persisted. Above it the relational
+    * path runs, its persisted relations (bands + candidates + lookup)
+    * riding the one-generation pair-sweep tracker, as in
+    * [[pairsFromBandedIndex]]. Output (id_a, id_b, jaccard). */
   private[graft] def deltaPairsAgainstIndex(s: SparkSession, table: String,
-      inc: DataFrame, text: DataFrame,
-      jaccardThreshold: Double): DataFrame = {
+      inc: DataFrame, text: DataFrame, jaccardThreshold: Double,
+      driverGate: Int = DriverGateDeltaRowsDefault): DataFrame =
+    deltaPairsOnDriver(s, table, inc, text, jaccardThreshold, driverGate)
+      .map { pairs =>
+        import s.implicits._
+        pairs.toDF("id_a", "id_b", "jaccard")
+      }
+      .getOrElse(deltaPairsRelational(s, table, inc, text, jaccardThreshold))
+
+  private def deltaPairsRelational(s: SparkSession, table: String,
+      inc: DataFrame, text: DataFrame, jaccardThreshold: Double): DataFrame = {
     // evict-BEFORE-register, for the same plan-equality reason as
     // [[pairsFromBandedIndex]]
     livePairSweepCaches.evict()
@@ -2388,6 +2418,73 @@ object TextOps {
     val looked = lookupForCandidates(text, cand)
     livePairSweepCaches.set(incBands, cand, looked)
     verifyJaccardCandidates(cand, looked, jaccardThreshold)
+  }
+
+  /** [[deltaPairsAgainstIndex]]'s candidate set and verify on the driver,
+    * or None when a collect would pass `gate` rows. Spark runs three small
+    * collects besides the hot list's: the increment's bands, the index
+    * rows in one of their buckets, and the candidates' fingerprints from
+    * `text`; the last two are restricted by one id-set expression, never
+    * a join. The
+    * candidate set is the relational join's: per (band, bucket), every
+    * index or increment id with every increment id above it. The verify
+    * is [[verifyJaccardCandidates]]' arithmetic: ni = |sh_a ∩ sh_b|,
+    * jaccard = ni / (|sh_a| + |sh_b| − ni) as a double, kept when
+    * ≥ threshold. */
+  private def deltaPairsOnDriver(s: SparkSession, table: String,
+      inc: DataFrame, text: DataFrame, jaccardThreshold: Double,
+      gate: Int): Option[Seq[(Long, Long, Double)]] = {
+    def atMost(df: DataFrame): Option[Array[Row]] = {
+      val rows = df.limit(PipelineOps.probeLimit(gate)).collect()
+      if (rows.length <= gate) Some(rows) else None
+    }
+    def byKey(rows: Array[Row]) =
+      rows.groupMap(r => (r.getInt(0), r.getLong(1)))(_.getLong(2))
+    for {
+      incRows <- atMost(bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot"))
+        .select(col("band"), col("bucket"), col("doc_id")))
+      incByKey = byKey(incRows)
+      // the bucket alone restricts the scan (one id set); the driver keeps
+      // the rows whose (band, bucket) the increment holds
+      idxRows <- atMost(s.table(table)
+        .filter(IdSetExprs.isIn(col("bucket"),
+          incByKey.keysIterator.map(_._2).toSet))
+        .select(col("band"), col("bucket"), col("doc_id")))
+      cand <- candidatePairs(incByKey,
+        byKey(idxRows).filter { case (k, _) => incByKey.contains(k) }, gate)
+      ids = cand.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+      if ids.size <= gate
+    } yield {
+      val sh: Map[Long, Set[Long]] =
+        if (cand.isEmpty) Map.empty
+        else fingerprints(text.filter(
+            IdSetExprs.isIn(col("doc_id"), ids)))
+          .collect()
+          .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+      cand.toSeq.flatMap { case (a, b) =>
+        for {
+          sa <- sh.get(a); sb <- sh.get(b)
+          ni = sa.count(sb.contains)
+          jaccard = ni.toDouble / (sa.size + sb.size - ni)
+          if jaccard >= jaccardThreshold
+        } yield (a, b, jaccard)
+      }
+    }
+  }
+
+  /** Per (band, bucket), each index or increment id paired with every
+    * increment id above it — the relational candidate join on the driver.
+    * None once the set passes `gate` pairs. */
+  private def candidatePairs(inc: Map[(Int, Long), Array[Long]],
+      idx: Map[(Int, Long), Array[Long]],
+      gate: Int): Option[scala.collection.Set[(Long, Long)]] = {
+    val pairs = inc.iterator.flatMap { case (k, bs) =>
+      (idx.getOrElse(k, Array.emptyLongArray) ++ bs).iterator
+        .flatMap(a => bs.iterator.filter(a < _).map(b => (a, b)))
+    }
+    val out = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    while (pairs.hasNext && out.size <= gate) out += pairs.next()
+    if (out.size <= gate) Some(out) else None
   }
 
   /** Cross (snapshot × increment) candidates of q34c/q109/q148: `inc`'s
@@ -2516,13 +2613,15 @@ object TextOps {
     * production shape. Banding completeness is q34's own, driver-proven
     * property: signatures are the SAME pipeline over the same corpus
     * stats, so every exact-oracle pair collides in at least one band.
-    * Input: (doc_id, text), banded and looked up as in [[minHashLshPairs]].
+    * Input: (doc_id, text), banded as in [[minHashLshPairs]]; candidates
+    * are looked up in `lookupText` (by default `docs`).
     * Output: cross pairs only — (id_a < cut ≤ id_b, jaccard ≥ threshold).
     */
   def minHashLshIncremental(s: SparkSession, docs: DataFrame,
       jaccardThreshold: Double, dfCap: Int,
       table: String = SnapshotLshTable,
-      tag: Option[String] = None): DataFrame = {
+      tag: Option[String] = None,
+      lookupText: Option[DataFrame] = None): DataFrame = {
     // floor() on BOTH sides (here and the oracle SQL): a bare cast-to-long
     // truncates in Spark but rounds in DuckDB, so the two engines would
     // disagree on the snapshot/increment boundary whenever (max+1)*0.8 has
@@ -2540,12 +2639,13 @@ object TextOps {
     val snap = sh.crossJoin(broadcast(cut))
       .filter(col("doc_id") < col("cut")).drop("cut")
     // not persisted: banding is its only reader (the verify lookup goes
-    // through `docs`), and the kernel reads `sh` once per row
+    // through `lookupText`), and the kernel reads `sh` once per row
     val inc = sh.crossJoin(broadcast(cut))
       .filter(col("doc_id") >= col("cut")).drop("cut")
     writeSnapshotLshIndex(s, snap, dfCap, table, tag)
     val cand = crossCandidates(s, table, inc)
-    verifyJaccardCandidates(cand, lookupForCandidates(docs, cand),
+    verifyJaccardCandidates(cand,
+        lookupForCandidates(lookupText.getOrElse(docs), cand),
         jaccardThreshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }

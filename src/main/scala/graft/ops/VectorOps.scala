@@ -534,10 +534,6 @@ object VectorOps {
   // projections that CollapseProject re-inlines) all left whole-stage
   // codegen and ran interpreted — see the PqEncode scaladoc.
 
-  /** Per-subspace slice of an embedding (1-based positions). */
-  private def subvec(emb: Column, m: Int, subDim: Int): Column =
-    slice(emb, m * subDim + 1, subDim)
-
   /** q141's oracle: the exact cross-score in DOUBLE, shared by the batch
     * entry and its streaming twin (q145) — per-vector verdicts depend only
     * on the vector and the static benchmark side, so stream ≡ batch

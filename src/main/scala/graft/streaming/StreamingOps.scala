@@ -889,7 +889,6 @@ object StreamingOps {
     Q("q192_stream_hll_gate",
       (s, d) => {
         import graft.ops.TextOps
-        val docs = graft.schema.Tables.documents(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         TextOps.writeHllShingleSketch(s, d)
         val store = tempStore("graft_hll_gate_out")
@@ -940,7 +939,6 @@ object StreamingOps {
     Q("q194_stream_bottomk_gate",
       (s, d) => {
         import graft.ops.EventOps
-        val ev = graft.schema.Tables.events(s, d)
         val cut = graft.schema.Cuts.events(s, d)
         EventOps.writeBottomKSketch(s, d)
         val store = tempStore("graft_bottomk_gate_out")
@@ -985,7 +983,6 @@ object StreamingOps {
       (s, d) => {
         import graft.ops.TextOps
         TextOps.liveSketchCkpts.evict()
-        val docs = graft.schema.Tables.documents(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         TextOps.writeCmsSnapshot(s, d)
         val store = tempStore("graft_cms_gate_out")
@@ -1088,7 +1085,6 @@ object StreamingOps {
     Q("q208_stream_packing_gate",
       (s, d) => {
         import graft.ops.PipelineOps
-        val docs = graft.schema.Tables.documents(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         PipelineOps.writePackSnapshot(s, d)
         val store = tempStore("graft_pack_state")
@@ -2044,7 +2040,6 @@ object StreamingOps {
     Q("q211_stream_pagerank_gate",
       (s, d) => {
         import graft.ops.GraphOps
-        val li = graft.schema.Tables.lineitem(s, d)
         val cut = graft.schema.Cuts.lineitem(s, d)
         GraphOps.writeEdgeSnapshot(s, d)
         val store = tempStore("graft_pagerank_gate_out")

@@ -107,8 +107,23 @@ class PlanHygieneSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.StringSplit
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan,
-      Project, UnaryNode, Union}
+      Project, RepartitionOperation, UnaryNode, Union}
     import org.apache.spark.sql.functions._
+    def tokenizers(p: LogicalPlan) = p.collect {
+      case t: Project if t.projectList.exists(_.exists(
+        _.isInstanceOf[StringSplit])) => t
+    }
+    // walking down from a tokenizer, the semi-join comes before any scan,
+    // and no repartition sits on the way to the scan: the candidate rows
+    // never pass an exchange
+    def pruned(n: LogicalPlan): Boolean = n match {
+      case _: RepartitionOperation => false
+      case j: Join => j.joinType == LeftSemi &&
+        !j.left.exists(_.isInstanceOf[RepartitionOperation])
+      case u: Union => u.children.forall(pruned)
+      case u: UnaryNode => pruned(u.child)
+      case _ => false
+    }
     val cand = spark.range(5)
       .select((col("id") * 7).as("id_a"), (col("id") * 7 + 1).as("id_b"))
     val looked = graft.ops.TextOps.lookupForCandidates(
@@ -116,20 +131,22 @@ class PlanHygieneSpec extends SparkSpec {
     looked.unpersist() // plan the lookup itself, not its cache entry
     val p = looked.select(col("doc_id"), col("sh"))
       .queryExecution.optimizedPlan
-    val tokenizers = p.collect {
-      case t: Project if t.projectList.exists(_.exists(
-        _.isInstanceOf[StringSplit])) => t
-    }
-    assert(tokenizers.nonEmpty, p.toString)
-    // walking down from a tokenizer, the semi-join comes before any scan
-    def pruned(n: LogicalPlan): Boolean = n match {
-      case j: Join => j.joinType == LeftSemi
-      case u: Union => u.children.forall(pruned)
-      case u: UnaryNode => pruned(u.child)
-      case _ => false
-    }
-    tokenizers.foreach(t =>
+    assert(tokenizers(p).nonEmpty, p.toString)
+    tokenizers(p).foreach(t =>
       assert(pruned(t.child), s"a tokenizer reads an unpruned scan:\n$p"))
+    // q34c's verify lookup, inside the query's own plan (its increment
+    // banding tokenizes the increment unpruned by design; the lookup is
+    // the tokenizer with a semi-join below it)
+    val q34c = SparkEntry.queries("q34c_minhash_incremental")(spark, sf)
+    spark.catalog.clearCache() // plan the lookups, not their cache entries
+    val pq = q34c.queryExecution.optimizedPlan
+    val lookups = tokenizers(pq).filter(_.exists {
+      case j: Join => j.joinType == LeftSemi
+      case _ => false
+    })
+    assert(lookups.nonEmpty, pq.toString)
+    lookups.foreach(t => assert(pruned(t.child),
+      s"q34c's lookup tokenizes candidates behind an exchange:\n$pq"))
   }
 
   test("q42: above the row-count gate the benched plan carries NO " +
