@@ -18,9 +18,12 @@ final case class Q(
 object Catalog {
   /** Column/row hash-compare requires identical names on both sides; every
     * computed column is aliased identically in the Spark code and the SQL.
+    * Each query composes in its own [[graft.ops.RunScope]], keyed by its
+    * name: its result stays valid until the same query is composed again.
     */
   def toQueries(qs: Seq[Q]): Map[String, (SparkSession, String) => DataFrame] =
-    qs.map(q => q.name -> q.fn).toMap
+    qs.map(q => q.name -> ((s: SparkSession, d: String) =>
+      graft.ops.RunScope.keyed(q.name)(q.fn(s, d)))).toMap
 
   def toOracle(qs: Seq[Q]): Map[String, String] =
     qs.flatMap(q => q.oracle.map(q.name -> _)).toMap

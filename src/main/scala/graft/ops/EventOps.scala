@@ -331,7 +331,7 @@ object EventOps {
         // operator's "write once, read shuffle-free forever" claim —
         // rebuilding it per rep contradicted the posture the query
         // demonstrates (the q34b/q44b policy)
-        ArtifactCache.once(table, Some(s"$d|events@${graft.schema.Cuts.tableSig(d, "events")}|bucket8-user-ts")) {
+        ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "events", "bucket8-user-ts")) {
           Tables.resetManagedTable(s, table)
           Tables.events(s, d).write
             .bucketBy(8, "user_id").sortBy("user_id", "ts")
@@ -570,7 +570,7 @@ object EventOps {
         val table = "graft_winsor_hist"
         // build-once memo (round 18): snapshot histogram state is
         // read-only — the increment merges in-plan (q149-labels policy)
-        ArtifactCache.once(table, Some(s"$d|events@${graft.schema.Cuts.tableSig(d, "events")}|cutv|winsor-hist")) {
+        ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "events", "cutv|winsor-hist")) {
           Tables.resetManagedTable(s, table)
           winsorHist(ev.filter(col("event_id") < cut)
               .select(col("event_type"), col("value")))
@@ -850,7 +850,7 @@ object EventOps {
             sum(col("c") * col("c")).as("sq"))
         val table = "graft_moment_state"
         // build-once memo (round 18): same policy as q158's state
-        ArtifactCache.once(table, Some(s"$d|events@${graft.schema.Cuts.tableSig(d, "events")}|cutv|moments")) {
+        ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "events", "cutv|moments")) {
           graft.schema.Tables.resetManagedTable(s, table)
           moments(ev.filter(col("event_id") < cut))
             .write.mode("overwrite").saveAsTable(table)
@@ -1260,7 +1260,7 @@ object EventOps {
     * JVM (build-once artifact; the bench records the first builder's
     * build_sec). */
   private[graft] def writeBottomKSketch(s: SparkSession, d: String): Unit =
-    ArtifactCache.once(BottomKTable, Some(s"$d|events@${graft.schema.Cuts.tableSig(d, "events")}|cut0.8|k$BottomKK")) {
+    ArtifactCache.once(BottomKTable, graft.schema.Cuts.artifactTag(d, "events", s"cut0.8|k$BottomKK")) {
       val cut = graft.schema.Cuts.events(s, d)
       Tables.resetManagedTable(s, BottomKTable)
       bottomKOf(hashedValues(s, d).filter(col("event_id") < cut))

@@ -90,21 +90,16 @@ object GraphOps {
     * shuffled-rank form automatically (see
     * [[BroadcastGateNodesDefault]]).
     *
-    * ONE-LIVE-GENERATION CONTRACT (ADVICE r16 #2): the returned frame
-    * (and the blocks behind it) stays valid only until the NEXT
-    * rank-family invocation on this JVM — the tracker then releases the
-    * superseded generation's checkpointed blocks, which are
-    * unrecoverable by design (lineage truncated). Act on the result
-    * (write/collect/serve) before composing another
-    * pageRankScaled/pageRankMaintainServe call; lazily joining two
-    * generations' results in one plan will fail at execution with a
-    * missing-block error.
+    * The returned frame's checkpointed blocks belong to the caller's
+    * [[RunScope]] (called outside a query: this helper's own scope, freed
+    * by its next direct call). They are unrecoverable by design (lineage
+    * truncated), so act on the result before that scope closes.
     */
   def pageRankScaled(edges: DataFrame, iters: Int,
       scale: Long = 1000000000L,
-      broadcastGateNodes: Long = BroadcastGateNodesDefault): DataFrame = {
+      broadcastGateNodes: Long = BroadcastGateNodesDefault): DataFrame =
+    RunScope.keyed("GraphOps.pageRankScaled") {
     import org.apache.spark.storage.StorageLevel
-    liveRankCaches.evict()
     val ed = edges.persist()
     // node-sized out-degree relation; eager checkpoint = exactly one
     // pass over the cached edges, and every later use is free.
@@ -119,8 +114,8 @@ object GraphOps {
     // mattered, unpersisting superseded iterations, is kept), so the
     // q129 perf win stands and pressure degrades to a spill instead of
     // a failed job.
-    val deg = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
+    val deg = RunScope.checkpoint(
+      ed.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     // Node count as a DRIVER CONSTANT (round 19, profile-driven): it
     // used to enter the loop as a broadcast 1-row aggregate whose
     // subtree every iteration's checkpoint action re-executed (one agg
@@ -180,7 +175,7 @@ object GraphOps {
     // ~42 ms scheduling floors (q129 profile: 47 jobs warm, five 0.5 s
     // checkpoint stages whose task work is milliseconds). One final
     // checkpoint keeps the external contract identical — the returned
-    // frame is eagerly materialized, lineage-free, and tracker-owned,
+    // frame is eagerly materialized, lineage-free, and scope-owned,
     // and the edge caches still release before return.
     var state: DataFrame = deg.select(col("src").as("node"),
       lit(r0).as("r"), col("deg"))
@@ -194,13 +189,11 @@ object GraphOps {
         .select(col("dst").as("node"), (lit(baseTerm) + col("rc")).as("r"),
           col("deg"))
     }
-    val ranks = state.select(col("node"), col("r"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
+    // deg + the returned fixed point stay block-backed until the run's
+    // scope closes
+    val ranks = RunScope.checkpoint(state.select(col("node"), col("r")))
     ed.unpersist()
     if (!useBroadcast) edJoin.unpersist()
-    // deg + the returned fixed point stay block-backed until the
-    // caller's action; the next rank-family invocation frees them
-    liveRankCaches.set(deg, ranks)
     ranks
   }
 
@@ -297,29 +290,26 @@ object GraphOps {
     * contract — never re-shuffling the snapshot edges — is what this
     * function takes.
     *
-    * ONE-LIVE-GENERATION CONTRACT (ADVICE r16 #2): as with
-    * [[pageRankScaled]], the returned frame is valid only until the
-    * next rank-family invocation — act on it before composing another;
-    * the tracker's eviction of a superseded generation's checkpointed
-    * blocks is unrecoverable by design. */
+    * As with [[pageRankScaled]], the returned frame's blocks belong to
+    * the caller's [[RunScope]]: act on it before that scope closes. */
   private[graft] def pageRankMaintainServe(s: SparkSession,
       incEdgesRaw: DataFrame, iters: Int,
       scale: Long = 1000000000L,
-      broadcastGateNodes: Long = BroadcastGateNodesDefault): DataFrame = {
+      broadcastGateNodes: Long = BroadcastGateNodesDefault): DataFrame =
+    RunScope.keyed("GraphOps.pageRankMaintainServe") {
     import org.apache.spark.storage.StorageLevel
-    liveRankCaches.evict()
-    val snap = s.table(EdgeTable)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val incOnly = incEdgesRaw.join(snap, Seq("src", "dst"), "left_anti")
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val snap = RunScope.own(s.table(EdgeTable)
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    val incOnly = RunScope.own(
+      incEdgesRaw.join(snap, Seq("src", "dst"), "left_anti")
+        .repartition(col("dst"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
     val dDeg = incOnly.groupBy(col("src")).agg(count(lit(1)).as("ddeg"))
-    val deg = s.table(s"${EdgeTable}_deg")
+    val deg = RunScope.checkpoint(s.table(s"${EdgeTable}_deg")
       .join(dDeg, Seq("src"), "full_outer")
       .select(col("src"),
         (coalesce(col("deg"), lit(0L)) + coalesce(col("ddeg"), lit(0L)))
-          .as("deg"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
+          .as("deg")))
     // node count as a driver constant (round 19 — the pageRankScaled
     // change applied to the serve): one bounded count over the
     // checkpointed node relation replaces the broadcast 1-row aggregate
@@ -378,12 +368,12 @@ object GraphOps {
         .getOrElse(s.conf.get("spark.sql.shuffle.partitions").toInt)
     val incJoin =
       if (useBroadcast) incOnly
-      else incOnly.repartition(snapParts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      else RunScope.own(incOnly.repartition(snapParts, col("src"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
     val degJ =
       if (useBroadcast) deg
-      else deg.repartition(snapParts, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      else RunScope.own(deg.repartition(snapParts, col("src"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
     // Materialize the pre-exchanged caches BEFORE the loop (round 18):
     // a cold InMemoryRelation wraps a not-yet-final adaptive plan whose
     // outputPartitioning is UNKNOWN, so iteration 1's EnsureRequirements
@@ -429,8 +419,7 @@ object GraphOps {
             .select(col("dst").as("node"),
               (lit(baseTerm) + col("rc")).as("r"), col("deg"))
         }
-        val out = state.select(col("node"), col("r"))
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
+        val out = RunScope.checkpoint(state.select(col("node"), col("r")))
         allEd.unpersist()
         out
       } else {
@@ -442,8 +431,8 @@ object GraphOps {
         // twice-referenced state keeps the per-iteration checkpoint
         // (lineage linearity). Round 19 still removes the per-iteration
         // node-count subtree (driver literal).
-        var rks = deg.select(col("src").as("node"), lit(r0).as("r"))
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
+        var rks = RunScope.checkpoint(
+          deg.select(col("src").as("node"), lit(r0).as("r")))
         for (_ <- 1 to iters) {
           val rnk = rks.repartition(snapParts, col("node"))
           val rd = rnk.join(degJ, rnk("node") === degJ("src"))
@@ -453,19 +442,16 @@ object GraphOps {
               .select(col("dst"), expr("r * 85L div (100L * deg)").as("c"))
               .groupBy(col("dst")).agg(sum(col("c")).as(out))
           val prev = rks
-          rks = contrib(snapJoin, "rs")
+          rks = RunScope.checkpoint(contrib(snapJoin, "rs")
             .join(contrib(incJoin, "ri"), Seq("dst"), "full_outer")
             .select(col("dst").as("node"),
               (lit(baseTerm) +
                 coalesce(col("rs"), lit(0L)) + coalesce(col("ri"), lit(0L)))
-                .as("r"))
-            .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK)
-          GenTracker.release(prev)
+                .as("r")))
+          RunScope.release(prev)
         }
         rks
       }
-    if (incJoin eq incOnly) liveRankCaches.set(snap, incOnly, deg, ranks)
-    else liveRankCaches.set(snap, incOnly, incJoin, degJ, deg, ranks)
     ranks
   }
 
@@ -506,11 +492,6 @@ object GraphOps {
         org.apache.spark.sql.catalyst.TableIdentifier(table))
         .location.toString))
 
-  /** One-generation residency tracker for the rank family's persisted /
-    * checkpointed frames (edge caches, degree relations, the returned
-    * fixed point). */
-  private val liveRankCaches = new GenTracker
-
   /** The SHARED written co-purchase edge artifact (q209): the edge
     * derivation — a lineitem self-join whose cost is corpus-sized — is
     * the expensive pass of the graph family, and a recurring crawl
@@ -521,7 +502,7 @@ object GraphOps {
     * per-dst aggregation wants. */
   private[graft] val EdgeTable = "graft_copurchase_edges"
   private[graft] def edgeTag(d: String): Option[String] =
-    Some(s"$d|lineitem@${graft.schema.Cuts.tableSig(d, "lineitem")}|cut0.8|copurchase")
+    graft.schema.Cuts.artifactTag(d, "lineitem", "cut0.8|copurchase")
 
   private[graft] def writeEdgeSnapshot(s: SparkSession, d: String): Unit =
     ArtifactCache.once(EdgeTable, edgeTag(d)) {
@@ -651,17 +632,9 @@ object GraphOps {
         // the delta sweep up to 3× in parallel (measured 20.2 → 6.4 s
         // at sf0.1). The eager checkpoint runs the sweep exactly once
         // and hands every consumer a lineage-free block read.
-        // evict the previous generation BEFORE the new checkpoint
-        // allocates; GenTracker releases checkpointed frames at the
-        // RDD-block layer (ADVICE r15 #1: Dataset.unpersist on them was
-        // a CacheManager no-op, so old generations only freed under GC)
-        liveGraphCaches.evict()
-        val incEdges = TextOps.deltaPairsAgainstIndex(s,
+        val incEdges = RunScope.checkpoint(TextOps.deltaPairsAgainstIndex(s,
             TextOps.SnapshotLshTable, inc, scan, jaccardThreshold = 0.5)
-          .select(col("id_a"), col("id_b"))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        liveGraphCaches.set(incEdges)
+          .select(col("id_a"), col("id_b")))
         transitivityMaintainFrom(s.table(DupGraphEdgeTable),
           s.table(s"${DupGraphEdgeTable}_deg"),
           s.table(s"${DupGraphEdgeTable}_stats"), incEdges)
@@ -792,12 +765,6 @@ object GraphOps {
         .write.mode("overwrite").saveAsTable(s"${DupGraphEdgeTable}_stats")
     }
 
-  /** One-generation residency cap for the dup-graph family's frames:
-    * q210's checkpointed delta edges and [[transitivityReport]]'s
-    * persisted edge relation (ADVICE r15 #2 — previously permanently
-    * persisted per (JVM, snapshot)). */
-  private val liveGraphCaches = new GenTracker
-
   /** q210's arithmetic core, factored for golden-graph testing: the full
     * graph's transitivity report from the snapshot's stored (edges,
     * degrees, stats) plus the increment's delta edges ALONE.
@@ -819,7 +786,7 @@ object GraphOps {
     *
     * Callers persist `incEdges` (it feeds four consumers: both
     * delta-side triangle joins, the degree deltas, and the edge count —
-    * q210 tracks it one-generation via [[liveGraphCaches]]). */
+    * q210 checkpoints it into its [[RunScope]]). */
   private[graft] def transitivityMaintainFrom(snapEdges: DataFrame,
       snapDeg: DataFrame, snapStats: DataFrame,
       incEdges: DataFrame): DataFrame = {
@@ -865,22 +832,16 @@ object GraphOps {
     * for golden-graph testing. One row out: (n_edges, n_nodes,
     * n_triangles, n_wedges, transitivity_bp).
     *
-    * ONE-LIVE-GENERATION CONTRACT (ADVICE r16 #2): the returned plan
-    * reads a tracker-owned persisted edge relation that the NEXT
-    * dup-graph invocation ([[transitivityReport]] or the q210 maintain)
-    * evicts — act on the result before composing another; a plan
-    * lazily spanning two generations recomputes (plain persist here,
-    * so it degrades to recompute, not failure — but the cache no
-    * longer backs it). */
-  def transitivityReport(edges: DataFrame): DataFrame = {
+    * The returned plan reads a persisted edge relation owned by the
+    * caller's [[RunScope]] (called outside a query: this helper's own
+    * scope). Once that scope closes the plan recomputes it. */
+  def transitivityReport(edges: DataFrame): DataFrame =
+    RunScope.keyed("GraphOps.transitivityReport") {
     // the persisted edge relation feeds the triangle join (3 refs), the
-    // wedge agg and the edge count within ONE returned plan; its lifetime
-    // rides the one-generation tracker (ADVICE r15 #2: it was previously
-    // never unpersisted — one leaked edge-sized cache per invocation)
-    liveGraphCaches.evict()
-    val e = edges
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveGraphCaches.set(e)
+    // wedge agg and the edge count within ONE returned plan; the run's
+    // scope frees it
+    val e = RunScope.own(edges
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tri = e.as("ab")
       .join(e.as("bc"), col("ab.id_b") === col("bc.id_a"))
       .join(e.as("ac"), col("ac.id_a") === col("ab.id_a") &&

@@ -160,7 +160,7 @@ object Ingest {
         val k2 = "fedcba9876543210"
         // per-run unique store dir (ADVICE r10: fixed tmp paths collide
         // across concurrent sessions)
-        val store = TempDirs.scratch("graft_rot_store_")
+        val store = RunScope.scratch("graft_rot_store_")
         Tables.customer(s, d)
           .select(col("c_custkey"),
             Crypto.encrypt(Crypto.normalizeEmail(col("c_name")), AesKey)
@@ -191,7 +191,7 @@ object Ingest {
     // pinned read schema restores types, which is the point of the test.
     Q("q24_csv_roundtrip",
       (s, d) => {
-        val dir = TempDirs.scratch("graft_csv_store_")
+        val dir = RunScope.scratch("graft_csv_store_")
         val src = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         src.write.mode("overwrite").option("header", true).csv(dir)
@@ -225,7 +225,7 @@ object Ingest {
     // same as the parquet hygiene assertions.
     Q("q167_orc_roundtrip",
       (s, d) => {
-        val dir = TempDirs.scratch("graft_orc_store_")
+        val dir = RunScope.scratch("graft_orc_store_")
         Tables.events(s, d)
           .select(col("event_id"), col("event_type"), col("user_id"),
             col("value"))
@@ -263,7 +263,7 @@ object Ingest {
     Q("q183_avro_roundtrip",
       (s, d) => {
         import s.implicits._
-        val dir = TempDirs.scratch("graft_avro_store_")
+        val dir = RunScope.scratch("graft_avro_store_")
         val schemaJson =
           """{"type":"record","name":"Order","fields":[
             {"name":"o_orderkey","type":"long"},
@@ -374,7 +374,7 @@ object Ingest {
         val repo = sys.env.getOrElse("GRAFT_REPO", "/root/repo")
         // a child of the per-run scratch dir: IngestionJob treats an
         // existing (even empty) directory as a store
-        val store = s"${TempDirs.scratch("graft_ingest_store_")}/store"
+        val store = s"${RunScope.scratch("graft_ingest_store_")}/store"
         val fixture = s"$repo/data/fixtures/users_fixture.json"
         val body = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(fixture)), java.nio.charset.StandardCharsets.UTF_8)

@@ -189,8 +189,8 @@ object LayoutOps {
     // asserts the compaction plan contains NO exchange.
     Q("q127_compaction",
       (s, d) => {
-        val frag = TempDirs.scratch("graft_frag_")
-        val comp = TempDirs.scratch("graft_compact_")
+        val frag = RunScope.scratch("graft_frag_")
+        val comp = RunScope.scratch("graft_compact_")
         Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
           .repartition(64)
@@ -220,7 +220,7 @@ object LayoutOps {
     // duplicating the table per sort order.
     Q("q125_zorder",
       (s, d) => {
-        val store = TempDirs.scratch("graft_zorder_")
+        val store = RunScope.scratch("graft_zorder_")
         zOrderWrite(Tables.lineitem(s, d)
             .select(col("l_partkey"), col("l_suppkey"), col("l_quantity")),
           "l_partkey", "l_suppkey", bits = 16, nFiles = 16, path = store)
@@ -259,7 +259,7 @@ object LayoutOps {
     // full-table answer plus the Morton arithmetic.
     Q("q133_zorder_maintain",
       (s, d) => {
-        val store = TempDirs.scratch("graft_zmaint_")
+        val store = RunScope.scratch("graft_zmaint_")
         val li = Tables.lineitem(s, d)
           .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
         val isInc = col("l_partkey").between(100, 355)
@@ -305,7 +305,7 @@ object LayoutOps {
     // partial-aggregate merge.
     Q("q142_shard_manifest",
       (s, d) => {
-        val store = TempDirs.scratch("graft_release_")
+        val store = RunScope.scratch("graft_release_")
         Tables.documents(s, d)
           .withColumn("shard", col("doc_id") % 8)
           .write.mode("overwrite").partitionBy("shard").parquet(store)

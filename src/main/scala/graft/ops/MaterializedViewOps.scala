@@ -217,7 +217,7 @@ object MaterializedViewOps {
     // a ±5% bound — a broken union would blow the bound and flip hashes.
     Q("q128_incremental_mv",
       (s, d) => {
-        val store = TempDirs.scratch("graft_mv_")
+        val store = RunScope.scratch("graft_mv_")
         val orders = Tables.orders(s, d)
         val base = orders.filter(col("o_orderkey") % 10 =!= 0)
         val increment = orders.filter(col("o_orderkey") % 10 === 0)
@@ -271,7 +271,7 @@ object MaterializedViewOps {
     // rows; maintenance reads increment + view only.
     Q("q139_quantile_mv",
       (s, d) => {
-        val store = TempDirs.scratch("graft_qmv_")
+        val store = RunScope.scratch("graft_qmv_")
         val orders = Tables.orders(s, d)
         val base = orders.filter(col("o_orderkey") % 10 =!= 0)
         val increment = orders.filter(col("o_orderkey") % 10 === 0)

@@ -411,7 +411,7 @@ object MultimodalOps {
     * dedup at 100 TB of media. */
   private[graft] val MediaSigTable = "graft_media_sig_index"
   private[graft] def mediaSigTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|mediasig")
+    graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|mediasig")
 
   def writeMediaSigIndex(s: SparkSession, snapDocs: DataFrame,
       table: String, tag: Option[String] = None): Unit =

@@ -37,16 +37,13 @@ object PipelineOps {
     * @return (node, cluster_id) — cluster_id = min node id in the component
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      driverGateEdges: Int = DriverGateEdgesDefault): DataFrame = {
+      driverGateEdges: Int = DriverGateEdgesDefault): DataFrame =
+    RunScope.keyed("PipelineOps.connectedComponents") {
     // Checkpoint the input FIRST, at full parallelism (under the loop's
     // 4-partition width q45's upstream join once ran on 4 tasks, the
     // round-3 regression): it then runs ONCE however often it is read.
-    // Dataset.unpersist on a checkpoint is a no-op (ADVICE r15 #1), so
-    // the next call frees this call's checkpoints (round 16).
-    liveCcCkpts.evict()
-    val in = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .localCheckpoint(true)
-    liveCcCkpts.add(in)
+    val in = RunScope.checkpoint(
+      edges.select(col("a").cast("long"), col("b").cast("long")))
     val spark = edges.sparkSession
     // Size-gated hybrid (round 12): the loop pays ~0.5 s per round of
     // fixed overhead, which dwarfs delta-sized graphs. The gate counts
@@ -74,9 +71,8 @@ object PipelineOps {
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       try {
         // every round joins the symmetric edges: built once, from `in`
-        val sym = in.union(in.select(col("b").as("a"), col("a").as("b")))
-          .distinct().localCheckpoint(true)
-        liveCcCkpts.add(sym)
+        val sym = RunScope.checkpoint(
+          in.union(in.select(col("b").as("a"), col("a").as("b"))).distinct())
         connectedComponentsImpl(sym, maxIter)
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
@@ -129,12 +125,11 @@ object PipelineOps {
     // propagation is just min(self, min neighbor id) — one agg, no join
     // `labelsCkpt` is the DIRECTLY-checkpointed frame of the current
     // round (the one whose RDD blocks can be released); `labels` may be
-    // a projection over it, which GenTracker.release could not see
+    // a projection over it, which RunScope.release could not see
     // through.
-    var labelsCkpt = sym.groupBy(col("a").as("node"))
+    var labelsCkpt = RunScope.checkpoint(sym.groupBy(col("a").as("node"))
       .agg(min(col("b")).as("nbr_min"))
-      .select(col("node"), least(col("node"), col("nbr_min")).as("lbl"))
-      .localCheckpoint(true)
+      .select(col("node"), least(col("node"), col("nbr_min")).as("lbl")))
     var labels: DataFrame = labelsCkpt
     var changed = 1L
     var iter = 0
@@ -144,28 +139,21 @@ object PipelineOps {
       val nbrMin = sym
         .join(labels.withColumnRenamed("node", "nbr"), col("b") === col("nbr"))
         .groupBy(col("a").as("node")).agg(min(col("lbl")).as("nbr_lbl"))
-      val next = labels.withColumnRenamed("lbl", "prev")
+      val next = RunScope.checkpoint(labels.withColumnRenamed("lbl", "prev")
         .join(nbrMin, Seq("node"), "left_outer")
         .select(col("node"),
           least(col("prev"), coalesce(col("nbr_lbl"), col("prev"))).as("lbl"),
-          col("prev"))
-        .localCheckpoint(true)
+          col("prev")))
       changed = next.filter(col("lbl") =!= col("prev")).count()
-      // the superseded round's node-sized blocks — freed at the RDD
-      // layer (a Dataset.unpersist here would be a CacheManager no-op)
-      GenTracker.release(labelsCkpt)
+      // the superseded round's node-sized blocks, freed now rather than
+      // with the run's scope
+      RunScope.release(labelsCkpt)
       labelsCkpt = next
       labels = next.select(col("node"), col("lbl"))
       iter += 1
     }
-    liveCcCkpts.add(labelsCkpt)
     labels.withColumnRenamed("lbl", "cluster_id")
   }
-
-  /** One-generation tracker for [[connectedComponents]]' checkpoints
-    * (input edges, symmetric edges above the gate, final labels — all
-    * outlive the call). */
-  private val liveCcCkpts = new GenTracker
 
   /** The SHARED full-corpus dup-cluster labels — the closure over
     * [[TextOps.corpusLshPairs]] — written once per (corpus, threshold,
@@ -247,7 +235,8 @@ object PipelineOps {
       dfCap: Int, table: String, indexTag: Option[String] = None,
       labelsTag: Option[String] = None,
       lookupText: Option[DataFrame] = None,
-      driverGate: Int = TextOps.DriverGateDeltaRowsDefault): DataFrame = {
+      driverGate: Int = TextOps.DriverGateDeltaRowsDefault): DataFrame =
+    RunScope.keyed("PipelineOps.incrementalDupClustersFrom") {
     val text = lookupText.getOrElse(snap.unionByName(inc))
     // The INCREMENT is read once, by its banding, so it is not cached.
     // The SNAPSHOT fingerprints persist only inside the cold index build,
@@ -388,7 +377,7 @@ object PipelineOps {
     * q164's streaming gate probes) and its content tag per testdata dir. */
   private[graft] val ErBlockIndexTable = "graft_er_block_index"
   private[graft] def erBlockTag(d: String): Option[String] =
-    Some(s"$d|customer@${graft.schema.Cuts.tableSig(d, "customer")}|er-prefix15-suffix5")
+    graft.schema.Cuts.artifactTag(d, "customer", "er-prefix15-suffix5")
 
   /** q159/q160/q164's shared blocking: both passes (15-char prefix,
     * 5-char suffix) tagged and unioned — (pass, nk, bk, id, name). */
@@ -517,7 +506,8 @@ object PipelineOps {
   private[graft] def buildClusterSnapshotStore(s: SparkSession,
       snap: DataFrame, dfCap: Int, table: String, labelStore: String,
       jaccardThreshold: Double, indexTag: Option[String] = None,
-      labelsTag: Option[String] = None): Unit = {
+      labelsTag: Option[String] = None): Unit =
+    RunScope.keyed("PipelineOps.buildClusterSnapshotStore") {
     // index + labels are the SAME artifacts q144 builds — memoized under
     // the same content tags (ArtifactCache), so whichever family member
     // runs first this JVM pays the build. The versioned store's v0 is a
@@ -575,10 +565,12 @@ object PipelineOps {
     */
   private[graft] def foldBatchIntoClusterStore(s: SparkSession,
       batch: DataFrame, allText: DataFrame, table: String, bandStore: String,
-      labelStore: String, batchId: Long, jaccardThreshold: Double): Unit = {
-    val bands = TextOps.bandedSignaturesFrozenHot(TextOps.fingerprints(batch),
-        s.table(s"${table}_hot"))
-      .persist() // three consumers: cross probe, self candidates, append
+      labelStore: String, batchId: Long, jaccardThreshold: Double): Unit =
+    RunScope.keyed("PipelineOps.foldBatchIntoClusterStore") {
+    val bands = RunScope.own(
+      TextOps.bandedSignaturesFrozenHot(TextOps.fingerprints(batch),
+          s.table(s"${table}_hot"))
+        .persist()) // three consumers: cross probe, self candidates, append
     val prior = s.table(table)
       .select(col("band").cast("int").as("band"), col("bucket"),
         col("doc_id"))
@@ -592,9 +584,9 @@ object PipelineOps {
         col("doc_id").as("id_b")), Seq("band", "bucket"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val cand = crossCand
+    val cand = RunScope.own(crossCand
       .unionByName(TextOps.candidatesFromBandedIndex(bands))
-      .persist() // feeds the id-set prune + both verify joins
+      .persist()) // feeds the id-set prune + both verify joins
     val edges = TextOps.verifyJaccardCandidates(cand,
         TextOps.lookupForCandidates(allText, cand), jaccardThreshold)
       .select(col("id_a"), col("id_b"))
@@ -612,9 +604,6 @@ object PipelineOps {
       bands.select(col("band").cast("int").as("band"), col("bucket"),
         col("doc_id")),
       bandStore, batchId)
-    bands.unpersist()
-    cand.unpersist()
-    ()
   }
 
   /** Bands appended by batches strictly before `batchId` (empty relation
@@ -1006,7 +995,7 @@ object PipelineOps {
     * doc_id < 80%-cut snapshot, built once per (JVM, corpus). */
   private[graft] val PackTable = "graft_pack_bins"
   private[graft] def packTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|pack256x8")
+    graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|pack256x8")
 
   private[graft] def writePackSnapshot(s: SparkSession, d: String): Unit =
     ArtifactCache.once(PackTable, packTag(d)) {
@@ -1347,7 +1336,7 @@ object PipelineOps {
     // both merges as CTEs and diffs them relationally.
     Q("q122_time_travel",
       (s, d) => {
-        val root = TempDirs.scratch("graft_timetravel_")
+        val root = RunScope.scratch("graft_timetravel_")
         val snap = Tables.orders(s, d)
           .select(col("o_orderkey").as("key"), col("o_totalprice").as("price"))
         snap.write.mode("overwrite").parquet(s"$root/v0")
@@ -1451,7 +1440,7 @@ object PipelineOps {
     // the operator.
     Q("q205_version_vacuum",
       (s, d) => {
-        val root = TempDirs.scratch("graft_vacuum_")
+        val root = RunScope.scratch("graft_vacuum_")
         val snap = Tables.orders(s, d)
           .select(col("o_orderkey").as("key"),
             col("o_totalprice").as("price"))
@@ -1632,7 +1621,7 @@ object PipelineOps {
         val table = "graft_gram_index"
         // build-once memo (round 18): the train-gram index is read-only
         // after the build — the same maintainer policy as q34b/q44b
-        ArtifactCache.once(table, Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|even|gram5")) {
+        ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "documents", "even|gram5")) {
           Tables.resetManagedTable(s, table)
           grams.filter(col("doc_id") % 2 === 0)
             .select(col("gram")).distinct()
@@ -2847,13 +2836,10 @@ object PipelineOps {
         val benchSide = col("doc_id") % 50 === 0
         // The 5-gram side reads this persisted token relation; the
         // trigram side (bench3, ov) reads the shared persisted
-        // fingerprints. Lifecycle: Bench clears the cache before each
-        // query, so neither persist leaks into another query's timing;
-        // sessions composing many catalog queries follow the
-        // caller-clears-cache contract (RetrievalOps scaladoc).
-        val tks = Tables.documents(s, d)
+        // fingerprints.
+        val tks = RunScope.own(Tables.documents(s, d)
           .select(col("doc_id"), TextOps.toks(col("text")).as("tk"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val sh = TextOps.docsWithShinglesHashed(s, d)
         val bench3 = sh.filter(benchSide)
           .select(explode(col("sh")).as("s3")).distinct()
@@ -3043,7 +3029,7 @@ object PipelineOps {
         // build-once memo (round 18): both snapshot-state tables are
         // read-only after the build (the increment probes hashT with an
         // anti-join and merges in-plan) — the q149-labels policy
-        val cardTag = Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|card")
+        val cardTag = graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|card")
         ArtifactCache.once(stateT, cardTag) {
           graft.schema.Tables.resetManagedTable(s, stateT)
           graft.schema.Tables.resetManagedTable(s, hashT)

@@ -12,14 +12,6 @@ import org.apache.spark.sql.functions._
   * (Robertson/Okapi) ranking, and unigram-LM log-probability quality scores
   * (the classic "perplexity filter" for pretraining corpora).
   *
-  * Cache lifecycle contract: the ranked-run entries persist small
-  * intermediate relations ([[rankBounded]]) and rely on Spark's
-  * CacheManager plan-dedup within a query; they do NOT unpersist, because
-  * the cached run feeds the returned (lazy) DataFrame — an unpersist here
-  * would evict before the caller's action runs. A long-lived session
-  * composing many DISTINCT corpora should `spark.catalog.clearCache()`
-  * between corpora, as Verify and Bench both do per query.
-  *
   * Scale posture: one tokenize+explode pass feeds everything; per-term
   * statistics (document frequency, corpus totals) are vocabulary-sized
   * aggregates that broadcast; the only corpus-sized shuffle is the
@@ -93,8 +85,10 @@ object RetrievalOps {
     // PERSISTED: the self-join's left side and broadcast right side are
     // separate physical subtrees — without the cache the run's WHOLE
     // upstream pipeline (a corpus-wide scoring pass) executes twice. The
-    // cached relation is ≤ the run's LIMIT rows by construction.
-    val r = run.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cached relation is ≤ the run's LIMIT rows by construction, and
+    // the query's run scope frees it.
+    val r = RunScope.own(
+      run.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val better = r.select(col(id).as("_id2"), col(score).as("_sc2"))
     r.join(broadcast(better),
         col("_sc2") > col(score) ||
@@ -172,7 +166,7 @@ object RetrievalOps {
     * (n_docs, Σdl). */
   private[graft] val Bm25PostingsTable = "graft_bm25_snapshot_postings"
   private[graft] def bm25Tag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|bm25")
+    graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|bm25")
 
   def writeBm25SnapshotIndex(s: SparkSession, snap: DataFrame,
       table: String, tag: Option[String] = None): Unit =

@@ -111,10 +111,13 @@ object TextOps {
     * (PlanHygieneSpec guards the order). PERSISTED: it feeds both verify
     * joins, and without the barrier alias substitution inlines the
     * tokenize+shingle chain into the verify's array expressions (the q35
-    * hazard, re-measured as q34c at 44.8 s). Candidate-sized. */
+    * hazard, re-measured as q34c at 44.8 s). Candidate-sized; owned by
+    * the run's scope. */
   private[graft] def lookupForCandidates(text: DataFrame,
       cand: DataFrame): DataFrame =
-    fingerprints(candidateRows(text, cand)).persist()
+    RunScope.keyed("TextOps.lookupForCandidates") {
+      RunScope.own(fingerprints(candidateRows(text, cand)).persist())
+    }
 
   // MinHash parameters: 96 hash functions, 32 bands × 3 rows.
   //
@@ -358,10 +361,10 @@ object TextOps {
         // cloned both union legs into its plan and re-scanned documents
         // (6 scans of the table in the serve plan, 2 of them removable).
         // The cache is increment-sized.
-        val inc = docs.filter(col("doc_id") >= cut)
+        val inc = RunScope.own(docs.filter(col("doc_id") >= cut)
           .unionByName(snap.filter(col("doc_id") % 7 === 0)
             .withColumn("doc_id", col("doc_id") + lit(1000000L)))
-          .persist()
+          .persist())
         // both probes hit the SHARED snapshot artifacts (ArtifactCache):
         // the exact hash index q121/q137 also probe, and the banded LSH
         // index q34c/q109/q144/q146 also probe — built once per JVM
@@ -1327,7 +1330,6 @@ object TextOps {
     // retraction costs the retracted slice's aggregate only.
     Q("q196_cms_frequency",
       (s, d) => {
-        liveSketchCkpts.evict()
         val sh = docsWithShingles(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         writeCmsSnapshot(s, d)
@@ -1365,7 +1367,6 @@ object TextOps {
     // the oracle proves it per corpus.
     Q("q201_pareto_frontier",
       (s, d) => {
-        liveSketchCkpts.evict()
         paretoFrontier2D(
           docAxes(Tables.documents(s, d)).select(col("a"), col("b")))
           .select(col("a").as("n_tokens"), col("b").as("diversity_bp"),
@@ -1388,10 +1389,8 @@ object TextOps {
     // sketch: the frontier is an EXACT summary with a merge identity.
     Q("q203_pareto_maintain",
       (s, d) => {
-        liveSketchCkpts.evict()
-        val ax = docAxes(Tables.documents(s, d))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        liveSketchCkpts.add(ax)
+        val ax = RunScope.own(docAxes(Tables.documents(s, d))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val cut = graft.schema.Cuts.documents(s, d)
         writeParetoSnapshot(s, d)
         val inc = ax.filter(col("doc_id") >= cut)
@@ -1424,21 +1423,17 @@ object TextOps {
     // S² pair overlaps from signatures alone, never re-touching text.
     Q("q198_kmv_overlap",
       (s, d) => {
-        liveSketchCkpts.evict()
         // EAGER checkpoint (the q210 broadcast-race rule): the verify
         // composition consumes this relation from five subtrees, several
         // of them concurrently-executing broadcast exchanges — a lazy
         // persist lets them race the first materialization and re-run
         // the tokenize+shingle+distinct derivation in parallel.
-        val posts = docsWithShingles(s, d)
+        val posts = RunScope.checkpoint(docsWithShingles(s, d)
           .join(Tables.documents(s, d).select(col("doc_id"), col("source")),
             Seq("doc_id"))
           .select(col("source"), explode(col("sh")).as("t"))
           .distinct()
-          .select(col("source"), col("t"), kmvHash(col("t")).as("h"))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        liveSketchCkpts.add(posts)
+          .select(col("source"), col("t"), kmvHash(col("t")).as("h")))
         kmvVerifiedOverlap(posts)
       },
       Some(KmvOverlapSql))
@@ -1482,7 +1477,7 @@ object TextOps {
     * artifact; the bench records the first builder's build_sec). */
   private[graft] def writeCmsSnapshot(s: SparkSession, d: String): Unit =
     ArtifactCache.once(CmsSketchTable,
-      Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|cms${CmsD}x$CmsW")) {
+      graft.schema.Cuts.artifactTag(d, "documents", s"cut0.8|cms${CmsD}x$CmsW")) {
       val cut = graft.schema.Cuts.documents(s, d)
       Tables.resetManagedTable(s, CmsSketchTable)
       cmsOf(shingleDfCounts(docsWithShingles(s, d)
@@ -1505,13 +1500,8 @@ object TextOps {
     // concurrently — against a lazy cache they race the first
     // materialization and re-run the live-corpus tokenize+shingle+count
     // pass (tc) in parallel.
-    val tc = shingleDfCounts(live)
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val merged = cmsSummed(sketches)
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveSketchCkpts.add(tc, merged)
+    val tc = RunScope.checkpoint(shingleDfCounts(live))
+    val merged = RunScope.checkpoint(cmsSummed(sketches))
     val mism = merged.select(col("r"), col("b"), col("cnt").as("cm"))
       .join(cmsOf(tc).select(col("r"), col("b"), col("cnt").as("cf")),
         Seq("r", "b"), "full_outer")
@@ -1595,7 +1585,8 @@ object TextOps {
     * count is exact. Identical (a, b) points across inputs SUM their
     * counts first — the maintainer/stream legs (q203/q204) feed
     * stored-frontier ∪ increment rows here. */
-  private[graft] def frontierOfCounts(pc: DataFrame): DataFrame = {
+  private[graft] def frontierOfCounts(pc: DataFrame): DataFrame =
+    RunScope.keyed("TextOps.frontierOfCounts") {
     // EAGERLY checkpointed because the plan reads it THREE times (the
     // min/max stats — a broadcast subtree that executes concurrently
     // with the main stream — the bucketed relation, and via bmax the
@@ -1605,11 +1596,8 @@ object TextOps {
     // q201 at 5× idle under exactly this recompute). MEMORY_AND_DISK:
     // distinct (a, b) points, ≪ corpus, and an evicted checkpoint block
     // would be unrecoverable under MEMORY_ONLY (ADVICE r14 #1).
-    val p = pc.groupBy(col("a"), col("b"))
-      .agg(sum(col("n_docs")).as("n_docs"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveSketchCkpts.add(p)
+    val p = RunScope.checkpoint(pc.groupBy(col("a"), col("b"))
+      .agg(sum(col("n_docs")).as("n_docs")))
     val mm = p.agg(min(col("a")).as("a0"), max(col("a")).as("a1"))
     val bucketed = p.crossJoin(broadcast(mm))
       .withColumn("bk",
@@ -1627,11 +1615,9 @@ object TextOps {
       .groupBy(col("bk")).agg(max(col("mb")).as("thr"))
     // eager for the same reason: the anti-join's broadcast side would
     // otherwise race the probe side and recompute the whole prune chain
-    val survivors = bucketed.join(broadcast(thr), Seq("bk"))
-      .filter(col("thr").isNull || col("thr") < col("b"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveSketchCkpts.add(survivors)
+    val survivors = RunScope.checkpoint(
+      bucketed.join(broadcast(thr), Seq("bk"))
+        .filter(col("thr").isNull || col("thr") < col("b")))
     // exact dominance over the pruned set as a broadcast LEFT ANTI
     // self-join — the oracle's NOT EXISTS verbatim, paid only on the
     // prune-bounded survivor set (|S|² worst-case is the honest cost;
@@ -1660,7 +1646,7 @@ object TextOps {
     * not the corpus. */
   private[graft] def writeParetoSnapshot(s: SparkSession, d: String): Unit =
     ArtifactCache.once(ParetoTable,
-      Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|pareto256")) {
+      graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|pareto256")) {
       val cut = graft.schema.Cuts.documents(s, d)
       Tables.resetManagedTable(s, ParetoTable)
       paretoFrontier2D(docAxes(Tables.documents(s, d))
@@ -1685,9 +1671,8 @@ object TextOps {
     * for all sizes). */
   private[graft] def paretoVerifiedReport(merged: DataFrame,
       ax: DataFrame): DataFrame = {
-    val m = merged
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    liveSketchCkpts.add(m)
+    val m = RunScope.own(merged
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
     if (VerifyGate.small(ax)) {
       val full = paretoFrontier2D(ax.select(col("a"), col("b")))
       val mism = m.select(col("a"), col("b"), col("n_docs").as("nm"))
@@ -1779,10 +1764,7 @@ object TextOps {
     // `sig` and execute concurrently — against a lazy cache they race its
     // first materialization and re-run the TopKByScore signature pass
     // over the full posting relation in parallel.
-    val sig = kmvSignatures(posts)
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveSketchCkpts.add(sig)
+    val sig = RunScope.checkpoint(kmvSignatures(posts))
     val sizes = posts.groupBy(col("source")).agg(count(lit(1)).as("z"))
     val inter = posts.select(col("source").as("sa"), col("t"))
       .join(posts.select(col("source").as("sb"), col("t")), Seq("t"))
@@ -2071,7 +2053,7 @@ object TextOps {
 
   private[graft] def writeHllShingleSketch(s: SparkSession,
       d: String): Unit =
-    ArtifactCache.once(HllSketchTable, Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|hll12")) {
+    ArtifactCache.once(HllSketchTable, graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|hll12")) {
       val cut = graft.schema.Cuts.documents(s, d)
       Tables.resetManagedTable(s, HllSketchTable)
       langShinglePosts(s, d).filter(col("doc_id") < cut)
@@ -2229,8 +2211,10 @@ object TextOps {
     * from gluing unrelated docs into one band bucket. */
   def minHashLshPairs(docs: DataFrame, jaccardThreshold: Double,
       dfCap: Int = Int.MaxValue): DataFrame =
-    pairsFromBandedIndex(bandedSignatures(fingerprints(docs), dfCap), docs,
-      jaccardThreshold)
+    RunScope.keyed("TextOps.minHashLshPairs") {
+      pairsFromBandedIndex(bandedSignatures(fingerprints(docs), dfCap), docs,
+        jaccardThreshold)
+    }
 
   /** The SHARED full-corpus LSH near-dup pair artifact (j ≥ 0.5, dfCap
     * 16) — the round-12 extension of the [[ArtifactCache]] posture from
@@ -2247,7 +2231,7 @@ object TextOps {
     * in DuckDB, so a stale or wrong artifact fails four hash gates. */
   private[graft] val CorpusLshPairsTable = "graft_corpus_lsh_pairs"
   private[graft] def corpusLshPairsTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|j0.5|$LshScheme")
+    graft.schema.Cuts.artifactTag(d, "documents", s"j0.5|$LshScheme")
 
   def corpusLshPairs(s: SparkSession, d: String): DataFrame = {
     ArtifactCache.once(CorpusLshPairsTable, corpusLshPairsTag(d)) {
@@ -2274,7 +2258,7 @@ object TextOps {
     * aggregation/join shuffle-free on the index side. */
   private[graft] val FullLshIndexTable = "graft_lsh_band_index"
   private[graft] def fullLshIndexTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|full|$LshScheme")
+    graft.schema.Cuts.artifactTag(d, "documents", s"full|$LshScheme")
 
   private[graft] def fullCorpusBandedIndex(s: SparkSession,
       d: String): DataFrame = {
@@ -2308,53 +2292,19 @@ object TextOps {
     docs.select(col("doc_id"), posexplode(MinHashExprs.bands(col("sh"), hot,
       DfFloor, NumHashes, RowsPerBand)).as(Seq("band", "bucket")))
 
-  /** One-generation residency cap for the pair-sweep candidate caches —
-    * the same leak class as [[liveDecontamCaches]] (ADVICE r14 #5),
-    * capped the same way: each [[pairsFromBandedIndex]] invocation
-    * (q34's in-plan sweep, q34b's indexed probe, the cold pair-artifact
-    * and label builds) persists a candidate pair set + its pruned
-    * shingle lookup with no scopable unpersist point; the tracker
-    * evicts the previous generation when a new sweep is composed.
-    * Separate from the decontam tracker so a composed pipeline holding
-    * one of each (q103's report next to a q86 pair probe) evicts
-    * neither prematurely. */
-  private val livePairSweepCaches = new GenTracker
-
-  /** One-generation residency tracker for the sketch-verify families'
-    * EAGER CHECKPOINTS (kmv q198, cms q196/q197, pareto q201/q203/q204;
-    * ADVICE r15 #3): the persist→checkpoint conversions that fixed the
-    * broadcast-race recompute removed the CacheManager release path, so
-    * without this tracker per-rep MEMORY_AND_DISK blocks lived until the
-    * ContextCleaner GC'd the RDDs. Helpers `add` their frames (several
-    * compose within ONE returned plan — q203 runs frontierOfCounts for
-    * the serve AND the full-rebuild check, so a helper-level evict would
-    * free blocks a sibling subtree still needs); each catalog-entry
-    * composition root `evict`s at its start, when the previous query's
-    * plan has fully executed. */
-  private[graft] val liveSketchCkpts = new GenTracker
-
   /** Candidate generation + exact verify over a banded index relation
     * (freshly derived or read back from a written index table); `text`
     * is the (doc_id, text) relation the candidates are looked up in. */
   private[graft] def pairsFromBandedIndex(banded: DataFrame, text: DataFrame,
       jaccardThreshold: Double): DataFrame = {
-    // Evict the PREVIOUS sweep generation BEFORE registering this one's
-    // persists: Dataset.unpersist removes cache entries by LOGICAL PLAN,
-    // and a re-composed sweep (a bench rep, a repeated pipeline stage)
-    // builds plan-identical relations — evicting after .persist() would
-    // silently de-cache the NEW generation and the sweep would run with
-    // every candidate/lookup relation recomputed per consumer (measured
-    // as q144 5.6 → 8.9 s when the eviction briefly ran last).
-    livePairSweepCaches.evict()
-    val cand = candidatesFromBandedIndex(banded)
-      .persist() // feeds the id-set prune + both verify joins
+    val cand = RunScope.own(candidatesFromBandedIndex(banded)
+      .persist()) // feeds the id-set prune + both verify joins
 
     // fingerprint only the surviving candidates (rare by construction),
     // then verify exactly — the ONE shared verify contract (same helper
     // as the in-plan LSH and incremental paths)
-    val looked = lookupForCandidates(text, cand)
-    livePairSweepCaches.set(cand, looked)
-    verifyJaccardCandidates(cand, looked, jaccardThreshold)
+    verifyJaccardCandidates(cand, lookupForCandidates(text, cand),
+        jaccardThreshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
@@ -2387,8 +2337,7 @@ object TextOps {
     * candidate set and verify run on the driver and the pairs come back
     * as a local relation; nothing is persisted. Above it the relational
     * path runs, its persisted relations (bands + candidates + lookup)
-    * riding the one-generation pair-sweep tracker, as in
-    * [[pairsFromBandedIndex]]. Output (id_a, id_b, jaccard). */
+    * owned by the run's [[RunScope]], as in [[pairsFromBandedIndex]]. Output (id_a, id_b, jaccard). */
   private[graft] def deltaPairsAgainstIndex(s: SparkSession, table: String,
       inc: DataFrame, text: DataFrame, jaccardThreshold: Double,
       driverGate: Int = DriverGateDeltaRowsDefault): DataFrame =
@@ -2397,27 +2346,25 @@ object TextOps {
         import s.implicits._
         pairs.toDF("id_a", "id_b", "jaccard")
       }
-      .getOrElse(deltaPairsRelational(s, table, inc, text, jaccardThreshold))
+      .getOrElse(RunScope.keyed("TextOps.deltaPairsAgainstIndex")(
+        deltaPairsRelational(s, table, inc, text, jaccardThreshold)))
 
   private def deltaPairsRelational(s: SparkSession, table: String,
       inc: DataFrame, text: DataFrame, jaccardThreshold: Double): DataFrame = {
-    // evict-BEFORE-register, for the same plan-equality reason as
-    // [[pairsFromBandedIndex]]
-    livePairSweepCaches.evict()
-    val incBands = bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot"))
-      .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
-      .persist() // both sides of the candidate join
-    val cand = s.table(table)
+    val incBands = RunScope.own(
+      bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot"))
+        .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
+        .persist()) // both sides of the candidate join
+    val cand = RunScope.own(s.table(table)
       .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
       .unionByName(incBands)
       .join(incBands.withColumnRenamed("id_a", "id_b"), Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-      .persist() // feeds the id-set prune + both verify joins
-    val looked = lookupForCandidates(text, cand)
-    livePairSweepCaches.set(incBands, cand, looked)
-    verifyJaccardCandidates(cand, looked, jaccardThreshold)
+      .persist()) // feeds the id-set prune + both verify joins
+    verifyJaccardCandidates(cand, lookupForCandidates(text, cand),
+      jaccardThreshold)
   }
 
   /** [[deltaPairsAgainstIndex]]'s candidate set and verify on the driver,
@@ -2488,18 +2435,19 @@ object TextOps {
   }
 
   /** Cross (snapshot × increment) candidates of q34c/q109/q148: `inc`'s
-    * frozen-hot bands probing the written index `table`. PERSISTED: they
-    * feed the id-set prune and both verify joins. */
+    * frozen-hot bands probing the written index `table`. PERSISTED (and
+    * owned by the run's scope): they feed the id-set prune and both
+    * verify joins. */
   private[graft] def crossCandidates(s: SparkSession, table: String,
       inc: DataFrame): DataFrame =
-    s.table(table)
+    RunScope.own(s.table(table)
       .select(col("band"), col("bucket"), col("doc_id").as("id_a"))
       .join(bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot"))
         .select(col("band"), col("bucket"), col("doc_id").as("id_b")),
         Seq("band", "bucket"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-      .persist()
+      .persist())
 
   /** Candidate (id_a < id_b) pairs from a banded relation — the
     * generation half of [[pairsFromBandedIndex]], factored out (round 12)
@@ -2536,7 +2484,8 @@ object TextOps {
   def minHashLshPairsBucketedIndex(s: SparkSession, docs: DataFrame,
       jaccardThreshold: Double, dfCap: Int,
       table: String = FullLshIndexTable,
-      tag: Option[String] = None): DataFrame = {
+      tag: Option[String] = None): DataFrame =
+    RunScope.keyed("TextOps.minHashLshPairsBucketedIndex") {
     ensureBandedIndex(s, fingerprints(docs), dfCap, table, tag)
     pairsFromBandedIndex(s.table(table), docs, jaccardThreshold)
   }
@@ -2569,7 +2518,7 @@ object TextOps {
     * [[ArtifactCache]] content tag for a given testdata dir. */
   private[graft] val SnapshotLshTable = "graft_lsh_snapshot_index"
   private[graft] def snapshotLshTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|$LshScheme")
+    graft.schema.Cuts.artifactTag(d, "documents", s"cut0.8|$LshScheme")
 
   /** Write the snapshot's banded LSH index AND its frozen df stats — the
     * complete written artifact an incremental/streaming consumer needs:
@@ -2621,7 +2570,8 @@ object TextOps {
       jaccardThreshold: Double, dfCap: Int,
       table: String = SnapshotLshTable,
       tag: Option[String] = None,
-      lookupText: Option[DataFrame] = None): DataFrame = {
+      lookupText: Option[DataFrame] = None): DataFrame =
+    RunScope.keyed("TextOps.minHashLshIncremental") {
     // floor() on BOTH sides (here and the oracle SQL): a bare cast-to-long
     // truncates in Spark but rounds in DuckDB, so the two engines would
     // disagree on the snapshot/increment boundary whenever (max+1)*0.8 has
@@ -2659,8 +2609,8 @@ object TextOps {
     * pipeline, so the q34 collision guarantee carries over verbatim),
     * candidates are benchmark×corpus bucket collisions only — cost ∝
     * true cross-collisions, not |corpus|·|bench| — and survivors verify
-    * against full shingle sets. Banded once + consumed twice ⇒ persisted
-    * (the header's cache-lifecycle contract applies). Output is per
+    * against full shingle sets. Banded once + consumed twice ⇒ persisted,
+    * owned by the run's [[RunScope]]. Output is per
     * CONTAMINATED DOC (id, #bench hits, worst jaccard) — the drop list a
     * pipeline feeds back into its training-set filter.
     *
@@ -2670,22 +2620,11 @@ object TextOps {
     */
   def fuzzyDecontam(docs: DataFrame, benchPred: Column, threshold: Double,
       dfCap: Int): DataFrame =
-    fuzzyDecontamFromBands(bandedSignatures(fingerprints(docs), dfCap)
-      .persist(), docs, benchPred, threshold)
-
-  /** One-generation residency cap for the decontam candidate caches
-    * (ADVICE r14 #5): each [[fuzzyDecontamFromBands]] invocation
-    * persists two candidate-sized relations (the bucket-collision pair
-    * set and its pruned shingle lookup) whose lifetime the LAZY return
-    * value prevents scoping with try/finally — in a long-lived session
-    * repeated q95/q103 runs would each leave a fresh pair behind (the
-    * bench masks it via clearCache between reps). The tracker evicts
-    * the PREVIOUS invocation's pair when a new one is composed, capping
-    * residency at one generation per JVM. Unpersist during a
-    * still-running consumer is safe (Spark recomputes the evicted
-    * blocks), merely slow — and cannot happen in the catalog's
-    * sequential run order. */
-  private val liveDecontamCaches = new GenTracker
+    RunScope.keyed("TextOps.fuzzyDecontam") {
+      fuzzyDecontamFromBands(RunScope.own(
+        bandedSignatures(fingerprints(docs), dfCap).persist()),
+        docs, benchPred, threshold)
+    }
 
   /** [[fuzzyDecontam]] over a pre-banded relation — the round-14 shape
     * that lets q95/q103 probe the SHARED written full-corpus index
@@ -2696,22 +2635,15 @@ object TextOps {
     * the (doc_id, text) relation the candidates are looked up in. */
   private[graft] def fuzzyDecontamFromBands(banded: DataFrame,
       text: DataFrame, benchPred: Column, threshold: Double): DataFrame = {
-    // evict-BEFORE-register (the [[pairsFromBandedIndex]] plan-equality
-    // rule): a re-composed decontam sweep builds plan-identical
-    // relations, and unpersisting the old generation after the new
-    // persists register would de-cache the new ones
-    liveDecontamCaches.evict()
-    val cand = banded.filter(benchPred)
+    val cand = RunScope.own(banded.filter(benchPred)
       .select(col("band"), col("bucket"), col("doc_id").as("id_b"))
       .join(banded.filter(!benchPred)
         .select(col("band"), col("bucket"), col("doc_id").as("id_a")),
         Seq("band", "bucket"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-      .persist() // feeds the id-set prune + both verify joins
-    val looked = lookupForCandidates(text, cand)
-    liveDecontamCaches.set(cand, looked)
-    verifyJaccardCandidates(cand, looked, threshold)
+      .persist()) // feeds the id-set prune + both verify joins
+    verifyJaccardCandidates(cand, lookupForCandidates(text, cand), threshold)
       .groupBy(col("id_a"))
       .agg(count(lit(1)).as("n_bench_hits"),
         round(max(col("jaccard")), 4).as("max_jaccard"))
@@ -2750,7 +2682,7 @@ object TextOps {
     * q121/q137/q148, and its content tag for a testdata dir. */
   private[graft] val ExactHashTable = "graft_exact_hash_index"
   private[graft] def exactHashTag(d: String): Option[String] =
-    Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|normText-xxhash64")
+    graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|normText-xxhash64")
 
   /** The q121 snapshot's normalized-text hash index, written once as a
     * `bucketBy(text_hash)` managed table — 16 bytes/doc. */

@@ -239,12 +239,6 @@ object VectorOps {
     * all-pairs cosine + transitive closure and the driver gate asserts
     * output equality every round.
     *
-    * Cache lifecycle: the cell-assigned index persists (below) and stays
-    * cached after return — it feeds the returned lazy DataFrame, so
-    * unpersisting here would evict before the caller's action. Sessions
-    * processing many distinct corpora should `clearCache()` between them
-    * (Verify/Bench do, per query).
-    *
     * @return (node = vec_id, cluster_id = min vec_id of its group) for
     *         every corpus vector that belongs to some ≥2-member group
     */
@@ -255,11 +249,13 @@ object VectorOps {
     // persist it so the assignment pass (TopCells over the corpus) runs
     // once, mirroring the at-scale posture where the index is a table
     // written once. CacheManager dedups by plan, so the two join branches
-    // share one copy.
+    // share one copy. connectedComponents checkpoints its input eagerly,
+    // so the cache is done when it returns.
     val e = withNorm(idx.index, "embedding")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    PipelineOps.connectedComponents(
+    try PipelineOps.connectedComponents(
       pairsWithinCells(e, threshold, dedupEdges = false))
+    finally { e.unpersist(); () }
   }
 
   /** Within-cell pairwise stage shared by the hard and soft dedup paths:
@@ -313,8 +309,9 @@ object VectorOps {
       .select(col("vec_id"), col("embedding"), col("embedding_n"),
         explode(topCells(centroids, nProbe)).as("cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    PipelineOps.connectedComponents(
+    try PipelineOps.connectedComponents(
       pairsWithinCells(e, threshold, dedupEdges = nProbe > 1))
+    finally { e.unpersist(); () }
   }
 
   /** Rank cells by dot against the trained centroids (unit vectors ⇒ max
@@ -491,7 +488,7 @@ object VectorOps {
     * corpus-sized assignment pass and storage, the other reuses it. */
   private[graft] val SharedIvfIndexTable = "graft_ivf_cell_index"
   private[graft] def sharedIvfIndexTag(d: String): Option[String] =
-    Some(s"$d|embeddings@${graft.schema.Cuts.tableSig(d, "embeddings")}|ivf16|ge10")
+    graft.schema.Cuts.artifactTag(d, "embeddings", "ivf16|ge10")
 
   /** Incremental IVF maintenance (the embedding twin of q34c's
     * incremental minhash): assign ONLY the increment to cells under the
@@ -1374,7 +1371,7 @@ object VectorOps {
         val isInc = col("vec_id") >= 100000L && col("vec_id") % 5 === 4
         val snap = corpus.filter(!isInc)
         val inc = corpus.filter(isInc)
-        val tag = Some(s"$d|embeddings@${graft.schema.Cuts.tableSig(d, "embeddings")}|ivf16|semdedup")
+        val tag = graft.schema.Cuts.artifactTag(d, "embeddings", "ivf16|semdedup")
         val idx = ivfWriteIndexOnce(s, ivfBuild(snap, dim = 64, nCells = 16),
           "graft_semdedup_incr_index", tag)
         val snapAssigned = withNorm(idx.index, "embedding")

@@ -110,6 +110,13 @@ object Cuts {
   private[graft] def tableSig(d: String, table: String): String =
     pathSig(s"$d/$table.parquet")
 
+  /** The content tag of an artifact built from `$d/$table.parquet` under
+    * build parameters `params`: the dir, the table's [[tableSig]] and the
+    * parameters, so an in-place rewrite or a retune forces a rebuild. */
+  private[graft] def artifactTag(d: String, table: String,
+      params: String): Option[String] =
+    Some(s"$d|$table@${tableSig(d, table)}|$params")
+
   private def cut80(s: SparkSession, d: String, table: String,
       key: String)(maxId: => Long): Long = {
     val sig = tableSig(d, table)

@@ -53,17 +53,7 @@ object StreamingOps {
   private def runToMemory(s: SparkSession, d: String,
       outputMode: String)(transform: DataFrame => DataFrame): DataFrame = {
     val name = s"graft_stream_${runSeq.incrementAndGet()}"
-    // generational scratch (round 17, VERDICT r16 #4): these checkpoint
-    // dirs were created bare — never exit-registered, never swept — so
-    // a long-lived session leaked one per streaming query invocation.
-    // CONSTRAINT the shared prefix adds: acquiring the next dir deletes
-    // the previous one, so at most ONE memory-sink stream may be live
-    // at a time — the catalog's sequential execution guarantees it
-    // (every runToMemory awaits termination before returning), and a
-    // terminated query never re-reads its checkpoint (the memory sink
-    // holds the served rows). A future caller driving two concurrent
-    // memory-sink streams must pass distinct prefixes instead.
-    val ckpt = graft.ops.TempDirs.scratch("graft_ckpt_mem")
+    val ckpt = graft.ops.RunScope.scratch("graft_ckpt_mem")
     // ts precision varies with the generator: TIMESTAMP(NANOS) files need
     // the raw-INT64 read + integer-division conversion, micros-precision
     // files arrive as TIMESTAMP already. Mirror Schemas.Tables.events'
@@ -110,10 +100,9 @@ object StreamingOps {
   private def runForeachBatch(s: SparkSession, d: String, tableFile: String)(
       prepare: DataFrame => DataFrame)(
       body: (DataFrame, Long) => Unit): Unit = {
-    // generational like every scratch dir: a re-run's fresh checkpoint
-    // supersedes the previous one (never resumed — each catalog
-    // invocation drains AvailableNow from scratch by design)
-    val ckpt = graft.ops.TempDirs.scratch("graft_ckpt_feb")
+    // never resumed: each catalog invocation drains AvailableNow from
+    // scratch by design
+    val ckpt = graft.ops.RunScope.scratch("graft_ckpt_feb")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$d/$tableFile.parquet").schema
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
@@ -122,7 +111,8 @@ object StreamingOps {
       val q = prepare(s.readStream.schema(schema)
           .option("pathGlobFilter", s"$tableFile.parquet").parquet(d))
         .writeStream
-        .foreachBatch(body)
+        .foreachBatch((batch: DataFrame, id: Long) =>
+          graft.ops.RunScope.batch(body(batch, id)))
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
@@ -253,14 +243,12 @@ object StreamingOps {
     Upsert.latestVersionPath(s, store)
   }
 
-  /** Per-run UNIQUE output store dir — routed through
-    * [[graft.ops.TempDirs.scratch]] (round 17, VERDICT r16 #4), which
-    * layers GENERATIONAL deletion on the r10 uniqueness + exit-cleanup
-    * guarantees: re-running a streaming query deletes its previous
-    * invocation's store instead of accreting one per pass until JVM
-    * exit (DiskLifecycleSpec asserts the flat footprint). */
+  /** Per-run UNIQUE output store dir, owned by the run's
+    * [[graft.ops.RunScope]]: re-running a streaming query deletes its
+    * previous invocation's store instead of accreting one per pass
+    * (DiskLifecycleSpec asserts the flat footprint). */
   private def tempStore(prefix: String): String =
-    graft.ops.TempDirs.scratch(prefix)
+    graft.ops.RunScope.scratch(prefix)
 
   /** Production append-mode windowed aggregation: emits ONLY watermark-
     * finalized windows (no driver-side complete-mode materialization — the
@@ -672,8 +660,6 @@ object StreamingOps {
               .select(col("id_a"), col("id_b"),
                 round(col("jaccard"), 4).as("jaccard"))
               .write.mode("append").parquet(store)
-            cand.unpersist()
-            ()
         }
         s.read.parquet(store).orderBy(col("id_a"), col("id_b"))
       },
@@ -982,7 +968,6 @@ object StreamingOps {
     Q("q197_stream_cms_gate",
       (s, d) => {
         import graft.ops.TextOps
-        TextOps.liveSketchCkpts.evict()
         val cut = graft.schema.Cuts.documents(s, d)
         TextOps.writeCmsSnapshot(s, d)
         val store = tempStore("graft_cms_gate_out")
@@ -1050,7 +1035,6 @@ object StreamingOps {
     Q("q204_stream_pareto_gate",
       (s, d) => {
         import graft.ops.TextOps
-        TextOps.liveSketchCkpts.evict()
         val docs = graft.schema.Tables.documents(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         TextOps.writeParetoSnapshot(s, d)
@@ -1427,7 +1411,7 @@ object StreamingOps {
         val table = "graft_bpe_merges"
         // build-once memo (round 18): the frozen merge table is the
         // operator's premise (train from snapshot only) — read-only
-        graft.ops.ArtifactCache.once(table, Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|bpe20")) {
+        graft.ops.ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|bpe20")) {
           graft.schema.Tables.resetManagedTable(s, table)
           PipelineOps.trainMerges(docs.filter(col("doc_id") < cut), topN = 20)
             .write.mode("overwrite").saveAsTable(table)
@@ -1502,7 +1486,7 @@ object StreamingOps {
         val cut = graft.schema.Cuts.documents(s, d)
         val table = "graft_drift_profile"
         // build-once memo (round 18): frozen snapshot profile, read-only
-        graft.ops.ArtifactCache.once(table, Some(s"$d|documents@${graft.schema.Cuts.tableSig(d, "documents")}|cut0.8|drift-profile")) {
+        graft.ops.ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "documents", "cut0.8|drift-profile")) {
           graft.schema.Tables.resetManagedTable(s, table)
           PipelineOps.driftFeatures(docs.filter(col("doc_id") < cut)
               .select(col("text"), col("lang")))
@@ -1573,7 +1557,7 @@ object StreamingOps {
         val cut = graft.schema.Cuts.eventsValued(s, d)
         val table = "graft_winsor_bounds"
         // build-once memo (round 18): frozen snapshot bounds, read-only
-        graft.ops.ArtifactCache.once(table, Some(s"$d|events@${graft.schema.Cuts.tableSig(d, "events")}|cutv|winsor-bounds")) {
+        graft.ops.ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "events", "cutv|winsor-bounds")) {
           graft.schema.Tables.resetManagedTable(s, table)
           EventOps.winsorBounds(ev.filter(col("event_id") < cut)
               .select(col("event_type"), col("value")))
@@ -1650,7 +1634,7 @@ object StreamingOps {
         val cut = graft.schema.Cuts.eventsValued(s, d)
         val table = "graft_zscore_baseline"
         // build-once memo (round 18): frozen snapshot baseline, read-only
-        graft.ops.ArtifactCache.once(table, Some(s"$d|events@${graft.schema.Cuts.tableSig(d, "events")}|cutv|zscore-baseline")) {
+        graft.ops.ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "events", "cutv|zscore-baseline")) {
           graft.schema.Tables.resetManagedTable(s, table)
           ev.filter(col("event_id") < cut)
             .groupBy(col("event_type"))
@@ -2087,7 +2071,7 @@ object StreamingOps {
     // rule, and the one that proves compaction+replay end-to-end).
     Q("q212_stream_bm25_compacted",
       (s, d) => {
-        import graft.ops.{RetrievalOps, SlotStore, TempDirs}
+        import graft.ops.{RetrievalOps, RunScope, SlotStore}
         val docs = graft.schema.Tables.documents(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         val table = RetrievalOps.Bm25PostingsTable
@@ -2098,7 +2082,7 @@ object StreamingOps {
         inc.repartition(7, col("doc_id"))
           .write.mode("overwrite").parquet(staged)
         val store = tempStore("graft_bm25_fold_stream")
-        val ckpt = TempDirs.scratch("graft_ckpt_fold")
+        val ckpt = RunScope.scratch("graft_ckpt_fold")
         val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
         s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
         try {
@@ -2108,8 +2092,8 @@ object StreamingOps {
             .parquet(staged)
             .writeStream
             .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              RetrievalOps.appendBm25Delta(batch, store, batchId,
-                threshold = 2)
+              RunScope.batch(RetrievalOps.appendBm25Delta(batch, store,
+                batchId, threshold = 2))
             }
             .option("checkpointLocation", ckpt)
             .trigger(Trigger.AvailableNow())
@@ -2167,17 +2151,7 @@ object StreamingOps {
   private def runDocsToMemory(s: SparkSession, d: String,
       outputMode: String)(transform: DataFrame => DataFrame): DataFrame = {
     val name = s"graft_stream_${runSeq.incrementAndGet()}"
-    // generational scratch (round 17, VERDICT r16 #4): these checkpoint
-    // dirs were created bare — never exit-registered, never swept — so
-    // a long-lived session leaked one per streaming query invocation.
-    // CONSTRAINT the shared prefix adds: acquiring the next dir deletes
-    // the previous one, so at most ONE memory-sink stream may be live
-    // at a time — the catalog's sequential execution guarantees it
-    // (every runToMemory awaits termination before returning), and a
-    // terminated query never re-reads its checkpoint (the memory sink
-    // holds the served rows). A future caller driving two concurrent
-    // memory-sink streams must pass distinct prefixes instead.
-    val ckpt = graft.ops.TempDirs.scratch("graft_ckpt_mem")
+    val ckpt = graft.ops.RunScope.scratch("graft_ckpt_mem")
     val schema = s.read.parquet(s"$d/documents.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(d)

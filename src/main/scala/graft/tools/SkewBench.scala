@@ -29,7 +29,8 @@ object SkewBench {
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = graft.ops.RunScope.keyed("SkewBench")(
+      graft.ops.RunScope.scratch("graft_skew"))
     SkewData.fact(spark, nRows, nKeys, parts = cpus)
       .write.mode("overwrite").parquet(s"$dir/fact")
     val fact = spark.read.parquet(s"$dir/fact")

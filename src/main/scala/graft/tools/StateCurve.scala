@@ -45,8 +45,9 @@ object StateCurve {
       }
     }
 
-    def stateOf(name: String, transformed: DataFrame): (Long, Long) = {
-      val ckpt = graft.ops.TempDirs.scratch(s"graft_statecurve_$name")
+    def stateOf(name: String, transformed: DataFrame): (Long, Long) =
+        graft.ops.RunScope.keyed(s"StateCurve.$name") {
+      val ckpt = graft.ops.RunScope.scratch(s"graft_statecurve_$name")
       val q = transformed.writeStream
         .format("memory").queryName(name)
         .outputMode("append")

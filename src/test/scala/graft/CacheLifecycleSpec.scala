@@ -4,13 +4,13 @@ package graft
   *
   * The bench clears the session cache between queries, which MASKS
   * accretion: a production session composing the catalog repeatedly
-  * must not grow its persisted-RDD set run over run. The one-generation
-  * trackers (pair-sweep, decontam, sketch-checkpoint, graph, rank, CC)
-  * plus the try/finally-scoped persists are the mechanisms; this spec
-  * is the assertion. `sc.getPersistentRDDs` sees BOTH layers — RDDs
-  * behind CacheManager entries and checkpoint block RDDs — and is
-  * updated synchronously on unpersist, so the count is a faithful
-  * leak meter.
+  * must not grow its persisted-RDD set run over run. graft.ops.RunScope
+  * (each query's persists and checkpoints are freed when the same query
+  * is composed again) plus the try/finally-scoped persists are the
+  * mechanisms; this spec is the assertion. `sc.getPersistentRDDs` sees
+  * BOTH layers — RDDs behind CacheManager entries and checkpoint block
+  * RDDs — and is updated synchronously on unpersist, so the count is a
+  * faithful leak meter.
   */
 class CacheLifecycleSpec extends SparkSpec {
 

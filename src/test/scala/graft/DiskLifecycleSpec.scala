@@ -4,10 +4,10 @@ package graft
   * on-disk twin of CacheLifecycleSpec: a session composing the catalog
   * repeatedly must not accrete scratch stores, stream checkpoints, or
   * versioned-store version directories run over run. The mechanisms are
-  * TempDirs' generational sweep (a prefix's previous dir is deleted
-  * when its next dir is acquired — safe under the sequential-catalog
-  * one-live-generation contract) and the serve-time retention vacuum on
-  * drained streams' versioned stores; this spec is the assertion.
+  * graft.ops.RunScope (a query's scratch dirs are deleted when the same
+  * query is composed again, or with the micro-batch that made them) and
+  * the serve-time retention vacuum on drained streams' versioned stores;
+  * this spec is the assertion.
   */
 class DiskLifecycleSpec extends SparkSpec {
 
@@ -47,9 +47,9 @@ class DiskLifecycleSpec extends SparkSpec {
     // the suite (leftovers of earlier suites in this JVM stay out).
     val preExisting = tmp.listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
-    val reg0 = graft.ops.TempDirs.snapshot
+    val reg0 = graft.ops.RunScope.snapshot
     pass()
-    val reg1 = graft.ops.TempDirs.snapshot
+    val reg1 = graft.ops.RunScope.snapshot
     val ownPrefixes = reg1.keySet.filter(k => !reg0.get(k).contains(reg1(k)))
     assert(ownPrefixes.nonEmpty, "the passes acquired no scratch prefixes")
     // the JVM tag closes the residual concurrency window (round 18): a
@@ -57,7 +57,7 @@ class DiskLifecycleSpec extends SparkSpec {
     // the same prefixes and would otherwise be counted the moment they
     // appear between two counts — prefix scoping alone only filters
     // differently-named scratch
-    val jvmTag = graft.ops.TempDirs.jvmTag
+    val jvmTag = graft.ops.RunScope.jvmTag
     def ownDirCount(): Int =
       tmp.listFiles().count(f => f.isDirectory &&
         !preExisting(f.getName) &&
@@ -86,7 +86,7 @@ class DiskLifecycleSpec extends SparkSpec {
     SparkEntry.queries("q212_stream_bm25_compacted")(spark, sf)
       .write.mode("overwrite").format("noop").save()
     // the live stream store is the single current generation of its prefix
-    val store = graft.ops.TempDirs.snapshot.get("graft_bm25_fold_stream")
+    val store = graft.ops.RunScope.snapshot.get("graft_bm25_fold_stream")
     assert(store.isDefined, "no live q212 stream store found")
     // round 19: postings + moments share ONE kind-tagged slot root
     // (RetrievalOps.bm25DeltaRoot) — the bound now applies to it alone

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps one session factory and one listener meter: a session builder
-  * or listener subclass anywhere else under src/ fails the build, so the
-  * per-tool copies cannot grow back. Session-free source scan, like
+/** Keeps one session factory, one listener meter and one residency
+  * mechanism: a session builder, listener subclass, local checkpoint or
+  * temp-dir creation anywhere else under src/main fails the build, so
+  * the per-tool copies cannot grow back. Session-free source scan, like
   * CatalogIndexSpec's.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -30,5 +31,14 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(filesMatching(
       """(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b""") ===
       Seq("src/main/scala/graft/tools/Meter.scala"))
+  }
+
+  test("one residency mechanism (RunScope): every local checkpoint and " +
+      "scratch dir under src/main goes through it") {
+    val runScope = Seq("src/main/scala/graft/ops/RunScope.scala")
+    assert(filesMatching("""localCheckpoint\(""")
+      .filter(_.startsWith("src/main")) === runScope)
+    assert(filesMatching("""createTempDirectory""")
+      .filter(_.startsWith("src/main")) === runScope)
   }
 }

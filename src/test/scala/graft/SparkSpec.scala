@@ -11,5 +11,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = LocalSpark(4)
+  /** The live shared session: a suite that runs after one that stopped
+    * it gets a restarted one. */
+  def session: SparkSession = LocalSpark(4)
 }

@@ -668,12 +668,15 @@ class TextOpsSpec extends SparkSpec {
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_docs"))
     val direct = TextOps.frontierOfCounts(counts(_ => true))
       .as[(Long, Long, Long)].collect().toSet
-    // fold the splits in one at a time through the stored-frontier form
-    val merged = TextOps.frontierOfCounts(
+    // fold the splits in one at a time through the stored-frontier form;
+    // the three nested calls compose ONE plan, so they share one run scope
+    val merged = graft.ops.RunScope.keyed("TextOpsSpec.frontierMerge") {
       TextOps.frontierOfCounts(
-        TextOps.frontierOfCounts(counts(_ == 0)).unionByName(counts(_ == 1)))
-        .unionByName(counts(_ == 2)))
-      .as[(Long, Long, Long)].collect().toSet
+        TextOps.frontierOfCounts(
+          TextOps.frontierOfCounts(counts(_ == 0)).unionByName(counts(_ == 1)))
+          .unionByName(counts(_ == 2)))
+        .as[(Long, Long, Long)].collect().toSet
+    }
     assert(merged === direct,
       s"missing=${(direct -- merged).take(3)} extra=${(merged -- direct).take(3)}")
   }
