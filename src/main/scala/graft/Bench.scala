@@ -187,7 +187,7 @@ object Bench {
       "q63_stream_upsert", "q64_stream_stream_join", "q65_stream_tws",
       "q112_stream_cdc_upsert", "q131_stream_mv", "q163_stream_debounce", "q170_scd2_stream", "q176_stream_attribution",
       "q134_stream_heavy_hitters", "q136_stream_session_window",
-      // ADVICE r11 #4: every runForeachBatch query gets min-of-3 —
+      // ADVICE r11 #4: every foreachBatch query gets min-of-3 —
       // these three were added in r11 but missed the set
       "q157_stream_winsorize_gate", "q164_stream_er_gate",
       "q179_stream_zscore_gate", "q188_stream_bm25_serve",

@@ -83,6 +83,73 @@ object EventOps {
        FROM events p WHERE p.event_type = 'purchase'
        ORDER BY p.event_id"""
 
+  /** q51's day-grain window aggregate; also q61's (stream ≡ batch). */
+  private[graft] val DailyWindowSql =
+    """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+              event_type,
+              count(*) AS n_events, round(sum(value), 2) AS sum_value
+              FROM events GROUP BY 1, 2 ORDER BY day, event_type"""
+
+  /** q80's view→click pairs within 30 minutes; also q64's: one rule, two
+    * engine paths. */
+  private[graft] val ViewClickPairsSql =
+    """SELECT a.user_id % 10 AS bucket, count(*) AS n_pairs
+              FROM events a JOIN events b ON a.user_id = b.user_id
+              WHERE a.event_type = 'view' AND b.event_type = 'click'
+                AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE
+              GROUP BY 1 ORDER BY bucket"""
+
+  /** q162's lag-rule debounce report; also q163's. */
+  private[graft] val DebounceSql =
+    """WITH x AS (SELECT event_type,
+                epoch(ts) - epoch(lag(ts) OVER (
+                  PARTITION BY user_id, event_type
+                  ORDER BY ts, event_id)) AS gap
+              FROM events),
+              k AS (SELECT event_type,
+                (gap IS NULL OR gap > 3600.0) AS keep FROM x)
+              SELECT event_type, count(*) AS n_events,
+                CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_kept,
+                CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT)
+                  AS n_dropped,
+                floor(sum(CASE WHEN keep THEN 0 ELSE 1 END) * 1.0
+                  / count(*) * 10000) / 10000 AS drop_share
+              FROM k GROUP BY 1 ORDER BY 1"""
+
+  /** q175's last-touch attribution report; also q176's. */
+  private[graft] val AttributionSql =
+    """WITH x AS (SELECT user_id, event_id, ts, event_type, value,
+                last_value(CASE WHEN event_type IN ('click', 'view')
+                  THEN event_type END IGNORE NULLS) OVER w AS t_type,
+                last_value(CASE WHEN event_type IN ('click', 'view')
+                  THEN ts END IGNORE NULLS) OVER w AS t_ts
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+              p AS (SELECT
+                CASE WHEN t_ts IS NOT NULL
+                    AND epoch(ts) - epoch(t_ts) <= 7 * 86400.0
+                  THEN t_type ELSE 'direct' END AS channel,
+                CAST(round(value * 100) AS BIGINT) AS cents
+                FROM x WHERE event_type = 'purchase')
+              SELECT channel, count(*) AS n_purchases,
+                CAST(sum(cents) AS BIGINT) AS revenue_cents
+              FROM p GROUP BY 1 ORDER BY 1"""
+
+  /** Per-type moments of integer cents `c`: (event_type, n, mean_c,
+    * std_c), mean and std derived as doubles from the exact BIGINT sums.
+    * q172's moments, shared with q179's frozen baseline. */
+  private[graft] def centsMoments(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
+        sum(col("c") * col("c")).as("sq"))
+      .select(col("event_type"), col("n"),
+        (col("s").cast("double") / col("n")).as("mean_c"),
+        sqrt((col("sq").cast("double") / col("n")) -
+          (col("s").cast("double") / col("n")) *
+          (col("s").cast("double") / col("n"))).as("std_c"))
+
   val catalog: Seq[Q] = Seq(
 
     // ---- JSON property mining: get_json_object pushdown-friendly scan
@@ -131,10 +198,7 @@ object EventOps {
         .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n_events"), col("sum_value"))
         .orderBy(col("day"), col("event_type")),
-      Some("""SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-              event_type,
-              count(*) AS n_events, round(sum(value), 2) AS sum_value
-              FROM events GROUP BY 1, 2 ORDER BY day, event_type""")),
+      Some(DailyWindowSql)),
 
     // ---- sliding 2h-by-1h windows: each event lands in 2 windows
     Q("q52_sliding_window",
@@ -301,11 +365,7 @@ object EventOps {
           .agg(count(lit(1)).as("n_pairs"))
           .orderBy(col("bucket"))
       },
-      Some("""SELECT a.user_id % 10 AS bucket, count(*) AS n_pairs
-              FROM events a JOIN events b ON a.user_id = b.user_id
-              WHERE a.event_type = 'view' AND b.event_type = 'click'
-                AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE
-              GROUP BY 1 ORDER BY bucket""")),
+      Some(ViewClickPairsSql)),
 
     // ---- as-of join: for each purchase, the latest click of the same user
     // at or before it — one window pass over the union (no range-join
@@ -695,21 +755,7 @@ object EventOps {
               .as("drop_share"))
           .orderBy(col("event_type"))
       },
-      Some("""WITH x AS (SELECT event_type,
-                epoch(ts) - epoch(lag(ts) OVER (
-                  PARTITION BY user_id, event_type
-                  ORDER BY ts, event_id)) AS gap
-              FROM events),
-              k AS (SELECT event_type,
-                (gap IS NULL OR gap > 3600.0) AS keep FROM x)
-              SELECT event_type, count(*) AS n_events,
-                CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_kept,
-                CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT)
-                  AS n_dropped,
-                floor(sum(CASE WHEN keep THEN 0 ELSE 1 END) * 1.0
-                  / count(*) * 10000) / 10000 AS drop_share
-              FROM k GROUP BY 1 ORDER BY 1""")),
+      Some(DebounceSql)),
 
     // ---- median imputation (q166): fill missing telemetry values with
     // the per-type histogram median — the robust sibling of mean-fill
@@ -789,15 +835,7 @@ object EventOps {
         val cents = expr("CAST(round(value * 100) AS BIGINT)")
         val ev = Tables.events(s, d).filter(col("value").isNotNull)
           .select(col("event_type"), cents.as("c"))
-        val m = ev.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
-            sum(col("c") * col("c")).as("sq"))
-          .select(col("event_type"), col("n"),
-            (col("s").cast("double") / col("n")).as("mean_c"),
-            sqrt((col("sq").cast("double") / col("n")) -
-              (col("s").cast("double") / col("n")) *
-              (col("s").cast("double") / col("n"))).as("std_c"))
-        ev.join(broadcast(m), Seq("event_type"))
+        ev.join(broadcast(centsMoments(ev)), Seq("event_type"))
           .withColumn("z", (col("c") - col("mean_c")) / col("std_c"))
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"),
@@ -924,23 +962,7 @@ object EventOps {
             sum(col("cents")).as("revenue_cents"))
           .orderBy(col("channel"))
       },
-      Some("""WITH x AS (SELECT user_id, event_id, ts, event_type, value,
-                last_value(CASE WHEN event_type IN ('click', 'view')
-                  THEN event_type END IGNORE NULLS) OVER w AS t_type,
-                last_value(CASE WHEN event_type IN ('click', 'view')
-                  THEN ts END IGNORE NULLS) OVER w AS t_ts
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-              p AS (SELECT
-                CASE WHEN t_ts IS NOT NULL
-                    AND epoch(ts) - epoch(t_ts) <= 7 * 86400.0
-                  THEN t_type ELSE 'direct' END AS channel,
-                CAST(round(value * 100) AS BIGINT) AS cents
-                FROM x WHERE event_type = 'purchase')
-              SELECT channel, count(*) AS n_purchases,
-                CAST(sum(cents) AS BIGINT) AS revenue_cents
-              FROM p GROUP BY 1 ORDER BY 1""")),
+      Some(AttributionSql)),
 
     // ---- mergeable bottom-k quantile sketch, incrementally maintained
     // (q193): the order-statistics member of the sketch-maintainer family

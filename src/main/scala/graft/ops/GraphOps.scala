@@ -650,11 +650,7 @@ object GraphOps {
     * arithmetic (one rule, two engine postures: the from-scratch report
     * and the snapshot+delta maintainer). */
   private[graft] lazy val TransitivitySql: String =
-    ("""WITH t AS (SELECT doc_id, list_distinct(list_transform(
-           range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-           i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+    (raw"""WITH t AS (SELECT doc_id, ${TextOps.TrigramShinglesSql} AS sh
          FROM documents),
          ex AS (SELECT doc_id, unnest(sh) AS s FROM t),
          sizes AS (SELECT doc_id, len(sh) AS sz FROM t),

@@ -161,16 +161,9 @@ object LayoutOps {
       .repartition(col("part_range"))
       .sortWithinPartitions(col("part_range"), col(z))
       .drop(z)
-    val prev = spark.conf
-      .getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("part_range")
-      .parquet(path)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    graft.LocalSpark.withConf(spark,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      merged.write.mode("overwrite").partitionBy("part_range").parquet(path)
     }
   }
 

@@ -200,6 +200,41 @@ object MaterializedViewOps {
               FROM est JOIN ex USING (month, status)
               ORDER BY month, status"""
 
+  /** The served view of a revenue `state` with its NDV estimate checked
+    * against the exact per-group NDV of `orders` (within max(1, 5%)):
+    * q128's serve, shared with q131. The exact NDV is a verification-only
+    * column (linear, one extra agg over the fact table at oracle/bench
+    * SF; production serves the estimate alone — the sketch exists so the
+    * exact pass is never needed). */
+  private[graft] def serveViewVerified(state: DataFrame,
+      orders: DataFrame): DataFrame = {
+    val exact = orders.groupBy(
+        date_format(col("o_orderdate"), "yyyy-MM").as("month"),
+        col("o_orderstatus").as("status"))
+      .agg(countDistinct(col("o_custkey")).as("cust_ndv"))
+    serveView(state).join(exact, Seq("month", "status"))
+      .select(col("month"), col("status"), col("n"), col("revenue"),
+        col("avg_price"), col("cust_ndv"),
+        (abs(col("cust_ndv_est") - col("cust_ndv")) <=
+          greatest(lit(1.0), col("cust_ndv") * 0.05))
+          .as("ndv_est_ok"))
+      .orderBy(col("month"), col("status"))
+  }
+
+  /** q128's aggregate-once revenue view; also q131's. */
+  private[graft] val RevenueMvSql =
+    """SELECT strftime(o_orderdate, '%Y-%m') AS month,
+              o_orderstatus AS status, count(*) AS n,
+              round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0,
+                2) AS revenue,
+              round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                / (count(*) * 100.0), 2) AS avg_price,
+              count(DISTINCT o_custkey) AS cust_ndv,
+              true AS ndv_est_ok
+              FROM orders
+              GROUP BY 1, 2
+              ORDER BY month, status"""
+
   val catalog: Seq[Q] = Seq(
 
     // ---- incremental MV maintenance (q128): the orders revenue view is
@@ -222,35 +257,11 @@ object MaterializedViewOps {
         val base = orders.filter(col("o_orderkey") % 10 =!= 0)
         val increment = orders.filter(col("o_orderkey") % 10 === 0)
         revenueState(base).write.mode("overwrite").parquet(store)
-        val maintained =
-          mergeStates(s.read.parquet(store), revenueState(increment))
-        // exact NDV per group for the bound — verification-only column
-        // (linear, one extra agg over the fact table at oracle/bench SF;
-        // production serves the estimate alone — the sketch exists so the
-        // exact pass is never needed)
-        val exact = orders.groupBy(
-            date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-            col("o_orderstatus").as("status"))
-          .agg(countDistinct(col("o_custkey")).as("cust_ndv"))
-        serveView(maintained).join(exact, Seq("month", "status"))
-          .select(col("month"), col("status"), col("n"), col("revenue"),
-            col("avg_price"), col("cust_ndv"),
-            (abs(col("cust_ndv_est") - col("cust_ndv")) <=
-              greatest(lit(1.0), col("cust_ndv") * 0.05))
-              .as("ndv_est_ok"))
-          .orderBy(col("month"), col("status"))
+        serveViewVerified(
+          mergeStates(s.read.parquet(store), revenueState(increment)),
+          orders)
       },
-      Some("""SELECT strftime(o_orderdate, '%Y-%m') AS month,
-              o_orderstatus AS status, count(*) AS n,
-              round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0,
-                2) AS revenue,
-              round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                / (count(*) * 100.0), 2) AS avg_price,
-              count(DISTINCT o_custkey) AS cust_ndv,
-              true AS ndv_est_ok
-              FROM orders
-              GROUP BY 1, 2
-              ORDER BY month, status""")),
+      Some(RevenueMvSql)),
 
     // ---- incremental QUANTILE view maintenance (q139): p50/p95/p99 of
     // order value per (month, status), maintained without rescanning

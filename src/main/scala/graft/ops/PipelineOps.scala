@@ -67,14 +67,12 @@ object PipelineOps {
       // IT (same principle as the streaming state stores), restoring the
       // session setting afterwards. At billion-edge scale this would
       // instead be left to AQE coalescing.
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      graft.LocalSpark.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
         // every round joins the symmetric edges: built once, from `in`
         val sym = RunScope.checkpoint(
           in.union(in.select(col("b").as("a"), col("a").as("b"))).distinct())
         connectedComponentsImpl(sym, maxIter)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
     }
   }
 
@@ -322,6 +320,28 @@ object PipelineOps {
        kept AS (SELECT key, segment, ef FROM f
          WHERE prev IS NULL OR prev <> segment)
        """
+
+  /** q168's history with validity intervals; also q170's (streamed
+    * history ≡ batch SCD2 build). */
+  private[graft] val Scd2HistorySql = Scd2Sql +
+    """SELECT key, segment, strftime(ef, '%Y-%m-%d') AS valid_from,
+              strftime(lead(ef) OVER (PARTITION BY key ORDER BY ef),
+                '%Y-%m-%d') AS valid_to,
+              lead(ef) OVER (PARTITION BY key ORDER BY ef) IS NULL
+                AS is_current
+           FROM kept ORDER BY key, valid_from"""
+
+  /** q168's served history: each version's [valid_from, valid_to) as
+    * yyyy-MM-dd strings and whether it is current; shared with q170. */
+  private[graft] def scd2Intervals(hist: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("key")).orderBy(col("ef"))
+    hist.select(col("key"), col("segment"),
+        date_format(col("ef"), "yyyy-MM-dd").as("valid_from"),
+        date_format(lead(col("ef"), 1).over(w), "yyyy-MM-dd")
+          .as("valid_to"),
+        lead(col("ef"), 1).over(w).isNull.as("is_current"))
+      .orderBy(col("key"), col("valid_from"))
+  }
 
   /** q155/q165's shared oracle: the from-scratch dataset card. q165
     * must reproduce it from merged state — incremental ≡ from-scratch. */
@@ -871,12 +891,8 @@ object PipelineOps {
     * q144 (incremental maintenance), because all three must produce the
     * same clusters. */
   private[graft] val DupClustersSql =
-    """WITH RECURSIVE t AS (
-              SELECT doc_id, list_distinct(list_transform(
-                range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-                i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+    raw"""WITH RECURSIVE t AS (
+              SELECT doc_id, ${TextOps.TrigramShinglesSql} AS sh
               FROM documents),
               e AS (SELECT doc_id, unnest(sh) AS s FROM t),
               sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
@@ -1213,6 +1229,116 @@ object PipelineOps {
         expr(s"b.tok * 10000L div ${capacity}L").as("fill_bp"))
       .orderBy(col("shard"), col("bin"))
 
+  /** q76's changelog merge over orders; also q112's. */
+  private[graft] val CdcMergeSql =
+    """WITH snap AS (SELECT o_orderkey AS key, o_totalprice AS price
+                FROM orders),
+              changes AS (
+                SELECT key, price, 'D' AS op, 1 AS seq FROM snap
+                  WHERE key % 10 = 0
+                UNION ALL SELECT key, price + 500, 'U', 1 FROM snap
+                  WHERE key % 10 = 1
+                UNION ALL SELECT key, price + 1000, 'U', 2 FROM snap
+                  WHERE key % 10 IN (1, 2)
+                UNION ALL SELECT key + 100000000, 42.0, 'I', 1 FROM snap
+                  WHERE key % 10 = 3),
+              latest AS (SELECT key, price, op FROM (
+                  SELECT *, row_number() OVER
+                    (PARTITION BY key ORDER BY seq DESC) AS rn FROM changes)
+                WHERE rn = 1),
+              merged AS (
+                SELECT s.key, s.price FROM snap s
+                  WHERE s.key NOT IN (SELECT key FROM latest)
+                UNION ALL SELECT key, price FROM latest WHERE op <> 'D')
+              SELECT count(*) AS n_rows, round(sum(price), 2) AS total
+              FROM merged"""
+
+  /** q115's PSI drift report; also q116's. */
+  private[graft] val DriftPsiSql =
+    """WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8)
+                  AS BIGINT) AS cut FROM documents),
+              feat AS (SELECT doc_id >= cut.cut AS cur,
+                  CAST(least(CAST(floor(
+                    len(regexp_extract_all(lower(text), '[a-z0-9]+')) / 32)
+                    AS BIGINT), 15) AS VARCHAR) AS tok_bin,
+                  lang
+                FROM documents, cut),
+              melted AS (
+                SELECT cur, 'tok_bin' AS feature, tok_bin AS bin FROM feat
+                UNION ALL
+                SELECT cur, 'lang' AS feature, lang AS bin FROM feat),
+              counts AS (SELECT feature, bin,
+                  sum(CASE WHEN cur THEN 0 ELSE 1 END) AS cb,
+                  sum(CASE WHEN cur THEN 1 ELSE 0 END) AS cc
+                FROM melted GROUP BY feature, bin),
+              totals AS (SELECT feature, sum(cb) AS nb, sum(cc) AS nc
+                         FROM counts GROUP BY feature),
+              shares AS (SELECT c.feature,
+                  greatest(c.cb * 1.0 / t.nb, 1e-6) AS p,
+                  greatest(c.cc * 1.0 / t.nc, 1e-6) AS q
+                FROM counts c JOIN totals t ON c.feature = t.feature)
+              SELECT feature, count(*) AS n_bins,
+                floor(sum((q - p) * ln(q / p)) * 10000) / 10000 AS psi,
+                floor(sum((q - p) * ln(q / p)) * 10000) / 10000 > 0.2
+                  AS drifted
+              FROM shares GROUP BY feature ORDER BY feature"""
+
+  /** q78's train/eval 5-gram contamination report; also q117's. */
+  private[graft] val ContaminationSql =
+    """WITH tk AS (SELECT doc_id,
+                regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+                FROM documents),
+              grams AS (
+                SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
+                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' ||
+                       t[i+3] || ' ' || t[i+4])) AS gram
+                FROM tk WHERE len(t) >= 5),
+              train AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 2 = 0),
+              shared AS (
+                SELECT doc_id, count(DISTINCT gram) AS n_shared
+                FROM grams WHERE doc_id % 2 = 1
+                  AND gram IN (SELECT gram FROM train)
+                GROUP BY doc_id)
+              SELECT d.doc_id, coalesce(s.n_shared, 0) AS n_shared,
+                coalesce(s.n_shared, 0) > 0 AS contaminated
+              FROM documents d LEFT JOIN shared s USING (doc_id)
+              WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id"""
+
+  /** q159's entity clusters; also q160's (incremental ≡ from-scratch). */
+  private[graft] val EntityResolutionSql =
+    """WITH RECURSIVE base AS (SELECT c_custkey AS id,
+                c_nationkey AS nk, c_name AS name FROM customer),
+              var AS (SELECT id + 10000000 AS id, nk,
+                substr(name, 1, CAST(id % 8 + 10 AS INTEGER) - 1) ||
+                substr(name, CAST(id % 8 + 10 AS INTEGER) + 1) AS name
+                FROM base WHERE id % 5 = 0),
+              allr AS (SELECT * FROM base UNION ALL SELECT * FROM var),
+              b1 AS (SELECT nk, substr(name, 1, 15) AS bk, id, name
+                FROM allr),
+              b2 AS (SELECT nk, substr(name, length(name) - 4, 5) AS bk,
+                id, name FROM allr),
+              cand AS (
+                SELECT x.id AS ia, y.id AS ib, x.name AS na, y.name AS nb
+                FROM b1 x JOIN b1 y ON x.nk = y.nk AND x.bk = y.bk
+                  AND x.id < y.id
+                UNION
+                SELECT x.id, y.id, x.name, y.name
+                FROM b2 x JOIN b2 y ON x.nk = y.nk AND x.bk = y.bk
+                  AND x.id < y.id),
+              m AS (SELECT DISTINCT ia, ib FROM cand
+                WHERE levenshtein(na, nb) <= 1
+                  AND length(na) <> length(nb)),
+              edges AS (SELECT ia AS a, ib AS b FROM m
+                        UNION SELECT ib, ia FROM m),
+              tc(a, b) AS (
+                SELECT a, b FROM edges
+                UNION
+                SELECT tc.a, e2.b FROM tc JOIN edges e2 ON tc.b = e2.a),
+              lbl AS (SELECT a AS node, least(a, min(b)) AS cluster_id
+                      FROM tc GROUP BY a)
+              SELECT cluster_id, count(*) AS n_records
+              FROM lbl GROUP BY cluster_id ORDER BY cluster_id"""
+
   val catalog: Seq[Q] = Seq(
 
     // ---- CDC changelog application (q76): MERGE INTO semantics without a
@@ -1233,27 +1359,7 @@ object PipelineOps {
           .agg(count(lit(1)).as("n_rows"),
             round(sum(col("price")), 2).as("total"))
       },
-      Some("""WITH snap AS (SELECT o_orderkey AS key, o_totalprice AS price
-                FROM orders),
-              changes AS (
-                SELECT key, price, 'D' AS op, 1 AS seq FROM snap
-                  WHERE key % 10 = 0
-                UNION ALL SELECT key, price + 500, 'U', 1 FROM snap
-                  WHERE key % 10 = 1
-                UNION ALL SELECT key, price + 1000, 'U', 2 FROM snap
-                  WHERE key % 10 IN (1, 2)
-                UNION ALL SELECT key + 100000000, 42.0, 'I', 1 FROM snap
-                  WHERE key % 10 = 3),
-              latest AS (SELECT key, price, op FROM (
-                  SELECT *, row_number() OVER
-                    (PARTITION BY key ORDER BY seq DESC) AS rn FROM changes)
-                WHERE rn = 1),
-              merged AS (
-                SELECT s.key, s.price FROM snap s
-                  WHERE s.key NOT IN (SELECT key FROM latest)
-                UNION ALL SELECT key, price FROM latest WHERE op <> 'D')
-              SELECT count(*) AS n_rows, round(sum(price), 2) AS total
-              FROM merged""")),
+      Some(CdcMergeSql)),
 
     // ---- SCD Type-2 dimension history (q168): the warehouse-classic
     // complement of q76's latest-wins merge — instead of OVERWRITING a
@@ -1269,23 +1375,8 @@ object PipelineOps {
     // One shuffle on the dimension key; interval columns emitted as
     // yyyy-MM-dd strings (the q127 DATE-type compare lesson).
     Q("q168_scd2_history",
-      (s, d) => {
-        val w = Window.partitionBy(col("key")).orderBy(col("ef"))
-        scd2Dim(Tables.customer(s, d))
-          .select(col("key"), col("segment"),
-            date_format(col("ef"), "yyyy-MM-dd").as("valid_from"),
-            date_format(lead(col("ef"), 1).over(w), "yyyy-MM-dd")
-              .as("valid_to"),
-            lead(col("ef"), 1).over(w).isNull.as("is_current"))
-          .orderBy(col("key"), col("valid_from"))
-      },
-      Some(Scd2Sql +
-        """SELECT key, segment, strftime(ef, '%Y-%m-%d') AS valid_from,
-              strftime(lead(ef) OVER (PARTITION BY key ORDER BY ef),
-                '%Y-%m-%d') AS valid_to,
-              lead(ef) OVER (PARTITION BY key ORDER BY ef) IS NULL
-                AS is_current
-           FROM kept ORDER BY key, valid_from""")),
+      (s, d) => scd2Intervals(scd2Dim(Tables.customer(s, d))),
+      Some(Scd2HistorySql)),
 
     // ---- point-in-time join (q169): the feature-store lookup over
     // q168's SCD2 history — each order joins the dimension version that
@@ -1578,24 +1669,7 @@ object PipelineOps {
             (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tk AS (SELECT doc_id,
-                regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-                FROM documents),
-              grams AS (
-                SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' ||
-                       t[i+3] || ' ' || t[i+4])) AS gram
-                FROM tk WHERE len(t) >= 5),
-              train AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 2 = 0),
-              shared AS (
-                SELECT doc_id, count(DISTINCT gram) AS n_shared
-                FROM grams WHERE doc_id % 2 = 1
-                  AND gram IN (SELECT gram FROM train)
-                GROUP BY doc_id)
-              SELECT d.doc_id, coalesce(s.n_shared, 0) AS n_shared,
-                coalesce(s.n_shared, 0) > 0 AS contaminated
-              FROM documents d LEFT JOIN shared s USING (doc_id)
-              WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id""")),
+      Some(ContaminationSql)),
 
     // ---- written decontamination index (q117): q78's train-gram set as
     // a WRITTEN artifact — the q34b/q44b build-once posture for
@@ -1639,24 +1713,7 @@ object PipelineOps {
             (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH tk AS (SELECT doc_id,
-                regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-                FROM documents),
-              grams AS (
-                SELECT doc_id, unnest(list_transform(range(1, len(t) - 3),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' ||
-                       t[i+3] || ' ' || t[i+4])) AS gram
-                FROM tk WHERE len(t) >= 5),
-              train AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 2 = 0),
-              shared AS (
-                SELECT doc_id, count(DISTINCT gram) AS n_shared
-                FROM grams WHERE doc_id % 2 = 1
-                  AND gram IN (SELECT gram FROM train)
-                GROUP BY doc_id)
-              SELECT d.doc_id, coalesce(s.n_shared, 0) AS n_shared,
-                coalesce(s.n_shared, 0) > 0 AS contaminated
-              FROM documents d LEFT JOIN shared s USING (doc_id)
-              WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id""")),
+      Some(ContaminationSql)),
 
     // ---- sequence packing (q79): concat-and-chunk packing of tokenized
     // documents into fixed token-budget bins (context windows) — the
@@ -1809,12 +1866,8 @@ object PipelineOps {
             col("n_tok").as("kept_tok"))
           .orderBy(col("cluster_id"))
       },
-      Some("""WITH RECURSIVE t AS (
-              SELECT doc_id, list_distinct(list_transform(
-                range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-                i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+      Some(raw"""WITH RECURSIVE t AS (
+              SELECT doc_id, ${TextOps.TrigramShinglesSql} AS sh
               FROM documents),
               e AS (SELECT doc_id, unnest(sh) AS s FROM t),
               sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
@@ -1879,12 +1932,8 @@ object PipelineOps {
             countDistinct(col("label")).as("n_groups"))
           .orderBy(col("split"))
       },
-      Some("""WITH RECURSIVE t AS (
-              SELECT doc_id, list_distinct(list_transform(
-                range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-                i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+      Some(raw"""WITH RECURSIVE t AS (
+              SELECT doc_id, ${TextOps.TrigramShinglesSql} AS sh
               FROM documents),
               e AS (SELECT doc_id, unnest(sh) AS s FROM t),
               sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
@@ -1949,12 +1998,8 @@ object PipelineOps {
           .agg(count(lit(1)).as("n_pairs"), sum(col("j_bp")).as("j_bp_sum"))
           .orderBy(col("src_a"), col("src_b"))
       },
-      Some("""WITH t AS (
-                SELECT doc_id, list_distinct(list_transform(
-                  range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-                  i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                       regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                       regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+      Some(raw"""WITH t AS (
+                SELECT doc_id, ${TextOps.TrigramShinglesSql} AS sh
                 FROM documents),
               e AS (SELECT doc_id, unnest(sh) AS s FROM t),
               sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
@@ -2165,12 +2210,8 @@ object PipelineOps {
             greatest(col("n_grams"), lit(1)).cast("double") < 0.5)
           .orderBy(col("doc_id"))
       },
-      Some("""WITH t AS (
-              SELECT doc_id, list_distinct(list_transform(
-                range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-                i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+      Some(raw"""WITH t AS (
+              SELECT doc_id, ${TextOps.TrigramShinglesSql} AS sh
               FROM documents),
               e AS (SELECT doc_id, unnest(sh) AS g FROM t),
               hot AS (SELECT g FROM e GROUP BY g
@@ -2468,33 +2509,7 @@ object PipelineOps {
             .agg(count(lit(1)).as("cb")),
           feat.filter(col("cur")).select(col("feature"), col("bin")))
       },
-      Some("""WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8)
-                  AS BIGINT) AS cut FROM documents),
-              feat AS (SELECT doc_id >= cut.cut AS cur,
-                  CAST(least(CAST(floor(
-                    len(regexp_extract_all(lower(text), '[a-z0-9]+')) / 32)
-                    AS BIGINT), 15) AS VARCHAR) AS tok_bin,
-                  lang
-                FROM documents, cut),
-              melted AS (
-                SELECT cur, 'tok_bin' AS feature, tok_bin AS bin FROM feat
-                UNION ALL
-                SELECT cur, 'lang' AS feature, lang AS bin FROM feat),
-              counts AS (SELECT feature, bin,
-                  sum(CASE WHEN cur THEN 0 ELSE 1 END) AS cb,
-                  sum(CASE WHEN cur THEN 1 ELSE 0 END) AS cc
-                FROM melted GROUP BY feature, bin),
-              totals AS (SELECT feature, sum(cb) AS nb, sum(cc) AS nc
-                         FROM counts GROUP BY feature),
-              shares AS (SELECT c.feature,
-                  greatest(c.cb * 1.0 / t.nb, 1e-6) AS p,
-                  greatest(c.cc * 1.0 / t.nc, 1e-6) AS q
-                FROM counts c JOIN totals t ON c.feature = t.feature)
-              SELECT feature, count(*) AS n_bins,
-                floor(sum((q - p) * ln(q / p)) * 10000) / 10000 AS psi,
-                floor(sum((q - p) * ln(q / p)) * 10000) / 10000 > 0.2
-                  AS drifted
-              FROM shares GROUP BY feature ORDER BY feature""")),
+      Some(DriftPsiSql)),
 
     // ---- tokenizer application (q110): greedy longest-match encoding of
     // every doc against the q84-trained merge table — see
@@ -3145,38 +3160,7 @@ object PipelineOps {
           .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_records"))
           .orderBy(col("cluster_id"))
       },
-      Some("""WITH RECURSIVE base AS (SELECT c_custkey AS id,
-                c_nationkey AS nk, c_name AS name FROM customer),
-              var AS (SELECT id + 10000000 AS id, nk,
-                substr(name, 1, CAST(id % 8 + 10 AS INTEGER) - 1) ||
-                substr(name, CAST(id % 8 + 10 AS INTEGER) + 1) AS name
-                FROM base WHERE id % 5 = 0),
-              allr AS (SELECT * FROM base UNION ALL SELECT * FROM var),
-              b1 AS (SELECT nk, substr(name, 1, 15) AS bk, id, name
-                FROM allr),
-              b2 AS (SELECT nk, substr(name, length(name) - 4, 5) AS bk,
-                id, name FROM allr),
-              cand AS (
-                SELECT x.id AS ia, y.id AS ib, x.name AS na, y.name AS nb
-                FROM b1 x JOIN b1 y ON x.nk = y.nk AND x.bk = y.bk
-                  AND x.id < y.id
-                UNION
-                SELECT x.id, y.id, x.name, y.name
-                FROM b2 x JOIN b2 y ON x.nk = y.nk AND x.bk = y.bk
-                  AND x.id < y.id),
-              m AS (SELECT DISTINCT ia, ib FROM cand
-                WHERE levenshtein(na, nb) <= 1
-                  AND length(na) <> length(nb)),
-              edges AS (SELECT ia AS a, ib AS b FROM m
-                        UNION SELECT ib, ia FROM m),
-              tc(a, b) AS (
-                SELECT a, b FROM edges
-                UNION
-                SELECT tc.a, e2.b FROM tc JOIN edges e2 ON tc.b = e2.a),
-              lbl AS (SELECT a AS node, least(a, min(b)) AS cluster_id
-                      FROM tc GROUP BY a)
-              SELECT cluster_id, count(*) AS n_records
-              FROM lbl GROUP BY cluster_id ORDER BY cluster_id""")),
+      Some(EntityResolutionSql)),
 
     // (q164, the ER triangle's serve member, lives in StreamingOps and
     // probes the block index written here through [[erKeyed]]/[[erMatches]].)
@@ -3227,38 +3211,7 @@ object PipelineOps {
           .orderBy(col("cluster_id"))
       },
       // q159's oracle verbatim: incremental ≡ from-scratch
-      Some("""WITH RECURSIVE base AS (SELECT c_custkey AS id,
-                c_nationkey AS nk, c_name AS name FROM customer),
-              var AS (SELECT id + 10000000 AS id, nk,
-                substr(name, 1, CAST(id % 8 + 10 AS INTEGER) - 1) ||
-                substr(name, CAST(id % 8 + 10 AS INTEGER) + 1) AS name
-                FROM base WHERE id % 5 = 0),
-              allr AS (SELECT * FROM base UNION ALL SELECT * FROM var),
-              b1 AS (SELECT nk, substr(name, 1, 15) AS bk, id, name
-                FROM allr),
-              b2 AS (SELECT nk, substr(name, length(name) - 4, 5) AS bk,
-                id, name FROM allr),
-              cand AS (
-                SELECT x.id AS ia, y.id AS ib, x.name AS na, y.name AS nb
-                FROM b1 x JOIN b1 y ON x.nk = y.nk AND x.bk = y.bk
-                  AND x.id < y.id
-                UNION
-                SELECT x.id, y.id, x.name, y.name
-                FROM b2 x JOIN b2 y ON x.nk = y.nk AND x.bk = y.bk
-                  AND x.id < y.id),
-              m AS (SELECT DISTINCT ia, ib FROM cand
-                WHERE levenshtein(na, nb) <= 1
-                  AND length(na) <> length(nb)),
-              edges AS (SELECT ia AS a, ib AS b FROM m
-                        UNION SELECT ib, ia FROM m),
-              tc(a, b) AS (
-                SELECT a, b FROM edges
-                UNION
-                SELECT tc.a, e2.b FROM tc JOIN edges e2 ON tc.b = e2.a),
-              lbl AS (SELECT a AS node, least(a, min(b)) AS cluster_id
-                      FROM tc GROUP BY a)
-              SELECT cluster_id, count(*) AS n_records
-              FROM lbl GROUP BY cluster_id ORDER BY cluster_id""")),
+      Some(EntityResolutionSql)),
 
     // ---- end-to-end curation pipeline (q181): the composition a user
     // of this library actually ships — FOUR pillars in ONE lazy plan:

@@ -20,6 +20,41 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
+  /** q130's keys above 5% of the events; also q134's. */
+  private[graft] val HeavyHittersSql =
+    """WITH k AS (SELECT CASE WHEN event_id % 5 = 0 THEN -42
+                WHEN event_id % 7 = 0 THEN -77
+                WHEN event_id % 11 = 0 THEN -99
+                ELSE user_id END AS key FROM events),
+              n AS (SELECT count(*) AS n_total FROM k)
+              SELECT key, count(*) AS cnt, n.n_total
+              FROM k, n GROUP BY key, n.n_total
+              HAVING count(*) * 100 >= n.n_total * 5
+              ORDER BY key"""
+
+  /** q130's keys: hot keys planted arithmetically on event_id (negative
+    * ids — disjoint from real user_ids), user_id otherwise. Shared with
+    * its streaming twin q134. */
+  private[graft] def heavyHitterKeys(events: DataFrame): DataFrame =
+    events.select(
+      when(col("event_id") % 5 === 0, -42L)
+        .when(col("event_id") % 7 === 0, -77L)
+        .when(col("event_id") % 11 === 0, -99L)
+        .otherwise(col("user_id")).as("key"))
+
+  /** q130's serve, shared with q134: the candidate keys recounted exactly
+    * over `keyed` and kept at ≥ 5% of its rows. */
+  private[graft] def recountHeavyHitters(keyed: DataFrame,
+      candidates: DataFrame): DataFrame = {
+    val total = keyed.agg(count(lit(1)).as("n_total"))
+    keyed.join(broadcast(candidates), Seq("key"), "left_semi")
+      .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
+      .crossJoin(broadcast(total))
+      .filter(col("cnt") * 100L >= col("n_total") * 5L)
+      .select(col("key"), col("cnt"), col("n_total"))
+      .orderBy(col("key"))
+  }
+
   val catalog: Seq[Q] = Seq(
 
     // ---- aggregation (TPC-H Q1 flavor): scan → filter → partial+final agg
@@ -930,31 +965,12 @@ object Relational {
     Q("q130_heavy_hitters",
       (s, d) => {
         import graft.expr.HeavyHitters.misraGries
-        val keyed = Tables.events(s, d).select(
-          when(col("event_id") % 5 === 0, -42L)
-            .when(col("event_id") % 7 === 0, -77L)
-            .when(col("event_id") % 11 === 0, -99L)
-            .otherwise(col("user_id")).as("key"))
-        val candidates = keyed
+        val keyed = heavyHitterKeys(Tables.events(s, d))
+        recountHeavyHitters(keyed, keyed
           .agg(misraGries(64)(col("key")).as("cand"))
-          .select(explode(col("cand")).as("key"))
-        val total = keyed.agg(count(lit(1)).as("n_total"))
-        keyed.join(broadcast(candidates), Seq("key"), "left_semi")
-          .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
-          .crossJoin(broadcast(total))
-          .filter(col("cnt") * 100L >= col("n_total") * 5L)
-          .select(col("key"), col("cnt"), col("n_total"))
-          .orderBy(col("key"))
+          .select(explode(col("cand")).as("key")))
       },
-      Some("""WITH k AS (SELECT CASE WHEN event_id % 5 = 0 THEN -42
-                WHEN event_id % 7 = 0 THEN -77
-                WHEN event_id % 11 = 0 THEN -99
-                ELSE user_id END AS key FROM events),
-              n AS (SELECT count(*) AS n_total FROM k)
-              SELECT key, count(*) AS cnt, n.n_total
-              FROM k, n GROUP BY key, n.n_total
-              HAVING count(*) * 100 >= n.n_total * 5
-              ORDER BY key""")),
+      Some(HeavyHittersSql)),
 
     // ---- functional-dependency profiling (q161): the data-profiling
     // complement of q124's per-column stats — CROSS-column structure. For

@@ -22,6 +22,21 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
+  /** The DuckDB twin of [[shingles]] over [[toks]] of a row's `text`: its
+    * distinct word trigrams, built by a lambda over `v`. Every oracle
+    * that shingles text interpolates it: [[TrigramShinglesSql]] (lambda
+    * `i`), or `k` in q148, whose query also aliases a table `i`.
+    * Declared first: the oracles are strict vals of this and other
+    * objects. */
+  private[graft] def trigramShinglesSql(v: String): String =
+    s"""list_distinct(list_transform(
+         range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
+         $v -> regexp_extract_all(lower(text), '[a-z0-9]+')[$v] || ' ' ||
+              regexp_extract_all(lower(text), '[a-z0-9]+')[$v+1] || ' ' ||
+              regexp_extract_all(lower(text), '[a-z0-9]+')[$v+2]))"""
+
+  private[graft] val TrigramShinglesSql: String = trigramShinglesSql("i")
+
   /** Lowercased alphanumeric tokens; mirrors DuckDB
     * `regexp_extract_all(lower(text), '[a-z0-9]+')` exactly. */
   private[graft] def toks(c: Column): Column =
@@ -151,12 +166,8 @@ object TextOps {
     * BOTH q35 (which computes exactly this) and q34 (whose LSH+verify
     * output provably equals it on this corpus). */
   private val ExactJaccardSql =
-    """WITH t AS (
-       SELECT doc_id, list_distinct(list_transform(
-         range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-         i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-              regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-              regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+    raw"""WITH t AS (
+       SELECT doc_id, ${TrigramShinglesSql} AS sh
        FROM documents),
        e AS (SELECT doc_id, unnest(sh) AS s FROM t),
        sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
@@ -172,9 +183,6 @@ object TextOps {
        WHERE ni * 1.0 / (sa.sz + sb.sz - ni) >= 0.5
        ORDER BY id_a, id_b"""
 
-  /** q90's graded eval-overlap rule in DuckDB SQL — the shared oracle for
-    * the batch path (q90) and its streaming twin (q66): one rule, two
-    * engine paths (the q80/q64 precedent). */
   /** PII seed-then-redact with verification flags: plant a synthetic
     * email + phone per doc, redact with typed placeholders, emit per-doc
     * proof the contacts are gone. Pure map-side built-ins — stateless on
@@ -207,13 +215,12 @@ object TextOps {
         AS INTEGER) AS appended_len
       FROM documents ORDER BY doc_id"""
 
+  /** q90's graded eval-overlap rule in DuckDB SQL — the shared oracle for
+    * the batch path (q90) and its streaming twin (q66): one rule, two
+    * engine paths (the q80/q64 precedent). */
   private[graft] val NgramDecontamSql =
-    """WITH t AS (
-       SELECT doc_id, list_distinct(list_transform(
-         range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-         i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-              regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-              regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+    raw"""WITH t AS (
+       SELECT doc_id, ${TrigramShinglesSql} AS sh
        FROM documents),
        b AS (SELECT DISTINCT unnest(sh) AS s FROM t
              WHERE doc_id % 50 = 0),
@@ -226,7 +233,60 @@ object TextOps {
        FROM shared WHERE n_shared * 1.0 / n_sh >= 0.5
        ORDER BY doc_id"""
 
+  /** q90's per-doc rollup, shared with its streaming twin q66: one row
+    * per (doc_id, n_sh) benchmark match in, the docs whose overlap
+    * fraction reaches 0.5 out. */
+  private[graft] def ngramOverlapReport(matches: DataFrame): DataFrame =
+    matches.groupBy(col("doc_id"), col("n_sh"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") / col("n_sh") >= 0.5)
+      .select(col("doc_id"), col("n_sh"), col("n_shared"),
+        round(col("n_shared") / col("n_sh"), 4).as("overlap"))
+      .orderBy(col("doc_id"))
+
   def catalog: Seq[Q] = catalog1 ++ catalog2 ++ catalog3
+
+  /** q121's exact snapshot × increment pairs (the increment includes the
+    * every-7th re-crawl); also its streaming twin q137's oracle. */
+  private[graft] val ExactDedupIncSql =
+    """WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8)
+                AS BIGINT) AS cut FROM documents),
+              n AS (SELECT doc_id,
+                regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
+              FROM documents),
+              snap AS (SELECT n.doc_id, t FROM n, cut
+                WHERE n.doc_id < cut.cut),
+              inc AS (
+                SELECT n.doc_id, t FROM n, cut WHERE n.doc_id >= cut.cut
+                UNION ALL
+                SELECT doc_id + 1000000, t FROM snap WHERE doc_id % 7 = 0)
+              SELECT s.doc_id AS snap_id, i.doc_id AS inc_id
+              FROM snap s JOIN inc i ON s.t = i.t
+              ORDER BY snap_id, inc_id"""
+
+  /** q34c's exact snapshot × increment Jaccard pairs at 0.5; also its
+    * streaming twin q109's oracle. */
+  private[graft] val SnapshotCrossPairsSql =
+    raw"""WITH t AS (
+             SELECT doc_id, ${TrigramShinglesSql} AS sh
+             FROM documents),
+             cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8) AS BIGINT)
+                       AS cut
+                     FROM documents),
+             e AS (SELECT doc_id, unnest(sh) AS s FROM t),
+             sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
+             inter AS (
+               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ni
+               FROM e a JOIN e b ON a.s = b.s, cut
+               WHERE a.doc_id < cut.cut AND b.doc_id >= cut.cut
+               GROUP BY 1, 2)
+             SELECT id_a, id_b,
+               round(ni * 1.0 / (sa.sz + sb.sz - ni), 4) AS jaccard
+             FROM inter
+             JOIN sizes sa ON sa.doc_id = id_a
+             JOIN sizes sb ON sb.doc_id = id_b
+             WHERE ni * 1.0 / (sa.sz + sb.sz - ni) >= 0.5
+             ORDER BY id_a, id_b"""
 
   private val catalog1: Seq[Q] = Seq(
 
@@ -313,20 +373,7 @@ object TextOps {
     Q("q121_exact_dedup_indexed",
       (s, d) => exactDedupIncremental(s, d)
         .orderBy(col("snap_id"), col("inc_id")),
-      Some("""WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8)
-                AS BIGINT) AS cut FROM documents),
-              n AS (SELECT doc_id,
-                regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-              FROM documents),
-              snap AS (SELECT n.doc_id, t FROM n, cut
-                WHERE n.doc_id < cut.cut),
-              inc AS (
-                SELECT n.doc_id, t FROM n, cut WHERE n.doc_id >= cut.cut
-                UNION ALL
-                SELECT doc_id + 1000000, t FROM snap WHERE doc_id % 7 = 0)
-              SELECT s.doc_id AS snap_id, i.doc_id AS inc_id
-              FROM snap s JOIN inc i ON s.t = i.t
-              ORDER BY snap_id, inc_id""")),
+      Some(ExactDedupIncSql)),
 
     // ---- crawl-delta report (q148): the first question a recurring
     // crawl pipeline asks of a new shard — "how much of this is actually
@@ -407,7 +454,7 @@ object TextOps {
             (floor(col("n_novel") * 10000.0 / col("n_inc")) / 10000)
               .as("novel_share"))
       },
-      Some("""WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8)
+      Some(raw"""WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8)
                 AS BIGINT) AS cut FROM documents),
               nrm AS (SELECT doc_id,
                 regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t,
@@ -423,17 +470,9 @@ object TextOps {
                   WHERE doc_id % 7 = 0),
               ex AS (SELECT DISTINCT i.doc_id FROM inc i
                 JOIN snap sp ON sp.t = i.t),
-              ssh AS (SELECT doc_id, list_distinct(list_transform(
-                range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-                k -> regexp_extract_all(lower(text), '[a-z0-9]+')[k] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[k+1] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[k+2])) AS sh
+              ssh AS (SELECT doc_id, ${trigramShinglesSql("k")} AS sh
               FROM snap),
-              ish AS (SELECT doc_id, list_distinct(list_transform(
-                range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-                k -> regexp_extract_all(lower(text), '[a-z0-9]+')[k] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[k+1] || ' ' ||
-                     regexp_extract_all(lower(text), '[a-z0-9]+')[k+2])) AS sh
+              ish AS (SELECT doc_id, ${trigramShinglesSql("k")} AS sh
               FROM inc),
               se AS (SELECT doc_id, unnest(sh) AS sg FROM ssh),
               ie AS (SELECT doc_id, unnest(sh) AS sg FROM ish),
@@ -641,30 +680,7 @@ object TextOps {
             tag = snapshotLshTag(d), lookupText = Some(scan))
           .orderBy(col("id_a"), col("id_b"))
       },
-      Some("""WITH t AS (
-             SELECT doc_id, list_distinct(list_transform(
-               range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-               i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                    regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                    regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
-             FROM documents),
-             cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8) AS BIGINT)
-                       AS cut
-                     FROM documents),
-             e AS (SELECT doc_id, unnest(sh) AS s FROM t),
-             sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
-             inter AS (
-               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ni
-               FROM e a JOIN e b ON a.s = b.s, cut
-               WHERE a.doc_id < cut.cut AND b.doc_id >= cut.cut
-               GROUP BY 1, 2)
-             SELECT id_a, id_b,
-               round(ni * 1.0 / (sa.sz + sb.sz - ni), 4) AS jaccard
-             FROM inter
-             JOIN sizes sa ON sa.doc_id = id_a
-             JOIN sizes sb ON sb.doc_id = id_b
-             WHERE ni * 1.0 / (sa.sz + sb.sz - ni) >= 0.5
-             ORDER BY id_a, id_b""")),
+      Some(SnapshotCrossPairsSql)),
 
     // ---- n-gram decontamination (q90): the eval-set overlap rule
     // (per-doc fraction of shingles appearing ANYWHERE in a benchmark
@@ -686,15 +702,10 @@ object TextOps {
         val docs = docsWithShinglesHashed(s, d)
         val bench = docs.filter(col("doc_id") % 50 === 0)
           .select(explode(col("sh")).as("s")).distinct()
-        docs.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
+        ngramOverlapReport(docs.select(col("doc_id"),
+            size(col("sh")).cast("long").as("n_sh"),
             explode(col("sh")).as("s"))
-          .join(bench, Seq("s"))
-          .groupBy(col("doc_id"), col("n_sh"))
-          .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") / col("n_sh") >= 0.5)
-          .select(col("doc_id"), col("n_sh"), col("n_shared"),
-            round(col("n_shared") / col("n_sh"), 4).as("overlap"))
-          .orderBy(col("doc_id"))
+          .join(bench, Seq("s")))
       },
       Some(NgramDecontamSql)),
 
@@ -835,12 +846,8 @@ object TextOps {
             round(col("containment"), 4).as("containment"))
           .orderBy(col("id_a"), col("id_b"))
       },
-      Some("""WITH t AS (
-             SELECT doc_id, list_distinct(list_transform(
-               range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-               i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                    regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                    regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+      Some(raw"""WITH t AS (
+             SELECT doc_id, ${TrigramShinglesSql} AS sh
              FROM documents),
              e AS (SELECT doc_id, unnest(sh) AS s FROM t),
              sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
@@ -1091,12 +1098,8 @@ object TextOps {
           Tables.load(s, d, "documents"),
           benchPred = col("doc_id") % 50 === 0, threshold = 0.5)
         .orderBy(col("doc_id")),
-      Some("""WITH t AS (
-             SELECT doc_id, list_distinct(list_transform(
-               range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-               i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                    regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                    regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+      Some(raw"""WITH t AS (
+             SELECT doc_id, ${TrigramShinglesSql} AS sh
              FROM documents),
              e AS (SELECT doc_id, unnest(sh) AS s FROM t),
              sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
@@ -1532,13 +1535,9 @@ object TextOps {
     * increment) with the three in-plan invariants pinned TRUE. LAZY:
     * referenced from catalog3 during object init (the q191 lesson). */
   private[graft] lazy val CmsLiveSql =
-    """WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8) AS BIGINT)
+    raw"""WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8) AS BIGINT)
          AS cut FROM documents),
-       t AS (SELECT doc_id, list_distinct(list_transform(
-           range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-           i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+       t AS (SELECT doc_id, ${TrigramShinglesSql} AS sh
          FROM documents, cut
          WHERE NOT (doc_id % 9 = 0 AND doc_id < cut.cut)),
        e AS (SELECT unnest(sh) AS s FROM t),
@@ -1551,11 +1550,7 @@ object TextOps {
   /** q197's oracle — the same report over the FULL corpus (snapshot ∪
     * streamed arrivals, no retraction). */
   private[graft] lazy val CmsFullSql =
-    """WITH t AS (SELECT doc_id, list_distinct(list_transform(
-           range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-           i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+    raw"""WITH t AS (SELECT doc_id, ${TrigramShinglesSql} AS sh
          FROM documents),
        e AS (SELECT unnest(sh) AS s FROM t),
        c AS (SELECT s, count(*) AS n_exact FROM e GROUP BY 1)
@@ -1822,11 +1817,7 @@ object TextOps {
   /** q198's oracle — exact per-pair distinct-shingle Jaccard with the
     * two in-plan sketch invariants pinned TRUE. */
   private[graft] lazy val KmvOverlapSql =
-    """WITH t AS (SELECT doc_id, source, list_distinct(list_transform(
-           range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-           i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+    raw"""WITH t AS (SELECT doc_id, source, ${TrigramShinglesSql} AS sh
          FROM documents),
        p AS (SELECT DISTINCT source, s
              FROM (SELECT source, unnest(sh) AS s FROM t)),
@@ -2032,12 +2023,8 @@ object TextOps {
     * q191's oracle (exactly the bug a rows-only CORRECTNESS row would
     * have surfaced a round late). */
   private[graft] lazy val HllVocabSql =
-    """WITH t AS (
-       SELECT lang, list_distinct(list_transform(
-         range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-         i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-              regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-              regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
+    raw"""WITH t AS (
+       SELECT lang, ${TrigramShinglesSql} AS sh
        FROM documents),
        e AS (SELECT lang, unnest(sh) AS s FROM t)
        SELECT lang, count(DISTINCT s) AS n_exact,

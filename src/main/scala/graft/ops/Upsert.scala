@@ -74,13 +74,9 @@ object Upsert {
           .filter(col(partCol).isin(touched: _*))
         keepFirst(existingSlice, incoming, keys, order)
       }
-    val prev = spark.conf
-      .getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy(partCol).parquet(storePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    graft.LocalSpark.withConf(spark,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      merged.write.mode("overwrite").partitionBy(partCol).parquet(storePath)
     }
   }
 
@@ -99,16 +95,10 @@ object Upsert {
     */
   def idempotentBatchAppend(spark: org.apache.spark.sql.SparkSession,
       storePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val prev = spark.conf
-      .getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(storePath)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    graft.LocalSpark.withConf(spark,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      batch.withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").partitionBy("batch_id").parquet(storePath)
     }
   }
 

@@ -985,6 +985,20 @@ object VectorOps {
     "q143_ann_sq8" -> 0.95,
     "q108_stream_ann_serving" -> 0.45)
 
+  /** The IVF top-5 verification contract of q44, q44b and q108 (same
+    * index parameters, same queries); avg_recall pinned to the sf0.01
+    * measurement. */
+  private[graft] val IvfRecallSql =
+    """SELECT CAST(10 AS BIGINT) AS n_queries,
+              true AS all_returned_k,
+              CASE WHEN (SELECT count(*) FROM embeddings
+                  WHERE vec_id >= 10) <= 1000
+                THEN CAST(0.56 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE)
+                END AS avg_recall,
+              true AS avg_recall_ok,
+              (SELECT count(*) FROM embeddings WHERE vec_id >= 10)
+                <= 1000 AS verified"""
+
   val catalog: Seq[Q] = Seq(
 
     // ---- brute-force cosine top-5: queries = vec_id < 10 vs the rest
@@ -1053,15 +1067,7 @@ object VectorOps {
           ivfTopK(q, c, dim = 64, k = 5, nCells = 16, nProbe = 4), c,
           cosineTopK(q, c, k = 5), k = 5, recallFloor = RecallFloors("q44_ann_ivf"))
       },
-      Some("""SELECT CAST(10 AS BIGINT) AS n_queries,
-              true AS all_returned_k,
-              CASE WHEN (SELECT count(*) FROM embeddings
-                  WHERE vec_id >= 10) <= 1000
-                THEN CAST(0.56 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE)
-                END AS avg_recall,
-              true AS avg_recall_ok,
-              (SELECT count(*) FROM embeddings WHERE vec_id >= 10)
-                <= 1000 AS verified""")),
+      Some(IvfRecallSql)),
 
     // ---- q44's written-index posture (the embedding twin of q34b): the
     // cell assignment lands in a table partitioned by cell, the probe
@@ -1077,15 +1083,7 @@ object VectorOps {
         gatedAnnVerification(ivfProbe(onDisk, q, k = 5, nProbe = 4), c,
           cosineTopK(q, c, k = 5), k = 5, recallFloor = RecallFloors("q44b_ann_ivf_indexed"))
       },
-      Some("""SELECT CAST(10 AS BIGINT) AS n_queries,
-              true AS all_returned_k,
-              CASE WHEN (SELECT count(*) FROM embeddings
-                  WHERE vec_id >= 10) <= 1000
-                THEN CAST(0.56 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE)
-                END AS avg_recall,
-              true AS avg_recall_ok,
-              (SELECT count(*) FROM embeddings WHERE vec_id >= 10)
-                <= 1000 AS verified""")),
+      Some(IvfRecallSql)),
 
     // ---- incremental IVF maintenance (q44c, the embedding twin of
     // q34c): the snapshot (vec_id below the 80% cut) builds + writes the

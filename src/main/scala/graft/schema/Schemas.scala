@@ -8,9 +8,11 @@ import org.apache.spark.sql.types._
   * nested-user record (reference: `/root/reference/ingestion/api_client.py:9-13`,
   * fields consumed at `transformations.py:31-41`).
   *
-  * Explicit StructTypes everywhere: schema inference is nondeterministic and
-  * unaffordable at 100 TB (a full-file scan); a pinned schema also lets the
-  * vectorized parquet reader prune columns at the scan.
+  * Only the ingestion record ([[Schemas.userSchema]]) has a declared
+  * StructType. The testdata tables do not: [[Tables.load]] reads each
+  * file's schema from its parquet footer, which costs one Spark job per
+  * read. A declared schema per table would drop those jobs and let a
+  * footer that disagrees fail loudly (ROADMAP direction 5).
   */
 object Schemas {
 

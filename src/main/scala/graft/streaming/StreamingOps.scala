@@ -3,11 +3,11 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.Q
-import graft.ops.{PipelineOps, Upsert}
+import graft.ops.{PipelineOps, RunScope, Upsert}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming pillars (SURVEY.md §2.8): the reference's
   * cron-triggered batch-of-10 ingestion IS manual micro-batching
@@ -21,6 +21,11 @@ import org.apache.spark.sql.streaming.Trigger
   * leak — `withWatermark` + event-time key retention caps it; the watermark
   * also finalizes windows for append-mode sinks. Checkpoint dir = the
   * single-writer lock (the reference's mkdir mutex, shell script `:59-63`).
+  *
+  * Every stream starts in one place, [[drain]]; a streaming twin states
+  * only how its rows arrive (a source from [[tableStream]],
+  * [[documentsStream]] or [[stagedStream]]) and calls its batch rule's
+  * Column code and oracle.
   */
 object StreamingOps {
 
@@ -35,12 +40,16 @@ object StreamingOps {
     * sized by STATE volume, not by cluster cores: 4 stores hold this state
     * with room to spare; a real 100 TB stream sizes this to
     * state-bytes / executor-memory, independent of the batch-side shuffle
-    * setting.
+    * setting. Per-batch foreachBatch work is arrival-sized, so the same
+    * count is right for its batch-side jobs too.
     */
   private val StreamShufflePartitions = "4"
 
-  /** Run a streaming transform of the events table to completion
-    * (AvailableNow) into a memory sink and return the result table.
+  /** Where a drained stream's rows go. */
+  private[graft] sealed trait Sink
+
+  /** The memory table named after the query (`graft_stream_<n>`),
+    * written in `outputMode`.
     *
     * Output-mode note (VERDICT r1 suggested append for q61): under
     * `Trigger.AvailableNow` the watermark ends at max(event_time) - delay,
@@ -48,77 +57,90 @@ object StreamingOps {
     * hold back the last window per group and break the batch oracle.
     * Complete mode is correct for the all-windows demo; the production
     * append path (finalized windows only) is [[windowAggAppend]], spec-
-    * checked in StreamingSpec.
-    */
-  private def runToMemory(s: SparkSession, d: String,
-      outputMode: String)(transform: DataFrame => DataFrame): DataFrame = {
-    val name = s"graft_stream_${runSeq.incrementAndGet()}"
-    val ckpt = graft.ops.RunScope.scratch("graft_ckpt_mem")
-    // ts precision varies with the generator: TIMESTAMP(NANOS) files need
-    // the raw-INT64 read + integer-division conversion, micros-precision
-    // files arrive as TIMESTAMP already. Mirror Schemas.Tables.events'
-    // type dispatch — round 9's data switched nanos → micros and the
-    // unconditional `ts div 1000` broke every ts-consuming stream query
-    // with DATATYPE_MISMATCH (BENCH_r09 q60-q65).
+    * checked in StreamingSpec. */
+  private[graft] final case class Memory(outputMode: String) extends Sink
+
+  /** `body` per micro-batch, each batch in its own [[RunScope.batch]]. */
+  private[graft] final case class EachBatch(body: (DataFrame, Long) => Unit)
+      extends Sink
+
+  /** The one streaming driver: runs `source` to completion
+    * (`Trigger.AvailableNow`) into `sink` from a fresh checkpoint dir of
+    * the current run scope (never resumed: each run drains from scratch
+    * by design), under the state-store-sized shuffle width, and returns
+    * the finished query (its progress stays readable). */
+  private[graft] def drain(source: DataFrame, sink: Sink): StreamingQuery = {
+    val ckpt = RunScope.scratch(sink match {
+      case _: Memory => "graft_ckpt_mem"
+      case _: EachBatch => "graft_ckpt_feb"
+    })
+    graft.LocalSpark.withConf(source.sparkSession,
+        "spark.sql.shuffle.partitions" -> StreamShufflePartitions) {
+      val writer = sink match {
+        case Memory(outputMode) => source.writeStream.format("memory")
+          .queryName(s"graft_stream_${runSeq.incrementAndGet()}")
+          .outputMode(outputMode)
+        case EachBatch(body) => source.writeStream
+          .foreachBatch((batch: DataFrame, id: Long) =>
+            RunScope.batch(body(batch, id)))
+      }
+      val q = writer.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
+  }
+
+  /** [[drain]] into a memory sink; the sink's table. */
+  private def memoryTable(source: DataFrame, outputMode: String): DataFrame =
+    source.sparkSession.table(drain(source, Memory(outputMode)).name)
+
+  /** Table `table` of the sf dir `d` as a file stream. The file source
+    * requires a directory path, so the stream reads the sf dir with a
+    * glob filter selecting the one table.
+    *
+    * Events' `ts` precision varies with the generator: TIMESTAMP(NANOS)
+    * files need the raw-INT64 read + integer-division conversion,
+    * micros-precision files arrive as TIMESTAMP already (mirrors
+    * `Tables.events`' type dispatch — round 9's data switched nanos →
+    * micros and the unconditional `ts div 1000` broke every
+    * ts-consuming stream query with DATATYPE_MISMATCH, BENCH_r09
+    * q60-q65). Watermarks require TIMESTAMP
+    * ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]); the NTZ→TZ cast under the
+    * UTC session timezone preserves wall-clock values, so windows and
+    * date_format still match the batch oracle. */
+  private[graft] def tableStream(s: SparkSession, d: String,
+      table: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The file stream source requires a directory path: stream the sf dir
-    // with a glob filter selecting only the events table.
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = s.read.parquet(s"$d/$table.parquet").schema
     val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-    val stream = schema("ts").dataType match {
+      .option("pathGlobFilter", s"$table.parquet").parquet(d)
+    if (table != "events") raw
+    else schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // watermarks require TIMESTAMP ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]);
-      // the NTZ→TZ cast under the UTC session timezone preserves wall-clock
-      // values, so windows/date_format still match the batch oracle
       case org.apache.spark.sql.types.TimestampNTZType =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw
     }
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    try {
-      val q = transform(stream).writeStream
-        .format("memory").queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    s.table(name)
   }
 
-  /** Shared foreachBatch scaffolding (ADVICE r10 #2): stream one table of
-    * the sf dir (glob-filtered) to completion, under the SAME
-    * shuffle-partition tuning-and-restore [[runToMemory]] applies to every
-    * other streaming query (per-batch work is arrival-sized, so the
-    * state-store-sized partition count is right for the batch-side jobs
-    * too), with a fresh checkpoint dir per run. `prepare` shapes the
-    * stream before the sink; `body` runs per micro-batch. */
-  private def runForeachBatch(s: SparkSession, d: String, tableFile: String)(
-      prepare: DataFrame => DataFrame)(
-      body: (DataFrame, Long) => Unit): Unit = {
-    // never resumed: each catalog invocation drains AvailableNow from
-    // scratch by design
-    val ckpt = graft.ops.RunScope.scratch("graft_ckpt_feb")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/$tableFile.parquet").schema
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    try {
-      val q = prepare(s.readStream.schema(schema)
-          .option("pathGlobFilter", s"$tableFile.parquet").parquet(d))
-        .writeStream
-        .foreachBatch((batch: DataFrame, id: Long) =>
-          graft.ops.RunScope.batch(body(batch, id)))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+  /** The documents stream fanned out by doc_id — the STREAMING face of
+    * the `Tables.fanOut` under-split guard: the file source inherits the
+    * arriving shard's split count, and a single-file test corpus batches
+    * as ONE task, serializing every downstream tokenize/shingle chain
+    * (measured: q66 25 s single-task vs ~2 s fanned at sf0.1). At real
+    * scale arriving shards are many files and the exchange moves one
+    * micro-batch of raw text — bounded by arrival rate, not corpus
+    * size. */
+  private def documentsStream(s: SparkSession, d: String): DataFrame =
+    tableStream(s, d, "documents")
+      .repartition(graft.schema.Tables.minSplits(s), col("doc_id"))
+
+  /** The parquet files of `dir`, one file per micro-batch. */
+  private def stagedStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
 
   /** Exact fractional epoch seconds of a java.sql.Timestamp — getTime is
     * millisecond-floored, so micros-precision event times would drift vs
@@ -243,13 +265,6 @@ object StreamingOps {
     Upsert.latestVersionPath(s, store)
   }
 
-  /** Per-run UNIQUE output store dir, owned by the run's
-    * [[graft.ops.RunScope]]: re-running a streaming query deletes its
-    * previous invocation's store instead of accreting one per pass
-    * (DiskLifecycleSpec asserts the flat footprint). */
-  private def tempStore(prefix: String): String =
-    graft.ops.RunScope.scratch(prefix)
-
   /** Production append-mode windowed aggregation: emits ONLY watermark-
     * finalized windows (no driver-side complete-mode materialization — the
     * sink receives each window once, append-only, which is what a parquet/
@@ -262,6 +277,30 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("sum_value"))
+
+  /** Update mode emits one row per user per batch, and AvailableNow may
+    * split the input into several batches: keep the LAST emitted state
+    * per user (n_events is monotone). q62's and q65's serve. */
+  private def lastPerUser(out: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)
+    out.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .select(col("user_id"), col("n_events"),
+        round(col("sum_value"), 2).as("sum_value"))
+      .orderBy(col("user_id"))
+  }
+
+  /** q60's oracle, shared by q63: distinct users per event type. */
+  private[graft] val DistinctUsersSql =
+    """SELECT event_type, count(DISTINCT user_id) AS n_distinct_users
+              FROM events GROUP BY event_type ORDER BY event_type"""
+
+  /** q62's oracle, shared by q65: the final per-user running state is
+    * the batch aggregate. */
+  private[graft] val UserTotalsSql =
+    """SELECT user_id, count(*) AS n_events,
+              round(sum(value), 2) AS sum_value
+              FROM events GROUP BY user_id ORDER BY user_id"""
 
   /** One micro-batch's observed progress. */
   final case class BatchProgress(
@@ -305,33 +344,29 @@ object StreamingOps {
     // dropped as late and stream ≡ batch)
     Q("q60_stream_dedup",
       (s, d) => {
-        val deduped = runToMemory(s, d, "append")(df =>
-          df.withWatermark("ts", "1 hour")
-            .dropDuplicates("user_id", "event_type"))
+        val deduped = memoryTable(tableStream(s, d, "events")
+          .withWatermark("ts", "1 hour")
+          .dropDuplicates("user_id", "event_type"), "append")
         deduped.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_distinct_users"))
           .orderBy(col("event_type"))
       },
-      Some("""SELECT event_type, count(DISTINCT user_id) AS n_distinct_users
-              FROM events GROUP BY event_type ORDER BY event_type""")),
+      Some(DistinctUsersSql)),
 
     // ---- streaming event-time tumbling window aggregation (complete mode
     // emits every window); oracle = the equivalent batch day-grain agg
     Q("q61_stream_window_agg",
       (s, d) => {
-        val agg = runToMemory(s, d, "complete")(df =>
-          df.withWatermark("ts", "1 hour")
-            .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-              round(sum(col("value")), 2).as("sum_value")))
+        val agg = memoryTable(tableStream(s, d, "events")
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("n_events"),
+            round(sum(col("value")), 2).as("sum_value")), "complete")
         agg.select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n_events"), col("sum_value"))
           .orderBy(col("day"), col("event_type"))
       },
-      Some("""SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-              event_type,
-              count(*) AS n_events, round(sum(value), 2) AS sum_value
-              FROM events GROUP BY 1, 2 ORDER BY day, event_type""")),
+      Some(graft.ops.EventOps.DailyWindowSql)),
 
     // ---- arbitrary stateful processing (mapGroupsWithState): per-user
     // running profile kept as explicit state — the custom-state primitive
@@ -341,34 +376,21 @@ object StreamingOps {
     Q("q62_stream_stateful",
       (s, d) => {
         import s.implicits._
-        val out = runToMemory(s, d, "update") { df =>
-          df.select(col("user_id").as[Long], col("value").as[Double])
-            .as[(Long, Double)]
-            .groupByKey(_._1)
-            .mapGroupsWithState[UserState, (Long, Long, Double)](
-              org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-              case (uid, rows, state) =>
-                val prev = state.getOption.getOrElse(UserState(0L, 0.0))
-                var n = prev.n; var sum = prev.sum
-                rows.foreach { r => n += 1; sum += r._2 }
-                state.update(UserState(n, sum))
-                (uid, n, sum)
-            }.toDF("user_id", "n_events", "sum_value")
-        }
-        // update mode emits one row per user per batch; AvailableNow may
-        // split the input into several batches — keep the LAST emitted
-        // state per user (n_events is monotone)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-        out.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .select(col("user_id"), col("n_events"),
-            round(col("sum_value"), 2).as("sum_value"))
-          .orderBy(col("user_id"))
+        lastPerUser(memoryTable(tableStream(s, d, "events")
+          .select(col("user_id").as[Long], col("value").as[Double])
+          .as[(Long, Double)]
+          .groupByKey(_._1)
+          .mapGroupsWithState[UserState, (Long, Long, Double)](
+            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+            case (uid, rows, state) =>
+              val prev = state.getOption.getOrElse(UserState(0L, 0.0))
+              var n = prev.n; var sum = prev.sum
+              rows.foreach { r => n += 1; sum += r._2 }
+              state.update(UserState(n, sum))
+              (uid, n, sum)
+          }.toDF("user_id", "n_events", "sum_value"), "update"))
       },
-      Some("""SELECT user_id, count(*) AS n_events,
-              round(sum(value), 2) AS sum_value
-              FROM events GROUP BY user_id ORDER BY user_id""")),
+      Some(UserTotalsSql)),
 
     // ---- stream-stream inner join: views ⋈ clicks per user within a
     // 30-minute event-time window. BOTH sides carry watermarks and the join
@@ -379,27 +401,23 @@ object StreamingOps {
     // emitted pairs equal the batch time-range join — the oracle.
     Q("q64_stream_stream_join",
       (s, d) => {
-        val joined = runToMemory(s, d, "append") { df =>
-          val views = df.filter(col("event_type") === "view")
-            .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
-            .withWatermark("v_ts", "2 hours")
-          val clicks = df.filter(col("event_type") === "click")
-            .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-            .withWatermark("c_ts", "2 hours")
-          views.join(clicks,
-            col("v_user") === col("c_user") &&
-              col("c_ts") >= col("v_ts") &&
-              col("c_ts") <= col("v_ts") + expr("interval 30 minutes"))
-        }
+        val ev = tableStream(s, d, "events")
+        val views = ev.filter(col("event_type") === "view")
+          .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
+          .withWatermark("v_ts", "2 hours")
+        val clicks = ev.filter(col("event_type") === "click")
+          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+          .withWatermark("c_ts", "2 hours")
+        val joined = memoryTable(views.join(clicks,
+          col("v_user") === col("c_user") &&
+            col("c_ts") >= col("v_ts") &&
+            col("c_ts") <= col("v_ts") + expr("interval 30 minutes")),
+          "append")
         joined.groupBy((col("v_user") % 10).as("bucket"))
           .agg(count(lit(1)).as("n_pairs"))
           .orderBy(col("bucket"))
       },
-      Some("""SELECT a.user_id % 10 AS bucket, count(*) AS n_pairs
-              FROM events a JOIN events b ON a.user_id = b.user_id
-              WHERE a.event_type = 'view' AND b.event_type = 'click'
-                AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE
-              GROUP BY 1 ORDER BY bucket""")),
+      Some(graft.ops.EventOps.ViewClickPairsSql)),
 
     // ---- transformWithState (Spark 4's arbitrary-state API, the successor
     // to mapGroupsWithState used by q62): per-user running (count, sum) in
@@ -410,42 +428,23 @@ object StreamingOps {
     Q("q65_stream_tws",
       (s, d) => {
         import s.implicits._
-        val prevProvider =
-          s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val out = runToMemory(s, d, "update") { df =>
-            // EventTime mode powers the TTL timers (CountSumProcessor
-            // scaladoc); the untouched ts column carries the watermark
-            df.withWatermark("ts", "0 seconds")
-              .select(col("user_id"), col("value"), col("ts"))
-              .as[(Long, Double, java.sql.Timestamp)]
-              .groupByKey(_._1)
-              .transformWithState(new CountSumProcessor(),
-                org.apache.spark.sql.streaming.TimeMode.EventTime(),
-                org.apache.spark.sql.streaming.OutputMode.Update())
-              .toDF("user_id", "n_events", "sum_value")
-          }
-          // update mode emits one row per user per batch; keep the last
-          // (n_events is monotone) — same shape as q62
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-          out.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1)
-            .select(col("user_id"), col("n_events"),
-              round(col("sum_value"), 2).as("sum_value"))
-            .orderBy(col("user_id"))
-        } finally prevProvider match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        graft.LocalSpark.withConf(s,
+            "spark.sql.streaming.stateStore.providerClass" ->
+              "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+          // EventTime mode powers the TTL timers (CountSumProcessor
+          // scaladoc); the untouched ts column carries the watermark
+          lastPerUser(memoryTable(tableStream(s, d, "events")
+            .withWatermark("ts", "0 seconds")
+            .select(col("user_id"), col("value"), col("ts"))
+            .as[(Long, Double, java.sql.Timestamp)]
+            .groupByKey(_._1)
+            .transformWithState(new CountSumProcessor(),
+              org.apache.spark.sql.streaming.TimeMode.EventTime(),
+              org.apache.spark.sql.streaming.OutputMode.Update())
+            .toDF("user_id", "n_events", "sum_value"), "update"))
         }
       },
-      Some("""SELECT user_id, count(*) AS n_events,
-              round(sum(value), 2) AS sum_value
-              FROM events GROUP BY user_id ORDER BY user_id""")),
+      Some(UserTotalsSql)),
 
     // ---- streaming upsert into a PARTITIONED parquet store via
     // foreachBatch + Upsert.partitionedUpsert (VERDICT r1 #8): each
@@ -458,21 +457,21 @@ object StreamingOps {
     // that count.
     Q("q63_stream_upsert",
       (s, d) => {
-        val store = tempStore("graft_stream_store")
-        runForeachBatch(s, d, "events")(
-          _.select(col("user_id"), col("event_type"))) { (batch, _) =>
-          val incoming = batch.dropDuplicates("user_id", "event_type")
-          Upsert.partitionedUpsert(batch.sparkSession, store, incoming,
-            keys = Seq("user_id", "event_type"), partCol = "event_type",
-            order = Seq(col("user_id")))
-        }
+        val store = RunScope.scratch("graft_stream_store")
+        drain(tableStream(s, d, "events")
+            .select(col("user_id"), col("event_type")),
+          EachBatch { (batch, _) =>
+            val incoming = batch.dropDuplicates("user_id", "event_type")
+            Upsert.partitionedUpsert(batch.sparkSession, store, incoming,
+              keys = Seq("user_id", "event_type"), partCol = "event_type",
+              order = Seq(col("user_id")))
+          })
         s.read.parquet(store)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_distinct_users"))
           .orderBy(col("event_type"))
       },
-      Some("""SELECT event_type, count(DISTINCT user_id) AS n_distinct_users
-              FROM events GROUP BY event_type ORDER BY event_type""")),
+      Some(DistinctUsersSql)),
 
     // ---- stream-static decontamination (q66): q90's graded eval-overlap
     // rule run ON A STREAM — corpus shards are scored as they land
@@ -499,26 +498,25 @@ object StreamingOps {
           .filter(col("doc_id") % 50 === 0)
           .select(explode(col("sh")).as("s"))
           .distinct()
-        val matches = runDocsToMemory(s, d, "append") { df =>
-          // the shared builder's two-step select keeps tokens materialized
-          // before the shingle transform (persist is not available on a
-          // stream, but single-consumer projections don't collapse because
-          // the alias is non-cheap and multiply referenced).
-          // explode_OUTER, deliberately: a plain explode makes
-          // InferFiltersFromGenerate add `size(sh) > 0`,
-          // and predicate pushdown then shoves that filter BELOW the
-          // fan-out repartition with the whole shingle+tokenize chain
-          // inlined — the entire corpus gets shingled serially in the
-          // one-split scan task (measured: 24-31 s vs 1.8 s at sf0.1).
-          // outer explode infers nothing; the equi-join drops the null
-          // gram of empty-shingle docs, so the semantics are identical.
-          TextOps.fingerprints(df)
-            .select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
-              explode_outer(col("sh")).as("s"))
-            .join(broadcast(bench), Seq("s"))
-            .select(col("doc_id"), col("n_sh"))
-        }
-        matchesTail(matches)
+        // the shared builder's two-step select keeps tokens materialized
+        // before the shingle transform (persist is not available on a
+        // stream, but single-consumer projections don't collapse because
+        // the alias is non-cheap and multiply referenced).
+        // explode_OUTER, deliberately: a plain explode makes
+        // InferFiltersFromGenerate add `size(sh) > 0`,
+        // and predicate pushdown then shoves that filter BELOW the
+        // fan-out repartition with the whole shingle+tokenize chain
+        // inlined — the entire corpus gets shingled serially in the
+        // one-split scan task (measured: 24-31 s vs 1.8 s at sf0.1).
+        // outer explode infers nothing; the equi-join drops the null
+        // gram of empty-shingle docs, so the semantics are identical.
+        val matches = memoryTable(TextOps.fingerprints(documentsStream(s, d))
+          .select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
+            explode_outer(col("sh")).as("s"))
+          .join(broadcast(bench), Seq("s"))
+          .select(col("doc_id"), col("n_sh")), "append")
+        // the per-doc rollup is q90's
+        TextOps.ngramOverlapReport(matches)
       },
       Some(graft.ops.TextOps.NgramDecontamSql)),
 
@@ -532,8 +530,8 @@ object StreamingOps {
     // follows shard arrival rate and a doc's verdict emits exactly once.
     Q("q67_stream_quality",
       (s, d) =>
-        runDocsToMemory(s, d, "append")(graft.ops.PipelineOps
-          .qualityVerdicts)
+        memoryTable(graft.ops.PipelineOps.qualityVerdicts(
+            documentsStream(s, d)), "append")
           .orderBy(col("doc_id")),
       Some(graft.ops.PipelineOps.QualityFilterSql)),
 
@@ -545,7 +543,8 @@ object StreamingOps {
     // emits exactly once.
     Q("q68_stream_redaction",
       (s, d) =>
-        runDocsToMemory(s, d, "append")(graft.ops.TextOps.piiRedactFlags)
+        memoryTable(graft.ops.TextOps.piiRedactFlags(
+            documentsStream(s, d)), "append")
           .orderBy(col("doc_id")),
       Some(graft.ops.TextOps.PiiRedactSql)),
 
@@ -560,7 +559,8 @@ object StreamingOps {
     // (the q47/q67, q38/q68 precedent).
     Q("q107_stream_rag_chunks",
       (s, d) =>
-        runDocsToMemory(s, d, "append")(graft.ops.TextOps.ragChunks)
+        memoryTable(graft.ops.TextOps.ragChunks(documentsStream(s, d)),
+            "append")
           .orderBy(col("doc_id"), col("chunk_idx")),
       Some(graft.ops.TextOps.RagChunksSql)),
 
@@ -586,7 +586,7 @@ object StreamingOps {
         val idx = VectorOps.ivfWriteIndexOnce(s,
           VectorOps.ivfBuild(corpus, dim = 64, nCells = 16),
           VectorOps.SharedIvfIndexTable, VectorOps.sharedIvfIndexTag(d))
-        val store = tempStore("graft_ann_serve_out")
+        val store = RunScope.scratch("graft_ann_serve_out")
         // batch-side plan: ivfProbe's window/top-k are legal here, and
         // the probe's cell join partition-prunes the index scan. The
         // sink is REPLAY-IDEMPOTENT (VERDICT r11 #2): each batch's
@@ -594,11 +594,11 @@ object StreamingOps {
         // overwrite, so a retried micro-batch replaces its partition
         // instead of appending duplicate (q_id, rank) rows —
         // StreamingSpec proves a re-run leaves the store unchanged.
-        runForeachBatch(s, d, "embeddings")(_.filter(col("vec_id") < 10)) {
-          (batch, batchId) =>
+        drain(tableStream(s, d, "embeddings").filter(col("vec_id") < 10),
+          EachBatch { (batch, batchId) =>
             Upsert.idempotentBatchAppend(batch.sparkSession, store,
               VectorOps.ivfProbe(idx, batch, k = 5, nProbe = 4), batchId)
-        }
+          })
         val queries = graft.schema.Tables.embeddings(s, d).filter(col("vec_id") < 10)
         VectorOps.gatedAnnVerification(s.read.parquet(store), corpus,
           VectorOps.cosineTopK(queries, corpus, k = 5),
@@ -607,15 +607,7 @@ object StreamingOps {
       },
       // avg_recall pinned to the sf0.01 measurement (VERDICT r10 #3);
       // equals q44b's by construction (same index params, same queries)
-      Some("""SELECT CAST(10 AS BIGINT) AS n_queries,
-              true AS all_returned_k,
-              CASE WHEN (SELECT count(*) FROM embeddings
-                  WHERE vec_id >= 10) <= 1000
-                THEN CAST(0.56 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE)
-                END AS avg_recall,
-              true AS avg_recall_ok,
-              (SELECT count(*) FROM embeddings WHERE vec_id >= 10)
-                <= 1000 AS verified""")),
+      Some(graft.ops.VectorOps.IvfRecallSql)),
 
     // ---- streaming near-dup GATE (q109): arriving docs are checked against
     // the WRITTEN banded-LSH snapshot index as they land — the crawl-ingest
@@ -648,9 +640,9 @@ object StreamingOps {
         TextOps.writeSnapshotLshIndex(s,
           TextOps.fingerprints(docs).filter(col("doc_id") < cut),
           dfCap = 16, table, TextOps.snapshotLshTag(d))
-        val store = tempStore("graft_neardup_gate_out")
-        runForeachBatch(s, d, "documents")(_.filter(col("doc_id") >= cut)) {
-          (batch, _) =>
+        val store = RunScope.scratch("graft_neardup_gate_out")
+        drain(tableStream(s, d, "documents").filter(col("doc_id") >= cut),
+          EachBatch { (batch, _) =>
             val cand = TextOps.crossCandidates(batch.sparkSession, table,
               TextOps.fingerprints(batch.repartition(
                 graft.schema.Tables.minSplits(batch.sparkSession),
@@ -660,33 +652,10 @@ object StreamingOps {
               .select(col("id_a"), col("id_b"),
                 round(col("jaccard"), 4).as("jaccard"))
               .write.mode("append").parquet(store)
-        }
+          })
         s.read.parquet(store).orderBy(col("id_a"), col("id_b"))
       },
-      Some("""WITH t AS (
-             SELECT doc_id, list_distinct(list_transform(
-               range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))-1),
-               i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||
-                    regexp_extract_all(lower(text), '[a-z0-9]+')[i+1] || ' ' ||
-                    regexp_extract_all(lower(text), '[a-z0-9]+')[i+2])) AS sh
-             FROM documents),
-             cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8) AS BIGINT)
-                       AS cut
-                     FROM documents),
-             e AS (SELECT doc_id, unnest(sh) AS s FROM t),
-             sizes AS (SELECT doc_id, len(sh) AS sz FROM t),
-             inter AS (
-               SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ni
-               FROM e a JOIN e b ON a.s = b.s, cut
-               WHERE a.doc_id < cut.cut AND b.doc_id >= cut.cut
-               GROUP BY 1, 2)
-             SELECT id_a, id_b,
-               round(ni * 1.0 / (sa.sz + sb.sz - ni), 4) AS jaccard
-             FROM inter
-             JOIN sizes sa ON sa.doc_id = id_a
-             JOIN sizes sb ON sb.doc_id = id_b
-             WHERE ni * 1.0 / (sa.sz + sb.sz - ni) >= 0.5
-             ORDER BY id_a, id_b""")),
+      Some(graft.ops.TextOps.SnapshotCrossPairsSql)),
 
     // ---- streaming EXACT-dedup gate (q137): q121's written hash index
     // probed by arriving docs per micro-batch — the third streaming probe
@@ -716,36 +685,24 @@ object StreamingOps {
         val table = TextOps.ExactHashTable
         TextOps.writeExactHashIndex(s,
           docs.filter(col("doc_id") < cut), table, TextOps.exactHashTag(d))
-        val store = tempStore("graft_exact_gate_out")
-        runForeachBatch(s, d, "documents")(df =>
-          // the increment, as the stream delivers it: fresh docs plus the
-          // re-crawled every-7th snapshot page under its re-fetch id
-          df.filter(col("doc_id") >= cut || col("doc_id") % 7 === 0)
+        val store = RunScope.scratch("graft_exact_gate_out")
+        // the increment, as the stream delivers it: fresh docs plus the
+        // re-crawled every-7th snapshot page under its re-fetch id
+        drain(tableStream(s, d, "documents")
+            .filter(col("doc_id") >= cut || col("doc_id") % 7 === 0)
             .withColumn("doc_id",
               when(col("doc_id") < cut, col("doc_id") + lit(1000000L))
-                .otherwise(col("doc_id")))) { (batch, _) =>
-          TextOps.probeExactHashIndex(batch.sparkSession, batch,
-              docs.filter(col("doc_id") < cut), table)
-            .write.mode("append").parquet(store)
-          ()
-        }
+                .otherwise(col("doc_id"))),
+          EachBatch { (batch, _) =>
+            TextOps.probeExactHashIndex(batch.sparkSession, batch,
+                docs.filter(col("doc_id") < cut), table)
+              .write.mode("append").parquet(store)
+            ()
+          })
         s.read.parquet(store).orderBy(col("snap_id"), col("inc_id"))
       },
       // q121's oracle verbatim: one increment derivation, two engine paths
-      Some("""WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8)
-                AS BIGINT) AS cut FROM documents),
-              n AS (SELECT doc_id,
-                regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-              FROM documents),
-              snap AS (SELECT n.doc_id, t FROM n, cut
-                WHERE n.doc_id < cut.cut),
-              inc AS (
-                SELECT n.doc_id, t FROM n, cut WHERE n.doc_id >= cut.cut
-                UNION ALL
-                SELECT doc_id + 1000000, t FROM snap WHERE doc_id % 7 = 0)
-              SELECT s.doc_id AS snap_id, i.doc_id AS inc_id
-              FROM snap s JOIN inc i ON s.t = i.t
-              ORDER BY snap_id, inc_id""")),
+      Some(graft.ops.TextOps.ExactDedupIncSql)),
 
     // ---- streaming BM25 index maintenance + serve (q188): the third
     // leg of the retrieval triangle (q58 builds from scratch, q187
@@ -771,11 +728,11 @@ object StreamingOps {
         val table = RetrievalOps.Bm25PostingsTable
         RetrievalOps.writeBm25SnapshotIndex(s,
           docs.filter(col("doc_id") < cut), table, RetrievalOps.bm25Tag(d))
-        val store = tempStore("graft_bm25_stream")
-        runForeachBatch(s, d, "documents")(
-          _.filter(col("doc_id") >= cut)) { (batch, batchId) =>
-          RetrievalOps.appendBm25Delta(batch, store, batchId)
-        }
+        val store = RunScope.scratch("graft_bm25_stream")
+        drain(tableStream(s, d, "documents").filter(col("doc_id") >= cut),
+          EachBatch { (batch, batchId) =>
+            RetrievalOps.appendBm25Delta(batch, store, batchId)
+          })
         val (deltaPost, deltaStats) = RetrievalOps.readBm25Deltas(s, store)
         RetrievalOps.bm25ServeMerged(s, table, deltaPost, deltaStats)
       },
@@ -808,22 +765,23 @@ object StreamingOps {
         MultimodalOps.writeMediaSigIndex(s,
           docs.filter(col("doc_id") < cut), table,
           MultimodalOps.mediaSigTag(d))
-        val store = tempStore("graft_media_gate_out")
-        runForeachBatch(s, d, "documents")(df =>
-          df.filter(col("doc_id") >= cut || col("doc_id") % 7 === 0)
+        val store = RunScope.scratch("graft_media_gate_out")
+        drain(tableStream(s, d, "documents")
+            .filter(col("doc_id") >= cut || col("doc_id") % 7 === 0)
             .select(
               when(col("doc_id") < cut, col("doc_id") + lit(1000000L))
                 .otherwise(col("doc_id")).as("media_id"),
               col("doc_id").as("seed"),
-              col("n_chars"))) { (batch, batchId) =>
-          import batch.sparkSession.implicits._
-          val sigs = MultimodalOps.imageSignatures(
-            MultimodalOps.patternImagesOf(batch.as[(Long, Long, Long)]))
-          graft.ops.SlotStore.writeSlot(
-            MultimodalOps.probeMediaSigIndex(batch.sparkSession, table,
-              sigs), store, batchId)
-          ()
-        }
+              col("n_chars")),
+          EachBatch { (batch, batchId) =>
+            import batch.sparkSession.implicits._
+            val sigs = MultimodalOps.imageSignatures(
+              MultimodalOps.patternImagesOf(batch.as[(Long, Long, Long)]))
+            graft.ops.SlotStore.writeSlot(
+              MultimodalOps.probeMediaSigIndex(batch.sparkSession, table,
+                sigs), store, batchId)
+            ()
+          })
         graft.ops.SlotStore.read(s, store)
           .getOrElse(s.range(0)
             .select(lit(0L).as("snap_id"), lit(0L).as("inc_id")))
@@ -877,10 +835,10 @@ object StreamingOps {
         import graft.ops.TextOps
         val cut = graft.schema.Cuts.documents(s, d)
         TextOps.writeHllShingleSketch(s, d)
-        val store = tempStore("graft_hll_gate_out")
-        runForeachBatch(s, d, "documents")(
-          _.filter(col("doc_id") >= cut || col("doc_id") % 7 === 0)) {
-          (batch, batchId) =>
+        val store = RunScope.scratch("graft_hll_gate_out")
+        drain(tableStream(s, d, "documents")
+            .filter(col("doc_id") >= cut || col("doc_id") % 7 === 0),
+          EachBatch { (batch, batchId) =>
             // tokens MATERIALIZED before the shingle lambda (the
             // docsWithShingles barrier, reason (1)): without it the
             // collapsed per-batch plan re-tokenizes inside every
@@ -896,7 +854,7 @@ object StreamingOps {
                   .agg(hll_sketch_agg(col("t"), 12).as("sk")),
                 store, batchId)
             } finally { tok.unpersist(); () }
-        }
+          })
         val streamed = graft.ops.SlotStore.read(s, store)
           .getOrElse(s.table(TextOps.HllSketchTable).limit(0))
         TextOps.hllVerifiedEstimates(s, TextOps.langShinglePosts(s, d),
@@ -927,15 +885,14 @@ object StreamingOps {
         import graft.ops.EventOps
         val cut = graft.schema.Cuts.events(s, d)
         EventOps.writeBottomKSketch(s, d)
-        val store = tempStore("graft_bottomk_gate_out")
-        runForeachBatch(s, d, "events")(
-          _.filter(col("value").isNotNull &&
-            (col("event_id") >= cut || col("event_id") % 7 === 0))) {
-          (batch, batchId) =>
+        val store = RunScope.scratch("graft_bottomk_gate_out")
+        drain(tableStream(s, d, "events").filter(col("value").isNotNull &&
+            (col("event_id") >= cut || col("event_id") % 7 === 0)),
+          EachBatch { (batch, batchId) =>
             graft.ops.SlotStore.writeSlot(
               EventOps.bottomKOf(EventOps.hashValues(batch)),
               store, batchId)
-        }
+          })
         val streamed = graft.ops.SlotStore.read(s, store)
           .getOrElse(s.table(EventOps.BottomKTable).limit(0))
         val merged = EventOps.bottomKOf(
@@ -970,23 +927,23 @@ object StreamingOps {
         import graft.ops.TextOps
         val cut = graft.schema.Cuts.documents(s, d)
         TextOps.writeCmsSnapshot(s, d)
-        val store = tempStore("graft_cms_gate_out")
-        runForeachBatch(s, d, "documents")(
-          _.filter(col("doc_id") >= cut)) { (batch, batchId) =>
-          // tokens MATERIALIZED before the shingle lambda (the
-          // docsWithShingles barrier): without it the collapsed
-          // per-batch plan re-tokenizes inside every element_at
-          val tok = batch
-            .select(TextOps.toks(col("text")).as("tk"))
-            .persist()
-          try {
-            graft.ops.SlotStore.writeSlot(
-              TextOps.cmsOf(
-                tok.select(explode(TextOps.shingles(col("tk"))).as("t"))
-                  .groupBy(col("t")).agg(count(lit(1)).as("c"))),
-              store, batchId)
-          } finally { tok.unpersist(); () }
-        }
+        val store = RunScope.scratch("graft_cms_gate_out")
+        drain(tableStream(s, d, "documents").filter(col("doc_id") >= cut),
+          EachBatch { (batch, batchId) =>
+            // tokens MATERIALIZED before the shingle lambda (the
+            // docsWithShingles barrier): without it the collapsed
+            // per-batch plan re-tokenizes inside every element_at
+            val tok = batch
+              .select(TextOps.toks(col("text")).as("tk"))
+              .persist()
+            try {
+              graft.ops.SlotStore.writeSlot(
+                TextOps.cmsOf(
+                  tok.select(explode(TextOps.shingles(col("tk"))).as("t"))
+                    .groupBy(col("t")).agg(count(lit(1)).as("c"))),
+                store, batchId)
+            } finally { tok.unpersist(); () }
+          })
         val streamed = graft.ops.SlotStore.read(s, store)
           .getOrElse(s.table(TextOps.CmsSketchTable).limit(0))
         TextOps.cmsVerifiedTop(TextOps.docsWithShingles(s, d),
@@ -1009,11 +966,11 @@ object StreamingOps {
     Q("q202_stream_cusum_gate",
       (s, d) => {
         import graft.ops.EventOps
-        val store = tempStore("graft_cusum_gate_out")
-        runForeachBatch(s, d, "events")(identity) { (batch, batchId) =>
+        val store = RunScope.scratch("graft_cusum_gate_out")
+        drain(tableStream(s, d, "events"), EachBatch { (batch, batchId) =>
           graft.ops.SlotStore.writeSlot(
             EventOps.dailyCounts(batch), store, batchId)
-        }
+        })
         val daily = graft.ops.SlotStore.read(s, store)
           .map(_.groupBy(col("event_type"), col("day"))
             .agg(sum(col("c0")).as("c0")))
@@ -1038,14 +995,14 @@ object StreamingOps {
         val docs = graft.schema.Tables.documents(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         TextOps.writeParetoSnapshot(s, d)
-        val store = tempStore("graft_pareto_gate_out")
-        runForeachBatch(s, d, "documents")(
-          _.filter(col("doc_id") >= cut)) { (batch, batchId) =>
-          graft.ops.SlotStore.writeSlot(
-            TextOps.docAxes(batch)
-              .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_docs")),
-            store, batchId)
-        }
+        val store = RunScope.scratch("graft_pareto_gate_out")
+        drain(tableStream(s, d, "documents").filter(col("doc_id") >= cut),
+          EachBatch { (batch, batchId) =>
+            graft.ops.SlotStore.writeSlot(
+              TextOps.docAxes(batch)
+                .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_docs")),
+              store, batchId)
+          })
         val streamed = graft.ops.SlotStore.read(s, store)
           .getOrElse(s.table(TextOps.ParetoTable).limit(0))
         TextOps.paretoVerifiedReport(
@@ -1071,14 +1028,14 @@ object StreamingOps {
         import graft.ops.PipelineOps
         val cut = graft.schema.Cuts.documents(s, d)
         PipelineOps.writePackSnapshot(s, d)
-        val store = tempStore("graft_pack_state")
+        val store = RunScope.scratch("graft_pack_state")
         s.table(PipelineOps.PackTable)
           .write.mode("overwrite").parquet(s"$store/v0")
-        runForeachBatch(s, d, "documents")(
-          _.filter(col("doc_id") >= cut)) { (batch, batchId) =>
-          PipelineOps.foldPackBatch(batch, store, batchId, capacity = 256,
-            nShards = 8)
-        }
+        drain(tableStream(s, d, "documents").filter(col("doc_id") >= cut),
+          EachBatch { (batch, batchId) =>
+            PipelineOps.foldPackBatch(batch, store, batchId, capacity = 256,
+              nShards = 8)
+          })
         // the self-describing pack tag (n_shards/capacity) stays in the
         // store; the served report drops it to match the oracle schema
         s.read.parquet(latestPruned(s, store))
@@ -1107,43 +1064,23 @@ object StreamingOps {
     // paths.
     Q("q112_stream_cdc_upsert",
       (s, d) => {
-        val store = tempStore("graft_cdc_store")
+        val store = RunScope.scratch("graft_cdc_store")
         graft.schema.Tables.orders(s, d)
           .select(col("o_orderkey").as("key"),
             col("o_totalprice").as("price"))
           .write.mode("overwrite").parquet(s"$store/v0")
-        runForeachBatch(s, d, "orders")(identity) { (batch, batchId) =>
+        drain(tableStream(s, d, "orders"), EachBatch { (batch, batchId) =>
           val changes = graft.ops.PipelineOps.synthOrdersChangelog(
             batch.select(col("o_orderkey").as("key"),
               col("o_totalprice").as("price")))
           Upsert.applyChangelogVersioned(batch.sparkSession, store, changes,
             Seq("key"), "op", "seq", batchId)
-        }
+        })
         s.read.parquet(latestPruned(s, store))
           .agg(count(lit(1)).as("n_rows"),
             round(sum(col("price")), 2).as("total"))
       },
-      Some("""WITH snap AS (SELECT o_orderkey AS key, o_totalprice AS price
-                FROM orders),
-              changes AS (
-                SELECT key, price, 'D' AS op, 1 AS seq FROM snap
-                  WHERE key % 10 = 0
-                UNION ALL SELECT key, price + 500, 'U', 1 FROM snap
-                  WHERE key % 10 = 1
-                UNION ALL SELECT key, price + 1000, 'U', 2 FROM snap
-                  WHERE key % 10 IN (1, 2)
-                UNION ALL SELECT key + 100000000, 42.0, 'I', 1 FROM snap
-                  WHERE key % 10 = 3),
-              latest AS (SELECT key, price, op FROM (
-                  SELECT *, row_number() OVER
-                    (PARTITION BY key ORDER BY seq DESC) AS rn FROM changes)
-                WHERE rn = 1),
-              merged AS (
-                SELECT s.key, s.price FROM snap s
-                  WHERE s.key NOT IN (SELECT key FROM latest)
-                UNION ALL SELECT key, price FROM latest WHERE op <> 'D')
-              SELECT count(*) AS n_rows, round(sum(price), 2) AS total
-              FROM merged""")),
+      Some(graft.ops.PipelineOps.CdcMergeSql)),
 
     // ---- streaming data-contract gate (q126): q118's admission rules ON
     // A STREAM — every arriving orders micro-batch is scored against the
@@ -1160,14 +1097,14 @@ object StreamingOps {
     // oracle is q118's SQL minus the unique rule.
     Q("q126_stream_contract_gate",
       (s, d) => {
-        val store = tempStore("graft_contract_gate_out")
+        val store = RunScope.scratch("graft_contract_gate_out")
         val customer = graft.schema.Tables.customer(s, d)
-        runForeachBatch(s, d, "orders")(identity) { (batch, batchId) =>
+        drain(tableStream(s, d, "orders"), EachBatch { (batch, batchId) =>
           graft.ops.PipelineOps
             .orderContractReport(batch, customer, includeUnique = false)
             .withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(store)
-        }
+        })
         s.read.parquet(store)
           .groupBy(col("rule"))
           .agg(sum(col("n_checked")).as("n_checked"),
@@ -1218,43 +1155,22 @@ object StreamingOps {
     Q("q131_stream_mv",
       (s, d) => {
         import graft.ops.MaterializedViewOps.{revenueState, mergeStates,
-          serveView}
-        val store = tempStore("graft_mvstream_")
+          serveViewVerified}
+        val store = RunScope.scratch("graft_mvstream_")
         val orders = graft.schema.Tables.orders(s, d)
         revenueState(orders.filter(col("o_orderkey") % 10 =!= 0))
           .write.mode("overwrite").parquet(s"$store/v0")
-        runForeachBatch(s, d, "orders")(
-            _.filter(col("o_orderkey") % 10 === 0)) { (batch, batchId) =>
-          val ss = batch.sparkSession
-          val cur = ss.read.parquet(
-            Upsert.versionPathAsOf(ss, store, batchId))
-          mergeStates(cur, revenueState(batch))
-            .write.mode("overwrite").parquet(s"$store/v${batchId + 1}")
-        }
-        val exact = orders.groupBy(
-            date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-            col("o_orderstatus").as("status"))
-          .agg(countDistinct(col("o_custkey")).as("cust_ndv"))
-        serveView(s.read.parquet(latestPruned(s, store)))
-          .join(exact, Seq("month", "status"))
-          .select(col("month"), col("status"), col("n"), col("revenue"),
-            col("avg_price"), col("cust_ndv"),
-            (abs(col("cust_ndv_est") - col("cust_ndv")) <=
-              greatest(lit(1.0), col("cust_ndv") * 0.05))
-              .as("ndv_est_ok"))
-          .orderBy(col("month"), col("status"))
+        drain(tableStream(s, d, "orders").filter(col("o_orderkey") % 10 === 0),
+          EachBatch { (batch, batchId) =>
+            val ss = batch.sparkSession
+            val cur = ss.read.parquet(
+              Upsert.versionPathAsOf(ss, store, batchId))
+            mergeStates(cur, revenueState(batch))
+              .write.mode("overwrite").parquet(s"$store/v${batchId + 1}")
+          })
+        serveViewVerified(s.read.parquet(latestPruned(s, store)), orders)
       },
-      Some("""SELECT strftime(o_orderdate, '%Y-%m') AS month,
-              o_orderstatus AS status, count(*) AS n,
-              round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0,
-                2) AS revenue,
-              round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                / (count(*) * 100.0), 2) AS avg_price,
-              count(DISTINCT o_custkey) AS cust_ndv,
-              true AS ndv_est_ok
-              FROM orders
-              GROUP BY 1, 2
-              ORDER BY month, status""")),
+      Some(graft.ops.MaterializedViewOps.RevenueMvSql)),
 
     // ---- streaming QUANTILE view maintenance (q140): q139's fixed-bin
     // histogram state maintained per micro-batch — each arriving orders
@@ -1272,18 +1188,18 @@ object StreamingOps {
       (s, d) => {
         import graft.ops.MaterializedViewOps.{priceHistogramState,
           mergeHistogramStates, serveQuantilesVerified}
-        val store = tempStore("graft_qmvstream_")
+        val store = RunScope.scratch("graft_qmvstream_")
         val orders = graft.schema.Tables.orders(s, d)
         priceHistogramState(orders.filter(col("o_orderkey") % 10 =!= 0))
           .write.mode("overwrite").parquet(s"$store/v0")
-        runForeachBatch(s, d, "orders")(
-            _.filter(col("o_orderkey") % 10 === 0)) { (batch, batchId) =>
-          val ss = batch.sparkSession
-          val cur = ss.read.parquet(
-            Upsert.versionPathAsOf(ss, store, batchId))
-          mergeHistogramStates(cur, priceHistogramState(batch))
-            .write.mode("overwrite").parquet(s"$store/v${batchId + 1}")
-        }
+        drain(tableStream(s, d, "orders").filter(col("o_orderkey") % 10 === 0),
+          EachBatch { (batch, batchId) =>
+            val ss = batch.sparkSession
+            val cur = ss.read.parquet(
+              Upsert.versionPathAsOf(ss, store, batchId))
+            mergeHistogramStates(cur, priceHistogramState(batch))
+              .write.mode("overwrite").parquet(s"$store/v${batchId + 1}")
+          })
         serveQuantilesVerified(
           s.read.parquet(latestPruned(s, store)), orders)
       },
@@ -1306,17 +1222,13 @@ object StreamingOps {
     Q("q134_stream_heavy_hitters",
       (s, d) => {
         import graft.expr.HeavyHitters.{misraGriesSummary, mergeSummaries}
-        val store = tempStore("graft_hh_")
-        def keyed(df: DataFrame) = df.select(
-          when(col("event_id") % 5 === 0, -42L)
-            .when(col("event_id") % 7 === 0, -77L)
-            .when(col("event_id") % 11 === 0, -99L)
-            .otherwise(col("user_id")).as("key"))
+        import graft.ops.Relational.{heavyHitterKeys, recountHeavyHitters}
+        val store = RunScope.scratch("graft_hh_")
         s.range(0).select(col("id").as("key"), col("id").as("cnt"))
           .write.mode("overwrite").parquet(s"$store/v0")
-        runForeachBatch(s, d, "events")(identity) { (batch, batchId) =>
+        drain(tableStream(s, d, "events"), EachBatch { (batch, batchId) =>
           val ss = batch.sparkSession
-          val batchSumm = keyed(batch)
+          val batchSumm = heavyHitterKeys(batch)
             .agg(misraGriesSummary(64)(col("key")).as("s"))
             .select(explode(col("s")).as("e"))
             .select(col("e.key").as("key"), col("e.cnt").as("cnt"))
@@ -1324,27 +1236,11 @@ object StreamingOps {
             Upsert.versionPathAsOf(ss, store, batchId))
           mergeSummaries(cur.unionByName(batchSumm), 64)
             .write.mode("overwrite").parquet(s"$store/v${batchId + 1}")
-        }
-        val cand = s.read.parquet(latestPruned(s, store))
-          .select(col("key"))
-        val static = keyed(graft.schema.Tables.events(s, d))
-        val total = static.agg(count(lit(1)).as("n_total"))
-        static.join(broadcast(cand), Seq("key"), "left_semi")
-          .groupBy(col("key")).agg(count(lit(1)).as("cnt"))
-          .crossJoin(broadcast(total))
-          .filter(col("cnt") * 100L >= col("n_total") * 5L)
-          .select(col("key"), col("cnt"), col("n_total"))
-          .orderBy(col("key"))
+        })
+        recountHeavyHitters(heavyHitterKeys(graft.schema.Tables.events(s, d)),
+          s.read.parquet(latestPruned(s, store)).select(col("key")))
       },
-      Some("""WITH k AS (SELECT CASE WHEN event_id % 5 = 0 THEN -42
-                WHEN event_id % 7 = 0 THEN -77
-                WHEN event_id % 11 = 0 THEN -99
-                ELSE user_id END AS key FROM events),
-              n AS (SELECT count(*) AS n_total FROM k)
-              SELECT key, count(*) AS cnt, n.n_total
-              FROM k, n GROUP BY key, n.n_total
-              HAVING count(*) * 100 >= n.n_total * 5
-              ORDER BY key""")),
+      Some(graft.ops.Relational.HeavyHittersSql)),
 
     // ---- streaming session windows, APPEND mode (q136): q135's
     // `session_window` aggregate running under Structured Streaming state
@@ -1361,12 +1257,12 @@ object StreamingOps {
     // watermark; emitted rows leave state immediately.
     Q("q136_stream_session_window",
       (s, d) => {
-        val out = runToMemory(s, d, "append")(df =>
-          df.withWatermark("ts", "0 seconds")
-            .groupBy(col("user_id"),
-              session_window(col("ts"), "6 hours").as("w"))
-            .agg(count(lit(1)).as("n_events"),
-              round(sum(col("value")), 2).as("sum_value")))
+        val out = memoryTable(tableStream(s, d, "events")
+          .withWatermark("ts", "0 seconds")
+          .groupBy(col("user_id"),
+            session_window(col("ts"), "6 hours").as("w"))
+          .agg(count(lit(1)).as("n_events"),
+            round(sum(col("value")), 2).as("sum_value")), "append")
         out.select(col("user_id"),
             unix_timestamp(col("w.start")).as("session_start"),
             unix_timestamp(col("w.end")).as("session_end"),
@@ -1416,13 +1312,13 @@ object StreamingOps {
           PipelineOps.trainMerges(docs.filter(col("doc_id") < cut), topN = 20)
             .write.mode("overwrite").saveAsTable(table)
         }
-        val store = tempStore("graft_bpe_encode_out")
-        runForeachBatch(s, d, "documents")(_.filter(col("doc_id") >= cut)) {
-          (batch, _) =>
+        val store = RunScope.scratch("graft_bpe_encode_out")
+        drain(tableStream(s, d, "documents").filter(col("doc_id") >= cut),
+          EachBatch { (batch, _) =>
             PipelineOps.encodeWithMerges(batch.select("doc_id", "text"),
                 batch.sparkSession.table(table))
               .write.mode("append").parquet(store)
-        }
+          })
         s.read.parquet(store).orderBy(col("doc_id"))
       },
       Some("""WITH t AS (SELECT doc_id,
@@ -1494,43 +1390,17 @@ object StreamingOps {
             .agg(count(lit(1)).as("cb"))
             .write.mode("overwrite").saveAsTable(table)
         }
-        val store = tempStore("graft_drift_gate_out")
-        runForeachBatch(s, d, "documents")(_.filter(col("doc_id") >= cut)) {
-          (batch, _) =>
+        val store = RunScope.scratch("graft_drift_gate_out")
+        drain(tableStream(s, d, "documents").filter(col("doc_id") >= cut),
+          EachBatch { (batch, _) =>
             PipelineOps.psiReport(batch.sparkSession.table(table),
                 PipelineOps.driftFeatures(
                   batch.select(col("text"), col("lang"))))
               .write.mode("append").parquet(store)
-        }
+          })
         s.read.parquet(store).orderBy(col("feature"))
       },
-      Some("""WITH cut AS (SELECT CAST(floor((max(doc_id) + 1) * 0.8)
-                  AS BIGINT) AS cut FROM documents),
-              feat AS (SELECT doc_id >= cut.cut AS cur,
-                  CAST(least(CAST(floor(
-                    len(regexp_extract_all(lower(text), '[a-z0-9]+')) / 32)
-                    AS BIGINT), 15) AS VARCHAR) AS tok_bin,
-                  lang
-                FROM documents, cut),
-              melted AS (
-                SELECT cur, 'tok_bin' AS feature, tok_bin AS bin FROM feat
-                UNION ALL
-                SELECT cur, 'lang' AS feature, lang AS bin FROM feat),
-              counts AS (SELECT feature, bin,
-                  sum(CASE WHEN cur THEN 0 ELSE 1 END) AS cb,
-                  sum(CASE WHEN cur THEN 1 ELSE 0 END) AS cc
-                FROM melted GROUP BY feature, bin),
-              totals AS (SELECT feature, sum(cb) AS nb, sum(cc) AS nc
-                         FROM counts GROUP BY feature),
-              shares AS (SELECT c.feature,
-                  greatest(c.cb * 1.0 / t.nb, 1e-6) AS p,
-                  greatest(c.cc * 1.0 / t.nc, 1e-6) AS q
-                FROM counts c JOIN totals t ON c.feature = t.feature)
-              SELECT feature, count(*) AS n_bins,
-                floor(sum((q - p) * ln(q / p)) * 10000) / 10000 AS psi,
-                floor(sum((q - p) * ln(q / p)) * 10000) / 10000 > 0.2
-                  AS drifted
-              FROM shares GROUP BY feature ORDER BY feature""")),
+      Some(graft.ops.PipelineOps.DriftPsiSql)),
 
     // ---- streaming winsorization gate (q157): q156 ON A STREAM — the
     // telemetry-cleaning member of the build-once / serve-streaming
@@ -1563,14 +1433,15 @@ object StreamingOps {
               .select(col("event_type"), col("value")))
             .write.mode("overwrite").saveAsTable(table)
         }
-        val store = tempStore("graft_winsor_gate_out")
-        runForeachBatch(s, d, "events")(df =>
-          df.filter(col("value").isNotNull && col("event_id") >= cut)
-            .select(col("event_type"), col("value"))) { (batch, _) =>
-          EventOps.winsorClamp(batch, batch.sparkSession.table(table))
-            .write.mode("append").parquet(store)
-          ()
-        }
+        val store = RunScope.scratch("graft_winsor_gate_out")
+        drain(tableStream(s, d, "events")
+            .filter(col("value").isNotNull && col("event_id") >= cut)
+            .select(col("event_type"), col("value")),
+          EachBatch { (batch, _) =>
+            EventOps.winsorClamp(batch, batch.sparkSession.table(table))
+              .write.mode("append").parquet(store)
+            ()
+          })
         EventOps.winsorAgg(s.read.parquet(store))
           .orderBy(col("event_type"))
       },
@@ -1636,23 +1507,16 @@ object StreamingOps {
         // build-once memo (round 18): frozen snapshot baseline, read-only
         graft.ops.ArtifactCache.once(table, graft.schema.Cuts.artifactTag(d, "events", "cutv|zscore-baseline")) {
           graft.schema.Tables.resetManagedTable(s, table)
-          ev.filter(col("event_id") < cut)
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
-              sum(col("c") * col("c")).as("sq"))
-            .select(col("event_type"),
-              (col("s").cast("double") / col("n")).as("mean_c"),
-              sqrt((col("sq").cast("double") / col("n")) -
-                (col("s").cast("double") / col("n")) *
-                (col("s").cast("double") / col("n"))).as("std_c"))
+          graft.ops.EventOps.centsMoments(ev.filter(col("event_id") < cut))
+            .drop("n")
             .write.mode("overwrite").saveAsTable(table)
         }
-        val store = tempStore("graft_zscore_gate_out")
-        runForeachBatch(s, d, "events")(df =>
-          df.filter(col("value").isNotNull && col("event_id") >= cut)
+        val store = RunScope.scratch("graft_zscore_gate_out")
+        drain(tableStream(s, d, "events")
+            .filter(col("value").isNotNull && col("event_id") >= cut)
             .select(col("event_type"),
-              expr("CAST(round(value * 100) AS BIGINT)").as("c"))) {
-          (batch, _) =>
+              expr("CAST(round(value * 100) AS BIGINT)").as("c")),
+          EachBatch { (batch, _) =>
             batch.join(broadcast(batch.sparkSession.table(table)),
                 Seq("event_type"))
               .withColumn("flagged",
@@ -1660,7 +1524,7 @@ object StreamingOps {
               .select(col("event_type"), col("flagged"))
               .write.mode("append").parquet(store)
             ()
-        }
+          })
         s.read.parquet(store)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_arrivals"),
@@ -1704,40 +1568,22 @@ object StreamingOps {
     Q("q176_stream_attribution",
       (s, d) => {
         import s.implicits._
-        val credited = runToMemory(s, d, "append") { df =>
-          // untouched ts carries the watermark the TTL needs (see q163)
-          attributeTouches(
-            df.withWatermark("ts", "0 seconds")
-              .select(col("user_id").as("uid"), col("event_type").as("et"),
-                col("ts"), col("event_id"),
-                expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-              .as[(Long, String, java.sql.Timestamp, Long, java.lang.Long)],
-            windowSec = 7 * 86400.0, ttlSec = 7 * 86400.0)
-            .toDF("channel", "cents")
-        }
+        // untouched ts carries the watermark the TTL needs (see q163)
+        val credited = memoryTable(attributeTouches(
+          tableStream(s, d, "events").withWatermark("ts", "0 seconds")
+            .select(col("user_id").as("uid"), col("event_type").as("et"),
+              col("ts"), col("event_id"),
+              expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+            .as[(Long, String, java.sql.Timestamp, Long, java.lang.Long)],
+          windowSec = 7 * 86400.0, ttlSec = 7 * 86400.0)
+          .toDF("channel", "cents"), "append")
         credited.groupBy(col("channel"))
           .agg(count(lit(1)).as("n_purchases"),
             sum(col("cents")).as("revenue_cents"))
           .orderBy(col("channel"))
       },
       // q175's oracle verbatim: one attribution rule, two engine paths
-      Some("""WITH x AS (SELECT user_id, event_id, ts, event_type, value,
-                last_value(CASE WHEN event_type IN ('click', 'view')
-                  THEN event_type END IGNORE NULLS) OVER w AS t_type,
-                last_value(CASE WHEN event_type IN ('click', 'view')
-                  THEN ts END IGNORE NULLS) OVER w AS t_ts
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-              p AS (SELECT
-                CASE WHEN t_ts IS NOT NULL
-                    AND epoch(ts) - epoch(t_ts) <= 7 * 86400.0
-                  THEN t_type ELSE 'direct' END AS channel,
-                CAST(round(value * 100) AS BIGINT) AS cents
-                FROM x WHERE event_type = 'purchase')
-              SELECT channel, count(*) AS n_purchases,
-                CAST(sum(cents) AS BIGINT) AS revenue_cents
-              FROM p GROUP BY 1 ORDER BY 1""")),
+      Some(graft.ops.EventOps.AttributionSql)),
 
     // ---- streaming SCD2 maintenance (q170): q168 ON A STREAM — the
     // dimension-history keeper a live warehouse actually runs: change
@@ -1753,7 +1599,7 @@ object StreamingOps {
     Q("q170_scd2_stream",
       (s, d) => {
         val w = Window.partitionBy(col("key")).orderBy(col("ef"))
-        val store = tempStore("graft_scd2_store")
+        val store = RunScope.scratch("graft_scd2_store")
         // v0: the base 1990 segments only (the pre-stream world)
         graft.schema.Tables.customer(s, d)
           .select(col("c_custkey").as("key"),
@@ -1771,48 +1617,37 @@ object StreamingOps {
           Iterator.from(0).takeWhile(exists).length - 1
         // the change feed, synthesized from the customer stream
         // (q168's deterministic derivation: %4 → 1997, %8 → 1999)
-        runForeachBatch(s, d, "customer")(df =>
-          df.filter(col("c_custkey") % 4 === 0)
+        val cust = tableStream(s, d, "customer")
+        drain(cust.filter(col("c_custkey") % 4 === 0)
             .select(col("c_custkey").as("key"),
               concat(col("c_mktsegment"), lit("_V2")).as("segment"),
               lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00"))
                 .as("ef"))
-            .unionByName(df.filter(col("c_custkey") % 8 === 0)
+            .unionByName(cust.filter(col("c_custkey") % 8 === 0)
               .select(col("c_custkey").as("key"),
                 concat(col("c_mktsegment"), lit("_V3")).as("segment"),
                 lit(java.sql.Timestamp.valueOf("1999-06-01 00:00:00"))
-                  .as("ef")))) { (batch, batchId) =>
-          val ss = batch.sparkSession
-          val hist = ss.read.parquet(
-            s"$store/v${newestUpTo(batchId.toInt)}")
-          val keys = batch.select(col("key")).distinct()
-          val touched = hist.join(broadcast(keys), Seq("key"))
-            .unionByName(batch)
-            .withColumn("prev", lag(col("segment"), 1).over(w))
-            .filter(col("prev").isNull || col("prev") =!= col("segment"))
-            .drop("prev")
-          val untouched = hist.join(broadcast(keys), Seq("key"),
-            "left_anti")
-          untouched.unionByName(touched)
-            .write.mode("overwrite").parquet(s"$store/v${batchId.toInt + 1}")
-          ()
-        }
-        s.read.parquet(s"$store/v${newest()}")
-          .select(col("key"), col("segment"),
-            date_format(col("ef"), "yyyy-MM-dd").as("valid_from"),
-            date_format(lead(col("ef"), 1).over(w), "yyyy-MM-dd")
-              .as("valid_to"),
-            lead(col("ef"), 1).over(w).isNull.as("is_current"))
-          .orderBy(col("key"), col("valid_from"))
+                  .as("ef"))),
+          EachBatch { (batch, batchId) =>
+            val ss = batch.sparkSession
+            val hist = ss.read.parquet(
+              s"$store/v${newestUpTo(batchId.toInt)}")
+            val keys = batch.select(col("key")).distinct()
+            val touched = hist.join(broadcast(keys), Seq("key"))
+              .unionByName(batch)
+              .withColumn("prev", lag(col("segment"), 1).over(w))
+              .filter(col("prev").isNull || col("prev") =!= col("segment"))
+              .drop("prev")
+            val untouched = hist.join(broadcast(keys), Seq("key"),
+              "left_anti")
+            untouched.unionByName(touched)
+              .write.mode("overwrite").parquet(s"$store/v${batchId.toInt + 1}")
+            ()
+          })
+        PipelineOps.scd2Intervals(s.read.parquet(s"$store/v${newest()}"))
       },
-      // q168's oracle verbatim: streamed history ≡ batch SCD2 build
-      Some(PipelineOps.Scd2Sql +
-        """SELECT key, segment, strftime(ef, '%Y-%m-%d') AS valid_from,
-              strftime(lead(ef) OVER (PARTITION BY key ORDER BY ef),
-                '%Y-%m-%d') AS valid_to,
-              lead(ef) OVER (PARTITION BY key ORDER BY ef) IS NULL
-                AS is_current
-           FROM kept ORDER BY key, valid_from""")),
+      // q168's oracle: streamed history ≡ batch SCD2 build
+      Some(PipelineOps.Scd2HistorySql)),
 
     // ---- streaming ER gate (q164): the entity-resolution triangle's
     // SERVE member (build q159 / maintain q160 / serve here — the q34b/
@@ -1838,21 +1673,21 @@ object StreamingOps {
           PipelineOps.erKeyed(base).write.mode("overwrite")
             .saveAsTable(table)
         }
-        val store = tempStore("graft_er_gate_out")
-        runForeachBatch(s, d, "customer")(df =>
-          df.filter(col("c_custkey") % 5 === 0)
+        val store = RunScope.scratch("graft_er_gate_out")
+        drain(tableStream(s, d, "customer").filter(col("c_custkey") % 5 === 0)
             .select((col("c_custkey") + 10000000L).as("id"),
               col("c_nationkey").as("nk"),
               expr("""substr(c_name, 1,
                         CAST(c_custkey % 8 + 10 AS INT) - 1) ||
                       substr(c_name,
                         CAST(c_custkey % 8 + 10 AS INT) + 1)""")
-                .as("name"))) { (batch, _) =>
-          PipelineOps.erMatches(batch.sparkSession.table(table),
-              PipelineOps.erKeyed(batch))
-            .write.mode("append").parquet(store)
-          ()
-        }
+                .as("name")),
+          EachBatch { (batch, _) =>
+            PipelineOps.erMatches(batch.sparkSession.table(table),
+                PipelineOps.erKeyed(batch))
+              .write.mode("append").parquet(store)
+            ()
+          })
         s.read.parquet(store).orderBy(col("id_a"), col("id_b"))
       },
       Some("""WITH base AS (SELECT c_custkey AS id, c_nationkey AS nk,
@@ -1894,18 +1729,16 @@ object StreamingOps {
       (s, d) => {
         import s.implicits._
         val gapSec = 3600.0
-        val kept = runToMemory(s, d, "append") { df =>
-          // the untouched ts column carries the event-time watermark the
-          // TTL's EventTimeTimeout requires (a cast would strip the
-          // watermark metadata)
-          debounceLanes(
-            df.withWatermark("ts", "0 seconds")
-              .select(col("user_id").as("uid"), col("event_type").as("et"),
-                col("ts"), col("event_id"))
-              .as[(Long, String, java.sql.Timestamp, Long)],
-            gapSec = gapSec, ttlSec = 30 * 86400.0)
-            .toDF("event_type", "event_id")
-        }
+        // the untouched ts column carries the event-time watermark the
+        // TTL's EventTimeTimeout requires (a cast would strip the
+        // watermark metadata)
+        val kept = memoryTable(debounceLanes(
+          tableStream(s, d, "events").withWatermark("ts", "0 seconds")
+            .select(col("user_id").as("uid"), col("event_type").as("et"),
+              col("ts"), col("event_id"))
+            .as[(Long, String, java.sql.Timestamp, Long)],
+          gapSec = gapSec, ttlSec = 30 * 86400.0)
+          .toDF("event_type", "event_id"), "append")
         val keptCounts = kept.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_kept"))
         graft.schema.Tables.events(s, d)
@@ -1919,21 +1752,7 @@ object StreamingOps {
           .orderBy(col("event_type"))
       },
       // q162's oracle verbatim: one debounce rule, two engine paths
-      Some("""WITH x AS (SELECT event_type,
-                epoch(ts) - epoch(lag(ts) OVER (
-                  PARTITION BY user_id, event_type
-                  ORDER BY ts, event_id)) AS gap
-              FROM events),
-              k AS (SELECT event_type,
-                (gap IS NULL OR gap > 3600.0) AS keep FROM x)
-              SELECT event_type, count(*) AS n_events,
-                CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_kept,
-                CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT)
-                  AS n_dropped,
-                floor(sum(CASE WHEN keep THEN 0 ELSE 1 END) * 1.0
-                  / count(*) * 10000) / 10000 AS drop_share
-              FROM k GROUP BY 1 ORDER BY 1""")),
+      Some(graft.ops.EventOps.DebounceSql)),
 
     // ---- streaming SEMANTIC decontamination (q145): q141 ON A STREAM —
     // arriving training vectors are scored against the static benchmark
@@ -1951,12 +1770,12 @@ object StreamingOps {
         import graft.ops.VectorOps
         val bench = graft.schema.Tables.embeddings(s, d)
           .filter(col("vec_id") < 10)
-        val store = tempStore("graft_semdecontam_gate_out")
-        runForeachBatch(s, d, "embeddings")(
-          _.filter(col("vec_id") >= 10)) { (batch, _) =>
-          VectorOps.semanticDecontam(batch, bench, tau = 0.4)
-            .write.mode("append").parquet(store)
-        }
+        val store = RunScope.scratch("graft_semdecontam_gate_out")
+        drain(tableStream(s, d, "embeddings").filter(col("vec_id") >= 10),
+          EachBatch { (batch, _) =>
+            VectorOps.semanticDecontam(batch, bench, tau = 0.4)
+              .write.mode("append").parquet(store)
+          })
         s.read.parquet(store).orderBy(col("vec_id"))
       },
       Some(graft.ops.VectorOps.SemanticDecontamSql)),
@@ -1983,22 +1802,22 @@ object StreamingOps {
         // the SHARED snapshot index + labels (ArtifactCache): q144 builds
         // the same two artifacts; whichever runs first this JVM pays them
         val table = TextOps.SnapshotLshTable
-        val labelStore = tempStore("graft_cluster_labels")
-        val bandStore = tempStore("graft_cluster_bands")
+        val labelStore = RunScope.scratch("graft_cluster_labels")
+        val bandStore = RunScope.scratch("graft_cluster_bands")
         PipelineOps.buildClusterSnapshotStore(s,
           docs.filter(col("doc_id") < cut),
           dfCap = 16, table, labelStore,
           jaccardThreshold = 0.5, indexTag = TextOps.snapshotLshTag(d),
           labelsTag = TextOps.snapshotLshTag(d).map(t => s"$t|j0.5"))
-        runForeachBatch(s, d, "documents")(_.filter(col("doc_id") >= cut)) {
-          (batch, batchId) =>
+        drain(tableStream(s, d, "documents").filter(col("doc_id") >= cut),
+          EachBatch { (batch, batchId) =>
             PipelineOps.foldBatchIntoClusterStore(batch.sparkSession,
               batch.repartition(
                 graft.schema.Tables.minSplits(batch.sparkSession),
                 col("doc_id")),
               allText, table, bandStore, labelStore, batchId,
               jaccardThreshold = 0.5)
-        }
+          })
         s.read.parquet(latestPruned(s, labelStore))
           .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
           .orderBy(col("cluster_id"))
@@ -2026,13 +1845,13 @@ object StreamingOps {
         import graft.ops.GraphOps
         val cut = graft.schema.Cuts.lineitem(s, d)
         GraphOps.writeEdgeSnapshot(s, d)
-        val store = tempStore("graft_pagerank_gate_out")
-        runForeachBatch(s, d, "lineitem")(
-          _.filter(col("l_orderkey") >= cut)) { (batch, batchId) =>
-          graft.ops.SlotStore.writeSlot(
-            batch.select(col("l_orderkey"), col("l_partkey")).distinct(),
-            store, batchId)
-        }
+        val store = RunScope.scratch("graft_pagerank_gate_out")
+        drain(tableStream(s, d, "lineitem").filter(col("l_orderkey") >= cut),
+          EachBatch { (batch, batchId) =>
+            graft.ops.SlotStore.writeSlot(
+              batch.select(col("l_orderkey"), col("l_partkey")).distinct(),
+              store, batchId)
+          })
         val incEdges = graft.ops.SlotStore.read(s, store)
           .map(slots => GraphOps.coPurchaseEdges(
             slots.dropDuplicates("l_orderkey", "l_partkey")))
@@ -2071,35 +1890,20 @@ object StreamingOps {
     // rule, and the one that proves compaction+replay end-to-end).
     Q("q212_stream_bm25_compacted",
       (s, d) => {
-        import graft.ops.{RetrievalOps, RunScope, SlotStore}
+        import graft.ops.{RetrievalOps, SlotStore}
         val docs = graft.schema.Tables.documents(s, d)
         val cut = graft.schema.Cuts.documents(s, d)
         val table = RetrievalOps.Bm25PostingsTable
         RetrievalOps.writeBm25SnapshotIndex(s,
           docs.filter(col("doc_id") < cut), table, RetrievalOps.bm25Tag(d))
         val inc = docs.filter(col("doc_id") >= cut)
-        val staged = tempStore("graft_bm25_fold_staged")
+        val staged = RunScope.scratch("graft_bm25_fold_staged")
         inc.repartition(7, col("doc_id"))
           .write.mode("overwrite").parquet(staged)
-        val store = tempStore("graft_bm25_fold_stream")
-        val ckpt = RunScope.scratch("graft_ckpt_fold")
-        val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-        try {
-          val q = s.readStream
-            .schema(s.read.parquet(staged).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              RunScope.batch(RetrievalOps.appendBm25Delta(batch, store,
-                batchId, threshold = 2))
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        val store = RunScope.scratch("graft_bm25_fold_stream")
+        drain(stagedStream(s, staged), EachBatch { (batch, batchId) =>
+          RetrievalOps.appendBm25Delta(batch, store, batchId, threshold = 2)
+        })
         // the in-leg proof that the mechanism under test actually ran —
         // without it a regression to never-folding would still pass
         // (round 19: postings + moments share one kind-tagged slot root,
@@ -2124,47 +1928,6 @@ object StreamingOps {
       },
       Some(graft.ops.RetrievalOps.Bm25Sql))
   )
-
-  /** q66's batch-side rollup over the sinked match stream. */
-  private def matchesTail(matches: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    matches.groupBy(col("doc_id"), col("n_sh"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") / col("n_sh") >= 0.5)
-      .select(col("doc_id"), col("n_sh"), col("n_shared"),
-        round(col("n_shared") / col("n_sh"), 4).as("overlap"))
-      .orderBy(col("doc_id"))
-
-  /** Run a streaming transform of the DOCUMENTS table to completion
-    * (AvailableNow) into a memory sink — the text-pipeline twin of
-    * [[runToMemory]] (no event-time column, so no nanos conversion and,
-    * for the stateless ops this serves, no shuffle-partition override).
-    *
-    * The per-batch repartition is the STREAMING face of the
-    * `Tables.fanOut` under-split guard: the file source inherits the
-    * arriving shard's split count, and a single-file test corpus batches
-    * as ONE task, serializing every downstream tokenize/shingle chain
-    * (measured: q66 25 s single-task vs ~2 s fanned at sf0.1). At real
-    * scale arriving shards are many files and the exchange moves one
-    * micro-batch of raw text — bounded by arrival rate, not corpus
-    * size. */
-  private def runDocsToMemory(s: SparkSession, d: String,
-      outputMode: String)(transform: DataFrame => DataFrame): DataFrame = {
-    val name = s"graft_stream_${runSeq.incrementAndGet()}"
-    val ckpt = graft.ops.RunScope.scratch("graft_ckpt_mem")
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-      .repartition(graft.schema.Tables.minSplits(s), col("doc_id"))
-    val q = transform(stream).writeStream
-      .format("memory").queryName(name)
-      .outputMode(outputMode)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-  }
 }
 
 /** Explicit per-user state carried across micro-batches. */

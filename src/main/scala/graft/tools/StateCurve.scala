@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,33 +29,11 @@ object StateCurve {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    // the catalog's streaming source shape (runToMemory's dispatch): the
-    // generator emits micros TIMESTAMP_NTZ or long nanos depending on
-    // round — mirror Tables.events' handling
-    def eventStream(d: String): DataFrame = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = spark.read.parquet(s"$d/events.parquet").schema
-      val raw = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-      schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-        case _ => raw
-      }
-    }
-
+    // drains on the catalog's streaming source and driver, as q163 and
+    // q176 run, then reads the state operator from the query's progress
     def stateOf(name: String, transformed: DataFrame): (Long, Long) =
         graft.ops.RunScope.keyed(s"StateCurve.$name") {
-      val ckpt = graft.ops.RunScope.scratch(s"graft_statecurve_$name")
-      val q = transformed.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val q = StreamingOps.drain(transformed, StreamingOps.Memory("append"))
       val ops = q.recentProgress.reverse
         .find(_.stateOperators.nonEmpty).map(_.stateOperators(0))
       // fail loudly, never fabricate: a missing state operator (plan
@@ -79,36 +58,34 @@ object StateCurve {
       // q163's lanes: distinct (user, type)
       val lanesDeb = ev.select(col("user_id"), col("event_type"))
         .distinct().count()
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val (rowsDeb, bytesDeb) = stateOf(s"sc_deb_${sf.replace('.', '_')}",
-          graft.streaming.StreamingOps.debounceLanes(
-            eventStream(d).withWatermark("ts", "0 seconds")
-              .select(col("user_id").as("uid"), col("event_type").as("et"),
-                col("ts"), col("event_id"))
-              .as[(Long, String, java.sql.Timestamp, Long)],
-            gapSec = 3600.0, ttlSec = 30 * 86400.0)
-            .toDF("event_type", "event_id"))
-        println(f"${"debounce"}%-12s $sf%-8s $lanesDeb%9d $rowsDeb%10d " +
-          f"${bytesDeb / 1024.0}%9.1f ${bytesDeb * 1.0 / rowsDeb}%7.1f")
+      val (rowsDeb, bytesDeb) = stateOf(s"sc_deb_${sf.replace('.', '_')}",
+        StreamingOps.debounceLanes(
+          StreamingOps.tableStream(spark, d, "events")
+            .withWatermark("ts", "0 seconds")
+            .select(col("user_id").as("uid"), col("event_type").as("et"),
+              col("ts"), col("event_id"))
+            .as[(Long, String, java.sql.Timestamp, Long)],
+          gapSec = 3600.0, ttlSec = 30 * 86400.0)
+          .toDF("event_type", "event_id"))
+      println(f"${"debounce"}%-12s $sf%-8s $lanesDeb%9d $rowsDeb%10d " +
+        f"${bytesDeb / 1024.0}%9.1f ${bytesDeb * 1.0 / rowsDeb}%7.1f")
 
-        // q176's lanes: users with >= 1 touch (click/view)
-        val lanesAtt = ev.filter(col("event_type").isin("click", "view"))
-          .select(col("user_id")).distinct().count()
-        val (rowsAtt, bytesAtt) = stateOf(s"sc_att_${sf.replace('.', '_')}",
-          graft.streaming.StreamingOps.attributeTouches(
-            eventStream(d).withWatermark("ts", "0 seconds")
-              .select(col("user_id").as("uid"), col("event_type").as("et"),
-                col("ts"), col("event_id"),
-                expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-              .as[(Long, String, java.sql.Timestamp, Long,
-                java.lang.Long)],
-            windowSec = 7 * 86400.0, ttlSec = 7 * 86400.0)
-            .toDF("channel", "cents"))
-        println(f"${"attribution"}%-12s $sf%-8s $lanesAtt%9d $rowsAtt%10d " +
-          f"${bytesAtt / 1024.0}%9.1f ${bytesAtt * 1.0 / rowsAtt}%7.1f")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      // q176's lanes: users with >= 1 touch (click/view)
+      val lanesAtt = ev.filter(col("event_type").isin("click", "view"))
+        .select(col("user_id")).distinct().count()
+      val (rowsAtt, bytesAtt) = stateOf(s"sc_att_${sf.replace('.', '_')}",
+        StreamingOps.attributeTouches(
+          StreamingOps.tableStream(spark, d, "events")
+            .withWatermark("ts", "0 seconds")
+            .select(col("user_id").as("uid"), col("event_type").as("et"),
+              col("ts"), col("event_id"),
+              expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+            .as[(Long, String, java.sql.Timestamp, Long,
+              java.lang.Long)],
+          windowSec = 7 * 86400.0, ttlSec = 7 * 86400.0)
+          .toDF("channel", "cents"))
+      println(f"${"attribution"}%-12s $sf%-8s $lanesAtt%9d $rowsAtt%10d " +
+        f"${bytesAtt / 1024.0}%9.1f ${bytesAtt * 1.0 / rowsAtt}%7.1f")
     }
     spark.stop()
   }

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps one session factory, one listener meter and one residency
-  * mechanism: a session builder, listener subclass, local checkpoint or
-  * temp-dir creation anywhere else under src/main fails the build, so
-  * the per-tool copies cannot grow back. Session-free source scan, like
+/** Keeps one session factory, one listener meter, one residency
+  * mechanism and one streaming driver: a session builder, listener
+  * subclass, local checkpoint, temp-dir creation or stream source/sink
+  * anywhere else under src/main fails the build, so the per-tool copies
+  * cannot grow back. Session-free source scan, like
   * CatalogIndexSpec's.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -40,5 +41,14 @@ class SourceGuardSpec extends AnyFunSuite {
       .filter(_.startsWith("src/main")) === runScope)
     assert(filesMatching("""createTempDirectory""")
       .filter(_.startsWith("src/main")) === runScope)
+  }
+
+  test("one streaming driver (StreamingOps.drain): every stream under " +
+      "src/main is read and started in StreamingOps") {
+    val streamingOps = Seq("src/main/scala/graft/streaming/StreamingOps.scala")
+    assert(filesMatching("""\breadStream\b""")
+      .filter(_.startsWith("src/main")) === streamingOps)
+    assert(filesMatching("""\bwriteStream\b""")
+      .filter(_.startsWith("src/main")) === streamingOps)
   }
 }
