@@ -142,13 +142,16 @@ private[graft] object Argon2 {
     g(i2, i7, i8, i13); g(i3, i4, i9, i14)
   }
 
-  /** next = G(prev, ref) [^ next if withXor] — RFC 9106 §3.5 compression. */
-  private def fillBlock(prev: Array[Long], ref: Array[Long],
-      next: Array[Long], withXor: Boolean): Unit = {
-    val r = new Array[Long](QwordsInBlock)
-    val z = new Array[Long](QwordsInBlock)
+  /** next = G(prev, ref) [^ next if withXor] — RFC 9106 §3.5 compression
+    * over blocks at qword offsets of flat arrays. `r` and `z` are the
+    * caller's scratch blocks, reused across calls. */
+  private def fillBlock(prev: Array[Long], prevOff: Int, ref: Array[Long],
+      refOff: Int, next: Array[Long], nextOff: Int, withXor: Boolean,
+      r: Array[Long], z: Array[Long]): Unit = {
     var i = 0
-    while (i < QwordsInBlock) { r(i) = prev(i) ^ ref(i); z(i) = r(i); i += 1 }
+    while (i < QwordsInBlock) {
+      r(i) = prev(prevOff + i) ^ ref(refOff + i); z(i) = r(i); i += 1
+    }
     i = 0
     while (i < 8) { // rows: qwords [16i, 16i+15]
       val b = 16 * i
@@ -164,10 +167,11 @@ private[graft] object Argon2 {
       i += 1
     }
     i = 0
-    while (i < QwordsInBlock) {
-      val x = r(i) ^ z(i)
-      next(i) = if (withXor) next(i) ^ x else x
-      i += 1
+    if (withXor) while (i < QwordsInBlock) {
+      next(nextOff + i) ^= r(i) ^ z(i); i += 1
+    }
+    else while (i < QwordsInBlock) {
+      next(nextOff + i) = r(i) ^ z(i); i += 1
     }
   }
 
@@ -207,17 +211,17 @@ private[graft] object Argon2 {
     out
   }
 
-  private def bytesToBlock(bytes: Array[Byte]): Array[Long] = {
-    val b = new Array[Long](QwordsInBlock)
+  /** Little-endian qwords of a 1024-byte block into `mem` at `off`. */
+  private def bytesToBlock(bytes: Array[Byte], mem: Array[Long], off: Int)
+      : Unit = {
     var i = 0
     while (i < QwordsInBlock) {
       var w = 0L
       var j = 7
       while (j >= 0) { w = (w << 8) | (bytes(8 * i + j) & 0xffL); j -= 1 }
-      b(i) = w
+      mem(off + i) = w
       i += 1
     }
-    b
   }
 
   /** Raw Argon2 tag (RFC 9106 §3). `mKib` is memory in KiB; `t` passes;
@@ -239,18 +243,26 @@ private[graft] object Argon2 {
     val mPrime = 4 * p * (mKib / (4 * p))
     val laneLen = mPrime / p
     val segLen = laneLen / SyncPoints
-    // B[lane][index] as flat array of 1024-byte blocks
-    val memory = new Array[Array[Long]](mPrime)
+    // B[lane][index] as one flat array: block k is qwords [128k, 128k+127]
+    val memory = new Array[Long](mPrime * QwordsInBlock)
+    def at(block: Int): Int = block * QwordsInBlock
     var lane = 0
     while (lane < p) {
-      memory(lane * laneLen) = bytesToBlock(hPrime(1024, h0 ++ le32(0) ++ le32(lane)))
-      memory(lane * laneLen + 1) = bytesToBlock(hPrime(1024, h0 ++ le32(1) ++ le32(lane)))
-      var j = 2
-      while (j < laneLen) { memory(lane * laneLen + j) = new Array[Long](QwordsInBlock); j += 1 }
+      bytesToBlock(hPrime(1024, h0 ++ le32(0) ++ le32(lane)), memory,
+        at(lane * laneLen))
+      bytesToBlock(hPrime(1024, h0 ++ le32(1) ++ le32(lane)), memory,
+        at(lane * laneLen + 1))
       lane += 1
     }
 
+    // per-hash scratch: the compression's two working blocks and the
+    // data-independent addressing's input, address and temporary blocks
+    val r = new Array[Long](QwordsInBlock)
+    val z = new Array[Long](QwordsInBlock)
     val zeroBlock = new Array[Long](QwordsInBlock)
+    val inputBlock = new Array[Long](QwordsInBlock)
+    val addressBlock = new Array[Long](QwordsInBlock)
+    val tmpBlock = new Array[Long](QwordsInBlock)
     var pass = 0
     while (pass < t) {
       var slice = 0
@@ -261,10 +273,8 @@ private[graft] object Argon2 {
           // the first two slices of the first pass, data-dependent after
           val dataIndependent = ty == TypeI ||
             (ty == TypeId && pass == 0 && slice < 2)
-          val inputBlock = new Array[Long](QwordsInBlock)
-          val addressBlock = new Array[Long](QwordsInBlock)
-          val tmpBlock = new Array[Long](QwordsInBlock)
           if (dataIndependent) {
+            java.util.Arrays.fill(inputBlock, 0L)
             inputBlock(0) = pass.toLong
             inputBlock(1) = lane.toLong
             inputBlock(2) = slice.toLong
@@ -274,8 +284,10 @@ private[graft] object Argon2 {
           }
           def nextAddresses(): Unit = {
             inputBlock(6) += 1
-            fillBlock(zeroBlock, inputBlock, tmpBlock, withXor = false)
-            fillBlock(zeroBlock, tmpBlock, addressBlock, withXor = false)
+            fillBlock(zeroBlock, 0, inputBlock, 0, tmpBlock, 0,
+              withXor = false, r, z)
+            fillBlock(zeroBlock, 0, tmpBlock, 0, addressBlock, 0,
+              withXor = false, r, z)
           }
           var idx = 0
           if (pass == 0 && slice == 0) {
@@ -291,7 +303,7 @@ private[graft] object Argon2 {
             val prev = lane * laneLen + (if (j == 0) laneLen - 1 else j - 1)
             val pseudoRand =
               if (dataIndependent) addressBlock(idx % QwordsInBlock)
-              else memory(prev)(0)
+              else memory(at(prev))
             val j1 = pseudoRand & 0xffffffffL
             val refLane =
               if (pass == 0 && slice == 0) lane
@@ -319,8 +331,8 @@ private[graft] object Argon2 {
               else (slice + 1).toLong * segLen
             val refIdx = ((startPos + relPos) % laneLen).toInt
             val cur = lane * laneLen + j
-            fillBlock(memory(prev), memory(refLane * laneLen + refIdx),
-              memory(cur), withXor = pass > 0) // v1.3: XOR on later passes
+            fillBlock(memory, at(prev), memory, at(refLane * laneLen + refIdx),
+              memory, at(cur), withXor = pass > 0, r, z) // v1.3: XOR later
             idx += 1
           }
           lane += 1
@@ -331,12 +343,12 @@ private[graft] object Argon2 {
     }
 
     // final block C = XOR of all lanes' last blocks; tag = H'(tagLen, C)
-    val c = memory(laneLen - 1).clone()
+    val c = java.util.Arrays.copyOfRange(memory, at(laneLen - 1), at(laneLen))
     lane = 1
     while (lane < p) {
-      val last = memory(lane * laneLen + laneLen - 1)
+      val last = at(lane * laneLen + laneLen - 1)
       var i = 0
-      while (i < QwordsInBlock) { c(i) ^= last(i); i += 1 }
+      while (i < QwordsInBlock) { c(i) ^= memory(last + i); i += 1 }
       lane += 1
     }
     hPrime(tagLen, blockToBytes(c))

@@ -137,15 +137,10 @@ object Crypto {
   /** Column-level Fernet encrypt — nondeterministic (random IV + clock),
     * same flagging rationale as [[encrypt]]. */
   def fernetEncrypt(c: Column, key: String): Column = {
-    val rng = new SecureRandom()
     val f = udf { (s: String) =>
       if (s == null) null
-      else {
-        val iv = new Array[Byte](16)
-        rng.synchronized(rng.nextBytes(iv))
-        fernetEncryptAt(s.getBytes(StandardCharsets.UTF_8), key,
-          System.currentTimeMillis() / 1000, iv)
-      }
+      else fernetEncryptAt(s.getBytes(StandardCharsets.UTF_8), key,
+        System.currentTimeMillis() / 1000, CryptoRuntime.randomBytes(16))
     }.asNondeterministic()
     f(c)
   }
@@ -181,14 +176,10 @@ object Crypto {
   /** Salted+peppered Argon2id password hash as a nondeterministic UDF. */
   def hashPassword(c: Column, pepper: String, timeCost: Int = 3,
       memoryKib: Int = 65536): Column = {
-    val rng = new SecureRandom()
     val f = udf { (pw: String) =>
       if (pw == null) null
-      else {
-        val salt = new Array[Byte](16)
-        rng.synchronized(rng.nextBytes(salt))
-        argon2idHash(pw, pepper, timeCost, memoryKib, salt)
-      }
+      else argon2idHash(pw, pepper, timeCost, memoryKib,
+        CryptoRuntime.randomBytes(16))
     }.asNondeterministic()
     f(c)
   }
@@ -248,10 +239,24 @@ case class HmacSha256Hex(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Static runtime for codegen'd calls. Mac instances are cached per thread
-  * per key (Mac is not thread-safe; init dominates cost otherwise).
+/** Static runtime for codegen'd calls and UDF bodies. Mac instances are
+  * cached per thread per key (Mac is not thread-safe; init dominates cost
+  * otherwise).
   */
 object CryptoRuntime {
+  /** The one source of salts and IVs in this JVM. A UDF closure must not
+    * capture its own generator: Spark serializes the closure into every
+    * task, and a deserialized copy of a seeded generator (`SHA1PRNG`)
+    * repeats the stream of every other copy. */
+  private val random = new SecureRandom()
+
+  /** `n` fresh random bytes (SecureRandom is safe across threads). */
+  def randomBytes(n: Int): Array[Byte] = {
+    val b = new Array[Byte](n)
+    random.nextBytes(b)
+    b
+  }
+
   private val macs = new ThreadLocal[java.util.HashMap[String, Mac]] {
     override def initialValue() = new java.util.HashMap[String, Mac]()
   }

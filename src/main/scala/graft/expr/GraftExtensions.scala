@@ -48,15 +48,11 @@ object GraftExtensions {
     */
   def registerUdfs(spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.functions.udf
-    val rng = new java.security.SecureRandom()
     spark.udf.register("graft_fernet_encrypt", udf { (s: String, key: String) =>
       if (s == null || key == null) null
-      else {
-        val iv = new Array[Byte](16)
-        rng.synchronized(rng.nextBytes(iv))
-        Crypto.fernetEncryptAt(s.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          key, System.currentTimeMillis() / 1000, iv)
-      }
+      else Crypto.fernetEncryptAt(
+        s.getBytes(java.nio.charset.StandardCharsets.UTF_8), key,
+        System.currentTimeMillis() / 1000, CryptoRuntime.randomBytes(16))
     }.asNondeterministic())
     spark.udf.register("graft_fernet_decrypt", udf { (t: String, key: String) =>
       if (t == null || key == null) null

@@ -30,7 +30,8 @@ trait UserFetcher {
 }
 
 /** Driver-side `java.net.http` GET: fail-fast on 4xx (the reference's
-  * `raise_for_status`), bounded retries on 5xx/IO errors, and the retry
+  * `raise_for_status`), bounded retries on 5xx/IO errors after a jittered
+  * exponential backoff ([[HttpUserFetcher.backoffMs]]), and the retry
   * count OBSERVED from what actually happened (the reference reads
   * `resp.raw.retries.total`, `job.py:52-54`).
   */
@@ -55,14 +56,30 @@ final class HttpUserFetcher(url: String, timeoutSec: Int = 15,
           result = FetchResult(r.body(), Some(r.statusCode()), Some(attempt))
         case Right(r) if r.statusCode() >= 500 && attempt < maxRetries =>
           attempt += 1 // transient server error: retry
+          Thread.sleep(HttpUserFetcher.backoffMs(attempt))
         case Right(r) => // 4xx, or 5xx with retries exhausted: fail fast
           throw new java.io.IOException(
             s"HTTP ${r.statusCode()} from $url after $attempt retries")
-        case Left(_) if attempt < maxRetries => attempt += 1
+        case Left(_) if attempt < maxRetries =>
+          attempt += 1
+          Thread.sleep(HttpUserFetcher.backoffMs(attempt))
         case Left(e) => throw e
       }
     }
     result
+  }
+}
+
+object HttpUserFetcher {
+  private val BackoffBaseMs = 100L
+  private val BackoffCapMs = 2000L
+
+  /** The wait before retry `n` (1-based): half of `min(cap, base·2^(n-1))`
+    * plus a uniform jitter up to the other half, so retries back off
+    * exponentially and clients that failed together do not retry in step. */
+  private[graft] def backoffMs(n: Int): Long = {
+    val d = math.min(BackoffCapMs, BackoffBaseMs << math.min(n - 1, 20))
+    d / 2 + java.util.concurrent.ThreadLocalRandom.current().nextLong(d / 2 + 1)
   }
 }
 

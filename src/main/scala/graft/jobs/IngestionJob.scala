@@ -2,10 +2,16 @@ package graft.jobs
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField,
+  StructType}
 
 import graft.expr.Crypto
 import graft.ops.Flatten
@@ -55,6 +61,20 @@ final case class IngestMetrics(
   * (the reference's full-file rewrite has a failure window,
   * `io_utils.py:37`). Two overlapping runs can still both add the same new
   * key: there is no run lock yet.
+  *
+  * A run is driver-sized: only the keep-first append costs Spark jobs.
+  *  - The response is parsed on the driver (`from_json` over a one-row
+  *    local relation is folded while planning), so the parse runs no job.
+  *  - The store's schema is read from one `part-*` footer on the driver,
+  *    the file Spark's own non-merging inference would open, without that
+  *    inference's job; a store of another schema fails the run.
+  *  - One read of the store's `login_uuid` column both counts the store and
+  *    collects the batch keys it already holds.
+  *  - The new rows are secured in one task per core (Argon2id dominates a
+  *    run) and shuffled into one partition, so the store gains exactly one
+  *    file per run that adds rows.
+  *  - `rows_after_dedup` is the counted store plus the rows this run adds:
+  *    with one writer at a time it equals a count taken after the commit.
   */
 object IngestionJob {
 
@@ -62,18 +82,37 @@ object IngestionJob {
   private val responseSchema = StructType(Seq(
     StructField("results", ArrayType(Schemas.userSchema))))
 
+  /** `_fetch_pos` and the user fields: [[readUsersJson]]'s columns. */
+  private val usersSchema = StructType(
+    StructField("_fetch_pos", IntegerType, nullable = false) +:
+      Schemas.userSchema.fields)
+
   /** Parse an API response BODY (from any [[UserFetcher]]) through the
     * pinned schema, one row per user. `_fetch_pos` is the position in the
     * response array — the explicit stand-in for pandas' positional row
     * order, which keep-first dedup depends on (Spark rows have no implicit
-    * order).
+    * order). The result is a local relation; building it runs no Spark job.
     */
-  def readUsersJson(spark: SparkSession, responseBody: String): DataFrame = {
+  def readUsersJson(spark: SparkSession, responseBody: String): DataFrame =
+    spark.createDataFrame(parseUsers(spark, responseBody).asJava, usersSchema)
+
+  /** The users of a response body as driver rows of [[usersSchema]].
+    * `from_json` over a one-row local relation is evaluated while Spark
+    * plans it, so collecting it launches no job; `results` is exploded
+    * here with each user's position, as `posexplode` would. */
+  private def parseUsers(spark: SparkSession, responseBody: String)
+      : Seq[Row] = {
     import spark.implicits._
-    spark.read.schema(responseSchema)
-      .json(spark.createDataset(responseBody :: Nil))
-      .select(posexplode(col("results")).as(Seq("_fetch_pos", "user")))
-      .select(col("_fetch_pos"), col("user.*"))
+    val response = spark.createDataset(responseBody :: Nil)
+      .select(from_json(col("value"), responseSchema)).collect().head
+    val users =
+      if (response.isNullAt(0) || response.getStruct(0).isNullAt(0)) Nil
+      else response.getStruct(0).getSeq[Row](0)
+    val width = Schemas.userSchema.length
+    users.zipWithIndex.map { case (u, pos) =>
+      val fields = if (u == null) Seq.fill(width)(null) else u.toSeq
+      new GenericRowWithSchema((pos +: fields).toArray, usersSchema): Row
+    }
   }
 
   /** Read the canned API response file, one row per user. */
@@ -166,13 +205,12 @@ object IngestionJob {
       storePath: String, secure: DataFrame => DataFrame): IngestMetrics = {
 
     val fetchResult = fetcher.fetch()
-    val fetched = readUsersJson(spark, fetchResult.body)
+    val batch = parseUsers(spark, fetchResult.body)
 
     // Keep-first semantics (io_utils.py:25,34): stored rows win; within the
-    // batch the first fetch position wins. The batch is driver-sized, so it
-    // comes back in one job and the first row per key is picked here. A null
-    // key is one key, as in Upsert.keepFirst's window.
-    val batch = fetched.collect()
+    // batch the first fetch position wins. The batch is driver-sized, so the
+    // first row per key is picked here. A null key is one key, as in
+    // Upsert.keepFirst's window.
     val rowsFetched = batch.length.toLong
     def keyOf(r: Row): Option[String] =
       Option(r.getAs[Row]("login")).flatMap(l => Option(l.getAs[String]("uuid")))
@@ -184,31 +222,36 @@ object IngestionJob {
     val storeExists = fs.exists(store)
 
     // Every plan below keeps one shape whatever the batch holds: the rows
-    // travel as a local relation and the keys as one array literal, never
-    // as per-row literals in the plan, so each run reuses the code the first
-    // one generated instead of compiling its own. On a local relation Spark
-    // evaluates the secure projection, Argon2id included, while planning.
-    def local(rows: Seq[Row]): DataFrame =
-      secure(spark.createDataFrame(rows.asJava, fetched.schema))
-        .drop("_fetch_pos")
-    val persisted = local(Nil).schema
+    // travel as a parallelized collection and the keys as one array
+    // literal, never as per-row literals in the plan, so each run reuses
+    // the code the first one generated instead of compiling its own.
+    val persisted = secure(spark.createDataFrame(
+      java.util.Collections.emptyList[Row], usersSchema)).drop("_fetch_pos")
+      .schema
     val storeSchema =
-      if (!storeExists) persisted else spark.read.parquet(storePath).schema
-
-    val stored: Set[Option[String]] =
-      if (!storeExists || firstByKey.isEmpty) Set.empty
+      if (!storeExists) persisted
       else {
-        require(storeSchema.map(f => f.name -> f.dataType).toSet ==
+        val footer = footerSchema(spark, fs, store)
+        require(footer.map(f => f.name -> f.dataType).toSet ==
           persisted.map(f => f.name -> f.dataType).toSet,
-          s"store schema ${storeSchema.simpleString} does not match the " +
+          s"store schema ${footer.simpleString} does not match the " +
             s"batch schema ${persisted.simpleString}")
-        // column-pruned probe for the batch's keys; array_contains never
-        // matches null, so a keyless batch row probes with isNull too
+        footer
+      }
+
+    // One column-pruned read counts the store and collects the batch keys
+    // it already holds. array_contains never matches null, so whether the
+    // store holds the null key is its own isNull flag.
+    val (storedRows, stored) =
+      if (!storeExists) (0L, Set.empty[Option[String]])
+      else {
         val key = col("login_uuid")
         val probe = array_contains(typedLit(firstByKey.keys.flatten.toSeq), key)
-        spark.read.schema(storeSchema).parquet(storePath).select(key)
-          .filter(if (firstByKey.contains(None)) probe || key.isNull else probe)
-          .collect().map(r => Option(r.getString(0))).toSet
+        val r = spark.read.schema(storeSchema).parquet(storePath)
+          .agg(count(lit(1)), collect_list(when(probe, key)), max(key.isNull))
+          .head()
+        val hits = r.getSeq[String](1).map(Option(_)).toSet
+        (r.getLong(0), if (!r.isNullAt(2) && r.getBoolean(2)) hits + None else hits)
       }
     val fresh = firstByKey.collect { case (k, r) if !stored(k) => r }.toSeq
       .sortBy(_.getAs[Int]("_fetch_pos"))
@@ -219,8 +262,13 @@ object IngestionJob {
     if (!storeExists || fresh.nonEmpty) {
       val staging = new Path(store.getParent,
         s"${store.getName}.tmp-${java.util.UUID.randomUUID()}")
-      // secure only the new rows: Argon2id hashes only the rows it commits
-      local(fresh).coalesce(1).write.parquet(staging.toString)
+      // secure only the new rows, one task per core, then gather them into
+      // the one part file this run adds
+      val sc = spark.sparkContext
+      val rows = sc.parallelize(fresh,
+        math.max(1, math.min(fresh.size, sc.defaultParallelism)))
+      secure(spark.createDataFrame(rows, usersSchema)).drop("_fetch_pos")
+        .repartition(1).write.parquet(staging.toString)
       def move(from: Path, to: Path): Unit =
         if (!fs.rename(from, to))
           throw new java.io.IOException(s"could not rename $from to $to")
@@ -232,8 +280,9 @@ object IngestionJob {
         fs.delete(staging, true)
       }
     }
-    val rowsAfterDedup =
-      spark.read.schema(storeSchema).parquet(storePath).count()
+    // the store as counted plus this run's rows: a count taken after the
+    // commit, as long as no other run appends in between
+    val rowsAfterDedup = storedRows + fresh.size
 
     val metrics = IngestMetrics(
       httpStatus = fetchResult.httpStatus,
@@ -243,5 +292,21 @@ object IngestionJob {
     // stdout log contract (job.py:85-95) — the ops shell greps these
     metrics.logLines(fetcher.describe).foreach(println)
     metrics
+  }
+
+  /** The store's schema from one `part-*` footer, read on the driver: the
+    * first data file by path, which Spark's non-merging schema inference
+    * would open too, converted by Spark's parquet schema converter, without
+    * the inference's Spark job. */
+  private def footerSchema(spark: SparkSession, fs: FileSystem, store: Path)
+      : StructType = {
+    val parts = fs.listStatus(store).filter(_.getPath.getName.startsWith("part-"))
+    require(parts.nonEmpty, s"store $store holds no part-* file")
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(parts.minBy(_.getPath.toString),
+        spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(footer.getFileMetaData.getSchema)
   }
 }

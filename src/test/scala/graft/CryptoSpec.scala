@@ -129,4 +129,19 @@ class CryptoSpec extends SparkSpec {
     }
     assert(out.filter(_.isNullAt(0)).forall(r => r.isNullAt(1) && r.isNullAt(3)))
   }
+
+  test("salts and IVs are distinct across tasks: 16 rows over 4 partitions") {
+    // one plaintext for every row, so only the salt and the IV can differ;
+    // each partition's task runs its own deserialized copy of the closures
+    val out = spark.range(0, 16, 1, 4).select(lit("same").as("v"))
+      .select(Crypto.hashPassword(col("v"), "p", 1, 8).as("h"),
+        Crypto.fernetEncrypt(col("v"), fernetKey).as("t"))
+      .collect()
+    assert(out.length === 16)
+    val salts = out.map(_.getString(0).split('$')(4)) // $argon2id$v$m,t,p$salt$tag
+    val ivs = out.map(r => java.util.Base64.getUrlDecoder.decode(r.getString(1))
+      .slice(9, 25).toSeq) // 0x80 | ts[8] | iv[16] | ...
+    assert(salts.distinct.length === 16, salts.mkString(","))
+    assert(ivs.distinct.length === 16)
+  }
 }

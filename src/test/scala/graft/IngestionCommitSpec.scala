@@ -5,9 +5,12 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 import graft.jobs.{FetchResult, IngestMetrics, IngestionJob, UserFetcher}
 import graft.ops.Upsert
+import graft.schema.Schemas
+import graft.tools.Meter
 
 /** The ingestion run's append-only commit against the reference's
   * keep-first upsert (`ingestion/io_utils.py:16-39`):
@@ -161,5 +164,59 @@ class IngestionCommitSpec extends SparkSpec {
     assert(storeRows(store) === want)
     assert(new File(store).list().length === files)
     assert(Files.exists(residue))
+  }
+
+  test("a run against an existing store is driver-sized: the parse and the " +
+      "schema check run no job, the probe-and-count read and the staging " +
+      "write at most four, and a warm run compiles nothing") {
+    val store = newStore()
+    run(store, batch(user("k1", "Ada")))
+    // the existing-store path once, with a keyless user and a stored key
+    run(store, batch(user("k2", "Alan"), user(null, "Nobody"), user("k1", "A")))
+
+    val body = batch(user("k3", "Grace"), user("k1", "Ada2"), user("k4", "Ed"))
+    val (_, parse) = Meter.measure(spark)(
+      IngestionJob.readUsersJson(spark, body).collect())
+    assert(parse.jobs === 0)
+    val (m, warm) = Meter.measure(spark)(run(store, body))
+    assert(m.rowsAfterDedup === 5)
+    val stages = warm.stageRows.map(_.name).mkString("; ")
+    assert(warm.jobs <= 4, stages)
+    // every stage is the probe-and-count read's or the staging write's:
+    // no parse job and no schema-inference job on its own source line
+    val lines = warm.stageRows.flatMap(st =>
+      """IngestionJob\.scala:(\d+)""".r.findFirstMatchIn(st.name).map(_.group(1)))
+    assert(lines.distinct.size <= 2, stages)
+    assert(warm.compiles === 0, s"warm run compiled ${warm.compiles} classes")
+  }
+
+  test("a store written with another schema fails the run with the schema " +
+      "check's message") {
+    val store = newStore()
+    spark.range(3).selectExpr("cast(id as string) as login_uuid", "id as other")
+      .write.parquet(store)
+    val e = intercept[IllegalArgumentException](
+      run(store, batch(user("k1", "Ada"))))
+    assert(e.getMessage.contains("does not match the batch schema"),
+      e.getMessage)
+  }
+
+  test("the driver-side parse equals Spark's JSON reader exploded by " +
+      "position, malformed and partial bodies included") {
+    import spark.implicits._
+    val envelope = StructType(Seq(
+      StructField("results", ArrayType(Schemas.userSchema))))
+    def reader(body: String): DataFrame = spark.read.schema(envelope)
+      .json(spark.createDataset(body :: Nil))
+      .select(posexplode(col("results")).as(Seq("_fetch_pos", "user")))
+      .select(col("_fetch_pos"), col("user.*"))
+    for (body <- Seq(batch(user("k1", "Ada"), user(null, "Nobody")),
+        batch(), """{"results": null}""", "{}", "not json",
+        """{"results": [null, {"login": {"uuid": 5}, "dob": {"age": "x"}}]}""",
+        """{"results": [{"email": "a@b", "extra": 1}], "info": {}}""")) {
+      val parsed = IngestionJob.readUsersJson(spark, body)
+      assert(parsed.schema === reader(body).schema, body)
+      assert(parsed.collect().toSeq === reader(body).collect().toSeq, body)
+    }
   }
 }

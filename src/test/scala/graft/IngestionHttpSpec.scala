@@ -30,9 +30,23 @@ class IngestionHttpSpec extends SparkSpec {
 
   test("transient 503 is retried and the retry count is observed") {
     LoopbackApi.withServer(body, failFirst = 1) { url =>
+      val t0 = System.nanoTime()
       val r = new HttpUserFetcher(url).fetch()
+      val tookMs = (System.nanoTime() - t0) / 1000000L
       assert(r.httpStatus === Some(200))
       assert(r.retriesUsed === Some(1))
+      // the retry waits at least half of the 100 ms first backoff
+      assert(tookMs >= 50, s"two attempts in $tookMs ms")
+    }
+  }
+
+  test("backoff doubles per retry up to its cap, with jitter in the upper " +
+      "half") {
+    for (n <- 1 to 8) {
+      val d = math.min(2000L, 100L << (n - 1))
+      val waits = Seq.fill(50)(HttpUserFetcher.backoffMs(n))
+      assert(waits.forall(w => w >= d / 2 && w <= d), s"retry $n: $waits")
+      assert(waits.distinct.size > 1, s"retry $n waits without jitter")
     }
   }
 

@@ -51,4 +51,27 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(filesMatching("""\bwriteStream\b""")
       .filter(_.startsWith("src/main")) === streamingOps)
   }
+
+  /** Each `read ... .parquet(` chain in `text` (continuation lines start
+    * with a dot) that sets no schema: those run Spark's schema-inference
+    * job. */
+  private def schemalessParquetReads(text: String): Seq[String] =
+    """\bread\b((?:[^\n]|\n\s*(?=\.))*?)\.\s*parquet\s*\(""".r
+      .findAllMatchIn(text).filterNot(_.group(1).contains(".schema("))
+      .map(_.matched).toSeq
+
+  test("every parquet read under src/main/scala/graft/jobs passes a schema, " +
+      "so the ingestion path runs no schema-inference job") {
+    assert(schemalessParquetReads("spark.read.parquet(p)").size === 1)
+    assert(schemalessParquetReads("spark.read\n  .option(\"a\", 1)\n" +
+      "  .parquet(p)").size === 1)
+    assert(schemalessParquetReads("spark.read.schema(s).parquet(p)").isEmpty)
+    val jobs = Files.walk(Paths.get("src/main/scala/graft/jobs")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(jobs.nonEmpty)
+    val found = jobs.flatMap(p =>
+      schemalessParquetReads(new String(Files.readAllBytes(p), "UTF-8"))
+        .map(m => s"$p: $m"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 }
