@@ -20,7 +20,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *    reference's `BackgroundTasks` semantics — failures are logged, not
   *    reported to the caller)
   *  - `POST /jobs/ingestion/sync` → runs inline, responds
-  *    `{"status": "completed", "metrics": {...}}`
+  *    `{"status": "completed", "metrics": {...}}`; the metrics carry the
+  *    run's per-phase milliseconds as `stage_ms`
   *
   * The job itself is injected as a thunk: the server shell is transport
   * only, the engine work stays in `IngestionJob.run` (and specs can bind a
@@ -60,8 +61,13 @@ final class ApiServer(runJob: () => IngestMetrics, port: Int = 0) {
       s""" "retries_used": ${opt(m.retriesUsed)},""" +
       s""" "rows_fetched": ${m.rowsFetched},""" +
       s""" "rows_after_dedup": ${m.rowsAfterDedup},""" +
-      s""" "output": "${jsonEscape(m.storePath)}"}"""
+      s""" "output": "${jsonEscape(m.storePath)}",""" +
+      s""" "stage_ms": ${stageJson(m.stageMs)}}"""
   }
+
+  private def stageJson(t: StageMs): String =
+    s"""{"fetch": ${t.fetch}, "parse": ${t.parse}, "probe": ${t.probe},""" +
+      s""" "write": ${t.write}, "commit": ${t.commit}}"""
 
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath

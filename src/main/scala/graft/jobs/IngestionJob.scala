@@ -1,15 +1,23 @@
 package graft.jobs
 
+import java.io.FileNotFoundException
+import java.lang.ref.SoftReference
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema,
+  JsonToStructs, Literal}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField,
   StructType}
 
@@ -27,7 +35,8 @@ final case class IngestMetrics(
     retriesUsed: Option[Int],
     rowsFetched: Long,
     rowsAfterDedup: Long,
-    storePath: String) {
+    storePath: String,
+    stageMs: StageMs = StageMs.zero) {
 
   private def fmt(v: Option[Int]): String = v.map(_.toString).getOrElse("n/a")
 
@@ -39,6 +48,24 @@ final case class IngestMetrics(
     s"http_status=${fmt(httpStatus)} retries_used=${fmt(retriesUsed)}",
     s"rows_fetched=$rowsFetched rows_after_dedup=$rowsAfterDedup " +
       s"output=$storePath")
+}
+
+/** Wall milliseconds of one run's phases: the fetch, the parse, the store
+  * probe (listing, key index upkeep, key lookup), the staging write
+  * (securing the new rows included) and the commit (rename and index
+  * update). A run waiting for another run on its store counts that wait in
+  * none of them, so the phases sum to no more than the run's wall.
+  */
+final case class StageMs(fetch: Long, parse: Long, probe: Long, write: Long,
+    commit: Long) {
+
+  /** The additive stdout line printed after the reference's four. */
+  def logLine: String = s"stage_ms fetch=$fetch parse=$parse probe=$probe " +
+    s"write=$write commit=$commit"
+}
+
+object StageMs {
+  val zero: StageMs = StageMs(0L, 0L, 0L, 0L, 0L)
 }
 
 /** The reference's one end-to-end "query", re-expressed Spark-first:
@@ -59,22 +86,39 @@ final case class IngestMetrics(
   * `part-*` file into the store. Stored files are never rewritten or
   * deleted, so a crash at any point leaves the previous store readable
   * (the reference's full-file rewrite has a failure window,
-  * `io_utils.py:37`). Two overlapping runs can still both add the same new
-  * key: there is no run lock yet.
+  * `io_utils.py:37`).
   *
-  * A run is driver-sized: only the keep-first append costs Spark jobs.
-  *  - The response is parsed on the driver (`from_json` over a one-row
-  *    local relation is folded while planning), so the parse runs no job.
-  *  - The store's schema is read from one `part-*` footer on the driver,
-  *    the file Spark's own non-merging inference would open, without that
-  *    inference's job; a store of another schema fails the run.
-  *  - One read of the store's `login_uuid` column both counts the store and
-  *    collects the batch keys it already holds.
+  * Key index: the JVM keeps, per qualified store path, the store's keys
+  * (exact strings), whether it holds the null key, its row count, and the
+  * data files those were read from with each file's length and
+  * modification time. A run lists the store once and checks the index
+  * against the listing:
+  *  - an indexed file that is gone or changed drops the index, and the
+  *    run rebuilds it from every file (a store deleted and rewritten at
+  *    the same path);
+  *  - files the index has not read (a cold JVM, or another writer's
+  *    append) have only their `login_uuid` column read, in one Spark job,
+  *    after the first of them passes the schema check against
+  *    [[Schemas.storeSchema]], so a store of another schema fails the run;
+  *  - after its rename a run records only its own file and keys, never a
+  *    fresh listing, which could hold another writer's unread file.
+  * The index is held through a `SoftReference`: a memory-pressed driver
+  * drops it and the next run rebuilds it, and no answer depends on it
+  * being there. It takes 120–130 B of heap per stored key.
+  *
+  * Single writer per JVM: one monitor per store covers a run from the
+  * listing to the index update, so runs on one store in one JVM commit one
+  * at a time and `rows_after_dedup` (the index's count after the commit)
+  * equals a count taken right after it. Runs in different processes are
+  * not serialised: two of them can still both add the same new key.
+  *
+  * A warm run is driver-sized: only the staging write costs Spark jobs.
+  *  - The response is parsed on the driver by evaluating Spark's JSON
+  *    parser expression on the body, without planning a query.
+  *  - The probe and the count are lookups in the key index.
   *  - The new rows are secured in one task per core (Argon2id dominates a
   *    run) and shuffled into one partition, so the store gains exactly one
   *    file per run that adds rows.
-  *  - `rows_after_dedup` is the counted store plus the rows this run adds:
-  *    with one writer at a time it equals a count taken after the commit.
   */
 object IngestionJob {
 
@@ -96,18 +140,24 @@ object IngestionJob {
   def readUsersJson(spark: SparkSession, responseBody: String): DataFrame =
     spark.createDataFrame(parseUsers(spark, responseBody).asJava, usersSchema)
 
-  /** The users of a response body as driver rows of [[usersSchema]].
-    * `from_json` over a one-row local relation is evaluated while Spark
-    * plans it, so collecting it launches no job; `results` is exploded
-    * here with each user's position, as `posexplode` would. */
+  private val toResponse =
+    CatalystTypeConverters.createToScalaConverter(responseSchema)
+
+  /** The users of a response body as driver rows of [[usersSchema]]:
+    * `from_json`'s own expression, evaluated on the body under the
+    * session's conf and time zone, so no query is planned and no job runs;
+    * `results` is exploded here with each user's position, as
+    * `posexplode` would. */
   private def parseUsers(spark: SparkSession, responseBody: String)
       : Seq[Row] = {
-    import spark.implicits._
-    val response = spark.createDataset(responseBody :: Nil)
-      .select(from_json(col("value"), responseSchema)).collect().head
+    val conf = spark.sessionState.conf
+    val parsed = SQLConf.withExistingConf(conf)(JsonToStructs(responseSchema,
+      Map.empty, Literal(responseBody), Some(conf.sessionLocalTimeZone))
+      .eval())
+    val response = toResponse(parsed).asInstanceOf[Row]
     val users =
-      if (response.isNullAt(0) || response.getStruct(0).isNullAt(0)) Nil
-      else response.getStruct(0).getSeq[Row](0)
+      if (response == null || response.isNullAt(0)) Nil
+      else response.getSeq[Row](0)
     val width = Schemas.userSchema.length
     users.zipWithIndex.map { case (u, pos) =>
       val fields = if (u == null) Seq.fill(width)(null) else u.toSeq
@@ -201,10 +251,54 @@ object IngestionJob {
     runWith(spark, fetcher, storePath,
       secureTransform(_, pepper, aesKey, bidxKey))
 
+  /** What the JVM knows of one store without reading it: every stored key,
+    * whether the null key is stored, the row count, and the data files
+    * those were read from, by name, with their (length, modification
+    * time). */
+  private final class KeyIndex {
+    val keys = new java.util.HashSet[String]()
+    var hasNull = false
+    var rows = 0L
+    val files = mutable.HashMap.empty[String, (Long, Long)]
+
+    def add(key: String): Unit = {
+      if (key == null) hasNull = true else keys.add(key)
+      rows += 1
+    }
+    def holds(key: Option[String]): Boolean = key.fold(hasNull)(keys.contains)
+    private def sig(f: FileStatus) = (f.getLen, f.getModificationTime)
+    def record(f: FileStatus): Unit = files(f.getPath.getName) = sig(f)
+    /** Every indexed file is listed, unchanged. */
+    def validFor(listed: Map[String, FileStatus]): Boolean =
+      files.forall { case (name, s) => listed.get(name).map(sig).contains(s) }
+  }
+
+  /** One store's monitor (its instance lock) and its softly held index. */
+  private final class StoreSlot {
+    var index = new SoftReference[KeyIndex](null)
+  }
+
+  /** Per qualified store path; a slot is a few dozen bytes without its
+    * index, so slots are never removed. */
+  private val slots = new ConcurrentHashMap[String, StoreSlot]()
+
+  /** Drop every store's key index, as a memory-pressed driver would; the
+    * next run on each store rebuilds it. */
+  private[jobs] def dropIndexes(): Unit =
+    slots.values.forEach(s => s.synchronized(s.index.clear()))
+
   private def runWith(spark: SparkSession, fetcher: UserFetcher,
       storePath: String, secure: DataFrame => DataFrame): IngestMetrics = {
+    var mark = System.nanoTime()
+    def lap(): Long = {
+      val now = System.nanoTime()
+      val ms = (now - mark) / 1000000L
+      mark = now
+      ms
+    }
 
     val fetchResult = fetcher.fetch()
+    val fetchMs = lap()
     val batch = parseUsers(spark, fetchResult.body)
 
     // Keep-first semantics (io_utils.py:25,34): stored rows win; within the
@@ -216,97 +310,117 @@ object IngestionJob {
       Option(r.getAs[Row]("login")).flatMap(l => Option(l.getAs[String]("uuid")))
     val firstByKey = batch.groupBy(keyOf).map { case (k, rs) =>
       k -> rs.minBy(_.getAs[Int]("_fetch_pos")) }
+    val parseMs = lap()
 
     val store = new Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val storeExists = fs.exists(store)
+    val slot = slots.computeIfAbsent(fs.makeQualified(store).toString,
+      _ => new StoreSlot)
+    val (rowsAfterDedup, stages) = slot.synchronized {
+      lap() // the wait for another run on this store is no phase of this one
+      val listed = dataFiles(fs, store)
+      val index = takeIndex(spark, slot, listed.getOrElse(Nil))
+      val fresh = firstByKey.collect { case (k, r) if !index.holds(k) => r }
+        .toSeq.sortBy(_.getAs[Int]("_fetch_pos"))
+      val probeMs = lap()
 
-    // Every plan below keeps one shape whatever the batch holds: the rows
-    // travel as a parallelized collection and the keys as one array
-    // literal, never as per-row literals in the plan, so each run reuses
-    // the code the first one generated instead of compiling its own.
-    val persisted = secure(spark.createDataFrame(
-      java.util.Collections.emptyList[Row], usersSchema)).drop("_fetch_pos")
-      .schema
-    val storeSchema =
-      if (!storeExists) persisted
-      else {
-        val footer = footerSchema(spark, fs, store)
-        require(footer.map(f => f.name -> f.dataType).toSet ==
-          persisted.map(f => f.name -> f.dataType).toSet,
-          s"store schema ${footer.simpleString} does not match the " +
-            s"batch schema ${persisted.simpleString}")
-        footer
-      }
-
-    // One column-pruned read counts the store and collects the batch keys
-    // it already holds. array_contains never matches null, so whether the
-    // store holds the null key is its own isNull flag.
-    val (storedRows, stored) =
-      if (!storeExists) (0L, Set.empty[Option[String]])
-      else {
-        val key = col("login_uuid")
-        val probe = array_contains(typedLit(firstByKey.keys.flatten.toSeq), key)
-        val r = spark.read.schema(storeSchema).parquet(storePath)
-          .agg(count(lit(1)), collect_list(when(probe, key)), max(key.isNull))
-          .head()
-        val hits = r.getSeq[String](1).map(Option(_)).toSet
-        (r.getLong(0), if (!r.isNullAt(2) && r.getBoolean(2)) hits + None else hits)
-      }
-    val fresh = firstByKey.collect { case (k, r) if !stored(k) => r }.toSeq
-      .sortBy(_.getAs[Int]("_fetch_pos"))
-
-    // Append-only commit: the first run renames its staging directory into
-    // place; later runs move only their part file in, and only when they
-    // add rows. Staging is per run, so overlapping runs never share it.
-    if (!storeExists || fresh.nonEmpty) {
+      // Append-only commit: the first run renames its staging directory
+      // into place; later runs move only their part file in, and only when
+      // they add rows. Staging is per run, so overlapping runs never share
+      // it.
       val staging = new Path(store.getParent,
         s"${store.getName}.tmp-${java.util.UUID.randomUUID()}")
-      // secure only the new rows, one task per core, then gather them into
-      // the one part file this run adds
-      val sc = spark.sparkContext
-      val rows = sc.parallelize(fresh,
-        math.max(1, math.min(fresh.size, sc.defaultParallelism)))
-      secure(spark.createDataFrame(rows, usersSchema)).drop("_fetch_pos")
-        .repartition(1).write.parquet(staging.toString)
-      def move(from: Path, to: Path): Unit =
-        if (!fs.rename(from, to))
-          throw new java.io.IOException(s"could not rename $from to $to")
-      if (!storeExists) move(staging, store)
-      else {
-        fs.listStatus(staging).map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .foreach(p => move(p, new Path(store, p.getName)))
-        fs.delete(staging, true)
+      val writes = listed.isEmpty || fresh.nonEmpty
+      if (writes) {
+        // secure only the new rows, one task per core, then gather them
+        // into the one part file this run adds. Every run's plan keeps one
+        // shape: the rows travel as a parallelized collection, never as
+        // per-row literals, so each run reuses the code the first one
+        // generated instead of compiling its own.
+        val sc = spark.sparkContext
+        val rows = sc.parallelize(fresh,
+          math.max(1, math.min(fresh.size, sc.defaultParallelism)))
+        secure(spark.createDataFrame(rows, usersSchema)).drop("_fetch_pos")
+          .repartition(1).write.parquet(staging.toString)
       }
+      val writeMs = lap()
+
+      if (writes) {
+        def move(from: Path, to: Path): Unit =
+          if (!fs.rename(from, to))
+            throw new java.io.IOException(s"could not rename $from to $to")
+        val own = dataFiles(fs, staging).getOrElse(Nil).map(_.getPath.getName)
+        if (listed.isEmpty) move(staging, store)
+        else {
+          own.foreach(n => move(new Path(staging, n), new Path(store, n)))
+          fs.delete(staging, true)
+        }
+        own.foreach(n => index.record(fs.getFileStatus(new Path(store, n))))
+        fresh.foreach(r => index.add(keyOf(r).orNull))
+      }
+      slot.index = new SoftReference(index)
+      (index.rows, StageMs(fetchMs, parseMs, probeMs, writeMs, lap()))
     }
-    // the store as counted plus this run's rows: a count taken after the
-    // commit, as long as no other run appends in between
-    val rowsAfterDedup = storedRows + fresh.size
 
     val metrics = IngestMetrics(
       httpStatus = fetchResult.httpStatus,
       retriesUsed = fetchResult.retriesUsed,
       rowsFetched = rowsFetched, rowsAfterDedup = rowsAfterDedup,
-      storePath = storePath)
-    // stdout log contract (job.py:85-95) — the ops shell greps these
-    metrics.logLines(fetcher.describe).foreach(println)
+      storePath = storePath, stageMs = stages)
+    // stdout log contract (job.py:85-95) — the ops shell greps these; the
+    // stage line is additive
+    (metrics.logLines(fetcher.describe) :+ stages.logLine).foreach(println)
     metrics
   }
 
-  /** The store's schema from one `part-*` footer, read on the driver: the
-    * first data file by path, which Spark's non-merging schema inference
-    * would open too, converted by Spark's parquet schema converter, without
-    * the inference's Spark job. */
-  private def footerSchema(spark: SparkSession, fs: FileSystem, store: Path)
-      : StructType = {
-    val parts = fs.listStatus(store).filter(_.getPath.getName.startsWith("part-"))
-    require(parts.nonEmpty, s"store $store holds no part-* file")
+  /** The store's data files, as Spark's file listing picks them (no `_` or
+    * `.` prefix: no `_SUCCESS`, no checksum files), or None when there is
+    * no store. */
+  private def dataFiles(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] =
+    try Some(fs.listStatus(dir).toSeq.filter { f =>
+      val name = f.getPath.getName
+      f.isFile && !name.startsWith("_") && !name.startsWith(".")
+    })
+    catch { case _: FileNotFoundException => None }
+
+  /** The slot's index made current for `listed`, the store's data files:
+    * an index with a file that is gone or changed is dropped, and the keys
+    * of every file the index has not read are read in one job, after the
+    * first of those files passes the schema check. The index leaves the
+    * slot until the run's commit puts it back, so a run that fails leaves
+    * no half-updated index behind. */
+  private def takeIndex(spark: SparkSession, slot: StoreSlot,
+      listed: Seq[FileStatus]): KeyIndex = {
+    val byName = listed.map(f => f.getPath.getName -> f).toMap
+    val index = Option(slot.index.get).filter(_.validFor(byName))
+      .getOrElse(new KeyIndex)
+    slot.index.clear()
+    val unread = listed.filterNot(f => index.files.contains(f.getPath.getName))
+      .sortBy(_.getPath.toString)
+    if (unread.nonEmpty) {
+      checkSchema(spark, unread.head)
+      spark.read.schema(Schemas.storeSchema)
+        .parquet(unread.map(_.getPath.toString): _*)
+        .select("login_uuid").as(Encoders.STRING).collect()
+        .foreach(index.add)
+      unread.foreach(index.record)
+    }
+    index
+  }
+
+  /** Fail unless `file`'s footer declares [[Schemas.storeSchema]]'s fields
+    * (names and types, in any order). The footer is read on the driver and
+    * converted by Spark's parquet schema converter, as Spark's
+    * non-merging schema inference would, without the inference's job. */
+  private def checkSchema(spark: SparkSession, file: FileStatus): Unit = {
     val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(parts.minBy(_.getPath.toString),
-        spark.sparkContext.hadoopConfiguration),
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    val found = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
       .convert(footer.getFileMetaData.getSchema)
+    def fields(s: StructType) = s.map(f => f.name -> f.dataType).toSet
+    require(fields(found) == fields(Schemas.storeSchema),
+      s"store schema ${found.simpleString} does not match the batch schema " +
+        Schemas.storeSchema.simpleString)
   }
 }

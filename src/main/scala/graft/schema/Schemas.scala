@@ -8,8 +8,9 @@ import org.apache.spark.sql.types._
   * nested-user record (reference: `/root/reference/ingestion/api_client.py:9-13`,
   * fields consumed at `transformations.py:31-41`).
   *
-  * Only the ingestion record ([[Schemas.userSchema]]) has a declared
-  * StructType. The testdata tables do not: [[Tables.load]] reads each
+  * Only the ingestion record ([[Schemas.userSchema]]) and the ingestion
+  * store's row ([[Schemas.storeSchema]]) have a declared StructType. The
+  * testdata tables do not: [[Tables.load]] reads each
   * file's schema from its parquet footer, which costs one Spark job per
   * read. A declared schema per table would drop those jobs and let a
   * footer that disagrees fail loudly (ROADMAP direction 5).
@@ -46,6 +47,25 @@ object Schemas {
       StructField("country", StringType),
       StructField("postcode", StringType))))
   ))
+
+  /** One row of the ingestion store: the secured projection of a user
+    * (`IngestionJob.secureTransform`, either overload), plaintext PII
+    * dropped. A store whose `part-*` footer disagrees on a field's name or
+    * type fails the ingestion run. */
+  val storeSchema: StructType = StructType(Seq(
+    StructField("login_uuid", StringType),
+    StructField("login_username", StringType),
+    StructField("name_first", StringType),
+    StructField("name_last", StringType),
+    StructField("dob_date", TimestampType),
+    StructField("dob_age", LongType),
+    StructField("registered_date", TimestampType),
+    StructField("location_country", StringType),
+    StructField("password_hash", StringType),
+    StructField("email_enc", StringType),
+    StructField("phone_enc", StringType),
+    StructField("street_name_enc", StringType),
+    StructField("email_bidx", StringType)))
 }
 
 /** Scan helpers. One parquet file per table; at cluster scale these would be

@@ -1,13 +1,16 @@
 package graft
 
-import java.io.{ByteArrayOutputStream, File, PrintStream}
+import java.io.File
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
-import graft.jobs.{FetchResult, IngestMetrics, IngestionJob, UserFetcher}
+import graft.IngestionBodies.{aesKey, batch, bidxKey, pepper, user}
+import graft.jobs.{IngestMetrics, IngestionJob, SecretKeys}
 import graft.ops.Upsert
 import graft.schema.Schemas
 import graft.tools.Meter
@@ -20,42 +23,13 @@ import graft.tools.Meter
   */
 class IngestionCommitSpec extends SparkSpec {
 
-  private val pepper = "pepper"
-  private val aesKey = "0123456789abcdef"
-  private val bidxKey = "bidx-key"
-
   /** The columns a rerun reproduces bit for bit (no salt, no IV). */
   private val deterministic = Seq("login_uuid", "login_username", "name_first",
     "name_last", "dob_date", "dob_age", "registered_date", "location_country",
     "email_bidx")
 
-  private final class BodyFetcher(body: String) extends UserFetcher {
-    override def describe: String = "spec://batch"
-    override def fetch(): FetchResult = FetchResult(body, None, None)
-  }
-
-  /** One API user; `uuid = null` gives a user without a key. */
-  private def user(uuid: String, first: String): String = {
-    val key = if (uuid == null) "null" else s""""$uuid""""
-    s"""{"name": {"title": "Mx", "first": "$first", "last": "L$first"},
-       | "email": "$first@example.com",
-       | "login": {"uuid": $key, "username": "u$first", "password": "pw$first"},
-       | "dob": {"date": "1990-01-02T03:04:05.000Z", "age": 35},
-       | "registered": {"date": "2015-06-07T08:09:10.000Z", "age": 10},
-       | "phone": "011-555-$first",
-       | "location": {"street": {"number": 1, "name": "$first Road"},
-       |   "city": "C", "state": "S", "country": "Country$first",
-       |   "postcode": "P"}}""".stripMargin
-  }
-
-  private def batch(users: String*): String =
-    users.mkString("""{"results": [""", ",", "]}")
-
   private def run(store: String, body: String): IngestMetrics =
-    Console.withOut(new PrintStream(new ByteArrayOutputStream())) {
-      IngestionJob.run(spark, new BodyFetcher(body), store, pepper, aesKey,
-        bidxKey)
-    }
+    IngestionBodies.run(spark, store, body)
 
   private def sorted(df: DataFrame): Seq[Row] =
     df.select(deterministic.map(col): _*).collect().toSeq.sortBy(_.toString)
@@ -166,9 +140,9 @@ class IngestionCommitSpec extends SparkSpec {
     assert(Files.exists(residue))
   }
 
-  test("a run against an existing store is driver-sized: the parse and the " +
-      "schema check run no job, the probe-and-count read and the staging " +
-      "write at most four, and a warm run compiles nothing") {
+  test("a warm run against an existing store is driver-sized: the parse " +
+      "runs no job, the probe and the count none, the staging write at " +
+      "most two, and the run compiles nothing") {
     val store = newStore()
     run(store, batch(user("k1", "Ada")))
     // the existing-store path once, with a keyless user and a stored key
@@ -181,13 +155,32 @@ class IngestionCommitSpec extends SparkSpec {
     val (m, warm) = Meter.measure(spark)(run(store, body))
     assert(m.rowsAfterDedup === 5)
     val stages = warm.stageRows.map(_.name).mkString("; ")
-    assert(warm.jobs <= 4, stages)
-    // every stage is the probe-and-count read's or the staging write's:
-    // no parse job and no schema-inference job on its own source line
-    val lines = warm.stageRows.flatMap(st =>
-      """IngestionJob\.scala:(\d+)""".r.findFirstMatchIn(st.name).map(_.group(1)))
-    assert(lines.distinct.size <= 2, stages)
+    assert(warm.jobs <= 2, stages)
+    // every stage is the staging write's: no parse, probe or count job
+    val src = Files.readAllLines(
+      Paths.get("src/main/scala/graft/jobs/IngestionJob.scala")).asScala
+    val write = src.indexWhere(_.contains(".write.parquet(staging.toString)"))
+    assert(write >= 0)
+    val lines = warm.stageRows.map(st => """IngestionJob\.scala:(\d+)""".r
+      .findFirstMatchIn(st.name).map(_.group(1).toInt))
+    assert(lines.nonEmpty && lines.forall(_.contains(write + 1)), stages)
     assert(warm.compiles === 0, s"warm run compiled ${warm.compiles} classes")
+  }
+
+  test("both secureTransform overloads produce exactly the declared store " +
+      "schema") {
+    val users = IngestionJob.readUsersJson(spark,
+      batch(user("k1", "Ada"), user(null, "Nobody")))
+    val fernet = java.util.Base64.getUrlEncoder.encodeToString(
+      Array.tabulate[Byte](32)(_.toByte))
+    def fields(df: DataFrame) =
+      df.drop("_fetch_pos").schema.map(f => f.name -> f.dataType)
+    val declared = Schemas.storeSchema.map(f => f.name -> f.dataType)
+    assert(fields(IngestionJob.secureTransform(users, pepper, aesKey,
+      bidxKey)) === declared)
+    assert(fields(IngestionJob.secureTransform(users,
+      SecretKeys(pepper, fernet, bidxKey), kdfTimeCost = 1,
+      kdfMemoryKib = 64)) === declared)
   }
 
   test("a store written with another schema fails the run with the schema " +

@@ -81,6 +81,30 @@ class IngestionHttpSpec extends SparkSpec {
       _.matches("rows_fetched=6 rows_after_dedup=5 output=.+")))
   }
 
+  test("a run prints its per-phase milliseconds after the reference's " +
+      "four lines, and the phases sum to no more than the run's wall") {
+    val store = Files.createTempDirectory("graft_stage_store").toString + "/st"
+    for (_ <- 1 to 2) { // the run that creates the store, then a warm one
+      val out = new ByteArrayOutputStream()
+      val t0 = System.nanoTime()
+      val m = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+        IngestionJob.run(spark, fixture, store, "pepper", "0123456789abcdef",
+          "bidx-key")
+      }
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      val lines = out.toString("UTF-8").linesIterator.toSeq
+      assert(lines.size === 5, lines)
+      assert(lines.take(4) === m.logLines(lines(1).stripPrefix("api_url=")))
+      assert(lines(4) === m.stageMs.logLine)
+      assert(lines(4).matches(
+        "stage_ms fetch=\\d+ parse=\\d+ probe=\\d+ write=\\d+ commit=\\d+"),
+        lines(4))
+      val t = m.stageMs
+      assert(t.fetch + t.parse + t.probe + t.write + t.commit <= wallMs,
+        s"${t.logLine} in a $wallMs ms run")
+    }
+  }
+
   // ---- ApiServer: the reference's service shell (api_server.py:13-41)
 
   private def httpGet(url: String): (Int, String) = httpSend(url, "GET")
@@ -114,6 +138,8 @@ class IngestionHttpSpec extends SparkSpec {
       assert(sb.contains(""""rows_fetched": 6"""))
       assert(sb.contains(""""rows_after_dedup": 5"""))
       assert(sb.contains(""""http_status": null""")) // fixture: observed-absent
+      assert((""""stage_ms": \{"fetch": \d+, "parse": \d+, "probe": \d+, """ +
+        """"write": \d+, "commit": \d+\}""").r.findFirstIn(sb).nonEmpty, sb)
 
       // async: immediate queued response, job completes in background
       val before = srv.backgroundCompleted.get()
