@@ -989,9 +989,9 @@ object EventOps {
     // (p50_ok/p90_ok, integer cross-multiplication — no float
     // thresholds); those two legs are VERIFICATION machinery (the
     // oracle's job) and each re-scans the corpus, so they run under the
-    // linear VerifyGate posture (VERDICT r14 #1, the q41/q201
+    // linear Gates posture (VERDICT r14 #1, the q41/q201
     // convention): in-plan at oracle SF, skipped above
-    // VerifyGate.MaxRowsLinear with the `verified = false` sentinel.
+    // Gates.MaxRowsLinear with the `verified = false` sentinel.
     // Above the gate the serve read is sketch-sized — k·|groups| rows
     // (128·5 here) — and the increment's cost is one TopKByScore
     // partial aggregate over the increment alone: every map task
@@ -1293,10 +1293,10 @@ object EventOps {
     * legs — merge_equals_full (the merged id set vs a full-corpus
     * rebuild; the merge theorem, CHECKED) and p50_ok/p90_ok (each
     * estimate's exact full-corpus rank inside integer cross-multiplied
-    * bands) — under the [[VerifyGate]] posture (VERDICT r14 #1, the
+    * bands) — under the [[Gates]] posture (VERDICT r14 #1, the
     * q41/q201 convention): both legs re-scan the corpus, which is
     * exactly the cost the sketch-sized read exists to avoid, so they
-    * run in-plan only below [[VerifyGate.MaxRowsLinear]] (covers the
+    * run in-plan only below [[Gates.MaxRowsLinear]] (covers the
     * driver's oracle SF) and above it the serve path is sketch-sized
     * (k·groups rows) with the machine-readable `verified = false`
     * sentinel — the invariant columns then report the theorem, not a
@@ -1323,7 +1323,7 @@ object EventOps {
           col("value"))).as("est_p50"),
         max(when(col("vr") === floor((col("sn") * 9 + 9) / lit(10)),
           col("value"))).as("est_p90"))
-    if (VerifyGate.smallLinear(ev)) {
+    if (Gates.verifyInPlan(ev, Gates.MaxRowsLinear)) {
       val full = bottomKOf(ev)
       val nFull = full.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_full"))
@@ -1363,9 +1363,9 @@ object EventOps {
     * construction (merged ≡ full is the checked theorem, so the oracle
     * states the full build) and the rank-extraction arithmetic; the two
     * in-plan invariants are pinned TRUE — a merge or accuracy break
-    * flips the row hash — and `verified` mirrors the engine's linear
-    * VerifyGate exactly (the q41 convention): true iff the corpus is
-    * within the in-plan verification bound. LAZY: referenced by the
+    * flips the row hash — and `verified` mirrors the engine's
+    * Gates.verifyInPlan exactly (the q41 convention): true iff the corpus
+    * is within the in-plan verification bound. LAZY: referenced by the
     * catalog val during object init (the q191 lesson). */
   private[graft] lazy val BottomKQuantileSql =
     """WITH ev AS (SELECT event_type, event_id, value,

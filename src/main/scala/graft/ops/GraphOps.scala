@@ -87,8 +87,7 @@ object GraphOps {
     * bucketed in) src layout and a shuffled rank join — per-iteration
     * edge movement stays zero. That crossover is a GATE: above
     * `broadcastGateNodes` live nodes the plan switches to the
-    * shuffled-rank form automatically (see
-    * [[BroadcastGateNodesDefault]]).
+    * shuffled-rank form automatically (see [[Gates.BroadcastNodes]]).
     *
     * The returned frame's checkpointed blocks belong to the caller's
     * [[RunScope]] (called outside a query: this helper's own scope, freed
@@ -97,7 +96,7 @@ object GraphOps {
     */
   def pageRankScaled(edges: DataFrame, iters: Int,
       scale: Long = 1000000000L,
-      broadcastGateNodes: Long = BroadcastGateNodesDefault): DataFrame =
+      broadcastGateNodes: Long = Gates.BroadcastNodes): DataFrame =
     RunScope.keyed("GraphOps.pageRankScaled") {
     import org.apache.spark.storage.StorageLevel
     val ed = edges.persist()
@@ -121,18 +120,14 @@ object GraphOps {
     // subtree every iteration's checkpoint action re-executed (one agg
     // job + one BroadcastNestedLoopJoin per iteration). One bounded
     // count over the checkpointed node-sized relation — a single long
-    // to the driver, the belowGate-probe class of driver action, no
-    // row data — embeds both integer terms as literals instead.
+    // to the driver, no row data — makes both integer terms literals.
     val nNodes = deg.count()
     val r0 = scale / nNodes                      // `div` on non-negatives
     val baseTerm = scale * 15L / (100L * nNodes) // = the SQL base term
-    // Broadcast-vs-shuffle gate (round 17, VERDICT r16 #2): the
-    // per-iteration (rank, deg) broadcast is node-sized, which is fine
-    // for a dimension-sized node set but not for a graph whose node set
-    // scales with the corpus. The limit-probe over the checkpointed
-    // node relation is bounded by the gate itself (the
-    // connectedComponents driverGateEdges discipline).
-    val useBroadcast = belowGate(deg, broadcastGateNodes)
+    // Broadcast-vs-shuffle gate (round 17, VERDICT r16 #2; the crossover
+    // is derived at [[Gates.BroadcastNodes]]), decided by the node count
+    // above: no second job over the node relation.
+    val useBroadcast = nNodes <= broadcastGateNodes
     // Degree-carrying state (round 19): the rank state is (node, r, deg)
     // instead of (node, r), and each edge row carries its DESTINATION's
     // degree (`ddeg`) — attached via the same node-sized relation the
@@ -197,45 +192,6 @@ object GraphOps {
     ranks
   }
 
-  /** Node-count gate above which the per-iteration (node, rank, deg)
-    * relation is SHUFFLED to the edge layout instead of broadcast
-    * (round 17, VERDICT r16 #2). Memory-derived, the
-    * [[graft.ops.PipelineOps.connectedComponents]] driverGateEdges
-    * discipline: a broadcast collects the relation to the driver and
-    * ships it to every executor — 3 longs/row ≈ 24 B × gate = 24 MB at
-    * the default (≈3× that transiently as driver rows), well inside a
-    * 1 GB driver heap and Spark's own torrent-broadcast comfort zone,
-    * re-paid once per iteration. Above the gate the crossover
-    * accounting flips: the broadcast costs nodes × executors bytes per
-    * iteration, while the shuffled plan moves the node-sized rank
-    * relation ONCE per iteration (hash to the edge layout) plus a
-    * partial-aggregated contribution exchange bounded by
-    * nodes × partitions — and the edge relation still never moves
-    * (pre-exchanged once into a src-clustered layout before the loop,
-    * or read from the written src-bucketed store in the maintain
-    * serve). GraphOpsSpec asserts both paths produce bit-identical
-    * ranks (integer determinism makes the equality exact). */
-  private[graft] val BroadcastGateNodesDefault: Long = 1000000L
-
-  /** `limit(gate + 1)` probe count, Int-clamped (limit takes Int; a
-    * gate at/above Int.MaxValue means "always broadcast" and any count
-    * below it passes). Checked BEFORE the +1 — `Long.MaxValue + 1`
-    * wraps negative — and floored at 0 so a negative gate argument
-    * degrades to "never broadcast" instead of a negative-limit throw
-    * (round 18 review, the connectedComponents probe's twin fix). */
-  private def intGate(gate: Long): Int =
-    if (gate >= Int.MaxValue.toLong) Int.MaxValue
-    else math.max(0L, gate + 1).toInt
-
-  /** The broadcast-vs-shuffle gate probe, shared by [[pageRankScaled]]
-    * and [[pageRankMaintainServe]] (VERDICT r17 hygiene — the twin
-    * inline probes drifted one review apart): is the node set at/below
-    * the gate? The limit bounds the probe by the gate itself (the
-    * connectedComponents driverGateEdges discipline — never an
-    * unbounded count over a corpus-scaled node relation). */
-  private def belowGate(deg: DataFrame, gate: Long): Boolean =
-    deg.limit(intGate(gate)).count() <= gate
-
   /** The per-iteration rank⋈edges join, gated: below the gate the
     * node-sized (rank, deg) relation broadcasts to the stationary edge
     * cache; above it the edges' src-clustered layout is the stationary
@@ -295,7 +251,7 @@ object GraphOps {
   private[graft] def pageRankMaintainServe(s: SparkSession,
       incEdgesRaw: DataFrame, iters: Int,
       scale: Long = 1000000000L,
-      broadcastGateNodes: Long = BroadcastGateNodesDefault): DataFrame =
+      broadcastGateNodes: Long = Gates.BroadcastNodes): DataFrame =
     RunScope.keyed("GraphOps.pageRankMaintainServe") {
     import org.apache.spark.storage.StorageLevel
     val snap = RunScope.own(s.table(EdgeTable)
@@ -318,14 +274,14 @@ object GraphOps {
     val r0 = scale / nNodes
     val baseTerm = scale * 15L / (100L * nNodes)
     // The broadcast gate (round 17, VERDICT r16 #2 — see
-    // BroadcastGateNodesDefault). Above it, the snapshot side of the
-    // per-iteration join reads the WRITTEN src-bucketed layout
-    // (build-once per snapshot generation, amortized across serves)
-    // and the increment side pre-exchanges to src ONCE — so the serve
-    // contract is unchanged: the snapshot store is never exchanged at
-    // serve time in either mode, and per-iteration movement is
-    // node-sized (rank relation + partial-aggregated contributions).
-    val useBroadcast = belowGate(deg, broadcastGateNodes)
+    // Gates.BroadcastNodes), decided by the node count above. Above it,
+    // the snapshot side of the per-iteration join reads the WRITTEN
+    // src-bucketed layout (build-once per snapshot generation, amortized
+    // across serves) and the increment side pre-exchanges to src ONCE —
+    // so the serve contract is unchanged: the snapshot store is never
+    // exchanged at serve time in either mode, and per-iteration movement
+    // is node-sized (rank relation + partial-aggregated contributions).
+    val useBroadcast = nNodes <= broadcastGateNodes
     val snapJoin =
       if (useBroadcast) snap
       else { writeEdgeSrcLayout(s); s.table(EdgeSrcTable) }

@@ -25,19 +25,13 @@ import org.apache.spark.sql.functions._
   */
 object PipelineOps {
 
-  /** Default driver union-find gate for [[connectedComponents]] — named
-    * so the memory contract is spec-checkable (VERDICT r13 #8): the
-    * derivation lives on the gate branch below; PipelineOpsSpec asserts
-    * the collect byte bound against this constant. */
-  private[graft] val DriverGateEdgesDefault: Int = 200000
-
   /** Connected components by iterative min-label propagation.
     *
     * @param edges undirected edge list, columns (a, b)
     * @return (node, cluster_id) — cluster_id = min node id in the component
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      driverGateEdges: Int = DriverGateEdgesDefault): DataFrame =
+      driverGateEdges: Int = Gates.DriverEdges): DataFrame =
     RunScope.keyed("PipelineOps.connectedComponents") {
     // Checkpoint the input FIRST, at full parallelism (under the loop's
     // 4-partition width q45's upstream join once ran on 4 tasks, the
@@ -45,23 +39,15 @@ object PipelineOps {
     val in = RunScope.checkpoint(
       edges.select(col("a").cast("long"), col("b").cast("long")))
     val spark = edges.sparkSession
-    // Size-gated hybrid (round 12): the loop pays ~0.5 s per round of
-    // fixed overhead, which dwarfs delta-sized graphs. The gate counts
-    // INPUT edges: one collect of at most gate + 1 decides the path and,
-    // below the gate, feeds the driver [[unionFind]]. The 200k default is
-    // MEMORY-DERIVED (VERDICT r13 #8): ≤ gate × 16 B = 3.2 MB of rows
-    // (~10 MB as driver Rows), ≤ 2·gate union-find entries (~25 MB);
-    // PipelineOpsSpec asserts the bound. The collect is ONE job: one task
-    // reads the checkpoint's blocks and stops after gate + 1 rows (a
-    // plain `limit().collect()` scans one partition, then the rest in a
-    // second job).
-    val es = in.coalesce(1).limit(probeLimit(driverGateEdges)).collect()
-    if (es.length <= driverGateEdges) {
+    // Size-gated hybrid (round 12, [[Gates.DriverEdges]]): one bounded
+    // collect of the INPUT edges decides the path and, below the gate,
+    // feeds the driver [[unionFind]].
+    Gates.collectBounded(in, driverGateEdges).map { es =>
       import spark.implicits._
       spark.createDataset(
           unionFind(es.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq)
         .toDF("node", "cluster_id")
-    } else {
+    }.getOrElse {
       // The label table is O(nodes-with-duplicates), tiny relative to the
       // corpus — run the iterative shuffles at a partition count sized to
       // IT (same principle as the streaming state stores), restoring the
@@ -104,11 +90,6 @@ object PipelineOps {
     }
     parent.keys.toSeq.map(n => n -> find(n)).toMap
   }
-
-  /** The row limit of a gated collect: gate + 1 rows tell "over the
-    * gate" apart, clamped so a gate of Int.MaxValue does not overflow. */
-  private[graft] def probeLimit(gate: Int): Int =
-    math.max(0L, math.min(gate.toLong + 1, Int.MaxValue.toLong)).toInt
 
   private def connectedComponentsImpl(sym: DataFrame,
       maxIter: Int): DataFrame = {
@@ -226,14 +207,13 @@ object PipelineOps {
   /** [[incrementalDupClusters]] over explicit snapshot/increment
     * (doc_id, text) relations — the testable core (PipelineOpsSpec asserts
     * ≡ from-scratch clustering of the union on planted merge shapes, and
-    * the driver path ≡ the relational one, `driverGate` = 0).
+    * the driver path ≡ the relational one).
     * Candidates are looked up in `lookupText`, by default the union. */
   private[graft] def incrementalDupClustersFrom(s: SparkSession,
       snap: DataFrame, inc: DataFrame, jaccardThreshold: Double,
       dfCap: Int, table: String, indexTag: Option[String] = None,
       labelsTag: Option[String] = None,
-      lookupText: Option[DataFrame] = None,
-      driverGate: Int = TextOps.DriverGateDeltaRowsDefault): DataFrame =
+      lookupText: Option[DataFrame] = None): DataFrame =
     RunScope.keyed("PipelineOps.incrementalDupClustersFrom") {
     val text = lookupText.getOrElse(snap.unionByName(inc))
     // The INCREMENT is read once, by its banding, so it is not cached.
@@ -265,7 +245,7 @@ object PipelineOps {
     // without a job.
     val edges = TextOps
       .deltaPairsAgainstIndex(s, table, TextOps.fingerprints(inc), text,
-        jaccardThreshold, driverGate)
+        jaccardThreshold)
       .select(col("id_a"), col("id_b"))
 
     // ---- contraction + serve: the shared delta-merge algebra — see
@@ -274,7 +254,7 @@ object PipelineOps {
     // back to `table`_labels. One range shuffle on cluster_id serves both
     // the count and the order (a hash shuffle for the count and a range
     // shuffle for the order are two exchanges, and one more job).
-    mergeDeltaIntoLabels(s.table(s"${table}_labels"), edges, driverGate)
+    mergeDeltaIntoLabels(s.table(s"${table}_labels"), edges)
       .repartitionByRange(col("cluster_id"))
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
       .orderBy(col("cluster_id"))
@@ -437,8 +417,8 @@ object PipelineOps {
     * for themselves), so the merged table equals a from-scratch
     * clustering EXACTLY.
     *
-    * Size-gated like [[connectedComponents]]: one collect of at most
-    * gate + 1 edges picks the path. Below the gate (every warm op of the
+    * Size-gated like [[connectedComponents]]: one bounded collect of the
+    * edges picks the path. Below the gate (every warm op of the
     * family) the contraction and the closure run on the driver — the
     * touched endpoints' stored labels are one collect, the closure is
     * [[unionFind]] — and the result is the stored labels broadcast-joined
@@ -457,13 +437,13 @@ object PipelineOps {
     *              and new-new mixed freely (both endpoints contract)
     */
   private[graft] def mergeDeltaIntoLabels(lbl: DataFrame, edges: DataFrame,
-      driverGateEdges: Int = DriverGateEdgesDefault): DataFrame = {
-    val es = edges.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .limit(probeLimit(driverGateEdges)).collect()
-    if (es.length <= driverGateEdges)
-      mergeOnDriver(lbl, es.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-    else mergeRelational(lbl, edges)
-  }
+      driverGateEdges: Int = Gates.DriverEdges): DataFrame =
+    Gates.collectBounded(
+        edges.select(col("id_a").cast("long"), col("id_b").cast("long")),
+        driverGateEdges)
+      .map(es => mergeOnDriver(lbl,
+        es.toSeq.map(r => (r.getLong(0), r.getLong(1)))))
+      .getOrElse(mergeRelational(lbl, edges))
 
   private def mergeOnDriver(lbl: DataFrame,
       edges: Seq[(Long, Long)]): DataFrame = {
@@ -1796,7 +1776,7 @@ object PipelineOps {
     // this query's REASON to exist at oracle scale — the driver's DuckDB
     // compare at sf0.01 (500 docs) must see components over exactly-computed
     // edges — but it is the deliberately-quadratic formulation whose
-    // production twin is q45b. Above VerifyGate.MaxRows docs the benched
+    // production twin is q45b. Above Gates.MaxRows docs the benched
     // plan feeds the same closure from the LSH candidate path instead
     // (identical output: q34 proves LSH pairs ≡ exact pairs on these tables
     // every round, and q45b shares this oracle verbatim), so the sf0.1 bench
@@ -1804,7 +1784,7 @@ object PipelineOps {
     Q("q45_dup_clusters",
       (s, d) => {
         val labels =
-          if (VerifyGate.small(Tables.documents(s, d))) {
+          if (Gates.verifyInPlan(Tables.documents(s, d))) {
             val sh = TextOps.docsWithShinglesHashed(s, d)
             connectedComponents(TextOps
               .exactJaccardPairsCapped(sh, 0.5, dfCap = 16)

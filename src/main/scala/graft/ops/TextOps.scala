@@ -904,7 +904,7 @@ object TextOps {
     // (≤3 differing bits across 4 chunks leave ≥1 chunk intact), and the
     // plan CHECKS it rather than assuming it. The brute scan is n² in the
     // corpus, i.e. exactly the cost the pigeonhole path exists to avoid,
-    // so it is GATED (VERDICT r3 #1): in-plan below VerifyGate.MaxRows
+    // so it is GATED (VERDICT r3 #1): in-plan below Gates.MaxRows
     // docs — which covers the driver's sf0.01 oracle run — and skipped
     // above it, where `complete` reports the theorem as the un-checked
     // sentinel and the benched plan measures the production pigeonhole
@@ -919,7 +919,7 @@ object TextOps {
         val pigeon = simHashPairsFromSignatures(sig, maxHamming = 3)
         val base = pigeon.agg(count(lit(1)).as("n_pairs"),
           max(col("hamming")).as("max_h"))
-        if (VerifyGate.small(docs)) {
+        if (Gates.verifyInPlan(docs)) {
           val brute = sig.as("a").join(sig.as("b"),
               col("a.doc_id") < col("b.doc_id"))
             .select(bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
@@ -940,9 +940,10 @@ object TextOps {
             (col("n_pairs") >= 1).as("nonempty"),
             lit(false).as("verified"))
       },
-      // the oracle encodes the VerifyGate rule (round-13 sf0.1 audit):
-      // above MaxRows=1000 docs the plan honestly reports the pigeonhole
-      // theorem un-checked (verified=false), and the oracle predicts it
+      // the oracle encodes the Gates.verifyInPlan rule (round-13 sf0.1
+      // audit): above MaxRows=1000 docs the plan honestly reports the
+      // pigeonhole theorem un-checked (verified=false), and the oracle
+      // predicts it
       Some("""SELECT true AS complete, true AS hamming_bounded,
               true AS nonempty,
               (SELECT count(*) FROM documents) <= 1000 AS verified""")),
@@ -1658,8 +1659,8 @@ object TextOps {
     *
     * The full rebuild re-tokenizes the whole corpus — exactly the cost
     * the frontier-sized artifact exists to avoid — so it runs under the
-    * [[VerifyGate]] posture (VERDICT r13 #2, the q41/q44 convention):
-    * in-plan at oracle scale, skipped above [[VerifyGate.MaxRows]] with
+    * [[Gates]] posture (VERDICT r13 #2, the q41/q44 convention):
+    * in-plan at oracle scale, skipped above [[Gates.MaxRows]] with
     * the machine-readable `verified = false` sentinel (the
     * merge_equals_full column then reports the theorem, not a
     * measurement; the spec tier re-proves it on purpose-built corpora
@@ -1668,7 +1669,7 @@ object TextOps {
       ax: DataFrame): DataFrame = {
     val m = RunScope.own(merged
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
-    if (VerifyGate.small(ax)) {
+    if (Gates.verifyInPlan(ax)) {
       val full = paretoFrontier2D(ax.select(col("a"), col("b")))
       val mism = m.select(col("a"), col("b"), col("n_docs").as("nm"))
         .join(full.select(col("a"), col("b"), col("n_docs").as("nf")),
@@ -1689,8 +1690,9 @@ object TextOps {
 
   /** q203/q204's shared oracle — q201's NOT-EXISTS skyline over the
     * full corpus with the merge invariant pinned TRUE. `verified`
-    * mirrors the engine's VerifyGate exactly (the q41 convention): true
-    * iff the corpus is within the in-plan verification gate. */
+    * mirrors the engine's Gates.verifyInPlan exactly (the q41
+    * convention): true iff the corpus is within the in-plan verification
+    * gate. */
   private[graft] lazy val ParetoMaintSql =
     """WITH f AS (SELECT
          len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS nt,
@@ -2295,17 +2297,6 @@ object TextOps {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Default row gate of [[deltaPairsAgainstIndex]]'s driver path, named
-    * so its memory contract is spec-checkable (PipelineOpsSpec asserts the
-    * bounds). Every driver collect of that path is bounded by it: the
-    * increment's band rows and the probed index rows (int band, long
-    * bucket, long doc id: ≤ gate × 20 B = 1 MB each, ~4 MB as driver
-    * Rows), the candidate pairs (≤ gate tuples, ~3 MB) and the candidate
-    * docs whose fingerprints are collected (≤ gate arrays of 8 B per
-    * trigram: ≤ 39 MB for this corpus's ≤ 100-token docs). 50k band rows
-    * is an increment of ~1,500 docs, more than the sf0.1 increment. */
-  private[graft] val DriverGateDeltaRowsDefault: Int = 50000
-
   /** Delta near-dup pairs of an INCREMENT against a written snapshot band
     * index — the q144 maintain-phase candidate machinery factored once
     * (round 15) so every maintainer that needs the increment's edges
@@ -2320,14 +2311,16 @@ object TextOps {
     * (ADVICE r10 #3), so its cost depends only on the increment;
     * candidates are looked up in the (doc_id, text) relation `text`.
     *
-    * Size-gated: below `driverGate` ([[deltaPairsOnDriver]]) the same
-    * candidate set and verify run on the driver and the pairs come back
-    * as a local relation; nothing is persisted. Above it the relational
-    * path runs, its persisted relations (bands + candidates + lookup)
-    * owned by the run's [[RunScope]], as in [[pairsFromBandedIndex]]. Output (id_a, id_b, jaccard). */
+    * Size-gated: below `driverGate` ([[deltaPairsOnDriver]],
+    * [[Gates.DeltaRows]]) the same candidate set and verify run on the
+    * driver and the pairs come back as a local relation; nothing is
+    * persisted. Above it the relational path runs, its persisted
+    * relations (bands + candidates + lookup) owned by the run's
+    * [[RunScope]], as in [[pairsFromBandedIndex]]. Output
+    * (id_a, id_b, jaccard). */
   private[graft] def deltaPairsAgainstIndex(s: SparkSession, table: String,
       inc: DataFrame, text: DataFrame, jaccardThreshold: Double,
-      driverGate: Int = DriverGateDeltaRowsDefault): DataFrame =
+      driverGate: Int = Gates.DeltaRows): DataFrame =
     deltaPairsOnDriver(s, table, inc, text, jaccardThreshold, driverGate)
       .map { pairs =>
         import s.implicits._
@@ -2356,34 +2349,29 @@ object TextOps {
 
   /** [[deltaPairsAgainstIndex]]'s candidate set and verify on the driver,
     * or None when a collect would pass `gate` rows. Spark runs three small
-    * collects besides the hot list's: the increment's bands, the index
-    * rows in one of their buckets, and the candidates' fingerprints from
-    * `text`; the last two are restricted by one id-set expression, never
-    * a join. The
-    * candidate set is the relational join's: per (band, bucket), every
-    * index or increment id with every increment id above it. The verify
+    * collects besides the hot list's, one job each: the increment's bands
+    * and the index rows in one of their buckets ([[Gates.collectBounded]]),
+    * and the candidates' fingerprints from `text`; the last two are
+    * restricted by one id-set expression, never a join. The candidate set
+    * is the relational join's: per (band, bucket), every index or
+    * increment id with every increment id above it. The verify
     * is [[verifyJaccardCandidates]]' arithmetic: ni = |sh_a ∩ sh_b|,
     * jaccard = ni / (|sh_a| + |sh_b| − ni) as a double, kept when
     * ≥ threshold. */
   private def deltaPairsOnDriver(s: SparkSession, table: String,
       inc: DataFrame, text: DataFrame, jaccardThreshold: Double,
       gate: Int): Option[Seq[(Long, Long, Double)]] = {
-    def atMost(df: DataFrame): Option[Array[Row]] = {
-      val rows = df.limit(PipelineOps.probeLimit(gate)).collect()
-      if (rows.length <= gate) Some(rows) else None
-    }
+    def atMost(df: DataFrame): Option[Array[Row]] = Gates.collectBounded(
+      df.select(col("band"), col("bucket"), col("doc_id")), gate)
     def byKey(rows: Array[Row]) =
       rows.groupMap(r => (r.getInt(0), r.getLong(1)))(_.getLong(2))
     for {
-      incRows <- atMost(bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot"))
-        .select(col("band"), col("bucket"), col("doc_id")))
+      incRows <- atMost(bandedSignaturesFrozenHot(inc, s.table(s"${table}_hot")))
       incByKey = byKey(incRows)
       // the bucket alone restricts the scan (one id set); the driver keeps
       // the rows whose (band, bucket) the increment holds
-      idxRows <- atMost(s.table(table)
-        .filter(IdSetExprs.isIn(col("bucket"),
-          incByKey.keysIterator.map(_._2).toSet))
-        .select(col("band"), col("bucket"), col("doc_id")))
+      idxRows <- atMost(s.table(table).filter(IdSetExprs.isIn(col("bucket"),
+        incByKey.keysIterator.map(_._2).toSet)))
       cand <- candidatePairs(incByKey,
         byKey(idxRows).filter { case (k, _) => incByKey.contains(k) }, gate)
       ids = cand.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet

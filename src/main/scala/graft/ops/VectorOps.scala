@@ -864,7 +864,7 @@ object VectorOps {
   }
 
   /** The q41/q44/q74 verification contract, gated (VERDICT r3 #1): below
-    * [[VerifyGate.MaxRows]] corpus rows the approximate top-k is verified
+    * [[Gates.MaxRows]] corpus rows the approximate top-k is verified
     * IN-PLAN against the exact brute-force top-k (recall ≥ `recallFloor`,
     * every query returned a full k) — this is the branch the driver's
     * DuckDB oracle sees at sf0.01. Above the gate the benched plan measures
@@ -888,7 +888,7 @@ object VectorOps {
     */
   private[graft] def gatedAnnVerification(approx: DataFrame, corpus: DataFrame,
       exact: => DataFrame, k: Int, recallFloor: Double): DataFrame =
-    if (VerifyGate.small(corpus))
+    if (Gates.verifyInPlan(corpus))
       recallVsExact(approx, exact)
         .agg(count(lit(1)).as("n_queries"),
           (min(col("n_returned")) === k).as("all_returned_k"),
@@ -950,7 +950,7 @@ object VectorOps {
   /** Per-query ANN recall floors (VERDICT r11 #5) — re-derived from the
     * MEASURED avg_recall at BOTH the driver's oracle SF and the bench SF
     * via `graft.tools.RecallProbe` (which holds the verify gate open so
-    * the exact comparison runs above VerifyGate.MaxRows) — measured at
+    * the exact comparison runs above Gates.MaxRows) — measured at
     * ALL THREE testdata SFs, because the driver verifies at sf0.01, the
     * bench runs sf0.1, and the spec tier exercises sf0.001 (a distinct
     * generated table, not a subset — its recalls differ):
@@ -1204,7 +1204,7 @@ object VectorOps {
     // oracle mechanism for q42b's LSH production path — the one
     // all-pairs plan the benched catalog still executed at sf ≥ 0.1.
     // Like q41/q44's exact-recall legs, it runs in-plan only below
-    // VerifyGate.MaxRows (covers the driver's oracle SF, where the
+    // Gates.MaxRows (covers the driver's oracle SF, where the
     // DuckDB compare needs the real pair set); above the gate it
     // returns the EMPTY un-run sentinel — documented as "oracle not
     // executed", never "no near-dups"; the production answer at that
@@ -1216,7 +1216,7 @@ object VectorOps {
       (s, d) => {
         val e0 = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"))
-        if (VerifyGate.small(e0)) {
+        if (Gates.verifyInPlan(e0)) {
           val e = withNorm(e0, "embedding")
           val a = e.select(col("vec_id").as("id_a"),
             col("embedding").as("ea"), col("embedding_n").as("na"))

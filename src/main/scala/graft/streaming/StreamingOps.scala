@@ -876,7 +876,7 @@ object StreamingOps {
     // re-ingested event lands on its existing key and moves nothing —
     // the served estimates still equal a full rebuild over the unique
     // corpus, which the plan CHECKS (merge_equals_full) alongside the
-    // exact-rank bands, both under q193's linear VerifyGate posture
+    // exact-rank bands, both under q193's linear Gates posture
     // (in-plan at oracle SF, `verified = false` sentinel above — the
     // serve read is then sketch-sized). Oracle: q193's SQL verbatim —
     // one rule, two engine paths.

@@ -13,7 +13,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     // hold the verify gate open so the probe can MEASURE recall at bench
-    // SF (above VerifyGate.MaxRows), where the benched plan itself
+    // SF (above Gates.MaxRows), where the benched plan itself
     // honestly skips the quadratic exact pass (VERDICT r11 #5)
     sys.props("graft.forceVerify") = "1"
     val spark = graft.LocalSpark(4)

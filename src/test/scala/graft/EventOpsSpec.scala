@@ -388,7 +388,7 @@ class EventOpsSpec extends SparkSpec {
   test("bottom-k verified quantiles: the corpus-sized verification legs " +
       "run only under the linear gate; above it the serve is sketch-sized " +
       "with the verified=false sentinel (VERDICT r14 #1)") {
-    import graft.ops.{EventOps, VerifyGate}
+    import graft.ops.{EventOps, Gates}
     def evOf(n: Long) = EventOps.hashValues(
       spark.range(0L, n).selectExpr("id AS event_id",
         "'a' AS event_type", "CAST(id % 97 AS DOUBLE) AS value"))
@@ -401,8 +401,8 @@ class EventOpsSpec extends SparkSpec {
     assert(vSmall === ((128L, true, true, true, true)))
     // above the gate: same schema, verified = false, and the plan holds
     // NO second scan of the corpus — the only corpus-sized leg is the
-    // gate probe (limit-bounded) and the merged sketch the caller built
-    val big = evOf(VerifyGate.MaxRowsLinear + 1)
+    // gate probe (a bounded collect) and the merged sketch the caller built
+    val big = evOf(Gates.MaxRowsLinear + 1)
     val dfBig = EventOps.bottomKVerifiedQuantiles(spark, big,
       EventOps.bottomKOf(big))
     val vBig = dfBig

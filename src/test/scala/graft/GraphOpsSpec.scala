@@ -39,9 +39,13 @@ class GraphOpsSpec extends SparkSpec {
     //      r(2) = 37 + (250*85)/(100*3) [from 1] + (250*85)/(100*2) [from 3]
     //           = 37 + 70 + 106 = 213;  r(3) = 213 by symmetry
     //      r(4) = 37 + 70 = 107
-    val r1 = GraphOps.pageRankScaled(edges, iters = 1, scale = 1000L)
-      .as[(Long, Long)].collect().toMap
+    val (ranks1, m) = Meter.measure(spark)(
+      GraphOps.pageRankScaled(edges, iters = 1, scale = 1000L))
+    val r1 = ranks1.as[(Long, Long)].collect().toMap
     assert(r1 == Map(1L -> 461L, 2L -> 213L, 3L -> 213L, 4L -> 107L))
+    // 9 jobs: the node count that sets r0 also decides the broadcast
+    // gate, so no probe job reads the degrees again
+    assert(m.jobs === 9, s"${m.stageRows.map(_.name)}")
     // it2 from (461, 213, 213, 107):
     //  r(1) = 37 + (213*85)/200 + (213*85)/200 + (107*85)/100
     //       = 37 + 90 + 90 + 90 = 307

@@ -152,7 +152,7 @@ class PlanHygieneSpec extends SparkSpec {
   test("q42: above the row-count gate the benched plan carries NO " +
       "CartesianProduct node — the last unguarded quadratic plan is " +
       "gone (VERDICT r14 #4)") {
-    // a corpus ABOVE VerifyGate.MaxRows: 1100 vectors. The all-pairs
+    // a corpus ABOVE Gates.MaxRows: 1100 vectors. The all-pairs
     // oracle leg must not run — the plan is the empty un-run sentinel,
     // mirrored by the oracle's row-count predicate.
     import org.apache.spark.sql.functions._

@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps one session factory, one listener meter, one residency
-  * mechanism and one streaming driver: a session builder, listener
-  * subclass, local checkpoint, temp-dir creation or stream source/sink
-  * anywhere else under src/main fails the build, so the per-tool copies
-  * cannot grow back. Session-free source scan, like
+  * mechanism, one streaming driver and one bounded driver collect: a
+  * session builder, listener subclass, local checkpoint, temp-dir
+  * creation, stream source/sink, limit-then-collect probe or
+  * one-partition read anywhere else under src/main fails the build, so
+  * the per-tool copies cannot grow back. Session-free source scan, like
   * CatalogIndexSpec's.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -50,6 +51,24 @@ class SourceGuardSpec extends AnyFunSuite {
       .filter(_.startsWith("src/main")) === streamingOps)
     assert(filesMatching("""\bwriteStream\b""")
       .filter(_.startsWith("src/main")) === streamingOps)
+  }
+
+  test("one bounded driver collect (Gates.collectBounded): no hand-rolled " +
+      "limit probe and no one-partition read under src/main") {
+    val limitProbe = """\.limit\(.*\)\s*\.\s*(collect|count)\(\)"""
+    val probes = Seq("in.coalesce(1).limit(probeLimit(gate)).collect()",
+      "df.limit(MaxRows.toInt + 1).count() <= MaxRows")
+    assert(probes.forall(limitProbe.r.findFirstIn(_).isDefined))
+    // HeavyHitters' top-k cut is a limit inside the plan, not a probe
+    assert(limitProbe.r.findFirstIn(".limit(k + 1).agg(when(count(lit(1)) " +
+      "=== k + 1, min(col(\"cnt\"))))").isEmpty)
+    val gates = "src/main/scala/graft/ops/Gates.scala"
+    def inMain(pattern: String) =
+      filesMatching(pattern).filter(_.startsWith("src/main"))
+    assert(inMain(limitProbe).filterNot(_ == gates) === Nil)
+    // Verify writes each query's dump as one file
+    assert(inMain("""coalesce\(1\)""").filterNot(Set(gates,
+      "src/main/scala/graft/Verify.scala")) === Nil)
   }
 
   /** Each `read ... .parquet(` chain in `text` (continuation lines start

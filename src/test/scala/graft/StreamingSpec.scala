@@ -14,7 +14,8 @@ import org.apache.spark.sql.streaming.Trigger
   *    reference's metric lines, `run_ingestion_with_metrics.sh:89-122`);
   *  - [[StreamingOps.windowAggAppend]] emits exactly the watermark-
   *    finalized windows (the production sink path — complete mode is only
-  *    for the all-windows oracle demo, see StreamingOps.runToMemory).
+  *    for the all-windows oracle demo: [[StreamingOps.drain]] into its
+  *    [[StreamingOps.Memory]] sink).
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._

@@ -508,7 +508,7 @@ class VectorOpsSpec extends SparkSpec {
   test("every ANN query's MEASURED recall clears its pinned floor at every " +
       "testdata SF (VERDICT r11 #5)") {
     // hold the verify gate open so the exact comparison runs at sf0.1
-    // (2000 vectors — above VerifyGate.MaxRows, where the benched plan
+    // (2000 vectors — above Gates.MaxRows, where the benched plan
     // honestly skips it); floors and the measurements they derive from
     // are documented at VectorOps.RecallFloors
     sys.props("graft.forceVerify") = "1"
