@@ -2,6 +2,8 @@ package graft.jobs
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ArrayBlockingQueue,
+  RejectedExecutionException, ThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import com.fasterxml.jackson.core.io.JsonStringEncoder
@@ -14,11 +16,13 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *
   *  - `GET  /health`              → `{"status": "ok"}` — load-balancer probe
   *  - `GET  /hello`               → liveness message
-  *  - `POST /jobs/ingestion`      → fire-and-forget: the job runs on a
-  *    background thread, the response returns immediately with
-  *    `{"status": "queued"}` and the metrics are discarded (exactly the
-  *    reference's `BackgroundTasks` semantics — failures are logged, not
-  *    reported to the caller)
+  *  - `POST /jobs/ingestion`      → fire-and-forget: the job is queued
+  *    for the server's one background worker, the response returns
+  *    immediately with `{"status": "queued"}` and the metrics are
+  *    discarded (the reference's `BackgroundTasks` semantics — failures
+  *    are logged, not reported to the caller). With
+  *    [[ApiServer.AsyncQueue]] jobs already waiting the trigger is
+  *    refused with 503 `{"status": "busy"}`
   *  - `POST /jobs/ingestion/sync` → runs inline, responds
   *    `{"status": "completed", "metrics": {...}}`; the metrics carry the
   *    run's per-phase milliseconds as `stage_ms`
@@ -34,7 +38,16 @@ final class ApiServer(runJob: () => IngestMetrics, port: Int = 0) {
 
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  private val queued = new AtomicLong(0L)
+  /** The async endpoint's one worker: runs on one store serialise on its
+    * monitor anyway, so a second worker would only wait. */
+  private val background = new ThreadPoolExecutor(1, 1, 0L,
+    TimeUnit.MILLISECONDS,
+    new ArrayBlockingQueue[Runnable](ApiServer.AsyncQueue),
+    (r: Runnable) => {
+      val t = new Thread(r, "graft-api-ingestion")
+      t.setDaemon(true)
+      t
+    })
 
   /** Completed background runs — observable for tests/monitoring (the
     * reference discards background results entirely; counting completions
@@ -67,7 +80,8 @@ final class ApiServer(runJob: () => IngestMetrics, port: Int = 0) {
 
   private def stageJson(t: StageMs): String =
     s"""{"fetch": ${t.fetch}, "parse": ${t.parse}, "probe": ${t.probe},""" +
-      s""" "write": ${t.write}, "commit": ${t.commit}}"""
+      s""" "secure": ${t.secure}, "write": ${t.write},""" +
+      s""" "commit": ${t.commit}}"""
 
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath
@@ -77,15 +91,17 @@ final class ApiServer(runJob: () => IngestMetrics, port: Int = 0) {
       case ("GET", "/hello") => respond(ex, 200,
         """{"message": "RandomUser ingestion service is running"}""")
       case ("POST", "/jobs/ingestion") =>
-        queued.incrementAndGet()
-        val t = new Thread(() =>
-          try { runJob(); backgroundCompleted.incrementAndGet(); () }
-          catch { case e: Throwable =>
-            System.err.println(s"background ingestion failed: ${e.getMessage}")
-          })
-        t.setDaemon(true)
-        t.start()
-        respond(ex, 200, """{"status": "queued"}""")
+        try {
+          background.execute(() =>
+            try { runJob(); backgroundCompleted.incrementAndGet(); () }
+            catch { case e: Throwable =>
+              System.err.println(
+                s"background ingestion failed: ${e.getMessage}")
+            })
+          respond(ex, 200, """{"status": "queued"}""")
+        } catch { case _: RejectedExecutionException =>
+          respond(ex, 503, """{"status": "busy"}""")
+        }
       case ("POST", "/jobs/ingestion/sync") =>
         try respond(ex, 200,
           s"""{"status": "completed", "metrics": ${metricsJson(runJob())}}""")
@@ -106,5 +122,12 @@ final class ApiServer(runJob: () => IngestMetrics, port: Int = 0) {
 
   def start(): ApiServer = { server.start(); this }
   def boundPort: Int = server.getAddress.getPort
-  def stop(): Unit = server.stop(0)
+  /** Stops serving; queued background jobs still run. */
+  def stop(): Unit = { server.stop(0); background.shutdown() }
+}
+
+object ApiServer {
+
+  /** Async triggers that may wait behind the running one. */
+  val AsyncQueue: Int = 4
 }

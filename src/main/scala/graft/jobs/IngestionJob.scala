@@ -2,20 +2,25 @@ package graft.jobs
 
 import java.io.FileNotFoundException
 import java.lang.ref.SoftReference
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, Executors}
 
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema,
   JsonToStructs, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFooterReader, ParquetToSparkSchemaConverter}
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField,
@@ -51,21 +56,21 @@ final case class IngestMetrics(
 }
 
 /** Wall milliseconds of one run's phases: the fetch, the parse, the store
-  * probe (listing, key index upkeep, key lookup), the staging write
-  * (securing the new rows included) and the commit (rename and index
-  * update). A run waiting for another run on its store counts that wait in
-  * none of them, so the phases sum to no more than the run's wall.
+  * probe (listing, key index upkeep, key lookup), securing the new rows,
+  * the staging write and the commit (rename and index update). A run
+  * waiting for another run on its store counts that wait in none of them,
+  * so the phases sum to no more than the run's wall.
   */
-final case class StageMs(fetch: Long, parse: Long, probe: Long, write: Long,
-    commit: Long) {
+final case class StageMs(fetch: Long, parse: Long, probe: Long, secure: Long,
+    write: Long, commit: Long) {
 
   /** The additive stdout line printed after the reference's four. */
   def logLine: String = s"stage_ms fetch=$fetch parse=$parse probe=$probe " +
-    s"write=$write commit=$commit"
+    s"secure=$secure write=$write commit=$commit"
 }
 
 object StageMs {
-  val zero: StageMs = StageMs(0L, 0L, 0L, 0L, 0L)
+  val zero: StageMs = StageMs(0L, 0L, 0L, 0L, 0L, 0L)
 }
 
 /** The reference's one end-to-end "query", re-expressed Spark-first:
@@ -112,13 +117,23 @@ object StageMs {
   * equals a count taken right after it. Runs in different processes are
   * not serialised: two of them can still both add the same new key.
   *
-  * A warm run is driver-sized: only the staging write costs Spark jobs.
+  * A warm run runs no Spark job:
   *  - The response is parsed on the driver by evaluating Spark's JSON
   *    parser expression on the body, without planning a query.
   *  - The probe and the count are lookups in the key index.
-  *  - The new rows are secured in one task per core (Argon2id dominates a
-  *    run) and shuffled into one partition, so the store gains exactly one
-  *    file per run that adds rows.
+  *  - The new rows are split into at most one chunk per core, and each
+  *    chunk is secured on a JVM-wide driver pool by optimizing the secure
+  *    rule over the chunk's local relation: Spark folds a projection over
+  *    a local relation into the relation (`ConvertToLocalRelation`,
+  *    interpreted, no generated code), so Argon2id runs on every core.
+  *  - The secured rows are written, in fetch order, into one part file by
+  *    Spark's own parquet writer under the session's settings, so the
+  *    store gains exactly one file per run that adds rows.
+  * The batch is held on the driver anyway (its body is parsed there); its
+  * secured copy adds ~1.2 KB a new row (13 columns, four of them
+  * ~100-character hashes and ciphertexts). Argon2id holds at most
+  * `availableProcessors` × `kdfMemoryKib` of driver heap at once, whatever
+  * the master: one hash per [[securePool]] thread.
   */
 object IngestionJob {
 
@@ -287,6 +302,65 @@ object IngestionJob {
   private[jobs] def dropIndexes(): Unit =
     slots.values.forEach(s => s.synchronized(s.index.clear()))
 
+  /** Runs the chunks of [[secureOnDriver]]: daemon threads, one per
+    * processor of the driver, made once for the JVM. Each thread hashes
+    * one password at a time, so Argon2id holds at most threads ×
+    * `kdfMemoryKib` (4 processors at the 64 MiB production profile:
+    * 256 MiB). */
+  private val securePool = ExecutionContext.fromExecutorService(
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors,
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-ingestion-secure")
+        t.setDaemon(true)
+        t
+      }))
+
+  /** `fresh` (in fetch order) through `secure` on the driver, returning the
+    * secured schema and rows in fetch order. The rows are split into at
+    * most `defaultParallelism` chunks, each secured on [[securePool]] over
+    * its own local relation; the optimizer folds the projection into the
+    * relation, so its rows are read off the optimized plan and no job
+    * runs. A plan left unfolded (a session that excludes the optimizer
+    * rule) is executed instead. */
+  private def secureOnDriver(spark: SparkSession, fresh: Seq[Row],
+      secure: DataFrame => DataFrame): (StructType, Seq[InternalRow]) = {
+    val cores = spark.sparkContext.defaultParallelism
+    val parts =
+      if (fresh.isEmpty) Seq(Nil)
+      else fresh.grouped((fresh.size + cores - 1) / cores).toSeq
+    val secured = parts.map { rows =>
+      Future {
+        val df = secure(spark.createDataFrame(rows.asJava, usersSchema))
+          .drop("_fetch_pos")
+        val data = df.queryExecution.optimizedPlan match {
+          case r: LocalRelation => r.data
+          case _ => df.queryExecution.executedPlan.executeCollect().toSeq
+        }
+        (df.schema, data)
+      }(securePool)
+    }.map(Await.result(_, Duration.Inf))
+    (secured.head._1, secured.flatMap(_._2))
+  }
+
+  /** Write `rows` as one part file into `dir` through Spark's parquet
+    * writer, set up as a write job would set it up under the session's
+    * settings (timestamp type, rebase modes, compression). An empty `rows`
+    * gives a file holding only the schema. */
+  private def writePart(spark: SparkSession, dir: Path, schema: StructType,
+      rows: Seq[InternalRow]): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("graft-ingestion", 0, TaskType.MAP, 0, 0))
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000" +
+      factory.getFileExtension(task)
+    val writer = factory.newInstance(new Path(dir, name).toString, schema,
+      task)
+    try rows.foreach(writer.write)
+    finally writer.close()
+  }
+
   private def runWith(spark: SparkSession, fetcher: UserFetcher,
       storePath: String, secure: DataFrame => DataFrame): IngestMetrics = {
     var mark = System.nanoTime()
@@ -331,18 +405,13 @@ object IngestionJob {
       val staging = new Path(store.getParent,
         s"${store.getName}.tmp-${java.util.UUID.randomUUID()}")
       val writes = listed.isEmpty || fresh.nonEmpty
-      if (writes) {
-        // secure only the new rows, one task per core, then gather them
-        // into the one part file this run adds. Every run's plan keeps one
-        // shape: the rows travel as a parallelized collection, never as
-        // per-row literals, so each run reuses the code the first one
-        // generated instead of compiling its own.
-        val sc = spark.sparkContext
-        val rows = sc.parallelize(fresh,
-          math.max(1, math.min(fresh.size, sc.defaultParallelism)))
-        secure(spark.createDataFrame(rows, usersSchema)).drop("_fetch_pos")
-          .repartition(1).write.parquet(staging.toString)
-      }
+      // secure only the new rows, then write them as the one part file
+      // this run adds
+      val secured = if (writes) Some(secureOnDriver(spark, fresh, secure))
+        else None
+      val secureMs = lap()
+      secured.foreach { case (schema, rows) =>
+        writePart(spark, staging, schema, rows) }
       val writeMs = lap()
 
       if (writes) {
@@ -359,7 +428,8 @@ object IngestionJob {
         fresh.foreach(r => index.add(keyOf(r).orNull))
       }
       slot.index = new SoftReference(index)
-      (index.rows, StageMs(fetchMs, parseMs, probeMs, writeMs, lap()))
+      (index.rows,
+        StageMs(fetchMs, parseMs, probeMs, secureMs, writeMs, lap()))
     }
 
     val metrics = IngestMetrics(

@@ -33,21 +33,21 @@ object PipelineOps {
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       driverGateEdges: Int = Gates.DriverEdges): DataFrame =
     RunScope.keyed("PipelineOps.connectedComponents") {
-    // Checkpoint the input FIRST, at full parallelism (under the loop's
-    // 4-partition width q45's upstream join once ran on 4 tasks, the
-    // round-3 regression): it then runs ONCE however often it is read.
-    val in = RunScope.checkpoint(
-      edges.select(col("a").cast("long"), col("b").cast("long")))
+    val cast = edges.select(col("a").cast("long"), col("b").cast("long"))
     val spark = edges.sparkSession
     // Size-gated hybrid (round 12, [[Gates.DriverEdges]]): one bounded
     // collect of the INPUT edges decides the path and, below the gate,
     // feeds the driver [[unionFind]].
-    Gates.collectBounded(in, driverGateEdges).map { es =>
+    Gates.collectBounded(cast, driverGateEdges).map { es =>
       import spark.implicits._
       spark.createDataset(
           unionFind(es.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq)
         .toDF("node", "cluster_id")
     }.getOrElse {
+      // Checkpoint the input first, at full parallelism (under the loop's
+      // 4-partition width q45's upstream join once ran on 4 tasks, the
+      // round-3 regression): it then runs once however often it is read.
+      val in = RunScope.checkpoint(cast)
       // The label table is O(nodes-with-duplicates), tiny relative to the
       // corpus — run the iterative shuffles at a partition count sized to
       // IT (same principle as the streaming state stores), restoring the
@@ -425,7 +425,8 @@ object PipelineOps {
     * to the driver's relabel map plus a local relation of the nodes new
     * to the table. That path persists and checkpoints nothing. Above the
     * gate the relational contraction and [[connectedComponents]] run,
-    * deriving the edges once more (the gated collect read them first).
+    * deriving the edges twice more, in its bounded collect and its
+    * checkpoint (the gated collect read them first).
     *
     * The driver path reads "new to the table" as "an endpoint without a
     * stored label": every stored cluster_id is itself a node of the
@@ -483,9 +484,9 @@ object PipelineOps {
         Seq("id_b"), "left_outer")
       .select(coalesce(col("ca"), col("id_a")).as("a"),
         coalesce(col("cb"), col("id_b")).as("b"))
-    // connectedComponents checkpoints its input before reading it, so the
-    // delta-pair derivation upstream (banding, index probe, candidate
-    // verify) runs once here, after the gated collect's run
+    // above its gate connectedComponents derives the delta pairs
+    // (banding, index probe, candidate verify) in its bounded collect and
+    // once more in the checkpoint its rounds read
     val relabel = connectedComponents(contracted)
       .select(col("node"), col("cluster_id").as("nlbl"))
     val fromOld = lbl

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * testdata tables do not: [[Tables.load]] reads each
   * file's schema from its parquet footer, which costs one Spark job per
   * read. A declared schema per table would drop those jobs and let a
-  * footer that disagrees fail loudly (ROADMAP direction 5).
+  * footer that disagrees fail loudly (ROADMAP direction 9).
   */
 object Schemas {
 

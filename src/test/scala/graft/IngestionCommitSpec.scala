@@ -3,13 +3,16 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 import graft.IngestionBodies.{aesKey, batch, bidxKey, pepper, user}
+import graft.expr.Crypto
 import graft.jobs.{IngestMetrics, IngestionJob, SecretKeys}
 import graft.ops.Upsert
 import graft.schema.Schemas
@@ -140,9 +143,9 @@ class IngestionCommitSpec extends SparkSpec {
     assert(Files.exists(residue))
   }
 
-  test("a warm run against an existing store is driver-sized: the parse " +
-      "runs no job, the probe and the count none, the staging write at " +
-      "most two, and the run compiles nothing") {
+  test("a warm run against an existing store runs no Spark job and " +
+      "compiles nothing: parse, probe, count, secure and write all run on " +
+      "the driver") {
     val store = newStore()
     run(store, batch(user("k1", "Ada")))
     // the existing-store path once, with a keyless user and a stored key
@@ -154,17 +157,74 @@ class IngestionCommitSpec extends SparkSpec {
     assert(parse.jobs === 0)
     val (m, warm) = Meter.measure(spark)(run(store, body))
     assert(m.rowsAfterDedup === 5)
-    val stages = warm.stageRows.map(_.name).mkString("; ")
-    assert(warm.jobs <= 2, stages)
-    // every stage is the staging write's: no parse, probe or count job
-    val src = Files.readAllLines(
-      Paths.get("src/main/scala/graft/jobs/IngestionJob.scala")).asScala
-    val write = src.indexWhere(_.contains(".write.parquet(staging.toString)"))
-    assert(write >= 0)
-    val lines = warm.stageRows.map(st => """IngestionJob\.scala:(\d+)""".r
-      .findFirstMatchIn(st.name).map(_.group(1).toInt))
-    assert(lines.nonEmpty && lines.forall(_.contains(write + 1)), stages)
+    assert(warm.jobs === 0, warm.stageRows.map(_.name).mkString("; "))
     assert(warm.compiles === 0, s"warm run compiled ${warm.compiles} classes")
+  }
+
+  test("the secured rows, folded into their local relation or executed, " +
+      "write equal stores in Spark's own file format: the declared schema, " +
+      "equal deterministic columns, hashes that verify and ciphertexts " +
+      "that decrypt to the same plaintext") {
+    val bodies = Seq(
+      batch(user("k1", "Ada"), user("k2", "Alan"), user(null, "Nobody"),
+        user("k1", "Ada2")),
+      batch(user("k3", "Grace"), user("k4", "Ed"), user("k2", "Alan3"),
+        user("k5", "Bo"), user("k6", "Cy"), user("k7", "Di")))
+    val (folded, unfolded, bySpark) = (newStore(), newStore(), newStore())
+    def files(store: String) = Option(new File(store).listFiles()).toSeq
+      .flatten.filter(_.getName.startsWith("part-"))
+    var cold = Set.empty[File]
+    for (body <- bodies) {
+      cold = files(folded).toSet
+      val (_, f) = Meter.measure(spark)(run(folded, body))
+      assert(f.jobs === 0)
+      val (_, u) = Meter.measure(spark)(LocalSpark.withConf(spark,
+          "spark.sql.optimizer.excludedRules" ->
+            "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")(
+        run(unfolded, body)))
+      assert(u.jobs > 0) // the unfolded plan is executed
+    }
+    // the same batch written by a Spark write job, for its footer
+    IngestionJob.secureTransform(IngestionJob.readUsersJson(spark,
+        bodies.head), pepper, aesKey, bidxKey)
+      .drop("_fetch_pos").repartition(1).write.parquet(bySpark)
+    def footer(f: File) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(f.toURI), spark.sparkContext.hadoopConfiguration))
+      try {
+        val meta = r.getFooter.getFileMetaData
+        (meta.getSchema,
+          meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      } finally r.close()
+    }
+    val stores = Seq(folded, unfolded)
+    val schemas = (stores :+ bySpark).flatMap(files).map(footer)
+    assert(schemas.size === 5 && schemas.distinct.size === 1, schemas)
+    val found = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(schemas.head._1)
+    assert(found.map(f => f.name -> f.dataType) ===
+      Schemas.storeSchema.map(f => f.name -> f.dataType))
+
+    assert(storeRows(folded) === storeRows(unfolded))
+    assert(storeRows(folded).size === 8)
+    // the warm run's file holds its new rows in fetch order
+    assert(spark.read.parquet(files(folded).filterNot(cold).head.toString)
+      .select("login_uuid").collect().map(_.getString(0)).toSeq ===
+      Seq("k3", "k4", "k5", "k6", "k7"))
+    def plain(store: String): Seq[Row] = spark.read.parquet(store).select(
+        col("login_uuid"), col("name_first"), col("password_hash"),
+        Crypto.decrypt(col("email_enc"), aesKey),
+        Crypto.decrypt(col("phone_enc"), aesKey),
+        Crypto.decrypt(col("street_name_enc"), aesKey))
+      .collect().toSeq.sortBy(_.toString)
+    for (store <- stores; r <- plain(store)) {
+      val first = r.getString(1)
+      assert(Crypto.verifyPassword(s"pw$first", pepper, r.getString(2)), r)
+      assert(Seq(r.getString(3), r.getString(4), r.getString(5)) ===
+        Seq(s"$first@example.com", s"011-555-$first", s"$first Road"), r)
+    }
+    assert(plain(folded).map(r => (r.getString(0), r.getString(1))) ===
+      plain(unfolded).map(r => (r.getString(0), r.getString(1))))
   }
 
   test("both secureTransform overloads produce exactly the declared store " +

@@ -4,7 +4,8 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.jobs.{HttpUserFetcher, IngestionJob, LoopbackApi}
+import graft.jobs.{ApiServer, HttpUserFetcher, IngestMetrics, IngestionJob,
+  LoopbackApi}
 
 /** Live acquisition path (VERDICT r1 #5): real HTTP over loopback, observed
   * status/retries, fail-fast parity with the reference's raise_for_status
@@ -97,10 +98,11 @@ class IngestionHttpSpec extends SparkSpec {
       assert(lines.take(4) === m.logLines(lines(1).stripPrefix("api_url=")))
       assert(lines(4) === m.stageMs.logLine)
       assert(lines(4).matches(
-        "stage_ms fetch=\\d+ parse=\\d+ probe=\\d+ write=\\d+ commit=\\d+"),
-        lines(4))
+        "stage_ms fetch=\\d+ parse=\\d+ probe=\\d+ secure=\\d+ write=\\d+ " +
+          "commit=\\d+"), lines(4))
       val t = m.stageMs
-      assert(t.fetch + t.parse + t.probe + t.write + t.commit <= wallMs,
+      assert(t.fetch + t.parse + t.probe + t.secure + t.write + t.commit <=
+        wallMs,
         s"${t.logLine} in a $wallMs ms run")
     }
   }
@@ -139,7 +141,8 @@ class IngestionHttpSpec extends SparkSpec {
       assert(sb.contains(""""rows_after_dedup": 5"""))
       assert(sb.contains(""""http_status": null""")) // fixture: observed-absent
       assert((""""stage_ms": \{"fetch": \d+, "parse": \d+, "probe": \d+, """ +
-        """"write": \d+, "commit": \d+\}""").r.findFirstIn(sb).nonEmpty, sb)
+        """"secure": \d+, "write": \d+, "commit": \d+\}""").r
+        .findFirstIn(sb).nonEmpty, sb)
 
       // async: immediate queued response, job completes in background
       val before = srv.backgroundCompleted.get()
@@ -154,6 +157,36 @@ class IngestionHttpSpec extends SparkSpec {
       assert(httpGet(s"$base/jobs/ingestion")._1 === 405)
       assert(httpGet(s"$base/nope")._1 === 404)
     } finally srv.stop()
+  }
+
+  test("async triggers past the bounded queue are answered 503 busy, and " +
+      "every accepted trigger completes") {
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val srv = new ApiServer(() => {
+      started.countDown()
+      release.await()
+      IngestMetrics(None, None, 0L, 0L, "spec://blocked")
+    }).start()
+    val async = s"http://127.0.0.1:${srv.boundPort}/jobs/ingestion"
+    try {
+      assert(httpPost(async) === (200, """{"status": "queued"}"""))
+      // the worker holds the first trigger; the queue takes the next ones
+      assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      for (_ <- 1 to ApiServer.AsyncQueue)
+        assert(httpPost(async) === (200, """{"status": "queued"}"""))
+      for (_ <- 1 to 2)
+        assert(httpPost(async) === (503, """{"status": "busy"}"""))
+      assert(srv.backgroundCompleted.get() === 0)
+      release.countDown()
+      val accepted = 1 + ApiServer.AsyncQueue
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (srv.backgroundCompleted.get() < accepted &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      assert(srv.backgroundCompleted.get() === accepted)
+      // the queue has room again
+      assert(httpPost(async) === (200, """{"status": "queued"}"""))
+    } finally { release.countDown(); srv.stop() }
   }
 
   test("sync endpoint emits valid JSON for hostile store paths " +
